@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A warmup pass (flagship entry) absorbs JVM/codegen
   * startup so per-query numbers measure the plans, not classloading.
@@ -22,16 +20,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark()
 
     // Warmup: run the flagship once (codegen + parquet footer caches).
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
@@ -71,8 +60,9 @@ object Bench {
       "ulm_soft_model" -> (() => graft.queries.UlmQueries.persistedUlmSoft(spark, sfDir).count()),
       "bpe_model_deep" -> (() => graft.queries.BpeQueries.persistedMergesDeep(spark, sfDir).count()))
     // SPARK_GRAFT_SKIP_SETUP=1: skip the persisted-artifact pre-build —
-    // for filtered runs (SPARK_GRAFT_ONLY) against ad-hoc corpora (the
-    // DecadeSynth tier) where building every shingle/signature artifact
+    // for filtered runs (SPARK_GRAFT_ONLY) against ad-hoc corpora (the 10×
+    // tier in BASELINE.md "Relational/event/search decade tier") where
+    // building every shingle/signature artifact
     // would dwarf the queries being measured; queries that do need an
     // artifact still build it lazily through Persisted on first use.
     val skipSetup = sys.env.get("SPARK_GRAFT_SKIP_SETUP").contains("1")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Print a registered query's formatted physical plan — the capture tool
   * behind PLANS.md (`sbt "runMain graft.PlanDump knn_pq_batch
   * /root/testdata/sf0.01"`). Formatted mode shows scan detail
@@ -11,16 +9,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error("usage: PlanDump <query> [sfDir]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark()
     // Batch mode (round-18 deliverable): comma-separated names + an output
     // template "dir/SUFFIX" write one formatted plan per query to
     // dir/<query>_SUFFIX.txt in ONE JVM (a per-query JVM costs ~30 s each).

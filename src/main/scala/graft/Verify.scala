@@ -9,15 +9,7 @@ object Verify {
     // Optional 3rd arg: comma-separated query names — builder-side fast
     // iteration on one query; the driver always passes two args.
     val only = args.drop(2).headOption.map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark()
     run(spark, SparkEntry.queries, SparkEntry.oracleSql, sfDir, outDir, only)
     spark.stop()
   }

@@ -126,8 +126,8 @@ object Bpe {
     * table. One driver round-trip then advances `batch` merges instead
     * of one: a 32k-merge production vocabulary takes ~500 Spark rounds
     * instead of 32k, which is the difference between minutes and hours
-    * of pure scheduler latency (ScaleSmoke measures the per-round fixed
-    * cost at ~0.7 s regardless of corpus size).
+    * of pure scheduler latency (the per-round fixed cost measures ~0.7 s
+    * regardless of corpus size — BASELINE.md "DSIR + BPE scale smoke").
     *
     * Semantics: the FIRST pick of every round is the global argmax —
     * exactly the classic merge — so `batch = 1` reproduces [[train]]

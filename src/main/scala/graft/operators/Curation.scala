@@ -48,7 +48,7 @@ object Curation {
     // tokenize + doc_id hash aggregate (0.58 s vs 1.29 s for the
     // aggregate pass over the same Spread input). Values are
     // bit-identical (the cleanGate ≡ cleanCorpus equivalence
-    // TextAnalysisSpec pins: countDistinct ≡ size(array_distinct),
+    // CurationSpec pins: countDistinct ≡ size(array_distinct),
     // count ≡ size, sum(when) ≡ size(filter), same single IEEE
     // divisions). Repetition deliberately stays the AGGREGATE form: a
     // fully row-local variant computing clean AND the 3-gram ratio in
@@ -61,19 +61,14 @@ object Curation {
       .filter(col("doc_id") >= evalMax)
       .select(col("doc_id"), arrAll.as("aa"))
       .withColumn("ak", filter(col("aa"), w => TextOps.isKeptToken(w)))
-    val nK = size(col("ak"))
-    val nKd = nK.cast("double")
-    val stopwordRatio =
-      size(filter(col("ak"), w => w.isin(TextAnalysis.Stopwords: _*))).cast("double") / nKd
-    val digitRatio = size(filter(col("ak"), w => w.rlike("[0-9]"))).cast("double") / nKd
-    val ttr = size(array_distinct(col("ak"))).cast("double") / nKd
-    val quality = least(lit(1.0), nKd / lit(50.0)) * ttr * (lit(1.0) - digitRatio)
+    val (nTokens, quality, stopwordRatio) = TextAnalysis.cleanFeatures(col("ak"))
     val clean = base
-      .select(col("doc_id"), nK.cast("long").as("n_tokens"),
+      .select(col("doc_id"), nTokens.as("n_tokens"),
         quality.as("quality"), stopwordRatio.as("stopword_ratio"))
       // cleanCorpus's gates: length floor, quality floor, language gate
-      .filter(col("n_tokens") >= 30 && col("quality") >= 0.32 &&
-        col("stopword_ratio") >= 0.02)
+      .filter(col("n_tokens") >= TextAnalysis.CleanMinTokens &&
+        col("quality") >= TextAnalysis.CleanMinQuality &&
+        col("stopword_ratio") >= TextAnalysis.CleanLangThreshold)
       .select("doc_id", "n_tokens", "quality")
     val rep = TextAnalysis.repetition(docs).select(col("doc_id"), col("rep_ratio"))
     val nll = TextAnalysis

@@ -238,8 +238,9 @@ object Dedup {
     */
   /** The per-doc rare-first PREFIX of a key table — the candidate-stage
     * core of the AllPairs/PPJoin family, exposed so the measurement
-    * harnesses (ZipfCrossover, DedupSpec's growth-law cases) count
-    * candidates from THE SHIPPED construction rather than a hand
+    * harnesses (DedupSpec's growth-law cases; BASELINE.md "The
+    * prefix-filter crossover, measured") count candidates from THE
+    * SHIPPED construction rather than a hand
     * mirror: an edit to the epsilon, tie-break, or prefix-length
     * formula changes the published numbers and the operator together.
     * Returns (doc_id, shk) — each doc's |d| − ceil(t·|d|) + 1 rarest

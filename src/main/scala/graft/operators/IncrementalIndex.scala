@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.Stable
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -157,14 +156,7 @@ object IncrementalIndex {
         .collect().map(_.getInt(0)).distinct.toSeq
     val post = table(spark, indexDir, "postings")
       .filter(col("wb").isin(qBuckets: _*))
-    val scores = post.join(broadcast(qt), "word")
-      .select(col("doc_id"),
-        (col("tf") * col("qtf") / (col("df").cast("double") * col("df"))).as("part"))
-      .groupBy("doc_id")
-      .agg(Stable.stab(sum(col("part")), 9).as("score"))
-    scores.orderBy(desc("score"), asc("doc_id")).limit(k)
-      .join(broadcast(table(spark, indexDir, "docinfo")), "doc_id")
-      .select("doc_id", "score", "source", "lang")
-      .orderBy(desc("score"), asc("doc_id"))
+    Search.topKWithDocInfo(Search.parityScores(post.join(broadcast(qt), "word")),
+      table(spark, indexDir, "docinfo"), k)
   }
 }

@@ -180,12 +180,52 @@ object Search {
   /** Q2-Q4 core: reference scoring over the single-pass query postings. */
   private def scoresInPlan(spark: SparkSession, docs: DataFrame,
                            query: String): DataFrame =
-    queryPostings(docs, query)
-      .join(broadcast(queryTerms(spark, query)), "word")
+    parityScores(queryPostings(docs, query)
+      .join(broadcast(queryTerms(spark, query)), "word"))
+
+  /** The reference's score (quirk Q-b) over postings joined to the query
+    * terms: (doc_id, tf, qtf, df) → (doc_id, score = Σ tf·qtf/df²). */
+  private[operators] def parityScores(joined: DataFrame): DataFrame =
+    joined
       .select(col("doc_id"),
         (col("tf") * col("qtf") / (col("df").cast("double") * col("df"))).as("part"))
       .groupBy("doc_id")
       .agg(Stable.stab(sum(col("part")), 9).as("score"))
+
+  /** BM25 (formula on searchTopKBm25) over postings joined to the query
+    * terms (doc_id, tf, qtf, df) and per-doc lengths (doc_id, dl). avgdl
+    * is sum/count, not avg: dl is integer-valued, so the sum is EXACT in
+    * any aggregation order and avgdl is bit-stable across engines. */
+  private def bm25Scores(joined: DataFrame, dl: DataFrame,
+                         k1: Double, b: Double): DataFrame = {
+    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
+      (sum("dl") / count(lit(1))).as("avgdl"))
+    joined
+      .join(dl, "doc_id")
+      .crossJoin(broadcast(stats))
+      .select(col("doc_id"),
+        (log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
+          col("qtf") * (col("tf") * (k1 + 1)) /
+          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))).as("part"))
+      .groupBy("doc_id")
+      .agg(Stable.stab(sum(col("part")), 6).as("score"))
+  }
+
+  /** Per-doc lengths from docinfo's `n_tokens`. Docs with no kept token
+    * (n_tokens = 0) are excluded from the corpus statistics — matching
+    * the in-plan twin, whose dl table has no row for them. */
+  private def dlFrom(lengths: DataFrame): DataFrame =
+    lengths.filter(col("n_tokens") > 0)
+      .select(col("doc_id"), col("n_tokens").cast("double").as("dl"))
+
+  /** Shared Q2-Q8 tail: exact top-k by (score desc, doc_id asc), then
+    * doc metadata broadcast-joined onto the k rows, order restored. */
+  private[operators] def topKWithDocInfo(scores: DataFrame, docinfo: DataFrame,
+                                         k: Int): DataFrame =
+    scores.orderBy(desc("score"), asc("doc_id")).limit(k)
+      .join(broadcast(docinfo.select("doc_id", "source", "lang")), "doc_id")
+      .select("doc_id", "score", "source", "lang")
+      .orderBy(desc("score"), asc("doc_id"))
 
   /** Q2-Q8: score + top-k. Scoring formula is the reference's exactly
     * (quirk Q-b, Query.java:113-115): score(d) = Σ_{w∈q∩d} tf_d·tf_q/df².
@@ -203,11 +243,7 @@ object Search {
     // SinglePartition (guarded — no-op at production split counts) lets
     // every downstream aggregate/join plan exchange-free.
     val docs = Spread.tight(Tables.documents(spark, dir))
-    scoresInPlan(spark, docs, query)
-      .orderBy(desc("score"), asc("doc_id")).limit(k)
-      .join(broadcast(docInfo(docs).select("doc_id", "source", "lang")), "doc_id")
-      .select("doc_id", "score", "source", "lang")
-      .orderBy(desc("score"), asc("doc_id"))
+    topKWithDocInfo(scoresInPlan(spark, docs, query), docInfo(docs), k)
   }
 
   /** BM25 top-k — the standard probabilistic ranking beside the parity
@@ -221,9 +257,8 @@ object Search {
     * ALL kept tokens, so the isin filter can't be shared) — but dl/avgdl
     * are pure corpus statistics a deployment precomputes once per corpus
     * (text_token_counts is that table), so the benched form's second
-    * pass is the worst case, not the steady state. Determinism: dl sums
-    * are integer-valued doubles (exact in any order), avgdl is one
-    * division of exact sums, ln is stab(6)-collapsed like log-idf.
+    * pass is the worst case, not the steady state. Determinism: see
+    * bm25Scores.
     */
   def searchTopKBm25(spark: SparkSession, dir: String,
                      query: String = DefaultQuery, k: Int = 10,
@@ -232,25 +267,9 @@ object Search {
     val docs = Spread.tight(Tables.documents(spark, dir))
     val dl = tokens(docs).groupBy("doc_id")
       .agg(count(lit(1)).cast("double").as("dl"))
-    // sum/count explicitly (not avg): dl is integer-valued, so the sum is
-    // EXACT under any aggregation order and avgdl is bit-stable across
-    // engines with no stabilizer
-    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-      (sum("dl") / count(lit(1))).as("avgdl"))
-    val scored = queryPostings(docs, query)
-      .join(broadcast(queryTerms(spark, query)), "word")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"),
-        (log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
-          col("qtf") * (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))).as("part"))
-      .groupBy("doc_id")
-      .agg(Stable.stab(sum(col("part")), 6).as("score"))
-    scored.orderBy(desc("score"), asc("doc_id")).limit(k)
-      .join(broadcast(docInfo(docs).select("doc_id", "source", "lang")), "doc_id")
-      .select("doc_id", "score", "source", "lang")
-      .orderBy(desc("score"), asc("doc_id"))
+    val scored = bm25Scores(queryPostings(docs, query)
+      .join(broadcast(queryTerms(spark, query)), "word"), dl, k1, b)
+    topKWithDocInfo(scored, docInfo(docs), k)
   }
 
   /** BM25 with PRECOMPUTED length statistics — the steady-state form of
@@ -269,51 +288,23 @@ object Search {
                           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     // guarded SinglePartition pin — see searchTopK
     val docs = Spread.tight(Tables.documents(spark, dir))
-    val dl = dlStats.filter(col("n_tokens") > 0)
-      .select(col("doc_id"), col("n_tokens").cast("double").as("dl"))
-    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-      (sum("dl") / count(lit(1))).as("avgdl"))
-    val scored = queryPostings(docs, query)
-      .join(broadcast(queryTerms(spark, query)), "word")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"),
-        (log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
-          col("qtf") * (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))).as("part"))
-      .groupBy("doc_id")
-      .agg(Stable.stab(sum(col("part")), 6).as("score"))
-    scored.orderBy(desc("score"), asc("doc_id")).limit(k)
-      .join(broadcast(docInfo(docs).select("doc_id", "source", "lang")), "doc_id")
-      .select("doc_id", "score", "source", "lang")
-      .orderBy(desc("score"), asc("doc_id"))
+    val scored = bm25Scores(queryPostings(docs, query)
+      .join(broadcast(queryTerms(spark, query)), "word"), dlFrom(dlStats), k1, b)
+    topKWithDocInfo(scored, docInfo(docs), k)
   }
 
-  /** Shared Q2-Q8 tail over any (postings, vocab, docinfo) triple. */
-  /** Exact-phrase top-k (adjacent 2-token match): docs containing the
-    * phrase, ranked by its per-doc frequency. The match count is a
-    * ROW-LOCAL array filter over the doc's bigram stream — no explode, no
-    * shuffle before the top-k heap. The bigram stream is built with
-    * `zip_with` over two slices of the token array, NOT
-    * `transform(sequence(...), i => element_at(arr, i))`: higher-order
-    * functions run interpreted, and the indexed-lambda form re-enters the
-    * element_at path per index — measured 17× slower at sf0.1 (19.4 s vs
-    * 1.2 s) for identical output. A production deployment would serve
-    * this from bigram postings (same layout as the unigram index); the
-    * scan shape here IS that index's build pass.
+  /** Distributed retrieval EVALUATION — the offline quality job a search
+    * pipeline runs on every index build, as ONE batch plan instead of a
+    * per-query loop: a deterministic query set (consecutive-word-id
+    * pairs from the corpus's own vocabulary), every query scored
+    * against every matching posting in a single broadcast join, ranks
+    * via per-query windows (≤ nQueries partitions), and graded-
+    * relevance-free metrics (P@k, MRR@k, with relevance := "doc
+    * contains BOTH query terms" — boolean-AND qrels both engines can
+    * derive). The per-(query, doc) term-presence count doubles as the
+    * relevance label, so scoring and labeling share one aggregate.
     */
   def evalMetrics(docs: DataFrame, nQueries: Int = 20, k: Int = 10): DataFrame = {
-    // Distributed retrieval EVALUATION — the offline quality job a search
-    // pipeline runs on every index build, as ONE batch plan instead of a
-    // per-query loop: a deterministic query set (consecutive-word-id
-    // pairs from the corpus's own vocabulary), every query scored
-    // against every matching posting in a single broadcast join, ranks
-    // via per-query windows (≤ nQueries partitions), and graded-
-    // relevance-free metrics (P@k, MRR@k, with relevance := "doc
-    // contains BOTH query terms" — boolean-AND qrels both engines can
-    // derive). The per-(query, doc) term-presence count doubles as the
-    // relevance label, so scoring and labeling share one aggregate.
-    import graft.functions.Stable
     // metadata-scale path (round 19): bdw feeds the vocabulary AND the
     // postings branch, vocab is consumed three times — cut both shared
     // subtrees when the source scan is tiny (see queryPostings)
@@ -350,6 +341,18 @@ object Search {
       .orderBy("query_id")
   }
 
+  /** Exact-phrase top-k (adjacent 2-token match): docs containing the
+    * phrase, ranked by its per-doc frequency. The match count is a
+    * ROW-LOCAL array filter over the doc's bigram stream — no explode, no
+    * shuffle before the top-k heap. The bigram stream is built with
+    * `zip_with` over two slices of the token array, NOT
+    * `transform(sequence(...), i => element_at(arr, i))`: higher-order
+    * functions run interpreted, and the indexed-lambda form re-enters the
+    * element_at path per index — measured 17× slower at sf0.1 (19.4 s vs
+    * 1.2 s) for identical output. A production deployment would serve
+    * this from bigram postings (same layout as the unigram index); the
+    * scan shape here IS that index's build pass.
+    */
   def phraseTopK(spark: SparkSession, dir: String,
                  phrase: String = "table hash", k: Int = 10): DataFrame = {
     // Spread: the row-local bigram scoring ran in the single scan task of
@@ -378,17 +381,23 @@ object Search {
     val qt = queryTerms(spark, query)
       .join(vocab, "word") // keep df + word_id; drops non-vocab terms (I2 semantics)
       .select("word_id", "qtf", "df")
-    val scores = post
-      .join(broadcast(qt), "word_id")
-      .select(col("doc_id"),
-        (col("tf") * col("qtf") / (col("df").cast("double") * col("df"))).as("part"))
-      .groupBy("doc_id")
-      .agg(Stable.stab(sum(col("part")), 9).as("score"))
-    scores
-      .orderBy(desc("score"), asc("doc_id")).limit(k)
-      .join(broadcast(docinfo.select("doc_id", "source", "lang")), "doc_id")
-      .select("doc_id", "score", "source", "lang")
-      .orderBy(desc("score"), asc("doc_id"))
+    topKWithDocInfo(parityScores(post.join(broadcast(qt), "word_id")), docinfo, k)
+  }
+
+  /** The persisted postings a query reads: the scan carries a
+    * `wb IN (...)` predicate computed from the query's own word ids, so
+    * partition pruning skips every bucket directory the query doesn't
+    * touch — O(query terms) buckets regardless of corpus size — under
+    * the guarded SinglePartition pin (≤ |q| bucket dirs; at a production
+    * index each bucket is many splits → no-op).
+    */
+  private def prunedPostings(spark: SparkSession, indexDir: String,
+                             vocab: DataFrame, query: String): DataFrame = {
+    val qWordIds = queryTerms(spark, query).join(vocab, "word")
+      .select("word_id").collect().map(_.getLong(0)) // ≤ |query terms| rows
+    val qBuckets = qWordIds.map(w => (w % IndexBuckets).toInt).distinct.toSeq
+    Spread.tight(spark.read.parquet(s"$indexDir/postings")
+      .filter(col("wb").isin(qBuckets: _*)))
   }
 
   /** Number of word-id hash buckets the persisted postings are partitioned
@@ -470,24 +479,16 @@ object Search {
                    query: String = DefaultQuery, k: Int = 10): Dataset[SearchHit] =
     searchTopK(spark, dir, query, k).as(Encoders.product[SearchHit])
 
-  /** Query the persisted index. The postings scan carries a `wb IN (...)`
-    * predicate computed from the query's own word ids, so partition pruning
-    * skips every bucket directory the query doesn't touch — the plan reads
-    * O(query terms) buckets regardless of corpus size. Result is identical
-    * to `searchTopK` (same formula, same tie-break).
+  /** Query the persisted index through its bucket-pruned postings
+    * (prunedPostings). Result is identical to `searchTopK` (same formula,
+    * same tie-break).
     */
   def searchTopKIndexed(spark: SparkSession, indexDir: String,
                         query: String = DefaultQuery, k: Int = 10): DataFrame = {
     val vocab = spark.read.parquet(s"$indexDir/vocabulary")
     val docinfo = spark.read.parquet(s"$indexDir/docinfo")
-    val qWordIds = queryTerms(spark, query).join(vocab, "word")
-      .select("word_id").collect().map(_.getLong(0)) // ≤ |query terms| rows
-    val qBuckets = qWordIds.map(w => (w % IndexBuckets).toInt).distinct.toSeq
-    // guarded SinglePartition pin on the bucket-pruned scan (≤ |q| bucket
-    // dirs; at a production index each bucket is many splits → no-op)
-    val post = Spread.tight(spark.read.parquet(s"$indexDir/postings")
-      .filter(col("wb").isin(qBuckets: _*)))
-    scoreAndRank(spark, post, vocab, docinfo, query, k)
+    scoreAndRank(spark, prunedPostings(spark, indexDir, vocab, query),
+      vocab, docinfo, query, k)
   }
 
   /** BM25 served from the persisted index — identical answer to
@@ -505,31 +506,8 @@ object Search {
     val docinfo = spark.read.parquet(s"$indexDir/docinfo")
     val qt = queryTerms(spark, query).join(vocab, "word")
       .select("word_id", "qtf", "df")
-    val qWordIds = qt.select("word_id").collect().map(_.getLong(0)) // ≤ |q| rows
-    val qBuckets = qWordIds.map(w => (w % IndexBuckets).toInt).distinct.toSeq
-    // guarded SinglePartition pin — see searchTopKIndexed
-    val post = Spread.tight(spark.read.parquet(s"$indexDir/postings")
-      .filter(col("wb").isin(qBuckets: _*)))
-    // docs whose every token was filtered carry n_tokens = 0 and are
-    // excluded from the corpus statistics — matching the in-plan twin,
-    // whose dl table only has rows for docs with ≥ 1 kept token
-    val dl = docinfo.filter(col("n_tokens") > 0)
-      .select(col("doc_id"), col("n_tokens").cast("double").as("dl"))
-    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-      (sum("dl") / count(lit(1))).as("avgdl"))
-    val scored = post
-      .join(broadcast(qt), "word_id")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"),
-        (log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
-          col("qtf") * (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))).as("part"))
-      .groupBy("doc_id")
-      .agg(Stable.stab(sum(col("part")), 6).as("score"))
-    scored.orderBy(desc("score"), asc("doc_id")).limit(k)
-      .join(broadcast(docinfo.select("doc_id", "source", "lang")), "doc_id")
-      .select("doc_id", "score", "source", "lang")
-      .orderBy(desc("score"), asc("doc_id"))
+    val scored = bm25Scores(prunedPostings(spark, indexDir, vocab, query)
+      .join(broadcast(qt), "word_id"), dlFrom(docinfo), k1, b)
+    topKWithDocInfo(scored, docinfo, k)
   }
 }

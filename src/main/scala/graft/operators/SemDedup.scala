@@ -217,7 +217,8 @@ object SemDedup {
     * clustering sits at ≈ 1/k (0.125 at the gate fixture's k = 8,
     * falling as production scales k ∝ N), while the degenerate
     * boilerplate-collapse regime the salt exists for sits near 1 (the
-    * planted 60 %-one-cell SaltProbe fixture measures 0.89, where salt 16
+    * planted 60 %-one-cell fixture of BASELINE.md "Round-15 measured
+    * facts" measures 0.89, where salt 16
     * is a measured 4.6× — BASELINE.md round-16 table). Measured margins:
     * gate corpora 0.140–0.152 (≥ 2.6× under) vs degenerate 0.891 (2.2×
     * over); the one synthetic that lands exactly ON 0.4 shows the

@@ -40,8 +40,30 @@ object TextAnalysis {
           count(lit(1))).as("digit_ratio"),
         (countDistinct("word").cast("double") / count(lit(1))).as("ttr"))
       .withColumn("quality",
-        least(lit(1.0), col("n_tokens").cast("double") / lit(50.0)) *
-          col("ttr") * (lit(1.0) - col("digit_ratio")))
+        qualityOf(col("n_tokens").cast("double"), col("ttr"), col("digit_ratio")))
+
+  /** Composite quality in [0,1] from its features (n as a double). */
+  private def qualityOf(n: Column, ttr: Column, digitRatio: Column): Column =
+    least(lit(1.0), n / lit(50.0)) * ttr * (lit(1.0) - digitRatio)
+
+  /** Clean-gate defaults (cleanCorpus, cleanGate, Curation.curate):
+    * kept-token floor, quality floor, stopword-ratio language gate. */
+  val CleanMinTokens = 30L
+  val CleanMinQuality = 0.32
+  val CleanLangThreshold = 0.02
+
+  /** (n_tokens: long, quality, stopword_ratio) of ONE row's kept-token
+    * array by array functions: the same integers and single divisions as
+    * qualityScore's aggregate, so gates keep the same docs (CurationSpec
+    * pins it). A zero-token row's null ratios fail every gate, matching
+    * its absence from the aggregate. */
+  def cleanFeatures(kept: Column): (Column, Column, Column) = {
+    val n = size(kept).cast("double")
+    val stopwordRatio = size(filter(kept, w => w.isin(Stopwords: _*))).cast("double") / n
+    val digitRatio = size(filter(kept, w => w.rlike("[0-9]"))).cast("double") / n
+    val ttr = size(array_distinct(kept)).cast("double") / n
+    (size(kept).cast("long"), qualityOf(n, ttr, digitRatio), stopwordRatio)
+  }
 
   /** Per-source corpus datasheet — the "data card" profile a pipeline
     * publishes with every training-set release: volume (docs, tokens,
@@ -87,8 +109,9 @@ object TextAnalysis {
     * lang-ID signal), so the whole pass is one scan + one hash aggregate
     * regardless of how many filter dimensions are stacked on top.
     */
-  def cleanCorpus(docs: DataFrame, minTokens: Long = 30, minQuality: Double = 0.32,
-                  langThreshold: Double = 0.02): DataFrame =
+  def cleanCorpus(docs: DataFrame, minTokens: Long = CleanMinTokens,
+                  minQuality: Double = CleanMinQuality,
+                  langThreshold: Double = CleanLangThreshold): DataFrame =
     qualityScore(docs)
       .withColumn("lang_pred",
         when(col("stopword_ratio") >= langThreshold, "en").otherwise("und"))
@@ -96,26 +119,16 @@ object TextAnalysis {
         col("lang_pred") === "en")
       .select("doc_id", "n_tokens", "quality", "lang_pred")
 
-  /** The clean gates of `cleanCorpus` as a ROW-LOCAL predicate: the same
-    * length floor, quality floor and language gate computed with array
-    * functions over one row's token array — no explode, no aggregate, no
-    * shuffle — so a streaming ingest can filter each micro-batch
-    * statelessly. The counts are the same integers and the ratios the
-    * same single divisions as the aggregate form, so the keep set is
-    * value-identical (TextAnalysisSpec pins equality on the fixtures).
-    * A doc with zero kept tokens yields null ratios and fails the gate,
-    * matching its absence from the aggregate's output.
+  /** The clean gates of `cleanCorpus` as a ROW-LOCAL predicate over the
+    * `text` column (cleanFeatures) — no explode, no aggregate, no shuffle
+    * — so a streaming ingest can filter each micro-batch statelessly;
+    * the keep set is value-identical to cleanCorpus's.
     */
-  def cleanGate(minTokens: Long = 30, minQuality: Double = 0.32,
-                langThreshold: Double = 0.02): Column = {
-    val arr = filter(TextOps.splitWords(TextOps.normalize(col("text"))),
-      w => TextOps.isKeptToken(w))
-    val n = size(arr).cast("double")
-    val stopwordRatio = size(filter(arr, w => w.isin(Stopwords: _*))).cast("double") / n
-    val digitRatio = size(filter(arr, w => w.rlike("[0-9]"))).cast("double") / n
-    val ttr = size(array_distinct(arr)).cast("double") / n
-    val quality = least(lit(1.0), n / lit(50.0)) * ttr * (lit(1.0) - digitRatio)
-    size(arr) >= minTokens && quality >= minQuality && stopwordRatio >= langThreshold
+  def cleanGate(minTokens: Long = CleanMinTokens, minQuality: Double = CleanMinQuality,
+                langThreshold: Double = CleanLangThreshold): Column = {
+    val (n, quality, stopwordRatio) = cleanFeatures(filter(
+      TextOps.splitWords(TextOps.normalize(col("text"))), w => TextOps.isKeptToken(w)))
+    n >= minTokens && quality >= minQuality && stopwordRatio >= langThreshold
   }
 
   /** Exact top-`p`-fraction quality gate at corpus scale — the selection

@@ -73,8 +73,8 @@ object MultimodalQueries {
     // followed by the entropy-coded-segment skip), scan count, APP0
     // presence — all three variants (baseline gray, baseline color,
     // PROGRESSIVE color). The pinned literals are the JDK ImageIO
-    // ENCODER's emission constants, measured by `graft.JpegMetaSweep`
-    // over 50k ids on this JRE (Temurin-style Debian 17.0.20: baseline
+    // ENCODER's emission constants, measured over 50k ids (BASELINE.md
+    // "Round-18 JPEG full-stream constants") on this JRE (Temurin-style Debian 17.0.20: baseline
     // = 4 DHTs / 1 scan / SOF0; progressive = 10 DHTs total / 10 scans
     // / SOF2) — a JDK vendor/version change can move them; re-run the
     // sweep and re-pin rather than debugging a hash-fail blind

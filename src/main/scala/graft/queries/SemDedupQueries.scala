@@ -83,8 +83,9 @@ object SemDedupQueries {
     // The pair stage with AUTOMATIC plain-vs-salted routing (round 16):
     // a k-row cell-histogram probe picks the triangle-salt decomposition
     // when one cell owns >= 40 % of the candidate mass (the degenerate
-    // boilerplate-collapse regime, measured 4.4x on the planted
-    // SaltProbe fixture) and the plain cell-keyed join otherwise. Output
+    // boilerplate-collapse regime, measured 4.4x on the planted fixture
+    // in BASELINE.md "Round-15 measured facts") and the plain cell-keyed
+    // join otherwise. Output
     // is tier-invariant (SemDedupSpec pins the tiers equal), so the auto
     // form shares the plain form's oracle — on THIS corpus (balanced,
     // head share ~1/k) it must route plain, which the spec also pins.

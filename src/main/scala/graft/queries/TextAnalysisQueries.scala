@@ -899,8 +899,6 @@ object TextAnalysisQueries {
     // composes the same CTEs the per-signal oracles already pin, so the
     // whole pipeline decision is hash-gated, not just its parts.
     GraftQuery("text_curate",
-      // Spread: curate's three corpus passes (clean gate, repetition,
-      // bigram NLL) each tokenized the single-split scan serially
       (s, d) => graft.operators.Curation.curate(
           Tables.documents(s, d),
           DedupQueries.persistedShingles(s, d),

@@ -256,9 +256,9 @@ class DedupSpec extends AnyFunSuite {
     import spark.implicits._
     // 500 → 5 000 measured in the test above and BASELINE.md; this pins
     // the 50 000 point with LINEAR work only (candidate counts are
-    // aggregates; the plain tier's ~half-billion-pair join itself runs
-    // on demand via `sbt "runMain graft.ZipfCrossover 50000"`, whose
-    // numbers BASELINE.md records)
+    // aggregates; the plain tier's ~half-billion-pair join itself was
+    // measured once, recorded in BASELINE.md "The prefix-filter
+    // crossover, measured")
     val n = 50000L
     val docs = graft.sources.ZipfCorpus.synth(
       spark.range(n).select(col("id").as("doc_id"))).localCheckpoint()

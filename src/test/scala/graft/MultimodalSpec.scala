@@ -368,7 +368,8 @@ class MultimodalSpec extends AnyFunSuite {
       // full-stream walk (round 18): progressive = SOF2, 10 scans, 10
       // Huffman tables TOTAL (2 before the first SOS + the between-scan
       // tables); baseline = SOF0, 1 scan, 4 tables. JDK-encoder
-      // constants, measured by JpegMetaSweep — see the oracle comment.
+      // constants (BASELINE.md "Round-18 JPEG full-stream constants") —
+      // see the oracle comment.
       val (nDht, sof, nScans) =
         if (Multimodal.jpegVariant(id) == 2) (10, 0xc2, 10) else (4, 0xc0, 1)
       assert((r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5),

@@ -128,6 +128,25 @@ class SearchSpec extends AnyFunSuite {
       .count() == 0)
   }
 
+  test("search tiers agree row for row: BM25 in-plan/stats/indexed, parity in-plan/indexed") {
+    val idx = java.nio.file.Files.createTempDirectory("tieridx").toString
+    Search.buildIndex(spark, TestSpark.sf0001, idx)
+    val docinfo = spark.read.parquet(s"$idx/docinfo")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    val queries = Seq(Search.DefaultQuery, // default, repeated term
+      "the a of the and to is in the table", // stopword-heavy
+      "fast zzzqx scan") // one term missing from the vocabulary
+    for (q <- queries) {
+      val bm25 = rows(Search.searchTopKBm25(spark, TestSpark.sf0001, q))
+      assert(bm25.nonEmpty, q)
+      assert(rows(Search.searchTopKBm25Stats(spark, TestSpark.sf0001, docinfo, q)) == bm25, q)
+      assert(rows(Search.searchTopKBm25Indexed(spark, idx, q)) == bm25, q)
+      val parity = rows(Search.searchTopK(spark, TestSpark.sf0001, q))
+      assert(parity.nonEmpty, q)
+      assert(rows(Search.searchTopKIndexed(spark, idx, q)) == parity, q)
+    }
+  }
+
   test("searchTopK plan construction is fully lazy — zero Spark jobs") {
     val tracker = spark.sparkContext.statusTracker
     // first build absorbs one-time source setup (parquet footer/listing

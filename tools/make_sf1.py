@@ -21,14 +21,16 @@ Two deliberate choices that keep the scale-up NON-degenerate:
     blowup that 10 verbatim mirrors of every doc would manufacture.
     The zipf fixtures are untouched by this: they re-synthesize from
     doc_id values, so at sf1.0 they form one 50k-doc corpus — exactly
-    the third-decade regime ZipfCrossover measures.
+    the third-decade regime of BASELINE.md "The prefix-filter
+    crossover, measured".
 
   - embeddings are copied UNREPLICATED: offset copies of identical
     vectors would make every vector a 10-way exact dup (degenerate ANN
     corpus: quadratic near-dup output, distance ties everywhere), and
     unlike text there is no token-prefix trick that preserves intra-
     replica geometry while decorrelating replicas. The vector family's
-    decade scaling is measured by DecadeSynth instead.
+    decade scaling is recorded in BASELINE.md "Relational/event/search
+    decade tier" instead.
 
 region/nation are fixed dimensions and copy as-is.
 """
