@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, graftglue}
 import org.apache.spark.sql.functions._
 
 /** Text normalization / tokenization primitives.
@@ -67,6 +67,14 @@ object TextOps {
     */
   def isKeptToken(word: Column): Column =
     length(word) > 0 && !word.rlike("^[0-9]+$")
+
+  /** Per-document term counts, `array<struct<word, tf>>`: the kept tokens
+    * of `normalize` → `splitWords` → `isKeptToken`, counted inside the row
+    * by one regex-free scan (see TermCounts). Spark's `lower` does the case
+    * mapping, as in `normalize`. `TermCountsSpec` pins the equivalence.
+    */
+  def termCounts(c: Column): Column =
+    graftglue.column(TermCounts(graftglue.expression(lower(c))))
 
   /** Driver-side tokenizer for query strings: same keep-rules as the
     * distributed path, on an already-filtered string.

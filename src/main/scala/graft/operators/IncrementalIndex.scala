@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Incrementally maintained search index — streaming ingest, identical
   * query answers to the batch-built index.
@@ -43,14 +44,18 @@ object IncrementalIndex {
     */
   def ingestBatch(docs: DataFrame, indexDir: String, batchId: Long = 0L): Unit = {
     Lease.check(indexDir) // fail loudly while compaction holds the dir
-    val toks = Search.tokens(docs)
-    BatchCommit.writeBatch(
-      toks.groupBy("word").agg(countDistinct("doc_id").as("df_delta")),
-      s"$indexDir/vocab_delta", batchId)
-    BatchCommit.writeBatch(
-      toks.groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-        .withColumn("wb", pmod(xxhash64(col("word")), lit(Buckets.toLong)).cast("int")),
-      s"$indexDir/postings", batchId, partitionCols = Seq("wb"))
+    // the batch is tokenized once: both writes read these persisted
+    // (doc_id, word, tf) rows, which are distinct per (doc_id, word), so
+    // df is a plain count
+    val bdw = Search.docWordCounts(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      BatchCommit.writeBatch(
+        bdw.groupBy("word").agg(count(lit(1)).as("df_delta")),
+        s"$indexDir/vocab_delta", batchId)
+      BatchCommit.writeBatch(
+        bdw.withColumn("wb", pmod(xxhash64(col("word")), lit(Buckets.toLong)).cast("int")),
+        s"$indexDir/postings", batchId, partitionCols = Seq("wb"))
+    } finally bdw.unpersist()
     BatchCommit.writeBatch(
       Search.docInfo(docs).select("doc_id", "source", "lang"),
       s"$indexDir/docinfo", batchId)

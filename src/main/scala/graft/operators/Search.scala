@@ -5,26 +5,28 @@ import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** The reference's full capability surface — a batch TF-IDF search engine
   * (SURVEY.md §2, operators V1..Q8) — rebuilt as lazy Catalyst plans over the
   * `documents` table (doc_id↔id, text↔text; source/lang stand in for
   * url/title).
   *
-  * Scale posture (100 TB): everything below is declarative DataFrame code —
-  * one corpus scan feeds vocabulary/doc-info/postings branches (vs 3 scans in
-  * the reference); the vocabulary side of every join is broadcast (the
-  * reference's setup()-loaded side HashMaps, Indexer.java:42-73, done
-  * properly); aggregations get map-side partials from Catalyst (the reference
-  * forgot the combiner on its TF job, Indexer.java:108-140); top-k plans as
-  * TakeOrderedAndProject (per-partition heaps + driver merge) instead of the
-  * reference's single-reducer global sort (Query.java:278).
+  * Scale posture (100 TB): everything below is declarative DataFrame code.
+  * The index build tokenizes each document once, into one persisted
+  * per-document frame feeding the vocabulary, postings and doc-info tables
+  * (the reference reads and tokenizes its corpus in 3 jobs); tf is counted
+  * inside the document's row, so no (doc, word) pair is shuffled (the
+  * reference shuffles every occurrence, with no combiner,
+  * Indexer.java:108-140); the vocabulary side of every join is broadcast
+  * (the reference's setup()-loaded side HashMaps, Indexer.java:42-73, done
+  * properly); top-k plans as TakeOrderedAndProject (per-partition heaps +
+  * driver merge) instead of the reference's single-reducer global sort
+  * (Query.java:278).
   *
-  * The only intentionally non-scalable piece is the single-partition
-  * `row_number` window assigning word ids — vocabulary cardinality is bounded
-  * (natural-language vocab ≪ corpus size) and the reference's id semantics
-  * (sequential in word order, Vocabulary.java:90,103 — quirk Q-a) demand a
-  * total order. It runs over the *aggregated* vocabulary, never the corpus.
+  * Word ids are sequential in word order (Vocabulary.java:90,103 — quirk
+  * Q-a), a total order; `vocabularyFrom` assigns them with per-prefix
+  * windows over the *aggregated* vocabulary, never the corpus.
   */
 object Search {
 
@@ -43,13 +45,18 @@ object Search {
     docs.select(col("doc_id"), w).filter(TextOps.isKeptToken(col("word")))
   }
 
-  /** (doc_id, word, tf) — the shared first aggregation: postings are a
-    * projection of it, and vocabulary df is a count over it. Deriving both
-    * from this one subtree lets Catalyst's ReuseExchange compute the
-    * tokenize + first shuffle ONCE per query instead of once per branch.
+  /** (doc_id, word, tf) — one row per distinct word of a document: postings
+    * are a projection of it, and vocabulary df is a count over it. tf is
+    * counted inside the document's row (TextOps.termCounts), so this is
+    * row-local: no `(doc_id, word)` exchange, no combiner to forget
+    * (Indexer.java:108-140 shuffles every occurrence).
     */
   def docWordCounts(docs: DataFrame): DataFrame =
-    tokens(docs).groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
+    termRows(docs.select(col("doc_id"), TextOps.termCounts(col("text")).as("terms")))
+
+  /** (doc_id, word, tf) rows of a frame carrying a `terms` column. */
+  private def termRows(byDoc: DataFrame): DataFrame =
+    byDoc.select(col("doc_id"), inline(col("terms")))
 
   /** V4+V5: vocabulary — word → (df, word_id), ids sequential in word
     * order per quirk Q-a; df via the partial+final hash aggregate Catalyst
@@ -78,16 +85,19 @@ object Search {
     */
   def vocabularyFrom(byDocWord: DataFrame, tiny: Boolean = false): DataFrame = {
     // `tiny` (round 19): the word-level aggregate below feeds TWO
-    // branches (prefix offsets + the rank join); at scale ReuseExchange
-    // dedups the upstream tokenize, but on the SinglePartition-pinned
-    // metadata path there is no exchange to reuse — an eager
-    // localCheckpoint of the (vocab-bounded) aggregate cuts the shared
-    // subtree instead, so the corpus is still tokenized exactly once.
+    // branches (prefix offsets + the rank join); at scale both can share
+    // the word aggregate's exchange (ReuseExchange), but on the
+    // SinglePartition-pinned metadata path there is no exchange to reuse
+    // — a localCheckpoint of the (vocab-bounded) aggregate cuts the shared
+    // subtree instead, so the input is still scanned exactly once.
     val agg0 = byDocWord
       .groupBy("word").agg(count(lit(1)).as("df")) // rows are distinct (doc,word)
       .withColumn("pfx", substring(col("word"), 1, 1))
     val agg = if (tiny) agg0.localCheckpoint(false) else agg0 // lazy — see queryPostings
     val offsets = agg.groupBy("pfx").agg(count(lit(1)).as("n"))
+      // unpartitioned window, bounded: it sees at most 36 rows, one per
+      // first character, because every word matches [a-z0-9]+
+      // (TermCountsSpec checks the token domain)
       .withColumn("off", coalesce(
         sum("n").over(Window.orderBy("pfx")
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
@@ -107,8 +117,7 @@ object Search {
 
   /** I1-I3: postings (doc_id, word_id, tf). The vocab side is broadcast —
     * the reference's per-map-task side-file reload (Indexer.java:42-73) as a
-    * real torrent-shipped broadcast; the two-key count gets automatic
-    * map-side partial aggregation.
+    * real torrent-shipped broadcast; tf comes row-local from docWordCounts.
     */
   def postings(docs: DataFrame, vocab: DataFrame): DataFrame =
     postingsFrom(docWordCounts(docs), vocab)
@@ -408,38 +417,51 @@ object Search {
   val IndexBuckets = 16
 
   /** Build-once index: vocabulary, doc-info, and word-bucket-partitioned
-    * postings as parquet under `indexDir`. The reference re-derives its
-    * index inputs per job and re-reads side files per map task
-    * (Indexer.java:42-73); here the corpus is scanned once and every later
-    * query is scan-free. Doc-info carries `n_tokens` (kept-token count —
+    * postings as parquet under `indexDir`. The reference re-reads and
+    * re-tokenizes its corpus per job and re-reads side files per map task
+    * (Indexer.java:42-73); here each document is tokenized once, into ONE
+    * persisted per-document frame `(doc_id, source, lang, n_chars, terms)`
+    * (terms = TextOps.termCounts), and all three tables derive from it:
+    * vocabulary and postings from its explode, doc-info by a row-local
+    * projection. Doc-info carries `n_tokens` = Σtf (the kept-token count —
     * the BM25 document length), so length-normalized ranking is served
     * from the index with no corpus scan; docs whose every token is
-    * filtered keep a 0 row (left join) and are excluded from the BM25
-    * corpus statistics at query time, matching the in-plan twin.
+    * filtered get 0 and are excluded from the BM25 corpus statistics at
+    * query time, matching the in-plan twin.
     */
   def buildIndex(spark: SparkSession, dir: String, indexDir: String): Unit = {
-    val docs = Tables.documents(spark, dir)
-    val vocab = vocabulary(docs).cache()
-    // all three tables land under ONE DirSwap marker scope: a crashed
-    // (re)build can never leave postings complete but docinfo missing (the
-    // previous sequential overwrite-writes could, and the gate only
-    // checked postings)
-    DirSwap.swap(indexDir, Seq(
-      "vocabulary" -> { out => vocab.write.parquet(out) },
-      "postings" -> { out =>
-        postings(docs, vocab)
-          .withColumn("wb", pmod(col("word_id"), lit(IndexBuckets)).cast("int"))
-          .repartition(col("wb"))
-          .write.partitionBy("wb").parquet(out)
-      },
-      "docinfo" -> { out =>
-        docInfo(docs)
-          .join(tokens(docs).groupBy("doc_id").agg(count(lit(1)).as("n_tokens")),
-            Seq("doc_id"), "left")
-          .na.fill(0L, Seq("n_tokens"))
-          .write.parquet(out)
-      }))
-    vocab.unpersist()
+    // MEMORY_AND_DISK: the frame holds every document's term array, so at
+    // scale it must spill rather than fail
+    val byDoc = Tables.documents(spark, dir)
+      .select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
+        TextOps.termCounts(col("text")).as("terms"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // the vocabulary is written AND broadcast into the postings join:
+    // cached, it is aggregated once
+    val byDocWord = termRows(byDoc)
+    val vocab = vocabularyFrom(byDocWord).cache()
+    try {
+      // all three tables land under ONE DirSwap marker scope: a crashed
+      // (re)build can never leave postings complete but docinfo missing (the
+      // previous sequential overwrite-writes could, and the gate only
+      // checked postings)
+      DirSwap.swap(indexDir, Seq(
+        "vocabulary" -> { out => vocab.write.parquet(out) },
+        "postings" -> { out =>
+          postingsFrom(byDocWord, vocab)
+            .withColumn("wb", pmod(col("word_id"), lit(IndexBuckets)).cast("int"))
+            .repartition(col("wb"))
+            .write.partitionBy("wb").parquet(out)
+        },
+        "docinfo" -> { out =>
+          byDoc.select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
+              aggregate(col("terms.tf"), lit(0L), _ + _).as("n_tokens"))
+            .write.parquet(out)
+        }))
+    } finally {
+      vocab.unpersist()
+      byDoc.unpersist()
+    }
   }
 
   /** The reference user's exact entry point (Query.java:247-294): free-text

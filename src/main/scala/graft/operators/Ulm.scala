@@ -5,6 +5,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import java.util.concurrent.{Executors, TimeoutException}
+import scala.concurrent.duration._
+import scala.concurrent.{Await, ExecutionContext, Future}
+
 /** Unigram-language-model subword tokenizer (Kudo 2018 — the
   * SentencePiece unigram model), the OTHER tokenizer family beside BPE:
   * where BPE greedily composes a vocabulary bottom-up by pair frequency,
@@ -696,6 +700,29 @@ object Ulm {
         Seq("piece"), "left")
       .select(col("piece"), coalesce(col("e"), lit(0.0)).as("e"))
 
+  /** Upper bound on the wait for the concurrent half of [[alongside]]. */
+  val ConcurrentTimeout: FiniteDuration = 30.minutes
+
+  /** Runs `a` on a dedicated one-thread pool while the caller runs `b`,
+    * and returns both results. The pool is shut down on return, and the
+    * wait for `a` is bounded: past [[ConcurrentTimeout]] it fails with an
+    * error that names `what`. For independent driver loops whose jobs
+    * back-fill each other's scheduler gaps; each half's values are its
+    * own, so running them together cannot change them.
+    */
+  private[graft] def alongside[A, B](what: String)(a: => A)(b: => B): (A, B) = {
+    val pool = Executors.newSingleThreadExecutor()
+    try {
+      val fa = Future(a)(ExecutionContext.fromExecutorService(pool))
+      val rb = b
+      val ra = try Await.result(fa, ConcurrentTimeout) catch {
+        case _: TimeoutException => throw new TimeoutException(
+          s"$what: the concurrent half did not finish within $ConcurrentTimeout")
+      }
+      (ra, rb)
+    } finally pool.shutdownNow()
+  }
+
   /** The soft-EM trainer: `iters` forward-backward rounds from the same
     * seed as [[train]]. Returns (model (piece, cnt_soft, nll), curve
     * (round, total_nll_soft)) — total_nll_soft = Σ freq·(−ln α(n)) under
@@ -717,19 +744,19 @@ object Ulm {
     // under the same round-input probabilities — run them from two
     // driver threads so one job's scheduler tail back-fills the other.
     // Neither depends on the other's result, so values are untouched.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     val curve = (1 to p.iters).map { k =>
       val pmRound = pm
-      val nllF = Future(marginals(wt, pmRound, p.maxPieceLen, p.assertMaxWordLen)
-        .agg(Stable.dsum(Stable.stab(col("freq") * -log(col("an")), 6), 6))
-        .collect()(0).getDouble(0))
-      val eRound = softCounts(wt, pmRound, p.maxPieceLen, vocab, p.assertMaxWordLen)
-        .localCheckpoint(false) // lazy: materialized by the collect below
-      e = eRound.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+      val (nll, eRound) = alongside(s"Ulm.softTrain round $k") {
+        marginals(wt, pmRound, p.maxPieceLen, p.assertMaxWordLen)
+          .agg(Stable.dsum(Stable.stab(col("freq") * -log(col("an")), 6), 6))
+          .collect()(0).getDouble(0)
+      } {
+        val eRound = softCounts(wt, pmRound, p.maxPieceLen, vocab, p.assertMaxWordLen)
+          .localCheckpoint(false) // lazy: materialized by the collect below
+        e = eRound.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+        eRound
+      }
       eDf = eRound
-      val nll = Await.result(nllF, Duration.Inf)
       pm = probMapSoft(e)
       (k, nll)
     }

@@ -660,14 +660,11 @@ object UlmQueries {
         // two driver threads (§2.6 overlap, the ulm_prune_soft_vs_hard
         // pattern). Each is deterministic alone, so concurrency cannot
         // move the gate.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val softF = Future(Ulm.softTrain(Tables.documents(s, d), P)._2)
-        val hardF = Future(Ulm.emCurve(Tables.documents(s, d), P)
-          .select(col("round"), col("total_nll").as("total_nll_hard")))
-        Await.result(softF, Duration.Inf)
-          .join(Await.result(hardF, Duration.Inf), "round").orderBy("round")
+        val (soft, hard) = Ulm.alongside("ulm_em_curve_soft")(
+          Ulm.softTrain(Tables.documents(s, d), P)._2)(
+          Ulm.emCurve(Tables.documents(s, d), P)
+            .select(col("round"), col("total_nll").as("total_nll_hard")))
+        soft.join(hard, "round").orderBy("round")
       },
       Some {
         def softNll(k: Int) = graft.functions.Stable.dsumSql(
@@ -788,16 +785,13 @@ object UlmQueries {
         // one loop's tasks back-fill the other's gaps). Each loop's
         // result is deterministic on its own, so concurrency cannot
         // affect the gate.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val hardF = Future(prunedParts(s, d).curve
-          .select(col("round"), col("n_multi"),
-            col("total_nll").as("total_nll_hard")))
-        val softF = Future(softPrunedParts(s, d).curve
-          .select(col("round"), col("total_nll").as("total_nll_soft")))
-        Await.result(hardF, Duration.Inf)
-          .join(Await.result(softF, Duration.Inf), "round").orderBy("round")
+        val (hard, soft) = Ulm.alongside("ulm_prune_soft_vs_hard")(
+          prunedParts(s, d).curve
+            .select(col("round"), col("n_multi"),
+              col("total_nll").as("total_nll_hard")))(
+          softPrunedParts(s, d).curve
+            .select(col("round"), col("total_nll").as("total_nll_soft")))
+        hard.join(soft, "round").orderBy("round")
       },
       Some {
         def nll(k: Int) = s"(SELECT ${graft.functions.Stable.dsumSql(
