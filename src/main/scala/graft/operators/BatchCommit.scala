@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Batch-id-keyed idempotent writes — the commit layer under every
@@ -198,15 +199,17 @@ object BatchCommit {
 
   /** Committed-batches view of a batch-keyed dir: the rows every reader
     * (and the driver's oracle compare) should see. None until the first
-    * batch commits.
+    * batch commits. A `schema` spares the parquet footer read.
     */
-  def readCommitted(spark: SparkSession, root: String): Option[DataFrame] = {
+  def readCommitted(spark: SparkSession, root: String,
+                    schema: Option[StructType] = None): Option[DataFrame] = {
     val dirs = committedBatchDirs(spark, root)
     // explicit basePath: sibling batch=* roots otherwise make partition
     // discovery throw CONFLICTING_DIRECTORY_STRUCTURES; with it, `batch`
     // becomes a partition column — dropped so readers see the data schema
     // regardless of which batches exist (ids and `compact` mix types)
     if (dirs.isEmpty) None
-    else Some(spark.read.option("basePath", root).parquet(dirs: _*).drop("batch"))
+    else Some(schema.fold(spark.read)(spark.read.schema).option("basePath", root)
+      .parquet(dirs: _*).drop("batch"))
   }
 }

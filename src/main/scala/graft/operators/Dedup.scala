@@ -763,7 +763,7 @@ object Dedup {
     * majority vote. Returns (doc_id, simhash BIGINT).
     */
   def simhash(docs: DataFrame): DataFrame = {
-    val toks = Search.tokens(docs).groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
+    val toks = Search.docWordCounts(docs) // row-local (doc_id, word, tf)
     val nib = col("h").substr(col("j") + 1, lit(1))
     val bitRows = toks
       .select(col("doc_id"), col("tf"), md5(col("word")).as("h"))
@@ -787,7 +787,7 @@ object Dedup {
     * candidate join stays selective on a large corpus.
     */
   def simhash60(docs: DataFrame): DataFrame = {
-    val toks = Search.tokens(docs).groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
+    val toks = Search.docWordCounts(docs) // row-local (doc_id, word, tf)
     val nibble = conv(col("h").substr((col("j") / 4).cast("int") + 1, lit(1)), 16, 10)
       .cast("int")
     val bit = nibble.bitwiseAND(expr("shiftleft(1, 3 - j % 4)")) > 0

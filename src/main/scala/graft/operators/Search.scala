@@ -2,10 +2,13 @@ package graft.operators
 
 import graft.functions.{Stable, TextOps}
 import graft.sources.Tables
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's full capability surface — a batch TF-IDF search engine
   * (SURVEY.md §2, operators V1..Q8) — rebuilt as lazy Catalyst plans over the
@@ -18,15 +21,18 @@ import org.apache.spark.storage.StorageLevel
   * (the reference reads and tokenizes its corpus in 3 jobs); tf is counted
   * inside the document's row, so no (doc, word) pair is shuffled (the
   * reference shuffles every occurrence, with no combiner,
-  * Indexer.java:108-140); the vocabulary side of every join is broadcast
-  * (the reference's setup()-loaded side HashMaps, Indexer.java:42-73, done
-  * properly); top-k plans as TakeOrderedAndProject (per-partition heaps +
+  * Indexer.java:108-140). The persisted index has one word-keyed format
+  * and one query path, as the reference's Query.java has one format. The
+  * vocabulary side of every join is broadcast (the reference's
+  * setup()-loaded side HashMaps, Indexer.java:42-73, done properly);
+  * top-k plans as TakeOrderedAndProject (per-partition heaps +
   * driver merge) instead of the reference's single-reducer global sort
   * (Query.java:278).
   *
   * Word ids are sequential in word order (Vocabulary.java:90,103 — quirk
   * Q-a), a total order; `vocabularyFrom` assigns them with per-prefix
-  * windows over the *aggregated* vocabulary, never the corpus.
+  * windows over the *aggregated* vocabulary, never the corpus. Only the
+  * in-plan tables carry them; the persisted index is keyed by the word.
   */
 object Search {
 
@@ -133,10 +139,14 @@ object Search {
     */
   def queryTerms(spark: SparkSession, query: String): DataFrame = {
     import spark.implicits._
-    TextOps.tokenizeScala(TextOps.filterTextScala(query))
+    queryWords(query)
       .groupBy(identity).map { case (w, ws) => (w, ws.size.toLong) }
       .toSeq.toDF("word", "qtf")
   }
+
+  /** A query's words, repeats kept: the reference's query tokenizer. */
+  private def queryWords(query: String): Seq[String] =
+    TextOps.tokenizeScala(TextOps.filterTextScala(query))
 
   /** Per-query postings: (doc_id, word, tf, df) for query terms only.
     * Scoring never needs word ids, so the token stream is filtered to the
@@ -161,7 +171,7 @@ object Search {
     * persisted index.
     */
   def queryPostings(docs: DataFrame, query: String): DataFrame = {
-    val qwords = TextOps.tokenizeScala(TextOps.filterTextScala(query)).distinct
+    val qwords = queryWords(query).distinct
     // Round-19 metadata-scale path (guide §2.4): on a tiny single-split
     // scan, pin to SinglePartition and CUT the shared (doc_id, word, tf)
     // subtree with an eager localCheckpoint — post is query-term-filtered
@@ -194,7 +204,7 @@ object Search {
 
   /** The reference's score (quirk Q-b) over postings joined to the query
     * terms: (doc_id, tf, qtf, df) → (doc_id, score = Σ tf·qtf/df²). */
-  private[operators] def parityScores(joined: DataFrame): DataFrame =
+  private def parityScores(joined: DataFrame): DataFrame =
     joined
       .select(col("doc_id"),
         (col("tf") * col("qtf") / (col("df").cast("double") * col("df"))).as("part"))
@@ -229,8 +239,7 @@ object Search {
 
   /** Shared Q2-Q8 tail: exact top-k by (score desc, doc_id asc), then
     * doc metadata broadcast-joined onto the k rows, order restored. */
-  private[operators] def topKWithDocInfo(scores: DataFrame, docinfo: DataFrame,
-                                         k: Int): DataFrame =
+  private def topKWithDocInfo(scores: DataFrame, docinfo: DataFrame, k: Int): DataFrame =
     scores.orderBy(desc("score"), asc("doc_id")).limit(k)
       .join(broadcast(docinfo.select("doc_id", "source", "lang")), "doc_id")
       .select("doc_id", "score", "source", "lang")
@@ -284,8 +293,8 @@ object Search {
   /** BM25 with PRECOMPUTED length statistics — the steady-state form of
     * the non-indexed tier. `searchTopKBm25`'s second corpus token pass
     * only exists to derive per-doc lengths; a deployment refreshes that
-    * (doc_id, n_tokens) table once per corpus version (the index-b2
-    * docinfo already carries it), so the benched one-shot form's two
+    * (doc_id, n_tokens) table once per corpus version (the index's
+    * docinfo carries it), so the benched one-shot form's two
     * passes collapse to ONE — the query-filtered postings scan — plus a
     * docinfo-sized read. Identical answer to `searchTopKBm25` /
     * `searchTopKBm25Indexed` (one oracle gates all three tiers);
@@ -385,85 +394,6 @@ object Search {
       .orderBy(desc("phrase_tf"), asc("doc_id"))
   }
 
-  private def scoreAndRank(spark: SparkSession, post: DataFrame, vocab: DataFrame,
-                           docinfo: DataFrame, query: String, k: Int): DataFrame = {
-    val qt = queryTerms(spark, query)
-      .join(vocab, "word") // keep df + word_id; drops non-vocab terms (I2 semantics)
-      .select("word_id", "qtf", "df")
-    topKWithDocInfo(parityScores(post.join(broadcast(qt), "word_id")), docinfo, k)
-  }
-
-  /** The persisted postings a query reads: the scan carries a
-    * `wb IN (...)` predicate computed from the query's own word ids, so
-    * partition pruning skips every bucket directory the query doesn't
-    * touch — O(query terms) buckets regardless of corpus size — under
-    * the guarded SinglePartition pin (≤ |q| bucket dirs; at a production
-    * index each bucket is many splits → no-op).
-    */
-  private def prunedPostings(spark: SparkSession, indexDir: String,
-                             vocab: DataFrame, query: String): DataFrame = {
-    val qWordIds = queryTerms(spark, query).join(vocab, "word")
-      .select("word_id").collect().map(_.getLong(0)) // ≤ |query terms| rows
-    val qBuckets = qWordIds.map(w => (w % IndexBuckets).toInt).distinct.toSeq
-    Spread.tight(spark.read.parquet(s"$indexDir/postings")
-      .filter(col("wb").isin(qBuckets: _*)))
-  }
-
-  /** Number of word-id hash buckets the persisted postings are partitioned
-    * into. At 100 TB this is the lever that turns a query into a handful of
-    * directory reads: postings land in `wb=<word_id % buckets>` dirs, and a
-    * q-term query prunes to ≤q of them at file-listing time.
-    */
-  val IndexBuckets = 16
-
-  /** Build-once index: vocabulary, doc-info, and word-bucket-partitioned
-    * postings as parquet under `indexDir`. The reference re-reads and
-    * re-tokenizes its corpus per job and re-reads side files per map task
-    * (Indexer.java:42-73); here each document is tokenized once, into ONE
-    * persisted per-document frame `(doc_id, source, lang, n_chars, terms)`
-    * (terms = TextOps.termCounts), and all three tables derive from it:
-    * vocabulary and postings from its explode, doc-info by a row-local
-    * projection. Doc-info carries `n_tokens` = Σtf (the kept-token count —
-    * the BM25 document length), so length-normalized ranking is served
-    * from the index with no corpus scan; docs whose every token is
-    * filtered get 0 and are excluded from the BM25 corpus statistics at
-    * query time, matching the in-plan twin.
-    */
-  def buildIndex(spark: SparkSession, dir: String, indexDir: String): Unit = {
-    // MEMORY_AND_DISK: the frame holds every document's term array, so at
-    // scale it must spill rather than fail
-    val byDoc = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
-        TextOps.termCounts(col("text")).as("terms"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the vocabulary is written AND broadcast into the postings join:
-    // cached, it is aggregated once
-    val byDocWord = termRows(byDoc)
-    val vocab = vocabularyFrom(byDocWord).cache()
-    try {
-      // all three tables land under ONE DirSwap marker scope: a crashed
-      // (re)build can never leave postings complete but docinfo missing (the
-      // previous sequential overwrite-writes could, and the gate only
-      // checked postings)
-      DirSwap.swap(indexDir, Seq(
-        "vocabulary" -> { out => vocab.write.parquet(out) },
-        "postings" -> { out =>
-          postingsFrom(byDocWord, vocab)
-            .withColumn("wb", pmod(col("word_id"), lit(IndexBuckets)).cast("int"))
-            .repartition(col("wb"))
-            .write.partitionBy("wb").parquet(out)
-        },
-        "docinfo" -> { out =>
-          byDoc.select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
-              aggregate(col("terms.tf"), lit(0L), _ + _).as("n_tokens"))
-            .write.parquet(out)
-        }))
-    } finally {
-      vocab.unpersist()
-      byDoc.unpersist()
-    }
-  }
-
   /** The reference user's exact entry point (Query.java:247-294): free-text
     * query over a WikiExtractor JSON-lines corpus dir → top-k
     * (title, url), score-descending. One Catalyst plan replaces the
@@ -501,35 +431,125 @@ object Search {
                    query: String = DefaultQuery, k: Int = 10): Dataset[SearchHit] =
     searchTopK(spark, dir, query, k).as(Encoders.product[SearchHit])
 
-  /** Query the persisted index through its bucket-pruned postings
-    * (prunedPostings). Result is identical to `searchTopK` (same formula,
-    * same tie-break).
+  // ---- the search index: one format, one derivation, one query path ----
+
+  /** Postings are partitioned into `wb = pmod(xxhash64(word), 16)` dirs, so
+    * a q-term query reads ≤ q of them whatever the corpus size. Keyed by
+    * the word, not a word id: ids would need cross-batch coordination in
+    * the incremental index, and scoring never sees them.
     */
-  def searchTopKIndexed(spark: SparkSession, indexDir: String,
-                        query: String = DefaultQuery, k: Int = 10): DataFrame = {
-    val vocab = spark.read.parquet(s"$indexDir/vocabulary")
-    val docinfo = spark.read.parquet(s"$indexDir/docinfo")
-    scoreAndRank(spark, prunedPostings(spark, indexDir, vocab, query),
-      vocab, docinfo, query, k)
+  private val Buckets = 16L
+
+  private[graft] def bucket(word: Column): Column =
+    pmod(xxhash64(word), lit(Buckets)).cast("int")
+
+  /** Driver-side twin of `bucket` (Spark's `xxhash64` of one string is
+    * XXH64 of its UTF-8 bytes, seed 42): a query's buckets cost no job. */
+  private[graft] def bucketOf(word: String): Int =
+    Math.floorMod(XXH64.hashUTF8String(UTF8String.fromString(word), 42L), Buckets).toInt
+
+  /** An index: vocabulary (word, df), postings (doc_id, word, tf, wb) and
+    * docinfo (doc_id, source, lang, n_chars, n_tokens). Two writers share
+    * the format: `buildIndex` (one DirSwap generation) and
+    * `IncrementalIndex.ingestBatch` (one `batch=N` dir per table, df then
+    * the batch's delta).
+    */
+  final case class Index(vocabulary: DataFrame, postings: DataFrame, docinfo: DataFrame)
+
+  /** Open an index with `read(table, schema)`: explicit schemas read no
+    * parquet footer, so opening an index runs no job. */
+  private[operators] def index(read: (String, StructType) => DataFrame): Index = Index(
+    read("vocabulary", StructType.fromDDL("word STRING, df BIGINT")),
+    read("postings", StructType.fromDDL("doc_id BIGINT, word STRING, tf BIGINT, wb INT")),
+    read("docinfo", StructType.fromDDL(
+      "doc_id BIGINT, source STRING, lang STRING, n_chars BIGINT, n_tokens BIGINT")))
+
+  /** The index of a document set, derived from one frame
+    * `(doc_id, source, lang, n_chars, terms)` persisted while `write` runs:
+    * each document is tokenized once (TextOps.termCounts), vocabulary and
+    * postings come from the frame's explode with no (doc, word) shuffle,
+    * and docinfo is a row-local projection whose `n_tokens` = Σtf is the
+    * BM25 document length (0 for a document with no kept token, which the
+    * BM25 statistics then leave out, as the in-plan twin does).
+    */
+  private[operators] def withIndexOf[T](docs: DataFrame)(write: Index => T): T = {
+    // MEMORY_AND_DISK: the frame holds every term array, so it must spill;
+    // n_chars is cast because some corpora store it as INT and the index's
+    // read schema says BIGINT
+    val byDoc = docs
+      .select(col("doc_id"), col("source"), col("lang"), col("n_chars").cast("long").as("n_chars"),
+        TextOps.termCounts(col("text")).as("terms"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val byDocWord = termRows(byDoc)
+    try write(Index(
+      byDocWord.groupBy("word").agg(count(lit(1)).as("df")), // rows are distinct (doc, word)
+      byDocWord.withColumn("wb", bucket(col("word"))),
+      byDoc.select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
+        aggregate(col("terms.tf"), lit(0L), _ + _).as("n_tokens"))))
+    finally byDoc.unpersist()
   }
 
-  /** BM25 served from the persisted index — identical answer to
-    * `searchTopKBm25` (same oracle gates both), with ZERO corpus scans:
-    * tf/df from the bucket-pruned postings and vocabulary, document
-    * lengths from docinfo's `n_tokens`, corpus statistics (N, avgdl) a
-    * docinfo-sized aggregate. This is the deployment shape — the in-plan
-    * twin's two corpus token passes become index reads, which is the
-    * whole point of carrying dl in the index.
+  /** An index's tables as written: (name, rows, partition columns). */
+  private[operators] def indexTables(ix: Index): Seq[(String, DataFrame, Seq[String])] = Seq(
+    ("vocabulary", ix.vocabulary, Nil),
+    ("postings", ix.postings.repartition(col("wb")), Seq("wb")), // one file per bucket
+    ("docinfo", ix.docinfo, Nil))
+
+  /** Build-once index of `dir`'s documents (the reference re-reads and
+    * re-tokenizes its corpus per job, Indexer.java:42-73). All three tables
+    * land under ONE DirSwap marker scope: a crashed (re)build never leaves
+    * postings complete but docinfo missing.
+    */
+  def buildIndex(spark: SparkSession, dir: String, indexDir: String): Unit =
+    withIndexOf(Tables.documents(spark, dir)) { ix =>
+      DirSwap.swap(indexDir, indexTables(ix).map { case (name, rows, parts) =>
+        name -> ((out: String) => rows.write.partitionBy(parts: _*).parquet(out))
+      })
+    }
+
+  def openIndex(spark: SparkSession, indexDir: String): Index =
+    index((t, schema) => spark.read.schema(schema).parquet(s"$indexDir/$t"))
+
+  /** (doc_id, word, tf, qtf, df) of the query's terms — the one read behind
+    * every indexed search. The postings scan carries a `wb IN (...)`
+    * predicate computed on the driver, so partition pruning reads ≤ |q|
+    * bucket dirs, under the guarded SinglePartition pin (a no-op at a
+    * production index, where a bucket is many splits); df joins in-plan
+    * from the `word IN (q)` vocabulary rows, so building the plan runs no
+    * job. Query words the index lacks have no postings, so they drop out
+    * of the postings join. The df join is a LEFT join: for a query of
+    * such words only, an inner join would make an empty broadcast that
+    * AQE propagates over the whole plan while sibling stages are starting,
+    * so the query's job count would depend on timing.
+    */
+  private def indexedPostings(spark: SparkSession, ix: Index, query: String): DataFrame = {
+    val words = queryWords(query).distinct
+    val qt = queryTerms(spark, query)
+      .join(broadcast(ix.vocabulary.filter(col("word").isin(words: _*))), Seq("word"), "left")
+    Spread.tight(ix.postings.filter(col("wb").isin(words.map(bucketOf).distinct: _*)))
+      .join(broadcast(qt), "word")
+  }
+
+  /** Parity top-k over an opened index, batch or incremental. */
+  private[operators] def indexedTopK(spark: SparkSession, ix: Index, query: String,
+                                     k: Int): DataFrame =
+    topKWithDocInfo(parityScores(indexedPostings(spark, ix, query)), ix.docinfo, k)
+
+  /** `searchTopK`'s answer (same formula, same tie-break) from the index. */
+  def searchTopKIndexed(spark: SparkSession, indexDir: String,
+                        query: String = DefaultQuery, k: Int = 10): DataFrame =
+    indexedTopK(spark, openIndex(spark, indexDir), query, k)
+
+  /** `searchTopKBm25`'s answer (same oracle) with ZERO corpus scans: tf/df
+    * from the pruned postings and vocabulary, document lengths from
+    * docinfo's `n_tokens`, N and avgdl a docinfo-sized aggregate — the
+    * in-plan twin's two corpus token passes become index reads.
     */
   def searchTopKBm25Indexed(spark: SparkSession, indexDir: String,
                             query: String = DefaultQuery, k: Int = 10,
                             k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val vocab = spark.read.parquet(s"$indexDir/vocabulary")
-    val docinfo = spark.read.parquet(s"$indexDir/docinfo")
-    val qt = queryTerms(spark, query).join(vocab, "word")
-      .select("word_id", "qtf", "df")
-    val scored = bm25Scores(prunedPostings(spark, indexDir, vocab, query)
-      .join(broadcast(qt), "word_id"), dlFrom(docinfo), k1, b)
-    topKWithDocInfo(scored, docinfo, k)
+    val ix = openIndex(spark, indexDir)
+    topKWithDocInfo(bm25Scores(indexedPostings(spark, ix, query), dlFrom(ix.docinfo), k1, b),
+      ix.docinfo, k)
   }
 }

@@ -23,16 +23,23 @@ object Persisted {
     * long-lived builders don't accumulate unreachable generations in /tmp.
     * Suffix/fingerprint bumps WITHIN a kind are pruned per call by
     * `pruneStale` instead (they share the kind dir with live entries).
-    * NOT listed: `inc` — the incremental index cache-busted via a `_v2`
-    * name suffix INSIDE the same kind dir, so its live entries share
-    * /tmp/graft-inc with the retired flat-append ones; a whole-dir delete
+    * NOT listed: `inc` — the incremental index cache-busts via a
+    * version suffix (`IncVersion`) INSIDE the same kind dir, so its live
+    * entries share /tmp/graft-inc with retired ones; a whole-dir delete
     * would wipe the live cache and force a full re-ingest per JVM. Its
-    * pre-v2 children are swept individually below.
+    * children of other versions are swept individually below.
     */
   private val RetiredKinds = Seq("ivf", "ivfk", "index",
     // round 11: the gated trainer (md5 seeds + stab'd argmin) changed the
     // kmeans/PQ layouts — the b1 generations are unreachable
-    "ivfk-b1", "pq-b1")
+    "ivfk-b1", "pq-b1", "index-b2") // b2: the word-id-keyed search index
+
+  /** Version suffix of the incremental-index cache dirs: bump it with the
+    * search index's layout or derivation. */
+  private val IncVersion = "_v3"
+
+  def incrementalDir(d: String): String = s"/tmp/graft-inc/${sanitized(d)}$IncVersion"
+
   private lazy val gcRetired: Unit = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
     RetiredKinds.foreach { k =>
@@ -43,7 +50,7 @@ object Persisted {
     val fs = inc.getFileSystem(conf)
     if (fs.exists(inc))
       fs.listStatus(inc).map(_.getPath)
-        .filter(p => !p.getName.endsWith("_v2"))
+        .filter(p => !p.getName.endsWith(IncVersion))
         .foreach(fs.delete(_, true))
   }
 

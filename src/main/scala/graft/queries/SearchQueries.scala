@@ -3,6 +3,7 @@ package graft.queries
 import graft.GraftQuery
 import graft.operators.Search
 import graft.sources.Tables
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Search-pipeline queries + their DuckDB oracles (SURVEY.md §2.1-2.5). */
@@ -43,6 +44,14 @@ object SearchQueries {
        |SELECT t.doc_id, t.score, d.source, d.lang
        |FROM topk t JOIN documents d USING (doc_id)
        |ORDER BY t.score DESC, t.doc_id""".stripMargin
+
+  /** `d`'s persisted search index, built on first use. The kind tag names
+    * the index generation: bump it when the layout or the build changes,
+    * or a cached index the old code wrote is read through.
+    */
+  private def searchIndex(s: SparkSession, d: String): String =
+    Persisted.indexDir(s, d, "index-b3", "documents.parquet", "postings")(
+      Search.buildIndex(s, d, _))
 
   def all: Seq[GraftQuery] = Seq(
 
@@ -134,24 +143,16 @@ object SearchQueries {
     // (re)built on first use per SF dir — the build cost shows up here
     // once; the steady-state query is scan-free.
     GraftQuery("search_topk_indexed",
-      (s, d) => {
-        // index-b2: docinfo gained n_tokens (BM25 doc length)
-        val idx = Persisted.indexDir(s, d, "index-b2", "documents.parquet",
-          "postings")(Search.buildIndex(s, d, _))
-        Search.searchTopKIndexed(s, idx, Search.DefaultQuery, 10)
-      },
+      (s, d) => Search.searchTopKIndexed(s, searchIndex(s, d), Search.DefaultQuery, 10),
       Some(searchTopKOracle)),
 
     // Same answer again, from the *incrementally* built index
-    // (IncrementalIndex: append-only vocab deltas + word-keyed bucketed
-    // postings; the spec also drives it via streaming foreachBatch). Built
+    // (IncrementalIndex: the same word-keyed format, one dir per batch;
+    // the spec also drives it via streaming foreachBatch). Built
     // on first use by ingesting the corpus as two disjoint batches.
     GraftQuery("search_topk_incremental",
       (s, d) => {
-        import org.apache.spark.sql.functions.col
-        // _v2: the batch-keyed IncrementalIndex layout — a pre-round-8
-        // flat-append cache dir under the old name must not be read through
-        val idx = s"/tmp/graft-inc/${d.replaceAll("[^A-Za-z0-9.]", "_")}_v2"
+        val idx = Persisted.incrementalDir(d)
         // _DONE marker written only after the LAST batch: a crash mid-ingest
         // leaves no marker, so the next run rebuilds instead of querying a
         // half-ingested index
@@ -264,11 +265,7 @@ object SearchQueries {
     // the in-plan twin's two token passes collapse into. Shared oracle:
     // both paths must produce the identical ranking.
     GraftQuery("search_topk_bm25_indexed",
-      (s, d) => {
-        val idx = Persisted.indexDir(s, d, "index-b2", "documents.parquet",
-          "postings")(Search.buildIndex(s, d, _))
-        Search.searchTopKBm25Indexed(s, idx)
-      },
+      (s, d) => Search.searchTopKBm25Indexed(s, searchIndex(s, d)),
       Some(bm25Oracle)),
 
     // The non-indexed BM25 tier's PRODUCTION form: document lengths come
@@ -278,11 +275,7 @@ object SearchQueries {
     // Third tier on the shared oracle: in-plan, stats-fed, and fully
     // indexed must all produce the identical ranking.
     GraftQuery("search_topk_bm25_stats",
-      (s, d) => {
-        val idx = Persisted.indexDir(s, d, "index-b2", "documents.parquet",
-          "postings")(Search.buildIndex(s, d, _))
-        Search.searchTopKBm25Stats(s, d, s.read.parquet(s"$idx/docinfo"))
-      },
+      (s, d) => Search.searchTopKBm25Stats(s, d, Search.openIndex(s, searchIndex(s, d)).docinfo),
       Some(bm25Oracle)),
 
     // Distributed retrieval evaluation — the offline quality job of every

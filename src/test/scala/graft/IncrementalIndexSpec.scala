@@ -46,10 +46,10 @@ class IncrementalIndexSpec extends AnyFunSuite {
     def parquetFiles(sub: String) =
       org.apache.commons.io.FileUtils.listFiles(
         new java.io.File(s"$idx/$sub"), Array("parquet"), true).size
-    val vocabFilesBefore = parquetFiles("vocab_delta")
+    val vocabFilesBefore = parquetFiles("vocabulary")
     assert(vocabFilesBefore >= 2) // one delta set per micro-batch
     IncrementalIndex.compact(spark, idx)
-    assert(parquetFiles("vocab_delta") == 1)
+    assert(parquetFiles("vocabulary") == 1)
     val compVocab = IncrementalIndex.vocabulary(spark, idx)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(compVocab == batchVocab)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Search
+import graft.operators.{IncrementalIndex, Search}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -128,9 +128,18 @@ class SearchSpec extends AnyFunSuite {
       .count() == 0)
   }
 
+  /** An incremental index of sf0.001, ingested as two batches (doc_id % 2). */
+  def incrementalIndex(): String = {
+    val idx = java.nio.file.Files.createTempDirectory("tierinc").toString
+    val docs = Tables.documents(spark, TestSpark.sf0001)
+    for (b <- 0 to 1) IncrementalIndex.ingestBatch(docs.filter(col("doc_id") % 2 === b), idx, b.toLong)
+    idx
+  }
+
   test("search tiers agree row for row: BM25 in-plan/stats/indexed, parity in-plan/indexed") {
     val idx = java.nio.file.Files.createTempDirectory("tieridx").toString
     Search.buildIndex(spark, TestSpark.sf0001, idx)
+    val inc = incrementalIndex()
     val docinfo = spark.read.parquet(s"$idx/docinfo")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
     val queries = Seq(Search.DefaultQuery, // default, repeated term
@@ -144,22 +153,34 @@ class SearchSpec extends AnyFunSuite {
       val parity = rows(Search.searchTopK(spark, TestSpark.sf0001, q))
       assert(parity.nonEmpty, q)
       assert(rows(Search.searchTopKIndexed(spark, idx, q)) == parity, q)
+      assert(rows(IncrementalIndex.searchTopK(spark, inc, q)) == parity, q)
     }
   }
 
   test("searchTopK plan construction is fully lazy — zero Spark jobs") {
     val tracker = spark.sparkContext.statusTracker
-    // first build absorbs one-time source setup (parquet footer/listing
-    // can run a job on first read of a table); the plan itself must then
-    // build job-free. An eager job (e.g. a collect inside plan building)
-    // completes synchronously inside the call, so ids are visible after.
-    Search.searchTopK(spark, TestSpark.sf0001).queryExecution.analyzed
-    val before = tracker.getJobIdsForGroup(null).length
-    val df = Search.searchTopK(spark, TestSpark.sf0001)
-    df.queryExecution.analyzed // force analysis, still no action
-    val after = tracker.getJobIdsForGroup(null).length
-    assert(after == before, s"plan build ran ${after - before} eager job(s)")
-    assert(df.count() == 10) // the action itself still works
+    val idx = java.nio.file.Files.createTempDirectory("lazyidx").toString
+    Search.buildIndex(spark, TestSpark.sf0001, idx)
+    val inc = incrementalIndex()
+    val plans = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "searchTopK" -> (() => Search.searchTopK(spark, TestSpark.sf0001)),
+      "searchTopKIndexed" -> (() => Search.searchTopKIndexed(spark, idx)),
+      "searchTopKBm25Indexed" -> (() => Search.searchTopKBm25Indexed(spark, idx)),
+      "IncrementalIndex.searchTopK" ->
+        (() => IncrementalIndex.searchTopK(spark, inc, Search.DefaultQuery)))
+    for ((what, plan) <- plans) {
+      // first build absorbs one-time source setup (parquet footer/listing
+      // can run a job on first read of a table); the plan itself must then
+      // build job-free. An eager job (e.g. a collect inside plan building)
+      // completes synchronously inside the call, so ids are visible after.
+      plan().queryExecution.analyzed
+      val before = tracker.getJobIdsForGroup(null).length
+      val df = plan()
+      df.queryExecution.analyzed // force analysis, still no action
+      val after = tracker.getJobIdsForGroup(null).length
+      assert(after == before, s"$what: plan build ran ${after - before} eager job(s)")
+      assert(df.count() == 10, what) // the action itself still works
+    }
   }
 
   test("searchTopK end-to-end on sf0.001 returns k rows, deterministic") {

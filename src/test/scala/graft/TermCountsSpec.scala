@@ -79,6 +79,20 @@ class TermCountsSpec extends AnyFunSuite {
     assert(docs.select(TextOps.termCounts(col("text")).as("t")).filter(col("t").isNull).count() == 0)
   }
 
+  test("index bucket: driver-side bucketOf == in-plan pmod(xxhash64(word), 16) on the sf0.01 vocabulary and adversarial strings") {
+    import spark.implicits._
+    val raw = Adversarial.flatMap { case (_, t) => Option(t) }.toDF("word")
+    val words = Search.docWordCounts(Tables.documents(spark, TestSpark.sf001)).select("word")
+      .union(Search.docWordCounts(adversarialDocs).select("word"))
+      .union(raw).distinct()
+    val got = words.select(col("word"), Search.bucket(col("word"))).collect()
+      .map(r => r.getString(0) -> r.getInt(1))
+    assert(got.length > Adversarial.size + 30)
+    assert(got.map(_._2).toSet == (0 until 16).toSet)
+    val wrong = got.filter { case (w, b) => Search.bucketOf(w) != b }
+    assert(wrong.isEmpty, s"driver/in-plan bucket mismatch: ${wrong.take(5).mkString(", ")}")
+  }
+
   test("buildIndex docinfo: n_tokens = kept-token count, 0 for a document with none") {
     val dir = java.nio.file.Files.createTempDirectory("termcounts").toString
     adversarialDocs.write.parquet(s"$dir/documents.parquet")
