@@ -13,8 +13,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * DataFrame-native formulation was posexplode → groupBy(cell, pos) avg →
   * collect_list + array_sort reassembly: a dim× row blowup and TWO
   * shuffles per Lloyd round just to average vectors. One Array buffer per
-  * group carries the whole mean through a single hash aggregate — the
-  * same buffer-vectorization move as [[MinHashAgg]].
+  * group carries the whole mean through a single hash aggregate.
   *
   * Means are stabilized in `finish` with the exact `Stable.stab` formula
   * (`floor(x·10^digits + 0.5)/10^digits`, IEEE-deterministic), so

@@ -22,7 +22,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * 4 096 narrow rows per vector through hash-aggregate probing — ~20 M
   * row operations at sf0.1 for what is arithmetically a d²-add per row.
   * The buffer form does the adds in a tight loop on one flat array (the
-  * [[ArrayMeanAgg]] / [[MinHashAgg]] buffer-vectorization precedent).
+  * [[ArrayMeanAgg]] buffer-vectorization precedent).
   * Partial aggregation is preserved: `merge` adds buffers, so each map
   * task ships one d²-long array, same as the old partial aggregate.
   */

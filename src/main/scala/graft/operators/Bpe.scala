@@ -239,6 +239,8 @@ object Bpe {
 
   private def symbolIdsFrom(enc: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    // unpartitioned window, bounded by the model: <= |alphabet| +
+    // numMerges distinct symbols (see symbolIds), never by the corpus
     enc.select(explode(col("syms")).as("symbol")).distinct()
       .withColumn("id", row_number().over(Window.orderBy("symbol")))
   }

@@ -25,32 +25,19 @@ import org.apache.spark.sql.{Column, DataFrame}
   * per SF dir as parquet, the pipeline-correct "write the intermediate"
   * move; see DedupQueries.persistedShingles).
   *
-  * Hash tiers:
-  *  - md5 (default): not because MD5 is fast, but because the DuckDB oracle
-  *    computes the identical digest, making even the LSH bucketing
-  *    byte-for-byte checkable cross-engine.
-  *  - xxhash64 (`*Fast`): the production/bench tier — same LSH shape, ~an
-  *    order of magnitude cheaper per shingle, no cross-engine digest (so
-  *    the driver records a rows-only check for it).
+  * Hash tiers: every key, signature and band hash comes from one [[Tier]]
+  * (`Md5`, the default, or `Xx`); the pair engine below is tier-blind.
   */
 object Dedup {
 
-  /** doc → distinct n-word shingles. Computed array-side (zip_with fold
-    * over n shifted slices) so no per-token window/shuffle is needed; the
-    * fold form avoids the interpreted transform(sequence, element_at)
-    * path, measured 17× slower on the bigram case (Search.phraseTopK).
-    */
-  def shingles(docs: DataFrame, n: Int = 3): DataFrame = {
-    val arr = TextOps.splitWords(TextOps.normalize(col("text")))
-    val m = size(col("arr")) - (n - 1)
-    val sh = (1 until n).foldLeft(slice(col("arr"), lit(1), m)) { (acc, k) =>
-      zip_with(acc, slice(col("arr"), lit(k + 1), m), (a, b) => concat_ws(" ", a, b))
-    }
-    docs.select(col("doc_id"), arr.as("arr"))
+  /** doc → distinct n-word shingles, computed array-side
+    * (TextOps.ngrams). */
+  def shingles(docs: DataFrame, n: Int = 3): DataFrame =
+    docs.select(col("doc_id"),
+        TextOps.splitWords(TextOps.normalize(col("text"))).as("arr"))
       .filter(size(col("arr")) >= n)
-      .select(col("doc_id"), explode(sh).as("shingle"))
+      .select(col("doc_id"), explode(TextOps.ngrams(col("arr"), n)).as("shingle"))
       .distinct()
-  }
 
   /** Exact duplicate groups: group by content digest, keep the minimum
     * doc_id as canonical representative.
@@ -60,29 +47,119 @@ object Dedup {
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
       .select("keep_id", "n_copies")
 
-  /** 60-bit numeric key of a shingle (md5 hex prefix, same slice the
-    * oracle computes). The Jaccard-verify self-joins shuffle and compare
-    * these 8-byte keys instead of ~20-char strings; a 60-bit collision
-    * (≈1e-13 per doc pair at corpus shingle counts) could at worst
-    * overcount one intersection element — identically in both engines.
+  /** A hash tier: the three hashes the pair engine draws from one hash
+    * family — the shingle `key` the verify intersects on, the per-shingle
+    * MinHash `component` (signature column h_i is its min over a doc's
+    * shingles) and the LSH `bandHash` over a band's signature columns.
+    * Every value is a fixed-width BIGINT (or a digest string for the md5
+    * band hash): a string min forces SortAggregate (Tungsten's mutable
+    * aggregation buffer holds only fixed-width primitives), a numeric min
+    * stays in HashAggregate.
     */
-  def shingleKey(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+  sealed trait Tier {
+    def key(c: Column): Column
+    def component(i: Int, shingle: Column): Column
+    def bandHash(cols: Seq[Column]): Column
+  }
 
-  /** Fast-tier shingle key: xxhash64, full 64 bits, no oracle twin. */
-  def shingleKeyFast(c: Column): Column = xxhash64(c)
-
-  /** Jaccard from an intersection-count table `inter(doc_a, doc_b,
-    * n_common)` and per-doc shingle counts: |A∪B| = |A|+|B|-|A∩B|.
+  /** md5, the default tier: not because MD5 is fast, but because the
+    * DuckDB oracle computes the identical digest, making even the LSH
+    * bucketing byte-for-byte checkable cross-engine. Keys and components
+    * are 60-bit slices (15 hex chars) of a digest — a positive BIGINT in
+    * both engines. A 60-bit key collision (≈1e-13 per doc pair at corpus
+    * shingle counts) could at worst overcount one intersection element —
+    * identically in both engines. Components come TWO per digest (chars
+    * 1-15 and 17-31 of md5(seed || ":" || shingle) — disjoint slices of a
+    * uniform hash are independent), so n components cost n/2 md5
+    * evaluations, md5 being the hot expression of the whole LSH plan.
     */
-  private def jaccardFromInter(inter: DataFrame, sizes: DataFrame,
-                               threshold: Double): DataFrame = {
+  case object Md5 extends Tier {
+    private def slice60(digest: Column, start: Int): Column =
+      conv(substring(digest, start, 15), 16, 10).cast("long")
+    def key(c: Column): Column = slice60(md5(c), 1)
+    def component(i: Int, shingle: Column): Column =
+      slice60(md5(concat(lit(s"${i / 2}:"), shingle)), if (i % 2 == 0) 1 else 17)
+    def bandHash(cols: Seq[Column]): Column =
+      md5(concat_ws(":", cols.map(_.cast("string")): _*))
+  }
+
+  /** xxhash64, the production/bench tier: the same LSH shape at ~an order
+    * of magnitude less cost per shingle — one full 64-bit hash per key and
+    * per component. Its DuckDB twins replay XXH64 in SQL (XxhashSql).
+    */
+  case object Xx extends Tier {
+    def key(c: Column): Column = xxhash64(c)
+    def component(i: Int, shingle: Column): Column = xxhash64(lit(i), shingle)
+    def bandHash(cols: Seq[Column]): Column = xxhash64(cols: _*)
+  }
+
+  /** Numeric key of a shingle under `tier`. The Jaccard-verify self-joins
+    * shuffle and compare these 8-byte keys instead of ~20-char strings.
+    */
+  def shingleKey(c: Column, tier: Tier = Md5): Column = tier.key(c)
+
+  /** The (doc_id, shk) key table of a (doc_id, shingle) table. */
+  def shingleKeys(sh: DataFrame, tier: Tier = Md5): DataFrame =
+    sh.select(col("doc_id"), shingleKey(col("shingle"), tier).as("shk"))
+
+  private def sizes(shk: DataFrame): DataFrame =
+    shk.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
+
+  /** Common-key counts `(l, r, n_common)` between two (doc_id, shk) key
+    * tables — the one intersection of the pair engine. Without `cand` it
+    * is the inverted-index self-join: every pair sharing a key, as
+    * (doc_a, doc_b) with doc_a < doc_b. With `cand(l, r)` it counts the
+    * common keys of those candidate pairs only (l's keys from `a`, r's
+    * from `b`), shuffling candidates' keys, never an all-pairs join.
+    *
+    * The tiny/scale choice of every intersection is made here (round 19,
+    * guide §2.5). When both sides are one tiny key table (a single-split
+    * scan or a small checkpoint: `Spread.isTiny`), the key shuffles are
+    * byte-tiny and AQE coalesces them to ONE reduce task while the
+    * per-pair work is CPU-bound — dedup_natural2_lsh profiled wall ≈
+    * summed task time (2.2 s, one effective task). So the probe side is
+    * spread round-robin (a user repartition, which AQE never coalesces)
+    * and the key table is broadcast into the build sides: every core
+    * intersects its slice and the pair-count aggregate is the only
+    * shuffle left. Otherwise — many splits, or two different tables (the
+    * incremental probe, whose `b` is the corpus index) — the shuffled
+    * joins run.
+    */
+  private def intersect(a: DataFrame, b: DataFrame,
+                        cand: Option[DataFrame] = None): DataFrame = {
+    val tiny = (a eq b) && Spread.isTiny(a)
+    def side(k: DataFrame) = if (tiny) broadcast(k) else k
+    val nCommon = count(lit(1)).as("n_common")
+    cand match {
+      case None =>
+        (if (tiny) Spread(a) else a).as("x")
+          .join(side(b).as("y"),
+            col("x.shk") === col("y.shk") && col("x.doc_id") < col("y.doc_id"))
+          .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+          .agg(nCommon)
+      case Some(c) =>
+        val Array(l, r) = c.columns
+        (if (tiny) c.repartition(c.sparkSession.sparkContext.defaultParallelism) else c)
+          .join(side(a).as("x"), col(l) === col("x.doc_id"))
+          .join(side(b).as("y"), col(r) === col("y.doc_id") && col("x.shk") === col("y.shk"))
+          .groupBy(l, r).agg(nCommon)
+    }
+  }
+
+  /** Exact Jaccard of each intersected pair, kept at >= threshold:
+    * |A∪B| = |A|+|B|-|A∩B|, sizes from each side's key table. The only
+    * Jaccard formula of the engine; returns (l, r, jaccard).
+    */
+  private def jaccardPairs(a: DataFrame, b: DataFrame, cand: Option[DataFrame],
+                           threshold: Double): DataFrame = {
+    val inter = intersect(a, b, cand)
+    val Array(l, r, _) = inter.columns
     val j = col("n_common").cast("double") /
       (col("sa.n_sh") + col("sb.n_sh") - col("n_common"))
     inter
-      .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .select(col("doc_a"), col("doc_b"), j.as("jaccard"))
+      .join(sizes(a).as("sa"), col(l) === col("sa.doc_id"))
+      .join(sizes(b).as("sb"), col(r) === col("sb.doc_id"))
+      .select(col(l), col(r), j.as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -94,8 +171,7 @@ object Dedup {
 
   /** Same, from a prebuilt shingle table (doc_id, shingle). */
   def ngramJaccardPairsFrom(sh: DataFrame, threshold: Double): DataFrame =
-    ngramJaccardPairsFromKeys(
-      sh.select(col("doc_id"), shingleKey(col("shingle")).as("shk")), threshold)
+    ngramJaccardPairsFromKeys(shingleKeys(sh), threshold)
 
   /** Same, from a prebuilt shingle-KEY table (doc_id, shk BIGINT). The
     * md5-derived 60-bit key is the hot expression of every Jaccard-verify
@@ -104,21 +180,8 @@ object Dedup {
     * once per corpus next to the shingle table and the verify plans become
     * joins over a 2-column fixed-width parquet.
     */
-  def ngramJaccardPairsFromKeys(shk: DataFrame, threshold: Double): DataFrame = {
-    val sizes = shk.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    // round-19: same tiny-scan repair as verifyCandidates — spread the
-    // probe side round-robin, broadcast the build side, so the inverted-
-    // index join runs on every core instead of AQE's one byte-sized
-    // reduce task. No-op at production split counts.
-    val inter = (if (Spread.isTiny(shk)) Spread(shk).as("a")
-                   .join(broadcast(shk).as("b"),
-                     col("a.shk") === col("b.shk") && col("a.doc_id") < col("b.doc_id"))
-                 else shk.as("a").join(shk.as("b"),
-                   col("a.shk") === col("b.shk") && col("a.doc_id") < col("b.doc_id")))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_common"))
-    jaccardFromInter(inter, sizes, threshold)
-  }
+  def ngramJaccardPairsFromKeys(shk: DataFrame, threshold: Double): DataFrame =
+    jaccardPairs(shk, shk, None, threshold)
 
   /** CONTAINMENT pairs: C(A→B) = |A∩B| / |A| ≥ threshold — the
     * asymmetric near-dup test that catches a document embedded inside a
@@ -130,17 +193,9 @@ object Dedup {
     * cost profile and the prefix/LSH scale paths carry over unchanged.
     */
   def containmentPairsFromKeys(shk: DataFrame, threshold: Double): DataFrame = {
-    val sizes = shk.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    // round-19: same tiny-scan repair as ngramJaccardPairsFromKeys
-    val inter = (if (Spread.isTiny(shk)) Spread(shk).as("a")
-                   .join(broadcast(shk).as("b"),
-                     col("a.shk") === col("b.shk") && col("a.doc_id") < col("b.doc_id"))
-                 else shk.as("a").join(shk.as("b"),
-                   col("a.shk") === col("b.shk") && col("a.doc_id") < col("b.doc_id")))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_common"))
-      .join(sizes.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("doc_b") === col("sb.doc_id"))
+    val inter = intersect(shk, shk)
+      .join(sizes(shk).as("sa"), col("doc_a") === col("sa.doc_id"))
+      .join(sizes(shk).as("sb"), col("doc_b") === col("sb.doc_id"))
     val aInB = inter.select(col("doc_a").as("doc_contained"),
       col("doc_b").as("doc_container"),
       (col("n_common").cast("double") / col("sa.n_sh")).as("containment"))
@@ -161,45 +216,75 @@ object Dedup {
     * instead of Σ_s df(s)² — the boilerplate blowup dies with df_prefix ≈ 0.
     */
   def containmentPairsPrefixFromKeys(shk: DataFrame, threshold: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // round-19 tiny-scan repair throughout (see verifyCandidates /
-    // prefixKeys): broadcast model-sized sides, explicit user
-    // repartitions where AQE would coalesce the CPU-heavy stages to one
-    // byte-sized reduce task. At scale: the shuffled form, unchanged.
+    // tiny (see prefixKeysImpl): the full key list is broadcast into the
+    // candidate join too; at scale the shuffled join
     val tiny = Spread.isTiny(shk)
-    val par = shk.sparkSession.sparkContext.defaultParallelism
-    val sizes = shk.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    val dfreq = shk.groupBy("shk").agg(count(lit(1)).as("df"))
-    val base =
-      if (tiny) shk.join(broadcast(dfreq), "shk").repartition(par, col("doc_id"))
-      else shk.join(dfreq, "shk")
-    val pref = base
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("doc_id").orderBy(asc("df"), asc("shk"))))
-      .join(if (tiny) broadcast(sizes) else sizes, "doc_id")
-      // same epsilon-nudged ceil as the Jaccard prefix (fp rounding may
-      // only lengthen the prefix, never shorten it)
-      .filter(col("rnk") <= col("n_sh") - ceil(lit(threshold) * col("n_sh") - lit(1e-9)) + 1)
-      .select("doc_id", "shk")
-    val cand = (if (tiny) pref.as("a").join(broadcast(shk).as("b"),
+    val cand = prefixKeysImpl(shk, threshold, tiny).as("a")
+      .join((if (tiny) broadcast(shk) else shk).as("b"),
         col("a.shk") === col("b.shk") && col("a.doc_id") =!= col("b.doc_id"))
-      else pref.as("a").join(shk.as("b"),
-        col("a.shk") === col("b.shk") && col("a.doc_id") =!= col("b.doc_id")))
       .select(col("a.doc_id").as("doc_contained"), col("b.doc_id").as("doc_container"))
       .distinct()
-    (if (tiny) cand.repartition(par)
-        .join(broadcast(shk).as("x"), col("doc_contained") === col("x.doc_id"))
-        .join(broadcast(shk).as("y"),
-          col("doc_container") === col("y.doc_id") && col("x.shk") === col("y.shk"))
-      else cand
-        .join(shk.as("x"), col("doc_contained") === col("x.doc_id"))
-        .join(shk.as("y"),
-          col("doc_container") === col("y.doc_id") && col("x.shk") === col("y.shk")))
-      .groupBy("doc_contained", "doc_container").agg(count(lit(1)).as("n_common"))
-      .join(sizes.as("sa"), col("doc_contained") === col("sa.doc_id"))
+    intersect(shk, shk, Some(cand))
+      .join(sizes(shk).as("sa"), col("doc_contained") === col("sa.doc_id"))
       .select(col("doc_contained"), col("doc_container"),
         (col("n_common").cast("double") / col("sa.n_sh")).as("containment"))
       .filter(col("containment") >= threshold)
+  }
+
+  /** The per-doc rare-first PREFIX of a key table — the candidate-stage
+    * core of the AllPairs/PPJoin family, exposed so the measurement
+    * harnesses (DedupSpec's growth-law cases; BASELINE.md "The
+    * prefix-filter crossover, measured") count candidates from THE
+    * SHIPPED construction rather than a hand
+    * mirror: an edit to the epsilon, tie-break, or prefix-length
+    * formula changes the published numbers and the operator together.
+    * Returns (doc_id, shk) — each doc's |d| − ceil(t·|d|) + 1 rarest
+    * shingle keys under the global (df asc, key asc) order.
+    */
+  def prefixKeys(shk: DataFrame, threshold: Double): DataFrame =
+    prefixKeysImpl(shk, threshold, Spread.isTiny(shk))
+
+  private def prefixKeysImpl(shk: DataFrame, threshold: Double,
+                             tiny: Boolean): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val dfreq = shk.groupBy("shk").agg(count(lit(1)).as("df"))
+    // round-19 tiny-scan repair (see intersect): broadcast the
+    // model-sized df/size tables and give the rank window an explicit
+    // doc-keyed repartition (user repartitions satisfy the window's
+    // required distribution and AQE never coalesces them) so the df-rank
+    // stage runs on every core instead of one byte-sized reduce task.
+    // At scale: unchanged shuffled joins.
+    val base =
+      if (tiny) shk.join(broadcast(dfreq), "shk")
+        .repartition(shk.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
+      else shk.join(dfreq, "shk")
+    base
+      .withColumn("rnk", row_number().over(
+        Window.partitionBy("doc_id").orderBy(asc("df"), asc("shk"))))
+      .join(if (tiny) broadcast(sizes(shk)) else sizes(shk), "doc_id")
+      // ceil over an epsilon-nudged product: t·n computed in doubles can
+      // land an ulp ABOVE an exact integer (e.g. t=0.55, n=20), and a bare
+      // ceil then shortens the prefix by one — enough to drop a qualifying
+      // pair. The nudge only ever LENGTHENS the prefix (more candidates,
+      // never fewer), so exactness vs the plain join is preserved at every
+      // threshold, not just the spec-pinned ones.
+      .filter(col("rnk") <= col("n_sh") - ceil(lit(threshold) * col("n_sh") - lit(1e-9)) + 1)
+      .select("doc_id", "shk")
+  }
+
+  /** Distinct candidate pairs whose prefixes share a key (doc_a < doc_b). */
+  def prefixCandidates(shk: DataFrame, threshold: Double): DataFrame = {
+    val tiny = Spread.isTiny(shk)
+    val pref0 = prefixKeysImpl(shk, threshold, tiny)
+    // tiny: an explicit shk-keyed user repartition keeps the self-join at
+    // full parallelism, and the two identical exchanges are deduped by
+    // ReuseExchange — the prefix is still computed once
+    val pref = if (tiny) pref0.repartition(
+      shk.sparkSession.sparkContext.defaultParallelism, col("shk")) else pref0
+    pref.as("a").join(pref.as("b"),
+        col("a.shk") === col("b.shk") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
   }
 
   /** EXACT Jaccard pairs with PREFIX FILTERING (AllPairs/PPJoin): identical
@@ -236,80 +321,8 @@ object Dedup {
     * form THERE and the prefix twin is correctness-gated (DedupSpec pins
     * output equality at three thresholds on both fixture families).
     */
-  /** The per-doc rare-first PREFIX of a key table — the candidate-stage
-    * core of the AllPairs/PPJoin family, exposed so the measurement
-    * harnesses (DedupSpec's growth-law cases; BASELINE.md "The
-    * prefix-filter crossover, measured") count candidates from THE
-    * SHIPPED construction rather than a hand
-    * mirror: an edit to the epsilon, tie-break, or prefix-length
-    * formula changes the published numbers and the operator together.
-    * Returns (doc_id, shk) — each doc's |d| − ceil(t·|d|) + 1 rarest
-    * shingle keys under the global (df asc, key asc) order.
-    */
-  def prefixKeys(shk: DataFrame, threshold: Double): DataFrame =
-    prefixKeysImpl(shk, threshold, Spread.isTiny(shk))
-
-  private def prefixKeysImpl(shk: DataFrame, threshold: Double,
-                             tiny: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sizes = shk.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    val dfreq = shk.groupBy("shk").agg(count(lit(1)).as("df"))
-    // round-19 tiny-scan repair (see verifyCandidates): broadcast the
-    // model-sized df/size tables and give the rank window an explicit
-    // doc-keyed repartition (user repartitions satisfy the window's
-    // required distribution and AQE never coalesces them) so the df-rank
-    // stage runs on every core instead of one byte-sized reduce task.
-    // At scale: unchanged shuffled joins.
-    val base =
-      if (tiny) shk.join(broadcast(dfreq), "shk")
-        .repartition(shk.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      else shk.join(dfreq, "shk")
-    base
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy("doc_id").orderBy(asc("df"), asc("shk"))))
-      .join(if (tiny) broadcast(sizes) else sizes, "doc_id")
-      // ceil over an epsilon-nudged product: t·n computed in doubles can
-      // land an ulp ABOVE an exact integer (e.g. t=0.55, n=20), and a bare
-      // ceil then shortens the prefix by one — enough to drop a qualifying
-      // pair. The nudge only ever LENGTHENS the prefix (more candidates,
-      // never fewer), so exactness vs the plain join is preserved at every
-      // threshold, not just the spec-pinned ones.
-      .filter(col("rnk") <= col("n_sh") - ceil(lit(threshold) * col("n_sh") - lit(1e-9)) + 1)
-      .select("doc_id", "shk")
-  }
-
-  /** Distinct candidate pairs whose prefixes share a key (doc_a < doc_b). */
-  def prefixCandidates(shk: DataFrame, threshold: Double): DataFrame = {
-    val tiny = Spread.isTiny(shk)
-    val pref0 = prefixKeysImpl(shk, threshold, tiny)
-    // tiny: an explicit shk-keyed user repartition keeps the self-join at
-    // full parallelism, and the two identical exchanges are deduped by
-    // ReuseExchange — the prefix is still computed once
-    val pref = if (tiny) pref0.repartition(
-      shk.sparkSession.sparkContext.defaultParallelism, col("shk")) else pref0
-    pref.as("a").join(pref.as("b"),
-        col("a.shk") === col("b.shk") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-  }
-
-  def ngramJaccardPairsPrefixFromKeys(shk: DataFrame, threshold: Double): DataFrame = {
-    val sizes = shk.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    val cand = prefixCandidates(shk, threshold)
-    // same tiny verify repair as verifyCandidates
-    val inter =
-      (if (Spread.isTiny(shk))
-        cand.repartition(shk.sparkSession.sparkContext.defaultParallelism)
-          .join(broadcast(shk).as("x"), col("doc_a") === col("x.doc_id"))
-          .join(broadcast(shk).as("y"),
-            col("doc_b") === col("y.doc_id") && col("x.shk") === col("y.shk"))
-      else cand
-        .join(shk.as("x"), col("doc_a") === col("x.doc_id"))
-        .join(shk.as("y"),
-          col("doc_b") === col("y.doc_id") && col("x.shk") === col("y.shk")))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_common"))
-    jaccardFromInter(inter, sizes, threshold)
-  }
+  def ngramJaccardPairsPrefixFromKeys(shk: DataFrame, threshold: Double): DataFrame =
+    jaccardPairs(shk, shk, Some(prefixCandidates(shk, threshold)), threshold)
 
   /** Key-bucket profile of a (doc_id, shk) table — the routing statistic
     * for the plain-vs-prefix tier choice (round 13; SURVEY §2.9's known
@@ -404,39 +417,14 @@ object Dedup {
       ngramJaccardPairsPrefixFromKeys(shk, threshold)
     else ngramJaccardPairsFromKeys(shk, threshold)
 
-  /** One MinHash signature component: min over shingles of a 60-bit slice
-    * (15 hex chars) of md5(seed || ":" || shingle), as a BIGINT.
-    *
-    * Two design points, both bench-driven:
-    *  - BIGINT, not the digest string: a string min forces SortAggregate
-    *    (Tungsten's mutable aggregation buffer holds only fixed-width
-    *    primitives); the numeric min stays in HashAggregate.
-    *  - TWO independent permutation keys per digest (chars 1-15 and
-    *    17-31 — disjoint slices of a uniform hash are independent), so n
-    *    signature components cost n/2 md5 evaluations — md5 is the hot
-    *    expression of the whole LSH plan and is kept only because the
-    *    DuckDB oracle computes the identical digest.
+  /** MinHash signatures: one row per doc, `numHashes` BIGINT columns
+    * h0..h{n-1}, column h_i the min of the tier's component i over the
+    * doc's shingles.
     */
-  private def minhashCol(i: Int): Column = {
-    val digest = md5(concat(lit(s"${i / 2}:"), col("shingle")))
-    val start = if (i % 2 == 0) 1 else 17
-    min(conv(substring(digest, start, 15), 16, 10).cast("long")).as(s"h$i")
+  def minhashSignatures(sh: DataFrame, numHashes: Int, tier: Tier = Md5): DataFrame = {
+    val h = (i: Int) => min(tier.component(i, col("shingle"))).as(s"h$i")
+    sh.groupBy("doc_id").agg(h(0), (1 until numHashes).map(h): _*)
   }
-
-  /** Fast-tier MinHash component: min of xxhash64(seed, shingle). One
-    * 64-bit hash per component (no digest slicing needed — xxhash64 is
-    * cheap enough to run per component).
-    */
-  private def minhashColFast(i: Int): Column =
-    min(xxhash64(lit(i), col("shingle"))).as(s"h$i")
-
-  /** MinHash signatures: one row per doc, `numHashes` BIGINT columns. */
-  def minhashSignatures(sh: DataFrame, numHashes: Int): DataFrame =
-    sh.groupBy("doc_id").agg(minhashCol(0), (1 until numHashes).map(minhashCol): _*)
-
-  /** xxhash64 MinHash signatures (bench/production tier). */
-  def minhashSignaturesFast(sh: DataFrame, numHashes: Int): DataFrame =
-    sh.groupBy("doc_id").agg(minhashColFast(0), (1 until numHashes).map(minhashColFast): _*)
 
   /** Explode a signature table into (doc_id, band, bh) band-bucket rows.
     * All band hashes in ONE projection + explode — a union of per-band
@@ -446,11 +434,10 @@ object Dedup {
     * verify step never joins back to a full signature table.
     */
   private[graft] def bandRows(sig: DataFrame, bands: Int, rowsPerBand: Int,
-                              bandHash: Seq[Column] => Column,
-                              carry: Seq[String] = Nil): DataFrame = {
+                              tier: Tier, carry: Seq[String] = Nil): DataFrame = {
     val bandStructs = array((0 until bands).map { b =>
       val cols = (b * rowsPerBand until (b + 1) * rowsPerBand).map(i => col(s"h$i"))
-      struct(lit(b).as("band"), bandHash(cols).as("bh"))
+      struct(lit(b).as("band"), tier.bandHash(cols).as("bh"))
     }: _*)
     sig.select(col("doc_id") +: carry.map(col) :+ explode(bandStructs).as("bb"): _*)
       .select(col("doc_id") +: carry.map(col) :+
@@ -465,38 +452,6 @@ object Dedup {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
 
-  /** Exact-Jaccard verify restricted to a candidate pair set: shuffles only
-    * candidates' shingle keys, never an all-pairs join.
-    */
-  private def verifyCandidates(cand: DataFrame, shk: DataFrame,
-                               threshold: Double): DataFrame = {
-    val sizes = shk.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    // Round-19 (guide §2.5): at bench scale the candidate×key shuffles
-    // are byte-tiny, so AQE coalesces them to ONE reduce task while the
-    // per-pair intersection work is CPU-bound — dedup_natural2_lsh
-    // profiled wall ≈ summed task time (2.2 s, one effective task). When
-    // the key table is a tiny single-split scan, spread the candidate
-    // list round-robin (a user repartition, which AQE never coalesces)
-    // and broadcast the key table into BOTH sides of the intersect —
-    // every core verifies its slice of the pairs and the only remaining
-    // shuffle is the pair-count aggregate. At scale shk has many splits,
-    // the guard is false, and the shuffled form is unchanged.
-    val inter =
-      if (Spread.isTiny(shk)) {
-        val c = cand.repartition(cand.sparkSession.sparkContext.defaultParallelism)
-        c.join(broadcast(shk).as("a"), col("doc_a") === col("a.doc_id"))
-          .join(broadcast(shk).as("b"),
-            col("doc_b") === col("b.doc_id") && col("a.shk") === col("b.shk"))
-          .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_common"))
-      } else {
-        cand.join(shk.as("a"), col("doc_a") === col("a.doc_id"))
-          .join(shk.as("b"),
-            col("doc_b") === col("b.doc_id") && col("a.shk") === col("b.shk"))
-          .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_common"))
-      }
-    jaccardFromInter(inter, sizes, threshold)
-  }
-
   /** MinHash-LSH candidate pairs, verified with exact Jaccard (md5/oracle
     * tier). bands × rowsPerBand signature; docs sharing any band hash
     * become candidates; candidates below `threshold` exact-Jaccard drop.
@@ -505,38 +460,31 @@ object Dedup {
                       rowsPerBand: Int = 4, threshold: Double = 0.5): DataFrame =
     minhashLshPairsFrom(shingles(docs, n), bands, rowsPerBand, threshold)
 
-  /** Same, from a prebuilt shingle table (doc_id, shingle). */
-  def minhashLshPairsFrom(sh: DataFrame, bands: Int, rowsPerBand: Int,
-                          threshold: Double): DataFrame =
-    minhashLshPairsFromSig(minhashSignatures(sh, bands * rowsPerBand), sh,
-      bands, rowsPerBand, threshold)
-
-  /** Same, from a prebuilt signature table (doc_id, h0..h{b·r-1}) plus the
-    * shingle table for the exact-Jaccard verify. Signatures are a pure
-    * function of the corpus and the hot expression of the whole LSH plan
-    * (bands·rows/2 md5 evaluations per shingle) — a pipeline that runs
-    * several LSH queries materializes them once and every downstream query
-    * reads a narrow fixed-width parquet instead of re-hashing the corpus.
-    * Note the SAME 12-column signature serves both the 3×4 and 6×2 banding:
-    * bandRows only regroups columns.
+  /** Same, from a prebuilt shingle table (doc_id, shingle): signatures,
+    * band hashes and verify keys all from `tier`. The exact-Jaccard
+    * verify makes every emitted pair a true >= threshold pair whatever
+    * the tier; DedupSpec pins the xxhash64 tier against the md5 one.
     */
-  def minhashLshPairsFromSig(sig: DataFrame, sh: DataFrame, bands: Int,
-                             rowsPerBand: Int, threshold: Double): DataFrame =
-    minhashLshPairsFromSigKeys(sig,
-      sh.select(col("doc_id"), shingleKey(col("shingle")).as("shk")),
-      bands, rowsPerBand, threshold)
+  def minhashLshPairsFrom(sh: DataFrame, bands: Int, rowsPerBand: Int,
+                          threshold: Double, tier: Tier = Md5): DataFrame =
+    minhashLshPairsFromSigKeys(minhashSignatures(sh, bands * rowsPerBand, tier),
+      shingleKeys(sh, tier), bands, rowsPerBand, threshold, tier)
 
-  /** Same, with the verify side reading a prebuilt shingle-key table —
-    * zero md5 anywhere in the resulting plan (band hashes ride the
-    * persisted signature columns, the verify rides the persisted keys).
+  /** Same, from a prebuilt signature table (doc_id, h0..h{b·r-1}) and
+    * shingle-key table (doc_id, shk), both of `tier` — the fully
+    * materialized layout, with no hashing of corpus text anywhere in the
+    * plan (band hashes ride the signature columns, the verify rides the
+    * keys). Signatures are a pure function of the corpus and the hot
+    * expression of the whole LSH plan, so a pipeline that runs several LSH
+    * queries materializes them once and every downstream query reads a
+    * narrow fixed-width parquet. The SAME 12-column signature serves both
+    * the 3×4 and 6×2 banding: bandRows only regroups columns.
     */
   def minhashLshPairsFromSigKeys(sig: DataFrame, shk: DataFrame, bands: Int,
-                                 rowsPerBand: Int, threshold: Double): DataFrame = {
-    val br = bandRows(sig, bands, rowsPerBand,
-      cols => md5(concat_ws(":", cols.map(_.cast("string")): _*)))
-    val cand = lshCandidates(br)
-    verifyCandidates(cand, shk, threshold)
-  }
+                                 rowsPerBand: Int, threshold: Double,
+                                 tier: Tier = Md5): DataFrame =
+    jaccardPairs(shk, shk, Some(lshCandidates(bandRows(sig, bands, rowsPerBand, tier))),
+      threshold)
 
   /** MinHash estimator-quality card — the sketch analogue of ann_recall:
     * for every LSH candidate pair, the signature ESTIMATE (matching
@@ -551,9 +499,7 @@ object Dedup {
     */
   def minhashEstimates(sig: DataFrame, shk: DataFrame,
                        bands: Int, rowsPerBand: Int): DataFrame = {
-    val br = bandRows(sig, bands, rowsPerBand,
-      cols => md5(concat_ws(":", cols.map(_.cast("string")): _*)))
-    val cand = lshCandidates(br)
+    val cand = lshCandidates(bandRows(sig, bands, rowsPerBand, Md5))
     val k = bands * rowsPerBand
     val matches = (0 until k)
       .map(i => when(col(s"a.h$i") === col(s"b.h$i"), 1).otherwise(0))
@@ -568,41 +514,10 @@ object Dedup {
     // equi-join produces nothing), and an inner join would silently drop
     // exactly the worst-error pairs (est_j > 0, exact_j = 0) this card
     // exists to surface (round-14 advice).
-    est.join(verifyCandidates(cand, shk, 0.0), Seq("doc_a", "doc_b"), "left")
+    est.join(jaccardPairs(shk, shk, Some(cand), 0.0), Seq("doc_a", "doc_b"), "left")
       .select(col("doc_a"), col("doc_b"), col("est_j"),
         coalesce(col("jaccard"), lit(0.0)).as("exact_j"),
         (col("est_j") - coalesce(col("jaccard"), lit(0.0))).as("err"))
-  }
-
-  /** xxhash64 tier of the same LSH shape: signatures, band hashes, and
-    * verify keys all via xxhash64. The scale/production path — no
-    * cross-engine digest, so it carries a rows-only driver check; its
-    * semantics are pinned by DedupSpec against the md5 tier.
-    */
-  def minhashLshPairsFastFrom(sh: DataFrame, bands: Int, rowsPerBand: Int,
-                              threshold: Double): DataFrame =
-    minhashLshPairsFastFromSig(minhashSignaturesFast(sh, bands * rowsPerBand),
-      sh, bands, rowsPerBand, threshold)
-
-  /** Fast tier from a prebuilt xxhash64 signature table — like the md5
-    * tier's `minhashLshPairsFromSig`, the signature aggregation is the hot
-    * expression and a pipeline materializes it once per corpus.
-    */
-  def minhashLshPairsFastFromSig(sig: DataFrame, sh: DataFrame, bands: Int,
-                                 rowsPerBand: Int, threshold: Double): DataFrame =
-    minhashLshPairsFastFromSigKeys(sig,
-      sh.select(col("doc_id"), shingleKeyFast(col("shingle")).as("shk")),
-      bands, rowsPerBand, threshold)
-
-  /** Fast tier over prebuilt signature AND shingle-key tables — the fully
-    * materialized production layout (no hashing of corpus text anywhere in
-    * the plan).
-    */
-  def minhashLshPairsFastFromSigKeys(sig: DataFrame, shk: DataFrame, bands: Int,
-                                     rowsPerBand: Int, threshold: Double): DataFrame = {
-    val br = bandRows(sig, bands, rowsPerBand, cols => xxhash64(cols: _*))
-    val cand = lshCandidates(br)
-    verifyCandidates(cand, shk, threshold)
   }
 
   /** Incremental near-dup detection — a NEW ingest batch probed against
@@ -617,9 +532,9 @@ object Dedup {
     * 100 TB corpus + a small daily batch, the new side is the build side
     * (AQE broadcasts it when it fits), making snapshot cost one scan of
     * the old band index — linear in corpus size, independent of history
-    * depth. Same md5 band hash as [[minhashLshPairsFromSigKeys]], so the
-    * same 12-column persisted signatures serve both and the DuckDB oracle
-    * replays the bucketing digest-for-digest.
+    * depth. Same tier band hash as [[minhashLshPairsFromSigKeys]], so the
+    * same 12-column persisted signatures serve both and (md5 tier) the
+    * DuckDB oracle replays the bucketing digest-for-digest.
     *
     * Returns (new_doc, old_doc, jaccard) for verified pairs >= threshold
     * — the removal list for the batch (drop or link each matched new doc).
@@ -627,27 +542,13 @@ object Dedup {
   def minhashLshPairsIncremental(sigNew: DataFrame, sigOld: DataFrame,
                                  shkNew: DataFrame, shkOld: DataFrame,
                                  bands: Int, rowsPerBand: Int,
-                                 threshold: Double): DataFrame = {
-    val bh = (cols: Seq[Column]) => md5(concat_ws(":", cols.map(_.cast("string")): _*))
-    val cand = bandRows(sigNew, bands, rowsPerBand, bh).as("a")
-      .join(bandRows(sigOld, bands, rowsPerBand, bh).as("b"),
+                                 threshold: Double, tier: Tier = Md5): DataFrame = {
+    val cand = bandRows(sigNew, bands, rowsPerBand, tier).as("a")
+      .join(bandRows(sigOld, bands, rowsPerBand, tier).as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh"))
       .select(col("a.doc_id").as("new_doc"), col("b.doc_id").as("old_doc"))
       .distinct()
-    val szNew = shkNew.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    val szOld = shkOld.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-    val inter = cand
-      .join(shkNew.as("a"), col("new_doc") === col("a.doc_id"))
-      .join(shkOld.as("b"),
-        col("old_doc") === col("b.doc_id") && col("a.shk") === col("b.shk"))
-      .groupBy("new_doc", "old_doc").agg(count(lit(1)).as("n_common"))
-    val j = col("n_common").cast("double") /
-      (col("sa.n_sh") + col("sb.n_sh") - col("n_common"))
-    inter
-      .join(szNew.as("sa"), col("new_doc") === col("sa.doc_id"))
-      .join(szOld.as("sb"), col("old_doc") === col("sb.doc_id"))
-      .select(col("new_doc"), col("old_doc"), j.as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    jaccardPairs(shkNew, shkOld, Some(cand), threshold)
   }
 
   /** Connected components over near-duplicate pairs — the step that turns
@@ -692,7 +593,7 @@ object Dedup {
     // union-by-min linking so find() lands on each component's minimum.
     // Output is the identical (doc_id, keep_id) table. At scale the
     // distributed loop below runs exactly as before.
-    if (symC.rdd.getNumPartitions <= 4) return clustersUnionFind(symC)
+    if (Spread.isTiny(symC)) return clustersUnionFind(symC)
     // Below: the distributed min-label loop — the ONLY path at scale.
     // (The round-18 tiny-side pins that used to live here are subsumed by
     // the union-find fast path, which covers exactly the same guard.)
@@ -757,92 +658,64 @@ object Dedup {
       StructField("keep_id", LongType, nullable = false))))
   }
 
-  /** 16-bit SimHash per document. Bit j of the hash of token w is bit 3 of
-    * the j-th hex nibble of md5(w) (i.e. nibble >= 8) — a fixed, engine-
-    * portable projection of the digest. Each bit's sign is the tf-weighted
-    * majority vote. Returns (doc_id, simhash BIGINT).
+  /** SimHash core: each token's md5 digest `h` casts a tf-weighted vote
+    * on every bit j in 0 until `bits` (+tf where `bitSet` holds for
+    * (h, j), −tf elsewhere), and bit j of the doc's hash is set where its
+    * votes sum positive; `pow2` is 2^j as a BIGINT. The bit projection is
+    * the tier's argument — each must match its DuckDB twin exactly.
+    * Returns (doc_id, simhash BIGINT).
     */
-  def simhash(docs: DataFrame): DataFrame = {
-    val toks = Search.docWordCounts(docs) // row-local (doc_id, word, tf)
-    val nib = col("h").substr(col("j") + 1, lit(1))
-    val bitRows = toks
+  private def simhashOf(docs: DataFrame, bits: Int, bitSet: Column,
+                        pow2: Column): DataFrame =
+    Search.docWordCounts(docs) // row-local (doc_id, word, tf)
       .select(col("doc_id"), col("tf"), md5(col("word")).as("h"))
-      .select(col("doc_id"), col("tf"), explode(sequence(lit(0), lit(15))).as("j"),
+      .select(col("doc_id"), col("tf"), explode(sequence(lit(0), lit(bits - 1))).as("j"),
         col("h"))
       .select(col("doc_id"), col("j"),
-        (when(nib.isin("8", "9", "a", "b", "c", "d", "e", "f"), col("tf"))
-          .otherwise(-col("tf"))).as("vote"))
-    bitRows.groupBy("doc_id", "j").agg(sum("vote").as("v"))
+        when(bitSet, col("tf")).otherwise(-col("tf")).as("vote"))
+      .groupBy("doc_id", "j").agg(sum("vote").as("v"))
       .groupBy("doc_id")
-      .agg(sum(when(col("v") > 0, pow(lit(2.0), col("j")).cast("long")).otherwise(0L))
-        .as("simhash"))
-  }
+      .agg(sum(when(col("v") > 0, pow2).otherwise(0L)).as("simhash"))
+
+  /** 16-bit SimHash per document. Bit j of the hash of token w is bit 3 of
+    * the j-th hex nibble of md5(w) (i.e. nibble >= 8) — a fixed, engine-
+    * portable projection of the digest.
+    */
+  def simhash(docs: DataFrame): DataFrame =
+    simhashOf(docs, 16,
+      col("h").substr(col("j") + 1, lit(1)).isin("8", "9", "a", "b", "c", "d", "e", "f"),
+      pow(lit(2.0), col("j")).cast("long"))
 
   /** 60-bit SimHash — the production-width tier. Bit j (0..59) is bit
     * (3 − j%4) of hex nibble j/4 of md5(w): 60 bits keeps every power of
     * two a positive BIGINT in both engines (bit 63 would overflow DuckDB's
-    * checked shift). Same tf-weighted majority vote as the 16-bit tier.
-    * At 16 bits the pigeonhole chunks have 64/32/32 values — every bucket
-    * is corpus-sized at scale; 20-bit chunks give ~10⁶ buckets, so the
-    * candidate join stays selective on a large corpus.
+    * checked shift). At 16 bits the pigeonhole chunks have 64/32/32
+    * values — every bucket is corpus-sized at scale; 20-bit chunks give
+    * ~10⁶ buckets, so the candidate join stays selective on a large corpus.
     */
   def simhash60(docs: DataFrame): DataFrame = {
-    val toks = Search.docWordCounts(docs) // row-local (doc_id, word, tf)
     val nibble = conv(col("h").substr((col("j") / 4).cast("int") + 1, lit(1)), 16, 10)
       .cast("int")
-    val bit = nibble.bitwiseAND(expr("shiftleft(1, 3 - j % 4)")) > 0
-    val bitRows = toks
-      .select(col("doc_id"), col("tf"), md5(col("word")).as("h"))
-      .select(col("doc_id"), col("tf"), explode(sequence(lit(0), lit(59))).as("j"),
-        col("h"))
-      .select(col("doc_id"), col("j"),
-        when(bit, col("tf")).otherwise(-col("tf")).as("vote"))
-    bitRows.groupBy("doc_id", "j").agg(sum("vote").as("v"))
-      .groupBy("doc_id")
-      .agg(sum(when(col("v") > 0, expr("shiftleft(CAST(1 AS BIGINT), j)"))
-        .otherwise(0L)).as("simhash"))
-  }
-
-  /** Pigeonhole pairs over the 60-bit hash: 3 disjoint 20-bit chunks for
-    * hamming <= 2 (any such pair leaves one chunk untouched), exact
-    * hamming as the join residual. Identical output to the all-pairs
-    * formulation; candidate buckets are ~2^20 per chunk.
-    */
-  def simhashPairs60(sh: DataFrame, maxHamming: Int = 2): DataFrame = {
-    require(maxHamming == 2, "chunk layout below is specialized to <=2")
-    val mask20 = (1 << 20) - 1
-    val chunks = array((0 until 3).map { k =>
-      struct(lit(k).as("ck"),
-        shiftright(col("simhash"), k * 20).bitwiseAND(lit(mask20.toLong)).as("cv"))
-    }: _*)
-    val cr = sh.select(col("doc_id"), col("simhash"), explode(chunks).as("c"))
-      .select(col("doc_id"), col("simhash"), col("c.ck").as("ck"), col("c.cv").as("cv"))
-    cr.as("a").join(cr.as("b"),
-        col("a.ck") === col("b.ck") && col("a.cv") === col("b.cv") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+    simhashOf(docs, 60, nibble.bitwiseAND(expr("shiftleft(1, 3 - j % 4)")) > 0,
+      expr("shiftleft(CAST(1 AS BIGINT), j)"))
   }
 
   /** SimHash near-dup pairs at hamming distance <= maxHamming, via
     * pigeonhole banding instead of an all-pairs nested-loop join: split the
-    * 16-bit hash into maxHamming+1 disjoint chunks — any pair within the
+    * hash into maxHamming+1 disjoint `chunks` — any pair within the
     * distance budget differs in at most maxHamming bits, so at least one
     * chunk is untouched and the pair collides on an exact (chunk, value)
     * key. Candidate generation is therefore an equi-join on chunk buckets
     * (shuffle-hash-joinable at any scale); the exact hamming filter then
     * drops false candidates. Identical output to the all-pairs formulation.
     */
-  def simhashPairs(sh: DataFrame, maxHamming: Int = 2): DataFrame = {
-    require(maxHamming == 2, "chunk layout below is specialized to <=2")
-    // 16 bits → 3 chunks: bits 0-5, 6-10, 11-15
-    val chunks = array(
-      struct(lit(0).as("ck"), col("simhash").bitwiseAND(63).as("cv")),
-      struct(lit(1).as("ck"), shiftright(col("simhash"), 6).bitwiseAND(31).as("cv")),
-      struct(lit(2).as("ck"), shiftright(col("simhash"), 11).bitwiseAND(31).as("cv")))
-    val cr = sh.select(col("doc_id"), col("simhash"), explode(chunks).as("c"))
+  private def simhashPairsOf(sh: DataFrame, maxHamming: Int,
+                             chunks: Seq[Column]): DataFrame = {
+    require(maxHamming == 2, "the chunk layouts are specialized to maxHamming = 2")
+    val cs = array(chunks.zipWithIndex.map { case (c, k) =>
+      struct(lit(k).as("ck"), c.as("cv"))
+    }: _*)
+    val cr = sh.select(col("doc_id"), col("simhash"), explode(cs).as("c"))
       .select(col("doc_id"), col("simhash"), col("c.ck").as("ck"), col("c.cv").as("cv"))
     cr.as("a").join(cr.as("b"),
         col("a.ck") === col("b.ck") && col("a.cv") === col("b.cv") &&
@@ -852,6 +725,21 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
       .distinct() // a pair can collide on 2-3 chunks
   }
+
+  /** Pigeonhole pairs over the 16-bit hash: chunks are bits 0-5, 6-10
+    * and 11-15. */
+  def simhashPairs(sh: DataFrame, maxHamming: Int = 2): DataFrame =
+    simhashPairsOf(sh, maxHamming, Seq(
+      col("simhash").bitwiseAND(63),
+      shiftright(col("simhash"), 6).bitwiseAND(31),
+      shiftright(col("simhash"), 11).bitwiseAND(31)))
+
+  /** Pigeonhole pairs over the 60-bit hash: 3 disjoint 20-bit chunks, so
+    * candidate buckets are ~2^20 per chunk. */
+  def simhashPairs60(sh: DataFrame, maxHamming: Int = 2): DataFrame =
+    simhashPairsOf(sh, maxHamming, (0 until 3).map { k =>
+      shiftright(col("simhash"), k * 20).bitwiseAND(lit((1L << 20) - 1))
+    })
 
   /** Content-novelty filter for an ingest batch — the "seen this exact
     * document before?" gate a crawler runs on every snapshot (re-fetches

@@ -128,36 +128,49 @@ object QualityClassifier {
     val f0 = features(docs).localCheckpoint() // one tokenize pass, reused by every round
     val f = graft.operators.Spread.tight(f0)
     val (means, stds) = moments(f)
-    val s = standardized(f, means, stds)
-    // Round-19 round fusion (guide §1.2 — the profile showed the loop
-    // below at ~24 jobs for < 0.1 s of summed task time, pure scheduler
-    // latency): when the tight guard above has already pinned the
-    // checkpointed feature table to ONE partition (metadata-scale —
-    // bench corpora; a production multi-partition table keeps the
-    // distributed per-round aggregates), all `iters` full-batch rounds
-    // run inside ONE task over that partition. Bit-identical by the
-    // fixMean contract: the gradient is an exact order-free scale-8
-    // int64 sum, and margin/rational-sigmoid/stab6 are the same IEEE op
-    // sequence the Column expressions fold (Stable.stab6 IS the
-    // canonical JVM twin), so the weight recurrence is the same doubles.
-    val w: Array[Double] =
-      if (s.rdd.getNumPartitions == 1) trainRoundsFused(s, lr, iters)
-      else {
-        var w0 = Array.fill(5)(0.0)
-        for (_ <- 1 to iters) {
-          val r = prob(margin(w0)) - col("y")
-          val n = count(lit(1))
-          val g = s.agg(
-            Stable.fixMean(r, n).as("g0"),
-            Stable.fixMean(r * col("s1"), n).as("g1"),
-            Stable.fixMean(r * col("s2"), n).as("g2"),
-            Stable.fixMean(r * col("s3"), n).as("g3"),
-            Stable.fixMean(r * col("s4"), n).as("g4")).collect()(0)
-          w0 = Array.tabulate(5)(j => stab6(w0(j) - lr * g.getDouble(j)))
-        }
-        w0
+    (Model(means, stds, trainRounds(standardized(f, means, stds), lr, iters)), f)
+  }
+
+  /** Row ceiling of the fused trainer: it buffers every feature row (five
+    * doubles, ~64 bytes) in one task, so at most ~64 MB; a larger
+    * single-partition table runs the distributed per-round loop. */
+  val FusedMaxRows: Int = 1 << 20
+
+  /** The `iters` gradient rounds over the standardized feature table.
+    *
+    * Round-19 round fusion (guide §1.2 — the profile showed the per-round
+    * loop at ~24 jobs for < 0.1 s of summed task time, pure scheduler
+    * latency): when the table is ONE partition (the tight guard in
+    * [[trainWithFeatures]] pins metadata-scale checkpoints there) and at
+    * most `maxFusedRows` rows, all rounds run inside ONE task over that
+    * partition. A production multi-partition table keeps the distributed
+    * per-round aggregates. Bit-identical by the fixMean contract: the
+    * gradient is an exact order-free scale-8 int64 sum, and
+    * margin/rational-sigmoid/stab6 are the same IEEE op sequence the
+    * Column expressions fold (Stable.stab6 IS the canonical JVM twin), so
+    * the weight recurrence is the same doubles (QualityClassifierSpec
+    * pins the twins equal).
+    */
+  private[graft] def trainRounds(s: DataFrame, lr: Double, iters: Int,
+                                 maxFusedRows: Int = FusedMaxRows): Array[Double] = {
+    val fused =
+      if (s.rdd.getNumPartitions == 1) trainRoundsFused(s, lr, iters, maxFusedRows)
+      else None
+    fused.getOrElse {
+      var w0 = Array.fill(5)(0.0)
+      for (_ <- 1 to iters) {
+        val r = prob(margin(w0)) - col("y")
+        val n = count(lit(1))
+        val g = s.agg(
+          Stable.fixMean(r, n).as("g0"),
+          Stable.fixMean(r * col("s1"), n).as("g1"),
+          Stable.fixMean(r * col("s2"), n).as("g2"),
+          Stable.fixMean(r * col("s3"), n).as("g3"),
+          Stable.fixMean(r * col("s4"), n).as("g4")).collect()(0)
+        w0 = Array.tabulate(5)(j => stab6(w0(j) - lr * g.getDouble(j)))
       }
-    (Model(means, stds, w), f)
+      w0
+    }
   }
 
   /** All `iters` gradient rounds in one job over the single-partition
@@ -166,50 +179,62 @@ object QualityClassifier {
     * any null feature contributes to no gradient sum (Catalyst `sum`
     * skips null elements — and a null in any s_j nulls the shared margin,
     * hence every element) but still counts toward n (`count(lit(1))`).
+    * The task buffers at most `maxRows` + 1 rows: past the ceiling it
+    * stops reading and returns None, and the caller runs the distributed
+    * loop instead.
     */
-  private def trainRoundsFused(s: DataFrame, lr: Double,
-                               iters: Int): Array[Double] = {
-    val lrL = lr
-    val itersL = iters
+  private def trainRoundsFused(s: DataFrame, lr: Double, iters: Int,
+                               maxRows: Int): Option[Array[Double]] = {
     val res = s.select(col("s1"), col("s2"), col("s3"), col("s4"), col("y"))
       .rdd.mapPartitions { it =>
-        val rows = it.map { r =>
+        val rows = it.take(maxRows + 1).map { r =>
           if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2) ||
               r.isNullAt(3) || r.isNullAt(4)) null
           else Array(r.getDouble(0), r.getDouble(1), r.getDouble(2),
             r.getDouble(3), r.getDouble(4))
         }.toArray
-        val n = rows.length.toDouble
-        var w = Array.fill(5)(0.0)
-        var round = 0
-        while (round < itersL) {
-          val sums = new Array[Long](5)
-          var i = 0
-          while (i < rows.length) {
-            val a = rows(i)
-            if (a != null) {
-              // the same left-to-right fold as margin(w)
-              val z = w(0) + w(1) * a(0) + w(2) * a(1) + w(3) * a(2) + w(4) * a(3)
-              val p = Stable.stab6(0.5 + (0.5 * z) / (1.0 + math.abs(z)))
-              val r = p - a(4)
-              sums(0) += math.floor(r * 1e8 + 0.5).toLong
-              sums(1) += math.floor(r * a(0) * 1e8 + 0.5).toLong
-              sums(2) += math.floor(r * a(1) * 1e8 + 0.5).toLong
-              sums(3) += math.floor(r * a(2) * 1e8 + 0.5).toLong
-              sums(4) += math.floor(r * a(3) * 1e8 + 0.5).toLong
-            }
-            i += 1
-          }
-          w = Array.tabulate(5) { j =>
-            val g = Stable.stab6((sums(j).toDouble / 1e8) / n)
-            Stable.stab6(w(j) - lrL * g)
-          }
-          round += 1
-        }
-        Iterator.single(w)
+        val w = if (rows.isEmpty || rows.length > maxRows) null else fusedRounds(rows, lr, iters)
+        Iterator.single((rows.length, w))
       }.collect()
     require(res.length == 1, s"fused LR train expected 1 partition, saw ${res.length}")
-    res(0)
+    val (n, w) = res(0)
+    require(n > 0, "QualityClassifier.trainRoundsFused: empty feature table — " +
+      "no rows to train on (the weights would be NaN)")
+    Option(w)
+  }
+
+  /** The fused rounds over buffered (s1..s4, y) rows, null for a row with
+    * a null feature. */
+  private def fusedRounds(rows: Array[Array[Double]], lr: Double,
+                          iters: Int): Array[Double] = {
+    val n = rows.length.toDouble
+    var w = Array.fill(5)(0.0)
+    var round = 0
+    while (round < iters) {
+      val sums = new Array[Long](5)
+      var i = 0
+      while (i < rows.length) {
+        val a = rows(i)
+        if (a != null) {
+          // the same left-to-right fold as margin(w)
+          val z = w(0) + w(1) * a(0) + w(2) * a(1) + w(3) * a(2) + w(4) * a(3)
+          val p = Stable.stab6(0.5 + (0.5 * z) / (1.0 + math.abs(z)))
+          val r = p - a(4)
+          sums(0) += math.floor(r * 1e8 + 0.5).toLong
+          sums(1) += math.floor(r * a(0) * 1e8 + 0.5).toLong
+          sums(2) += math.floor(r * a(1) * 1e8 + 0.5).toLong
+          sums(3) += math.floor(r * a(2) * 1e8 + 0.5).toLong
+          sums(4) += math.floor(r * a(3) * 1e8 + 0.5).toLong
+        }
+        i += 1
+      }
+      w = Array.tabulate(5) { j =>
+        val g = Stable.stab6((sums(j).toDouble / 1e8) / n)
+        Stable.stab6(w(j) - lr * g)
+      }
+      round += 1
+    }
+    w
   }
 
   /** Per-doc soft quality score under a fitted model (row-local,

@@ -53,10 +53,12 @@ object SemDedup {
     // single-split scan. The PAIR join downstream keeps its own
     // partitioning (this flag never touches it).
     val tiny = p.rdd.getNumPartitions <= 4
-    var cent: DataFrame = p
-      .withColumn("rn", row_number().over(
-        Window.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))))
-      .filter(col("rn") <= k)
+    // k seeds: the top k by (md5(vec_id), vec_id), then those k rows
+    // numbered (the Selection.selectTopK shape) — the unpartitioned
+    // window sees k rows, never the corpus
+    val seedOrder = Seq(md5(col("vec_id").cast("string")), col("vec_id"))
+    var cent: DataFrame = p.orderBy(seedOrder: _*).limit(k)
+      .withColumn("rn", row_number().over(Window.orderBy(seedOrder: _*)))
       .select((col("rn") - 1).cast("int").as("cell"), col("e").as("c"))
       .withColumn("cnrm", Similarity.norm(col("c")))
     for (_ <- 1 to iters) {

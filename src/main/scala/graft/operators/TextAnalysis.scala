@@ -291,10 +291,7 @@ object TextAnalysis {
     */
   def winnowing(docs: DataFrame, n: Int = 3, w: Int = 4): DataFrame = {
     val arr = TextOps.splitWords(lower(col("text")))
-    val m = size(col("arr")) - (n - 1)
-    val sh = (1 until n).foldLeft(slice(col("arr"), lit(1), m)) { (acc, k) =>
-      zip_with(acc, slice(col("arr"), lit(k + 1), m), (a, b) => concat_ws(" ", a, b))
-    }
+    val sh = TextOps.ngrams(col("arr"), n)
     val P = 1048576L // 2^20 — max doc gram count the packing supports
     val pos = docs.select(col("doc_id"), arr.as("arr"))
       .filter(size(col("arr")) >= n + w - 1) // ≥ one complete window
@@ -441,13 +438,7 @@ object TextAnalysis {
     */
   def repetition(docs: DataFrame, n: Int = 3): DataFrame = {
     val arr = TextOps.splitWords(TextOps.normalize(col("text")))
-    // n-gram stream as a zip_with fold over n shifted slices (left-assoc
-    // concat_ws chains to "w1 w2 … wn") — avoids the interpreted
-    // transform(sequence, element_at) path, 17× on the bigram measurement
-    val m = size(col("arr")) - (n - 1)
-    val grams = (1 until n).foldLeft(slice(col("arr"), lit(1), m)) { (acc, k) =>
-      zip_with(acc, slice(col("arr"), lit(k + 1), m), (a, b) => concat_ws(" ", a, b))
-    }
+    val grams = TextOps.ngrams(col("arr"), n)
     docs.select(col("doc_id"), arr.as("arr")).filter(size(col("arr")) >= n)
       .select(col("doc_id"), explode(grams).as("g"))
       .groupBy("doc_id")
@@ -487,14 +478,11 @@ object TextAnalysis {
     */
   def duplicateSpans(docs: DataFrame, n: Int = 8): DataFrame = {
     val arr = TextOps.splitWords(TextOps.normalize(col("text")))
-    val m = size(col("arr")) - (n - 1)
-    val grams = (1 until n).foldLeft(slice(col("arr"), lit(1), m)) { (acc, k) =>
-      zip_with(acc, slice(col("arr"), lit(k + 1), m), (a, b) => concat_ws(" ", a, b))
-    }
+    val grams = TextOps.ngrams(col("arr"), n)
     val pg = docs.select(col("doc_id"), arr.as("arr")).filter(size(col("arr")) >= n)
       .select(col("doc_id"), posexplode(grams))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
-        col("col").as("gram"), Dedup.shingleKeyFast(col("col")).as("gk"))
+        col("col").as("gram"), Dedup.shingleKey(col("col"), Dedup.Xx).as("gk"))
     val stats = pg.groupBy("gk").agg(
       count(lit(1)).as("occ"),
       min(struct(col("doc_id"), col("pos"))).as("first"))

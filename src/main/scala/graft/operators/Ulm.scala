@@ -343,6 +343,9 @@ object Ulm {
 
   private def pieceIdsFrom(enc: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    // unpartitioned window, bounded by the model: one row per distinct
+    // piece of the trained segmentation (<= the vocabulary size), never
+    // by the corpus
     enc.select(explode(col("ps")).as("piece")).distinct()
       .withColumn("id", row_number().over(Window.orderBy("piece")))
   }

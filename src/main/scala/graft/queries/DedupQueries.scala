@@ -39,8 +39,7 @@ object DedupQueries {
     */
   def persistedShingleKeys(s: SparkSession, d: String): DataFrame =
     Persisted(s, d, "shk", "documents.parquet", "_n3") {
-      persistedShingles(s, d)
-        .select(col("doc_id"), Dedup.shingleKey(col("shingle")).as("shk"))
+      Dedup.shingleKeys(persistedShingles(s, d))
     }
 
   /** Natural-CORPUS fixture artifacts (round 15): SF-independent (the
@@ -52,8 +51,7 @@ object DedupQueries {
 
   def persistedNaturalShingleKeys(s: SparkSession): DataFrame =
     Persisted(s, fixturesDir, "natshk", "natural_corpus.parquet", "_n3") {
-      Dedup.shingles(graft.sources.NaturalCorpus.corpus(s))
-        .select(col("doc_id"), Dedup.shingleKey(col("shingle")).as("shk"))
+      Dedup.shingleKeys(Dedup.shingles(graft.sources.NaturalCorpus.corpus(s)))
     }
 
   def persistedNaturalSignatures(s: SparkSession): DataFrame =
@@ -65,8 +63,7 @@ object DedupQueries {
   /** xxhash64 (fast-tier) shingle keys, persisted like the md5 tier. */
   def persistedShingleKeysFast(s: SparkSession, d: String): DataFrame =
     Persisted(s, d, "shkfast", "documents.parquet", "_n3") {
-      persistedShingles(s, d)
-        .select(col("doc_id"), Dedup.shingleKeyFast(col("shingle")).as("shk"))
+      Dedup.shingleKeys(persistedShingles(s, d), Dedup.Xx)
     }
 
   /** The generated Zipf corpus itself, persisted — the md5-heavy token
@@ -95,8 +92,7 @@ object DedupQueries {
     */
   def persistedZipfShingleKeys(s: SparkSession, d: String): DataFrame =
     Persisted(s, d, "zipfshk", "documents.parquet", "_n3") {
-      Dedup.shingles(persistedZipfCorpus(s, d), 3)
-        .select(col("doc_id"), Dedup.shingleKey(col("shingle")).as("shk"))
+      Dedup.shingleKeys(Dedup.shingles(persistedZipfCorpus(s, d), 3))
     }
 
   /** md5-tier MinHash signatures of the zipf corpus, persisted like the
@@ -117,8 +113,7 @@ object DedupQueries {
     */
   def persistedZipfMutShingleKeys(s: SparkSession, d: String): DataFrame =
     Persisted(s, d, "zipfmshk", "documents.parquet", "_n3") {
-      Dedup.shingles(persistedZipfMutCorpus(s, d), 3)
-        .select(col("doc_id"), Dedup.shingleKey(col("shingle")).as("shk"))
+      Dedup.shingleKeys(Dedup.shingles(persistedZipfMutCorpus(s, d), 3))
     }
 
   /** md5-tier MinHash signatures of the mutated zipf corpus. */
@@ -155,7 +150,7 @@ object DedupQueries {
     */
   def persistedSignaturesFast(s: SparkSession, d: String): DataFrame =
     Persisted(s, d, "sigsfast", "documents.parquet", s"_n3_h$SigHashes") {
-      Dedup.minhashSignaturesFast(persistedShingles(s, d), SigHashes)
+      Dedup.minhashSignatures(persistedShingles(s, d), SigHashes, Dedup.Xx)
     }
 
   /** The 16-bit SimHash table, materialized once per SF dir — a pure
@@ -230,29 +225,14 @@ object DedupQueries {
        |  JOIN shk y ON c.doc_b = y.doc_id AND x.shk = y.shk
        |  GROUP BY 1, 2)""".stripMargin
 
-  /** DuckDB twin of Dedup.minhashLshPairsFrom: CTE chain ending in
-    * `p(doc_a, doc_b, jaccard)` — banded md5 MinHash candidates, exact
-    * Jaccard >= threshold on candidates only. Same signature layout as
-    * Dedup.minhashCol (two 60-bit slices per digest).
+  /** DuckDB twin of Dedup.minhashLshPairsFrom (md5 tier): CTE chain
+    * ending in `p(doc_a, doc_b, jaccard)` — banded md5 MinHash candidates,
+    * exact Jaccard >= threshold on candidates only. Same signature layout
+    * as Dedup.Md5.component (two 60-bit slices per digest).
     */
   def lshPairCtes(bands: Int, rows: Int, threshold: Double,
-                  shingles: String = shingleCte): String = {
-    val sigCols = (0 until bands * rows).map { i =>
-      val seed = i / 2
-      val start = if (i % 2 == 0) 1 else 17
-      s"min(CAST(CONCAT('0x', substr(md5('$seed:' || shingle), $start, 15)) AS BIGINT)) AS h$i"
-    }.mkString(",\n    ")
-    val bandSel = (0 until bands).map { b =>
-      val hs = (b * rows until (b + 1) * rows)
-        .map(i => s"CAST(h$i AS VARCHAR)").mkString(" || ':' || ")
-      s"SELECT doc_id, $b AS band, md5($hs) AS bh FROM sig"
-    }.mkString("\n  UNION ALL ")
-    s"""$shingles,
-       |sig AS (SELECT doc_id,
-       |    $sigCols
-       |  FROM sh GROUP BY doc_id),
-       |bands AS (
-       |  $bandSel),
+                  shingles: String = shingleCte): String =
+    s"""${md5BandCtes(bands, rows, shingles)},
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
@@ -269,6 +249,28 @@ object DedupQueries {
        |    CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) AS jaccard
        |  FROM inter JOIN sz sa ON doc_a = sa.doc_id JOIN sz sb ON doc_b = sb.doc_id
        |  WHERE CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) >= $threshold)""".stripMargin
+
+  /** The md5-tier `sig` and `bands` CTEs over `shingles` (a CTE list
+    * ending in `sh(doc_id, shingle)`): Dedup.Md5.component's signature
+    * layout (two 60-bit slices per digest) and Dedup.Md5.bandHash.
+    */
+  private def md5BandCtes(bands: Int, rows: Int, shingles: String): String = {
+    val sigCols = (0 until bands * rows).map { i =>
+      val seed = i / 2
+      val start = if (i % 2 == 0) 1 else 17
+      s"min(CAST(CONCAT('0x', substr(md5('$seed:' || shingle), $start, 15)) AS BIGINT)) AS h$i"
+    }.mkString(",\n    ")
+    val bandSel = (0 until bands).map { b =>
+      val hs = (b * rows until (b + 1) * rows)
+        .map(i => s"CAST(h$i AS VARCHAR)").mkString(" || ':' || ")
+      s"SELECT doc_id, $b AS band, md5($hs) AS bh FROM sig"
+    }.mkString("\n  UNION ALL ")
+    s"""$shingles,
+       |sig AS (SELECT doc_id,
+       |    $sigCols
+       |  FROM sh GROUP BY doc_id),
+       |bands AS (
+       |  $bandSel)""".stripMargin
   }
 
   /** Min-label connected-components closure over `p` (recursive CTE),
@@ -380,23 +382,8 @@ object DedupQueries {
     * candidate step replaced by the new×old cross-set join. Ends in
     * `p(new_doc, old_doc, jaccard)`.
     */
-  def incrementalPairCtes(bands: Int, rows: Int, threshold: Double): String = {
-    val sigCols = (0 until bands * rows).map { i =>
-      val seed = i / 2
-      val start = if (i % 2 == 0) 1 else 17
-      s"min(CAST(CONCAT('0x', substr(md5('$seed:' || shingle), $start, 15)) AS BIGINT)) AS h$i"
-    }.mkString(",\n    ")
-    val bandSel = (0 until bands).map { b =>
-      val hs = (b * rows until (b + 1) * rows)
-        .map(i => s"CAST(h$i AS VARCHAR)").mkString(" || ':' || ")
-      s"SELECT doc_id, $b AS band, md5($hs) AS bh FROM sig"
-    }.mkString("\n  UNION ALL ")
-    s"""$shingleCte,
-       |sig AS (SELECT doc_id,
-       |    $sigCols
-       |  FROM sh GROUP BY doc_id),
-       |bands AS (
-       |  $bandSel),
+  def incrementalPairCtes(bands: Int, rows: Int, threshold: Double): String =
+    s"""${md5BandCtes(bands, rows, shingleCte)},
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS new_doc, b.doc_id AS old_doc
        |  FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh
@@ -414,15 +401,14 @@ object DedupQueries {
        |    CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) AS jaccard
        |  FROM inter JOIN sz sa ON new_doc = sa.doc_id JOIN sz sb ON old_doc = sb.doc_id
        |  WHERE CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) >= $threshold)""".stripMargin
-  }
 
   /** The actionable LSH-verified pair graph (shared with text_curate). */
   def lshKeepPairs(s: SparkSession, d: String): DataFrame =
     Dedup.minhashLshPairsFromSigKeys(persistedSignatures(s, d), persistedShingleKeys(s, d),
       KeepBands, KeepRows, KeepThreshold)
 
-  /** DuckDB twin of Dedup.minhashLshPairsFastFromSigKeys — the xxhash64
-    * tier under the full hash gate. Structure mirrors [[lshPairCtes]]
+  /** DuckDB twin of Dedup.minhashLshPairsFromSigKeys with Dedup.Xx — the
+    * xxhash64 tier under the full hash gate. Structure mirrors [[lshPairCtes]]
     * with every digest swapped for XxhashSql's staged XXH64 chains:
     * signatures = per-(doc, i) min of xxhash64(i, shingle) (the chained
     * int seed is the driver-side constant hashInt(i, 42)); band buckets
@@ -783,9 +769,8 @@ object DedupQueries {
     // reuses the standard chains verbatim. SF-independent by design
     // (like the zipf tiers at fixed doc count).
     GraftQuery("dedup_natural_jaccard",
-      (s, d) => Dedup.ngramJaccardPairsFromKeys(
-          Dedup.shingles(graft.sources.NaturalCorpus.docs(s))
-            .select(col("doc_id"), Dedup.shingleKey(col("shingle")).as("shk")), 0.8)
+      (s, d) => Dedup.ngramJaccardPairsFrom(
+          Dedup.shingles(graft.sources.NaturalCorpus.docs(s)), 0.8)
         .orderBy("doc_a", "doc_b"),
       Some(
         s"""WITH ${graft.sources.NaturalCorpus.docsCte}, $shingleCte, $shkCte, $jaccardTail
@@ -860,8 +845,8 @@ object DedupQueries {
     // instead of riding a rows-only check. DedupSpec additionally pins
     // its agreement with the md5 tier on the fixture.
     GraftQuery("dedup_minhash_fast",
-      (s, d) => Dedup.minhashLshPairsFastFromSigKeys(persistedSignaturesFast(s, d),
-          persistedShingleKeysFast(s, d), 3, 4, 0.5)
+      (s, d) => Dedup.minhashLshPairsFromSigKeys(persistedSignaturesFast(s, d),
+          persistedShingleKeysFast(s, d), 3, 4, 0.5, Dedup.Xx)
         .orderBy("doc_a", "doc_b"),
       Some(fastLshPairSql(3, 4, 0.5))),
 

@@ -358,11 +358,8 @@ object TextAnalysisQueries {
     // corpus-linear.
     GraftQuery("text_novelty_profile",
       (s, d) => {
-        import org.apache.spark.sql.functions.col
         TextAnalysis.shingleNovelty(
-          DedupQueries.persistedShingles(s, d)
-            .select(col("doc_id"),
-              graft.operators.Dedup.shingleKey(col("shingle")).as("shk")))
+          graft.operators.Dedup.shingleKeys(DedupQueries.persistedShingles(s, d)))
           .orderBy("doc_id")
       },
       Some(

@@ -72,10 +72,7 @@ object DocStreams {
     import docs.sparkSession.implicits._
     import graft.functions.TextOps
     val arr = TextOps.splitWords(TextOps.normalize(col("text")))
-    val m = size(col("arr")) - (n - 1)
-    val sh = (1 until n).foldLeft(slice(col("arr"), lit(1), m)) { (acc, k) =>
-      zip_with(acc, slice(col("arr"), lit(k + 1), m), (a, b) => concat_ws(" ", a, b))
-    }
+    val sh = TextOps.ngrams(col("arr"), n)
     docs.select(col("doc_id").cast("long").as("doc_id"), arr.as("arr"))
       .filter(size(col("arr")) >= n)
       .select(col("doc_id"), explode(array_distinct(sh)).as("shingle"))
@@ -163,12 +160,11 @@ object DocStreams {
     validateState(spark, stateDir, bands, rowsPerBand)
     val n = bands * rowsPerBand
     val sigCols = (0 until n).map(i => s"h$i")
-    val sig = Dedup.minhashSignaturesFast(Dedup.shingles(batch), n)
+    val sig = Dedup.minhashSignatures(Dedup.shingles(batch), n, Dedup.Xx)
       .localCheckpoint() // reused: band rows, verify b-side, state rows
     // batch band rows carry the signature — both the in-batch a-side and
     // the persisted state rows need it next to the band key
-    val newBands = Dedup.bandRows(sig, bands, rowsPerBand,
-      cols => xxhash64(cols: _*), carry = sigCols)
+    val newBands = Dedup.bandRows(sig, bands, rowsPerBand, Dedup.Xx, carry = sigCols)
     val aSig = sigCols.map(c => col(s"x.$c").as(s"a_$c"))
     // candidate (earlier doc a + its signature, new doc b): a from the
     // pruned state partitions, or an earlier doc of the same batch

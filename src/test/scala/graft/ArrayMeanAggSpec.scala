@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** ArrayMeanAgg must reproduce the DataFrame-native centroid update it
   * replaced (posexplode → per-dimension stab(avg) → reassembly), value for
-  * value — the same cross-check discipline as MinHashAggSpec.
+  * value.
   */
 class ArrayMeanAggSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark

@@ -45,16 +45,22 @@ class DedupSpec extends AnyFunSuite {
 
   test("prefix-filtered Jaccard == plain inverted-index Jaccard on both corpora") {
     import spark.implicits._
-    for (d <- Seq(TestSpark.sf0001, TestSpark.sf001); t <- Seq(0.5, 0.6, 0.8)) {
+    for (d <- Seq(TestSpark.sf0001, TestSpark.sf001)) {
       val shk = Dedup.shingles(graft.sources.Tables.documents(spark, d))
         .select(org.apache.spark.sql.functions.col("doc_id"),
           Dedup.shingleKey(org.apache.spark.sql.functions.col("shingle")).as("shk"))
+      // the same key table as an 8-partition checkpoint leaf: Spread.isTiny
+      // is false, so every intersection takes its shuffled branch
+      val shk8 = shk.repartition(8).localCheckpoint()
+      assert(!graft.operators.Spread.isTiny(shk8))
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.as[(Long, Long, Double)].collect().toSeq.sorted
-      val plain = rows(Dedup.ngramJaccardPairsFromKeys(shk, t))
-      val prefix = rows(Dedup.ngramJaccardPairsPrefixFromKeys(shk, t))
-      assert(prefix == plain, s"$d t=$t")
-      assert(plain.nonEmpty, s"$d t=$t") // fixtures carry near-dup pairs
+      for (t <- Seq(0.5, 0.6, 0.8); (keys, tag) <- Seq(shk -> "", shk8 -> " x8")) {
+        val plain = rows(Dedup.ngramJaccardPairsFromKeys(keys, t))
+        val prefix = rows(Dedup.ngramJaccardPairsPrefixFromKeys(keys, t))
+        assert(prefix == plain, s"$d t=$t$tag")
+        assert(plain.nonEmpty, s"$d t=$t$tag") // fixtures carry near-dup pairs
+      }
     }
   }
 
@@ -157,11 +163,16 @@ class DedupSpec extends AnyFunSuite {
           keys(graft.sources.Tables.documents(spark, d)),
           keys(graft.sources.ZipfCorpus.synth(
             graft.sources.Tables.documents(spark, d).select("doc_id"))))) {
-        val ck = corpus.localCheckpoint()
-        def rows(df: org.apache.spark.sql.DataFrame) =
-          df.as[(Long, Long, Double)].collect().toSeq.sorted
-        assert(rows(Dedup.containmentPairsPrefixFromKeys(ck, t)) ==
-          rows(Dedup.containmentPairsFromKeys(ck, t)), s"$d t=$t")
+        // a tiny checkpoint and an 8-partition one (Spread.isTiny false:
+        // the shuffled intersection branch)
+        val ck8 = corpus.repartition(8).localCheckpoint()
+        assert(!graft.operators.Spread.isTiny(ck8))
+        for ((ck, tag) <- Seq(corpus.localCheckpoint() -> "", ck8 -> " x8")) {
+          def rows(df: org.apache.spark.sql.DataFrame) =
+            df.as[(Long, Long, Double)].collect().toSeq.sorted
+          assert(rows(Dedup.containmentPairsPrefixFromKeys(ck, t)) ==
+            rows(Dedup.containmentPairsFromKeys(ck, t)), s"$d t=$t$tag")
+        }
       }
     }
   }
@@ -212,8 +223,8 @@ class DedupSpec extends AnyFunSuite {
         s"simhash60 buckets degenerate on zipf corpus at $d: $maxBucket of $nDocs")
 
       // MinHash-LSH band buckets behave: max (band, bh) bucket bounded
-      val sig = Dedup.minhashSignaturesFast(Dedup.shingles(docs), 12)
-      val maxBand = Dedup.bandRows(sig, 6, 2, cols => xxhash64(cols: _*))
+      val sig = Dedup.minhashSignatures(Dedup.shingles(docs), 12, Dedup.Xx)
+      val maxBand = Dedup.bandRows(sig, 6, 2, Dedup.Xx)
         .groupBy("band", "bh").count().agg(max("count")).as[Long].head
       info(s"$d: LSH max band-bucket = $maxBand of $nDocs docs")
       assert(maxBand <= math.max(4, nDocs / 10),
@@ -288,8 +299,8 @@ class DedupSpec extends AnyFunSuite {
     }
     val maxBucket = sh60.select(explode(array(chunks: _*)).as("cv"))
       .groupBy("cv").count().agg(max("count")).as[Long].head
-    val sig = Dedup.minhashSignaturesFast(Dedup.shingles(docs), 12)
-    val maxBand = Dedup.bandRows(sig, 6, 2, cols => xxhash64(cols: _*))
+    val sig = Dedup.minhashSignatures(Dedup.shingles(docs), 12, Dedup.Xx)
+    val maxBand = Dedup.bandRows(sig, 6, 2, Dedup.Xx)
       .groupBy("band", "bh").count().agg(max("count")).as[Long].head
     info(s"50k: simhash60 max chunk-bucket = $maxBucket, LSH max band-bucket = $maxBand")
     assert(maxBucket <= n / 10, s"simhash60 buckets degenerate at 50k: $maxBucket")
@@ -305,6 +316,28 @@ class DedupSpec extends AnyFunSuite {
     assert(c == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 9L -> 7L))
   }
 
+  test("clusters: union-find (1 partition) == min-label loop (8 partitions), row for row") {
+    import spark.implicits._
+    // the same pair table planned at 1 partition takes the in-task
+    // union-find path, at 8 partitions the distributed min-label loop
+    // (Spread.isTiny on the symmetric edge checkpoint); both must emit the
+    // identical (doc_id, keep_id) rows
+    val chain = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("doc_a", "doc_b")
+    val lsh = Dedup.minhashLshPairsFrom(
+      Dedup.shingles(graft.sources.Tables.documents(spark, TestSpark.sf001), 3), 6, 2, 0.6)
+    for ((pairs, tag) <- Seq(chain -> "chain", lsh -> "sf0.01 LSH pairs")) {
+      val p = pairs.localCheckpoint()
+      val one = p.coalesce(1)
+      val eight = p.repartition(8)
+      assert(one.rdd.getNumPartitions == 1 && eight.rdd.getNumPartitions == 8, tag)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        Dedup.clusters(df).as[(Long, Long)].collect().toSeq.sorted
+      val unionFind = rows(one)
+      assert(unionFind.nonEmpty, tag)
+      assert(unionFind == rows(eight), tag)
+    }
+  }
+
   test("minhash LSH surfaces the exact-dup pair") {
     import spark.implicits._
     val pairs = Dedup.minhashLshPairs(docs, 3, 3, 4, 0.5)
@@ -318,7 +351,7 @@ class DedupSpec extends AnyFunSuite {
   test("fast (xxhash64) LSH tier: exact-dup surfaces, verify keeps precision exact") {
     import spark.implicits._
     val sh = Dedup.shingles(docs, 3)
-    val fast = Dedup.minhashLshPairsFastFrom(sh, 3, 4, 0.5)
+    val fast = Dedup.minhashLshPairsFrom(sh, 3, 4, 0.5, Dedup.Xx)
       .as[(Long, Long, Double)].collect().toSeq
     assert(fast.exists(p => p._1 == 1L && p._2 == 2L && p._3 == 1.0))
     assert(!fast.exists(p => p._1 == 4L || p._2 == 4L))
@@ -346,7 +379,7 @@ class DedupSpec extends AnyFunSuite {
     val md5Hi = Dedup.minhashLshPairsFrom(sh, 6, 2, 0.5)
       .as[(Long, Long, Double)].collect().filter(_._3 >= 0.7)
       .map(p => (p._1, p._2)).toSet
-    val fast = Dedup.minhashLshPairsFastFrom(sh, 6, 2, 0.5)
+    val fast = Dedup.minhashLshPairsFrom(sh, 6, 2, 0.5, Dedup.Xx)
       .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSet
     assert(md5Hi.nonEmpty) // the corpus plants near-dup pairs
     assert(md5Hi.subsetOf(fast),
@@ -408,27 +441,33 @@ class DedupSpec extends AnyFunSuite {
     val corpus = graft.sources.Tables.documents(spark, TestSpark.sf0001)
     val sh = Dedup.shingles(corpus, 3)
     val sig = Dedup.minhashSignatures(sh, 12)
-    val shk = sh.select(col("doc_id"), Dedup.shingleKey(col("shingle")).as("shk"))
+    val shk0 = sh.select(col("doc_id"), Dedup.shingleKey(col("shingle")).as("shk"))
+    // the same key table as an 8-partition checkpoint leaf: Spread.isTiny
+    // is false, so the full-corpus verify takes its shuffled branch
+    val shk8 = shk0.repartition(8).localCheckpoint()
+    assert(!graft.operators.Spread.isTiny(shk8))
     val isNew = (c: org.apache.spark.sql.Column) => c % 10 === 0
-    val inc = Dedup.minhashLshPairsIncremental(
-        sig.filter(isNew(col("doc_id"))), sig.filter(!isNew(col("doc_id"))),
-        shk.filter(isNew(col("doc_id"))), shk.filter(!isNew(col("doc_id"))),
-        6, 2, 0.6)
-      .as[(Long, Long, Double)].collect()
-      .map(t => (t._1, t._2) -> t._3).toMap
-    // the same banding over the whole corpus, restricted to cross-split
-    // pairs and re-oriented (new, old), must be the identical map: the
-    // incremental path changes WHERE candidates come from, not which
-    // pairs verify
-    val full = Dedup.minhashLshPairsFromSigKeys(sig, shk, 6, 2, 0.6)
-      .as[(Long, Long, Double)].collect()
-      .filter(t => (t._1 % 10 == 0) != (t._2 % 10 == 0))
-      .map(t => if (t._1 % 10 == 0) (t._1, t._2) -> t._3 else (t._2, t._1) -> t._3)
-      .toMap
-    assert(inc == full)
-    assert(inc.nonEmpty, "fixture has no cross-split near-dup — weak test")
-    // direction invariant: left side is always the batch, right the corpus
-    assert(inc.keys.forall { case (n, o) => n % 10 == 0 && o % 10 != 0 })
+    for ((shk, tag) <- Seq(shk0 -> "", shk8 -> " x8")) {
+      val inc = Dedup.minhashLshPairsIncremental(
+          sig.filter(isNew(col("doc_id"))), sig.filter(!isNew(col("doc_id"))),
+          shk.filter(isNew(col("doc_id"))), shk.filter(!isNew(col("doc_id"))),
+          6, 2, 0.6)
+        .as[(Long, Long, Double)].collect()
+        .map(t => (t._1, t._2) -> t._3).toMap
+      // the same banding over the whole corpus, restricted to cross-split
+      // pairs and re-oriented (new, old), must be the identical map: the
+      // incremental path changes WHERE candidates come from, not which
+      // pairs verify
+      val full = Dedup.minhashLshPairsFromSigKeys(sig, shk, 6, 2, 0.6)
+        .as[(Long, Long, Double)].collect()
+        .filter(t => (t._1 % 10 == 0) != (t._2 % 10 == 0))
+        .map(t => if (t._1 % 10 == 0) (t._1, t._2) -> t._3 else (t._2, t._1) -> t._3)
+        .toMap
+      assert(inc == full, tag)
+      assert(inc.nonEmpty, s"fixture has no cross-split near-dup — weak test$tag")
+      // direction invariant: left side is always the batch, right the corpus
+      assert(inc.keys.forall { case (n, o) => n % 10 == 0 && o % 10 != 0 }, tag)
+    }
   }
 
   test("simhash: identical docs get identical hashes; 16-bit range") {

@@ -117,4 +117,24 @@ class QualityClassifierSpec extends AnyFunSuite {
     assert(!p.contains("ScalaUDF"))
     assert(!p.contains("Join"), "scoring must not join — weights are plan literals")
   }
+
+  test("fused trainer (1 partition) == per-round loop (8 partitions), bit for bit") {
+    val docs = graft.sources.Tables.documents(spark, TestSpark.sf0001)
+    val f = QualityClassifier.features(docs).localCheckpoint()
+    val (means, stds) = QualityClassifier.moments(f)
+    val s = QualityClassifier.standardized(f, means, stds).localCheckpoint()
+    val one = s.coalesce(1)
+    val eight = s.repartition(8).localCheckpoint()
+    assert(one.rdd.getNumPartitions == 1 && eight.rdd.getNumPartitions == 8)
+    val fused = QualityClassifier.trainRounds(one, 0.5, 24).toSeq
+    assert(QualityClassifier.trainRounds(eight, 0.5, 24).toSeq == fused)
+    // past the row ceiling the single partition runs the per-round loop
+    assert(QualityClassifier.trainRounds(one, 0.5, 24, maxFusedRows = 10).toSeq == fused)
+    // the public trainer returns these weights
+    assert(QualityClassifier.train(docs).w.toSeq == fused)
+    // an empty table fails loudly, naming the trainer — never NaN weights
+    val e = intercept[IllegalArgumentException](
+      QualityClassifier.trainRounds(one.filter(col("doc_id") < 0), 0.5, 24))
+    assert(e.getMessage.contains("trainRoundsFused"))
+  }
 }

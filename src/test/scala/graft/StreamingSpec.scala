@@ -1114,9 +1114,9 @@ class StreamingSpec extends AnyFunSuite {
     def agreePairs(qdocs: org.apache.spark.sql.DataFrame) = {
       val n = 12
       val sigCols = (0 until n).map(i => s"h$i")
-      val sig = Dedup.minhashSignaturesFast(Dedup.shingles(qdocs), n)
+      val sig = Dedup.minhashSignatures(Dedup.shingles(qdocs), n, Dedup.Xx)
         .localCheckpoint()
-      val bands = Dedup.bandRows(sig, 6, 2, cols => xxhash64(cols: _*))
+      val bands = Dedup.bandRows(sig, 6, 2, Dedup.Xx)
       val cand = bands.as("x").join(bands.as("y"),
           col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
             col("x.doc_id") < col("y.doc_id"))
@@ -1223,10 +1223,10 @@ class StreamingSpec extends AnyFunSuite {
         val qSurv = Curation.curate(docsAll, sh, lm, noPairs,
             evalMax = 10, maxNll = 10.0)
           .select("doc_id").as[Long].collect().toSet
-        val sig = Dedup.minhashSignaturesFast(
-          Dedup.shingles(docsAll.filter(col("doc_id").isin(qSurv.toSeq: _*))), 12)
+        val sig = Dedup.minhashSignatures(
+          Dedup.shingles(docsAll.filter(col("doc_id").isin(qSurv.toSeq: _*))), 12, Dedup.Xx)
           .localCheckpoint()
-        val bandsDf = Dedup.bandRows(sig, 6, 2, cols => xxhash64(cols: _*))
+        val bandsDf = Dedup.bandRows(sig, 6, 2, Dedup.Xx)
         val cand = bandsDf.as("x").join(bandsDf.as("y"),
             col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
               col("x.doc_id") < col("y.doc_id"))
