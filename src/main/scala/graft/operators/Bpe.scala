@@ -231,7 +231,7 @@ object Bpe {
     * merge mints exactly one new symbol), so the single-partition window
     * is metadata-sized at any corpus size (~32k rows for a production
     * vocabulary) — unlike the corpus-scale word vocabulary, which needs
-    * the distributed dense-rank (Search.vocabularyFrom).
+    * the distributed rank (Ranks.position).
     */
   def symbolIds(wt: DataFrame, merges: Seq[Merge]): DataFrame =
     symbolIdsFrom(applyMerges(wt, merges)

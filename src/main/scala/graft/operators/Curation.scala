@@ -95,24 +95,29 @@ object Curation {
     * corpus so the output hits target proportions. Selection is by
     * content-hash order within each source (the same reproducible-shuffle
     * discipline as text_sample_hash: identical survivors on any cluster,
-    * any run), so re-weighting a 100 TB corpus is one partitioned window
-    * over source — no global sort, no rand(). Over-asked quotas
+    * any run), so re-weighting a 100 TB corpus is one distributed rank
+    * per source — no global sort, no rand(). Over-asked quotas
     * truncate at the source's size (a short source simply contributes
     * everything it has). Returns (doc_id, source, rk) — rk the doc's
     * 1-based position in its source's hash order.
     */
   def mixBySource(docs: DataFrame, weights: Map[String, Double],
-                  total: Int): DataFrame = {
+                  total: Int): DataFrame =
+    takeQuotas(docs, quotaTable(docs, weights, total, "quota"))
+
+  /** (source, `name`) = ⌊weight · total⌋ per source. The floor carries an
+    * epsilon: plain floor(w·total) under-counts when the product lands one
+    * ulp below its decimal value (0.29 × 100 = 28.999999999999996 → 28,
+    * not the intended 29); the epsilon is far above double noise and far
+    * below any honest fractional quota.
+    */
+  private def quotaTable(docs: DataFrame, weights: Map[String, Double],
+                         total: Long, name: String): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // floor with an epsilon: plain floor(w·total) under-counts when the
-    // product lands one ulp below its decimal value (0.29 × 100 =
-    // 28.999999999999996 → 28, not the intended 29); the epsilon is far
-    // above double noise and far below any honest fractional quota
-    val quotas = weights.toSeq
+    weights.toSeq
       .map { case (s, w) => (s, math.floor(w * total + 1e-9).toLong) }
-      .toDF("source", "quota")
-    takeQuotas(docs, quotas)
+      .toDF("source", name)
   }
 
   /** Temperature-smoothed source mixing — the multilingual-LM sampling
@@ -124,7 +129,7 @@ object Curation {
     * through stab(6) (collapsing libm last-ulp spread so DuckDB's pow
     * agrees), the normalizer via dsum (exact decimal, order-independent
     * over the ≤|sources| stab'd weights), then the same skew-safe
-    * hash-order prefix machinery. Survivor sets are therefore
+    * hash-order rank. Survivor sets are therefore
     * deterministic and hash-gated end to end, including the quota
     * arithmetic itself.
     */
@@ -143,29 +148,14 @@ object Curation {
   }
 
   /** Shared tail of the mixing family: keep the first `quota_s` docs of
-    * each source in salted-hash order.
-    *
-    * Skew-safe rank: a window partitioned only by source serializes the
-    * widest source through one task (at crawl scale one source can be
-    * half the corpus). Decompose exactly like packAssignments: the
-    * within-source hash order (h, doc_id) is refined by h's first hex
-    * char, so the global rank = (count of earlier buckets, a ≤16-row-
-    * per-source offset window) + (rank within (source, bucket), 16-way
-    * parallel). Identical rk values — the oracle runs the plain window.
+    * each source in salted-hash order. The per-source rank is
+    * [[Ranks.position]] (one source can be half a crawl); the oracle runs
+    * the plain window.
     */
   private def takeQuotas(docs: DataFrame, quotas: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
     val t = docs.join(broadcast(quotas), "source")
       .withColumn("h", md5(col("doc_id").cast("string")))
-      .withColumn("pfx", substring(col("h"), 1, 1))
-    val offsets = t.groupBy("source", "pfx").agg(count(lit(1)).as("n"))
-      .withColumn("off", coalesce(
-        sum("n").over(w.partitionBy("source").orderBy("pfx")
-          .rowsBetween(w.unboundedPreceding, -1)), lit(0L)))
-      .select("source", "pfx", "off") // ≤ 16·|sources| rows
-    t.join(broadcast(offsets), Seq("source", "pfx"))
-      .withColumn("rk", (col("off") + row_number().over(
-        w.partitionBy("source", "pfx").orderBy("h", "doc_id"))).cast("long"))
+    Ranks.position(t, Seq("source"), Seq("h", "doc_id"), 1, "rk")
       .filter(col("rk") <= col("quota"))
       .select("doc_id", "source", "rk")
   }
@@ -201,25 +191,14 @@ object Curation {
     * within the source's token quota (a doc survives iff its inclusive
     * running sum ≤ quota; the first over-budget doc is dropped whole —
     * packing handles intra-doc splits downstream). Same reproducible
-    * ordering discipline as [[mixBySource]], and the same skew-safe
-    * 16-bucket prefix-sum decomposition — no window ever processes a
-    * whole source. Returns (doc_id, source, n_tok, cum).
+    * ordering discipline as [[mixBySource]]; the running sum is
+    * [[Ranks.runningSum]]. Returns (doc_id, source, n_tok, cum).
     */
   def mixByTokens(docs: DataFrame, weights: Map[String, Double],
                   totalTokens: Long): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val w = org.apache.spark.sql.expressions.Window
-    // same epsilon'd floor as mixBySource (see the 0.29 × 100 note there)
-    val quotas = weights.toSeq
-      .map { case (s, wt) => (s, math.floor(wt * totalTokens + 1e-9).toLong) }
-      .toDF("source", "tok_quota")
-    // same skew-safe 16-bucket prefix-sum decomposition as mixBySource /
-    // packAssignments: the running token sum = per-(source, hex-bucket)
-    // inclusive sum + a ≤16-row-per-source bucket offset — no window ever
-    // sees a whole source.
+    val quotas = quotaTable(docs, weights, totalTokens, "tok_quota")
     // ONE corpus tokenize: the (doc_id, n_tok) projection feeds both the
-    // bucket-offset aggregate and the probe side — localCheckpoint it
+    // bucket-offset aggregate and the rank side of Ranks — localCheckpoint it
     // (the Selection.weights single-scan discipline) so the expensive
     // tokenize+aggregate never runs twice. mixBySource deliberately does
     // NOT checkpoint: its shared subtree is a column-pruned scan plus a
@@ -231,15 +210,7 @@ object Curation {
       .join(docs.select("doc_id", "source"), "doc_id")
       .join(broadcast(quotas), "source")
       .withColumn("h", md5(col("doc_id").cast("string")))
-      .withColumn("pfx", substring(col("h"), 1, 1))
-    val offsets = t.groupBy("source", "pfx").agg(sum("n_tok").as("n"))
-      .withColumn("off", coalesce(
-        sum("n").over(w.partitionBy("source").orderBy("pfx")
-          .rowsBetween(w.unboundedPreceding, -1)), lit(0L)))
-      .select("source", "pfx", "off")
-    t.join(broadcast(offsets), Seq("source", "pfx"))
-      .withColumn("cum", col("off") + sum("n_tok").over(
-        w.partitionBy("source", "pfx").orderBy("h", "doc_id")))
+    Ranks.runningSum(t, Seq("source"), Seq("h", "doc_id"), 1, col("n_tok"), "cum")
       .filter(col("cum") <= col("tok_quota"))
       .select("doc_id", "source", "n_tok", "cum")
   }
@@ -280,30 +251,17 @@ object Curation {
     * global position by content-hash order under an epoch-salted key —
     * the reproducible alternative to rand() shuffling (identical order on
     * any cluster, any run, any partitioning), with epochs decorrelated by
-    * the salt. The global rank is computed DISTRIBUTED with the same
-    * 16-hex-prefix bucket decomposition as [[packSequences]]: buckets
-    * sort-align with the global hash order, each bucket ranks in
-    * parallel, and bucket offsets come from a running-count window over
-    * the 16·nEpochs-row aggregate, broadcast back. Returns
-    * (epoch, pos, doc_id), pos 1-based and dense per epoch.
+    * the salt. The per-epoch rank is [[Ranks.position]], so no window
+    * sees a whole epoch. Returns (epoch, pos, doc_id), pos 1-based and
+    * dense per epoch.
     */
   def epochShuffle(docs: DataFrame, nEpochs: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
     val epochs = spark.range(nEpochs).select(col("id").cast("int").as("epoch"))
     val t = docs.select(col("doc_id")).crossJoin(broadcast(epochs))
       .withColumn("h", md5(concat(col("epoch").cast("string"), lit(":"),
         col("doc_id").cast("string"))))
-      .withColumn("pfx", substring(col("h"), 1, 1))
-    val offsets = t.groupBy("epoch", "pfx").agg(count(lit(1)).as("n"))
-      .withColumn("off", coalesce(
-        sum("n").over(w.partitionBy("epoch").orderBy("pfx")
-          .rowsBetween(w.unboundedPreceding, -1)), lit(0L)))
-      .select("epoch", "pfx", "off") // ≤ 16·nEpochs rows
-    t.join(broadcast(offsets), Seq("epoch", "pfx"))
-      .withColumn("pos", col("off") +
-        row_number().over(w.partitionBy("epoch", "pfx").orderBy("h", "doc_id"))
-          .cast("long"))
+    Ranks.position(t, Seq("epoch"), Seq("h", "doc_id"), 1, "pos")
       .select("epoch", "pos", "doc_id")
   }
 
@@ -311,11 +269,8 @@ object Curation {
     * pre-training layout): documents are laid out in content-hash order
     * and cut into fixed-budget chunks; a doc belongs to the chunk its
     * first token lands in. The global exclusive prefix-sum over token
-    * counts is DISTRIBUTED, not a single-partition window: docs bucket
-    * by their hash's first hex char (16 ordered buckets that sort-align
-    * with the global hash order — the vocabulary-id trick), each bucket
-    * prefix-sums in parallel, and bucket offsets come from a running-sum
-    * window over the 16-row aggregate, broadcast back. Token counts are
+    * counts is [[Ranks.runningSum]], not a single-partition window of the
+    * corpus. Token counts are
     * the BPE-ish alnum proxy (TextAnalysis.tokenCounts). Returns one row
     * per chunk: (seq_id, n_docs, n_tokens).
     */
@@ -345,19 +300,11 @@ object Curation {
     * distributed prefix-sum, same layout out.
     */
   def packAssignmentsFrom(counts: DataFrame, budget: Long): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-    val t = counts
-      .withColumn("h", md5(col("doc_id").cast("string")))
-      .withColumn("pfx", substring(col("h"), 1, 1))
-    val offsets = t.groupBy("pfx").agg(sum("n_tok").as("n"))
-      .withColumn("off", coalesce(
-        sum("n").over(w.orderBy("pfx")
-          .rowsBetween(w.unboundedPreceding, -1)), lit(0L)))
-      .select("pfx", "off") // ≤16 rows — the only single-partition window
-    t.join(broadcast(offsets), "pfx")
-      .withColumn("start", col("off") + coalesce(
-        sum("n_tok").over(w.partitionBy("pfx").orderBy("h", "doc_id")
-          .rowsBetween(w.unboundedPreceding, -1)), lit(0L)))
+    // start = the tokens of every earlier doc: the inclusive sum less the
+    // doc's own, a null sum or n_tok counting 0
+    val t = counts.withColumn("h", md5(col("doc_id").cast("string")))
+    Ranks.runningSum(t, Nil, Seq("h", "doc_id"), 1, col("n_tok"), "cum")
+      .withColumn("start", coalesce(col("cum"), lit(0L)) - coalesce(col("n_tok"), lit(0L)))
       .withColumn("seq_id", expr(s"start div ${budget}L")) // long integral div — exact at any magnitude
       .select("doc_id", "n_tok", "start", "seq_id")
   }
@@ -429,11 +376,10 @@ object Curation {
     * Scale shape: the histogram is one ≤ budget/classWidth-row
     * aggregate; the FFD schedule is a driver walk over it (model-sized
     * by construction — the k×dim contract); ranks within each class are
-    * computed DISTRIBUTED with the 16-hex-prefix trick (no corpus-wide
-    * window); the rank→bin map is segment arithmetic against the
-    * broadcast schedule. Within-class order is content-hash
-    * (md5(doc_id), doc_id) — the repo's deterministic-uniform order, and
-    * what makes the prefix buckets sort-align.
+    * [[Ranks.position]] (no corpus-wide window); the rank→bin map is
+    * segment arithmetic against the broadcast schedule. Within-class
+    * order is content-hash (md5(doc_id), doc_id) — the repo's
+    * deterministic-uniform order.
     *
     * Contract: docs with n_tok > budget get singleton sequences AFTER
     * the packed bins (the loader truncates; slack 0); docs with
@@ -445,16 +391,14 @@ object Curation {
     * schedule already collects — the largest class's count caps a rank
     * partition, so k grows one hex char per 16× beyond 4M rows. A
     * dominant single class at 100× scale therefore gets 256/4096-way
-    * rank partitions instead of m/16-row sorts. Ranks are prefix-width
-    * INVARIANT (buckets sort-align with the global (h, doc_id) order),
-    * so the choice moves partition sizes, never results —
-    * CurationSpec pins width-1 ≡ width-2 output equality.
+    * rank partitions instead of m/16-row sorts. The width moves
+    * partition sizes, never results — CurationSpec pins width-1 ≡
+    * width-2 output equality.
     */
   def packBestFitAssignments(counts: DataFrame, budget: Long,
                              classWidth: Long = 20L,
                              prefixHex: Int = 0): DataFrame = {
     require(budget % classWidth == 0, s"budget $budget not a multiple of class width $classWidth")
-    val w = org.apache.spark.sql.expressions.Window
     // class histogram first: it feeds BOTH the FFD schedule and the
     // prefix-width derivation (one model-sized collect, as before)
     val pre = counts.filter(col("n_tok") >= 1 && col("n_tok") <= budget)
@@ -468,21 +412,11 @@ object Curation {
     // class, re-shard upstream instead
     val k = if (prefixHex > 0) prefixHex
     else (1 to 4).find(i => maxM / math.pow(16, i).toLong <= (1L << 22)).getOrElse(4)
-    val in = counts
-      .withColumn("h", md5(col("doc_id").cast("string")))
-      .withColumn("pfx", substring(col("h"), 1, k))
+    val in = counts.withColumn("h", md5(col("doc_id").cast("string")))
     val t = in.filter(col("n_tok") >= 1 && col("n_tok") <= budget)
       .withColumn("cls",
         expr(s"((n_tok + ${classWidth - 1}) div ${classWidth}L) * ${classWidth}L"))
-    val offsets = t.groupBy("cls", "pfx").agg(count(lit(1)).as("n"))
-      .withColumn("off", coalesce(
-        sum("n").over(w.partitionBy("cls").orderBy("pfx")
-          .rowsBetween(w.unboundedPreceding, -1)), lit(0L)))
-      .select("cls", "pfx", "off") // ≤ 16^k·(budget/classWidth) rows
-    val ranked = t.join(broadcast(offsets), Seq("cls", "pfx"))
-      .withColumn("t", col("off") +
-        row_number().over(w.partitionBy("cls", "pfx").orderBy("h", "doc_id"))
-          .cast("long"))
+    val ranked = Ranks.position(t, Seq("cls"), Seq("h", "doc_id"), k, "t")
     val (pl, nBins) = ffdSchedule(hist, budget)
     val spark = counts.sparkSession
     import spark.implicits._
@@ -492,15 +426,7 @@ object Curation {
       .select(col("doc_id"), col("n_tok"), col("cls"),
         expr("fbin + (t - rlo) div q").as("seq_id"))
     // oversize singletons after the packed bins, in the same hash order
-    val overIn = in.filter(col("n_tok") > budget)
-    val overOff = overIn.groupBy("pfx").agg(count(lit(1)).as("n"))
-      .withColumn("off", coalesce(
-        sum("n").over(w.orderBy("pfx")
-          .rowsBetween(w.unboundedPreceding, -1)), lit(0L)))
-      .select("pfx", "off")
-    val over = overIn.join(broadcast(overOff), "pfx")
-      .withColumn("t", col("off") +
-        row_number().over(w.partitionBy("pfx").orderBy("h", "doc_id")).cast("long"))
+    val over = Ranks.position(in.filter(col("n_tok") > budget), Nil, Seq("h", "doc_id"), k, "t")
       .select(col("doc_id"), col("n_tok"), col("n_tok").as("cls"),
         (lit(nBins) + col("t") - 1).as("seq_id"))
     packed.unionByName(over)
@@ -590,31 +516,15 @@ object Curation {
     * takes a hash-ORDERED quota for proportional mixing — this keeps the
     * BEST k, not a random k).
     *
-    * Skew-safe two-phase shape: a single window partitioned by source
-    * hotspots one task under a giant domain (at crawl scale one domain
-    * can be half the corpus). Phase 1 ranks within (source,
-    * hash-bucket) — `nBuckets`-way parallel regardless of domain skew —
-    * and keeps each bucket's top k, a superset of the global per-source
-    * top k by containment. Phase 2 ranks the ≤ k·nBuckets survivors per
-    * source — aggregate-sized input, so the "global" window is cheap.
-    * Identical output to the one-window form, which is what the oracle
-    * runs. Returns (doc_id, source, rk).
+    * The per-source top k is the two-phase [[Ranks.topK]] (at crawl
+    * scale one domain can be half the corpus); the oracle runs the
+    * one-window form. Returns (doc_id, source, rk).
     */
-  def capBySource(docs: DataFrame, k: Int, nBuckets: Int = 16): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-    val ord: Seq[Column] = Seq(col("n_chars").desc, col("doc_id").asc)
-    val bkt = conv(substring(md5(concat(lit("cap:"),
-      col("doc_id").cast("string"))), 1, 4), 16, 10).cast("long") % nBuckets
-    docs.select(col("doc_id"), col("source"), col("n_chars"))
-      .withColumn("bkt", bkt)
-      .withColumn("prk", row_number().over(
-        w.partitionBy("source", "bkt").orderBy(ord: _*)))
-      .filter(col("prk") <= k)
-      .withColumn("rk", row_number().over(
-        w.partitionBy("source").orderBy(ord: _*)).cast("long"))
-      .filter(col("rk") <= k)
+  def capBySource(docs: DataFrame, k: Int, nBuckets: Int = 16): DataFrame =
+    Ranks.topK(docs.select(col("doc_id"), col("source"), col("n_chars")),
+      Seq("source"), Seq(col("n_chars").desc, col("doc_id").asc), k,
+      "doc_id", "cap", nBuckets, "rk")
       .select("doc_id", "source", "rk")
-  }
 
   /** Deterministic per-source rate downsampling: doc survives iff its
     * 16-bit salted content hash falls under `floor(rate·65536)` for its

@@ -115,8 +115,8 @@ object Graph {
     // in-stage (hash build over the single partition, no exchange, no
     // broadcast), collapsing the unrolled rounds to one stage. At scale
     // the guard is off and the strategy choice is the planner's, as
-    // before. docs is by contract a scan/coalesced scan — `.rdd` is lazy.
-    val tiny = docs.rdd.getNumPartitions <= 1
+    // before. docs is by contract a scan/coalesced scan.
+    val tiny = Spread.isTiny(docs, 1)
     def sh(df: DataFrame): DataFrame = if (tiny) df.hint("shuffle_hash") else df
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val e = edges.join(sh(deg), "src")
@@ -191,7 +191,7 @@ object Graph {
     // EAGER: each round's action is what truncates lineage — a lazy
     // chain here (no per-round action) grew the stage DAG 2-3 stages
     // per round, measured. Guard keeps the partitioned path at scale.
-    val small = nbrsC.rdd.getNumPartitions <= 4
+    val small = Spread.isTiny(nbrsC)
     def t(df: DataFrame): DataFrame = if (small) df.coalesce(1) else df
     val nbrs = t(nbrsC)
     var lab = t(nodes.select(col("v"), col("v").as("lab")).localCheckpoint())

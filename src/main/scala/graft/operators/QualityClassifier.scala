@@ -154,7 +154,7 @@ object QualityClassifier {
   private[graft] def trainRounds(s: DataFrame, lr: Double, iters: Int,
                                  maxFusedRows: Int = FusedMaxRows): Array[Double] = {
     val fused =
-      if (s.rdd.getNumPartitions == 1) trainRoundsFused(s, lr, iters, maxFusedRows)
+      if (Spread.isTiny(s, 1)) trainRoundsFused(s, lr, iters, maxFusedRows)
       else None
     fused.getOrElse {
       var w0 = Array.fill(5)(0.0)

@@ -30,9 +30,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * (Query.java:278).
   *
   * Word ids are sequential in word order (Vocabulary.java:90,103 — quirk
-  * Q-a), a total order; `vocabularyFrom` assigns them with per-prefix
-  * windows over the *aggregated* vocabulary, never the corpus. Only the
-  * in-plan tables carry them; the persisted index is keyed by the word.
+  * Q-a), a total order; `vocabularyFrom` assigns them with the distributed
+  * rank of `Ranks` over the *aggregated* vocabulary, never the corpus.
+  * Only the in-plan tables carry them; the persisted index is keyed by the
+  * word.
   */
 object Search {
 
@@ -69,50 +70,43 @@ object Search {
     * plans (the reference's hand-written combiner, Vocabulary.java:58-79,
     * for free).
     */
-  def vocabulary(docs: DataFrame): DataFrame = {
-    // metadata-scale path: probe the SOURCE scan (derived frames carry
-    // aggregates and must not be probed), pin + cut — see vocabularyFrom
+  def vocabulary(docs: DataFrame): DataFrame = wordIdTables(docs)._2
+
+  /** The word-id tables of a corpus: (byDocWord, vocabulary) — the
+    * (doc_id, word, tf) rows and the vocabulary with its ids, the pair
+    * postings are built from. The tiny/scale choice is made here, once,
+    * on the SOURCE scan (derived frames carry aggregates and must not be
+    * probed): a tiny scan is pinned to SinglePartition, where no exchange
+    * is left for ReuseExchange to share, so byDocWord — read by the
+    * vocabulary and by the caller's postings — is cut by a lazy
+    * localCheckpoint instead (plan construction stays job-free), and
+    * `cutVocabulary` also cuts the vocabulary, for a caller that reads it
+    * more than once.
+    */
+  def wordIdTables(docs: DataFrame,
+                   cutVocabulary: Boolean = false): (DataFrame, DataFrame) = {
     val tiny = Spread.isTiny(docs)
-    val src = if (tiny) docs.coalesce(1) else docs
-    vocabularyFrom(docWordCounts(src), tiny)
+    val bdw0 = docWordCounts(if (tiny) docs.coalesce(1) else docs)
+    val bdw = if (tiny) bdw0.localCheckpoint(false) else bdw0
+    val vocab = vocabularyFrom(bdw, tiny)
+    (bdw, if (tiny && cutVocabulary) vocab.localCheckpoint(false) else vocab)
   }
 
-  /** Id assignment is the classic distributed dense-rank: a naive
-    * `row_number().over(Window.orderBy("word"))` would funnel the whole
-    * vocabulary through ONE partition. Instead, ranks are computed in
-    * parallel per first-character group (tokens are [a-z0-9]+, so groups
-    * sort-align with the global word order), and each group's starting
-    * offset is a running-sum window over the ≤36-row prefix-count
-    * aggregate — computed IN-PLAN (no eager collect, so building a query
-    * that embeds a vocabulary rebuild triggers no Spark job before its
-    * action) and broadcast to the rank join. The single-partition window
-    * only ever sees the ≤36 aggregated prefix rows, never the vocabulary.
-    * Ids are identical to the single-partition formulation.
+  /** Ids are [[Ranks.position]] − 1 in word order, over the aggregated
+    * vocabulary: one group, and at most 36 first-character buckets,
+    * because every word matches [a-z0-9]+ (TermCountsSpec checks the
+    * token domain). Built in-plan (no eager collect, so a query that
+    * embeds a vocabulary rebuild runs no job before its action).
     */
-  def vocabularyFrom(byDocWord: DataFrame, tiny: Boolean = false): DataFrame = {
-    // `tiny` (round 19): the word-level aggregate below feeds TWO
-    // branches (prefix offsets + the rank join); at scale both can share
-    // the word aggregate's exchange (ReuseExchange), but on the
-    // SinglePartition-pinned metadata path there is no exchange to reuse
-    // — a localCheckpoint of the (vocab-bounded) aggregate cuts the shared
-    // subtree instead, so the input is still scanned exactly once.
+  private def vocabularyFrom(byDocWord: DataFrame, tiny: Boolean): DataFrame = {
+    // the word aggregate is read twice by Ranks; at scale both reads share
+    // its exchange (ReuseExchange), on the tiny path a lazy localCheckpoint
+    // of the vocabulary-sized aggregate cuts it
     val agg0 = byDocWord
       .groupBy("word").agg(count(lit(1)).as("df")) // rows are distinct (doc,word)
-      .withColumn("pfx", substring(col("word"), 1, 1))
-    val agg = if (tiny) agg0.localCheckpoint(false) else agg0 // lazy — see queryPostings
-    val offsets = agg.groupBy("pfx").agg(count(lit(1)).as("n"))
-      // unpartitioned window, bounded: it sees at most 36 rows, one per
-      // first character, because every word matches [a-z0-9]+
-      // (TermCountsSpec checks the token domain)
-      .withColumn("off", coalesce(
-        sum("n").over(Window.orderBy("pfx")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("pfx", "off")
-    agg.join(broadcast(offsets), "pfx")
-      .withColumn("word_id",
-        (col("off") + row_number().over(Window.partitionBy("pfx").orderBy("word")) - 1)
-          .cast("long"))
-      .select("word", "df", "word_id")
+    val agg = if (tiny) agg0.localCheckpoint(false) else agg0
+    Ranks.position(agg, Nil, Seq("word"), 1, "word_id")
+      .select(col("word"), col("df"), (col("word_id") - 1).as("word_id"))
   }
 
   /** P1/P2: document metadata table (ParseDocument.java collapses to a
@@ -323,15 +317,8 @@ object Search {
     * relevance label, so scoring and labeling share one aggregate.
     */
   def evalMetrics(docs: DataFrame, nQueries: Int = 20, k: Int = 10): DataFrame = {
-    // metadata-scale path (round 19): bdw feeds the vocabulary AND the
-    // postings branch, vocab is consumed three times — cut both shared
-    // subtrees when the source scan is tiny (see queryPostings)
-    val tiny = Spread.isTiny(docs)
-    val src = if (tiny) docs.coalesce(1) else docs
-    val bdw0 = docWordCounts(src)
-    val bdw = if (tiny) bdw0.localCheckpoint(false) else bdw0
-    val vocab0 = vocabularyFrom(bdw, tiny)
-    val vocab = if (tiny) vocab0.localCheckpoint(false) else vocab0
+    // vocab is read three times: cut it too on the tiny path
+    val (bdw, vocab) = wordIdTables(docs, cutVocabulary = true)
     val post = postingsFrom(bdw, vocab)
       .join(broadcast(vocab.select("word_id", "df")), "word_id")
     val qt = vocab.select((col("word_id") / 2).cast("long").as("query_id"),

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Stable
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -52,7 +52,7 @@ object SemDedup {
     // `update` removes both exchanges when the corpus side is a tiny
     // single-split scan. The PAIR join downstream keeps its own
     // partitioning (this flag never touches it).
-    val tiny = p.rdd.getNumPartitions <= 4
+    val tiny = Spread.isTiny(p)
     // k seeds: the top k by (md5(vec_id), vec_id), then those k rows
     // numbered (the Selection.selectTopK shape) — the unpartitioned
     // window sees k rows, never the corpus
@@ -318,32 +318,16 @@ object SemDedup {
     * (text_sample_hash discipline), so both engines draw the identical
     * sample.
     *
-    * Skew-safe two-phase shape (round-15; the Curation.capBySource
-    * playbook): at FIXED k a single window partitioned by cell sorts
-    * corpus/k rows per task — a straggler at 100× scale. Phase 1 ranks
-    * within (cell, hash-bucket) — k·nBuckets-way parallel regardless of
-    * cell sizes, bounded even when a degenerate clustering concentrates
-    * one cell — and keeps each bucket's top perCell, a superset of the
-    * per-cell top perCell by containment. Phase 2 ranks the
-    * ≤ perCell·nBuckets survivors per cell — aggregate-sized input.
-    * Output is identical to the one-window form (the oracle runs that),
-    * pinned by SemDedupSpec at nBuckets 1/4/16 and on an all-one-cell
-    * corpus.
+    * The per-cell pick is the two-phase [[Ranks.topK]]: at FIXED k a
+    * single window partitioned by cell sorts corpus/k rows per task, and
+    * a degenerate clustering can concentrate one cell. Output is identical
+    * to the one-window form (the oracle runs that), pinned by
+    * SemDedupSpec at nBuckets 1/4/16 and on an all-one-cell corpus.
     */
   def clusterSample(embeddings: DataFrame, perCell: Int,
-                    k: Int = 8, iters: Int = 3, nBuckets: Int = 16): DataFrame = {
-    val ord: Seq[Column] =
-      Seq(md5(col("vec_id").cast("string")), col("vec_id"))
-    val bkt = conv(substring(md5(concat(lit("cs:"),
-      col("vec_id").cast("string"))), 1, 4), 16, 10).cast("long") % nBuckets
-    cells(embeddings, k, iters)
-      .withColumn("bkt", bkt)
-      .withColumn("prk", row_number().over(
-        Window.partitionBy("cell", "bkt").orderBy(ord: _*)))
-      .filter(col("prk") <= perCell)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("cell").orderBy(ord: _*)).cast("long"))
-      .filter(col("rn") <= perCell)
+                    k: Int = 8, iters: Int = 3, nBuckets: Int = 16): DataFrame =
+    Ranks.topK(cells(embeddings, k, iters), Seq("cell"),
+      Seq(md5(col("vec_id").cast("string")), col("vec_id")), perCell,
+      "vec_id", "cs", nBuckets, "rn")
       .select(col("cell"), col("rn"), col("vec_id"))
-  }
 }

@@ -583,8 +583,8 @@ object TextAnalysis {
     * cliff flags deduped-to-death or synthetic sources. One row per
     * source: (source, n_terms, slope, intercept).
     *
-    * Rank is the classic distributed dense-rank decomposition (the
-    * vocabulary word-id trick, Search.vocabularyFrom): per-source global
+    * Rank is the bucket-offset decomposition of Ranks, written out here
+    * because its order leads with freq DESC: per-source global
     * rank by (freq DESC, word) without a source-vocabulary-sized window —
     * row_number runs per (source, freq, first-char) group and each
     * group's start offset is a running sum over the aggregated group-size
@@ -605,6 +605,9 @@ object TextAnalysis {
       .filter(TextOps.isKeptToken(col("word")))
       .groupBy("source", "word").agg(count(lit(1)).as("freq"))
       .withColumn("pfx", substring(col("word"), 1, 1))
+    // not Ranks: the order leads with freq DESC, not a string prefix, and
+    // this offsets table grows with the distinct frequencies, so it is not
+    // broadcast
     val offsets = tf.groupBy("source", "freq", "pfx").agg(count(lit(1)).as("n"))
       .withColumn("off", coalesce(
         sum("n").over(Window.partitionBy("source")

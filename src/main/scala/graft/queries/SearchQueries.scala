@@ -57,7 +57,7 @@ object SearchQueries {
 
     GraftQuery("vocab_build",
       // Search.vocabulary takes the metadata-scale path internally
-      // (round 19): SinglePartition pin + vocab-bounded aggregate cut
+      // (Search.wordIdTables): SinglePartition pin + checkpoint cuts
       (s, d) => Search.vocabulary(Tables.documents(s, d)).orderBy("word"),
       Some(
         s"""WITH $tokCte
@@ -71,16 +71,8 @@ object SearchQueries {
 
     GraftQuery("postings_tf",
       (s, d) => {
-        // metadata-scale path (round 19): bdw feeds BOTH the vocabulary
-        // and the postings branch — on the SinglePartition-pinned path
-        // the exchange ReuseExchange would have deduped is gone, so the
-        // shared subtree is cut with a guarded checkpoint instead
-        val docs0 = Tables.documents(s, d)
-        val tiny = graft.operators.Spread.isTiny(docs0)
-        val docs = if (tiny) docs0.coalesce(1) else docs0
-        val bdw0 = Search.docWordCounts(docs)
-        val bdw = if (tiny) bdw0.localCheckpoint(false) else bdw0 // lazy
-        Search.postingsFrom(bdw, Search.vocabularyFrom(bdw, tiny))
+        val (bdw, vocab) = Search.wordIdTables(Tables.documents(s, d))
+        Search.postingsFrom(bdw, vocab)
           .select("doc_id", "word_id", "tf").orderBy("doc_id", "word_id")
       },
       Some(
@@ -114,15 +106,10 @@ object SearchQueries {
     // Indexer.java:110,131-137), against the postings_tf oracle.
     GraftQuery("tsv_roundtrip_postings",
       (s, d) => {
-        // same shared-bdw cut as postings_tf
-        val docs0 = Tables.documents(s, d)
-        val tiny = graft.operators.Spread.isTiny(docs0)
-        val bdw0 = Search.docWordCounts(if (tiny) docs0.coalesce(1) else docs0)
-        val bdw = if (tiny) bdw0.localCheckpoint(false) else bdw0 // lazy
+        val (bdw, vocab) = Search.wordIdTables(Tables.documents(s, d))
         val out = s"/tmp/graft-tsvrt/${d.replaceAll("[^A-Za-z0-9.]", "_")}_postings"
         graft.sources.Tsv.writePostings(
-          Search.postingsFrom(bdw, Search.vocabularyFrom(bdw, tiny))
-            .select("doc_id", "word_id", "tf"), out)
+          Search.postingsFrom(bdw, vocab).select("doc_id", "word_id", "tf"), out)
         graft.sources.Tsv.readPostings(s, out).orderBy("doc_id", "word_id")
       },
       Some(

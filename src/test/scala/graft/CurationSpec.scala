@@ -122,6 +122,38 @@ class CurationSpec extends AnyFunSuite {
       val prefixLen = hashOrder.takeWhile(kept).length
       assert(prefixLen == kept.size) // kept == first prefixLen docs of hash order
     }
+    // the distributed rank behind it: Ranks.position / runningSum equal the
+    // plain one-window row_number / sum row for row, on 1 and 8
+    // partitions, at prefix widths 1 and 2, with one group holding 80 % of
+    // the rows, a third of the rows in one bucket ("aa…"), null values and
+    // a group whose values are all null
+    locally {
+      import graft.operators.Ranks
+      import org.apache.spark.sql.expressions.Window
+      val base = spark.range(0, 3000, 1, 1).select(col("id"),
+        when(col("id") % 10 < 8, lit("big"))
+          .otherwise(concat(lit("g"), (col("id") % 10).cast("string"))).as("g"),
+        when(col("id") % 3 === 0, concat(lit("aa"), md5(col("id").cast("string"))))
+          .otherwise(md5(col("id").cast("string"))).as("key"),
+        when(col("id") % 7 === 0 || col("id") % 10 === 9, lit(null).cast("long"))
+          .otherwise(col("id") % 13).as("v"))
+      val order = Seq("key", "id")
+      for (groups <- Seq(Seq("g"), Nil)) {
+        val one = Window.partitionBy(groups.map(col): _*).orderBy(order.map(col): _*)
+        val want = base
+          .withColumn("pos", row_number().over(one).cast("long"))
+          .withColumn("cum", sum("v").over(
+            one.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          .select("id", "pos", "cum").as[(Long, Long, Option[Long])].collect().sortBy(_._1).toSeq
+        assert(want.exists(_._3.isEmpty) == groups.nonEmpty) // the all-null group
+        for (in <- Seq(base, base.repartition(8).localCheckpoint()); width <- Seq(1, 2)) {
+          val got = Ranks.runningSum(Ranks.position(in, groups, order, width, "pos"),
+              groups, order, width, col("v"), "cum")
+            .select("id", "pos", "cum").as[(Long, Long, Option[Long])].collect().sortBy(_._1).toSeq
+          assert(got == want, s"groups $groups, width $width, ${in.rdd.getNumPartitions} partitions")
+        }
+      }
+    }
   }
 
   test("sourceOverlap: directed containment in (0,1], shared counts symmetric") {
