@@ -7,7 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Incrementally maintained search index — streaming ingest, identical
   * query answers to the batch-built index.
   *
-  * Layout: Search's index format (one derivation, `Search.withIndexOf`),
+  * Layout: Search's index format (one derivation; ingest persists it with
+  * `Search.withIndexOf`, as the batch build does),
   * one BatchCommit dir per table per ingested batch — batch-keyed and
   * idempotent, with no read-modify-write anywhere, so concurrent ingest
   * and query are safe:

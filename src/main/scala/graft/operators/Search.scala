@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, graftglue}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -21,9 +21,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * (the reference reads and tokenizes its corpus in 3 jobs); tf is counted
   * inside the document's row, so no (doc, word) pair is shuffled (the
   * reference shuffles every occurrence, with no combiner,
-  * Indexer.java:108-140). The persisted index has one word-keyed format
-  * and one query path, as the reference's Query.java has one format. The
-  * vocabulary side of every join is broadcast (the reference's
+  * Indexer.java:108-140). The index has one word-keyed format and one
+  * query path, as the reference's Query.java has one format; the in-plan
+  * searches take that path over a lazy index of the corpus (`indexOf`).
+  * The vocabulary side of every join is broadcast (the reference's
   * setup()-loaded side HashMaps, Indexer.java:42-73, done properly);
   * top-k plans as TakeOrderedAndProject (per-partition heaps +
   * driver merge) instead of the reference's single-reducer global sort
@@ -74,23 +75,30 @@ object Search {
 
   /** The word-id tables of a corpus: (byDocWord, vocabulary) — the
     * (doc_id, word, tf) rows and the vocabulary with its ids, the pair
-    * postings are built from. The tiny/scale choice is made here, once,
-    * on the SOURCE scan (derived frames carry aggregates and must not be
-    * probed): a tiny scan is pinned to SinglePartition, where no exchange
-    * is left for ReuseExchange to share, so byDocWord — read by the
-    * vocabulary and by the caller's postings — is cut by a lazy
-    * localCheckpoint instead (plan construction stays job-free), and
+    * postings are built from. byDocWord is read by the vocabulary and by
+    * the caller's postings, so on a tiny scan it is cut (`scanned`), and
     * `cutVocabulary` also cuts the vocabulary, for a caller that reads it
     * more than once.
     */
   def wordIdTables(docs: DataFrame,
                    cutVocabulary: Boolean = false): (DataFrame, DataFrame) = {
-    val tiny = Spread.isTiny(docs)
-    val bdw0 = docWordCounts(if (tiny) docs.coalesce(1) else docs)
-    val bdw = if (tiny) bdw0.localCheckpoint(false) else bdw0
+    val (bdw, tiny) = scanned(docs)(docWordCounts)
     val vocab = vocabularyFrom(bdw, tiny)
-    (bdw, if (tiny && cutVocabulary) vocab.localCheckpoint(false) else vocab)
+    (bdw, if (tiny && cutVocabulary) graftglue.cut(vocab) else vocab)
   }
+
+  /** `frame` of the source scan `docs`, and whether the scan is tiny: the
+    * one tiny/scale choice of the in-plan search tables (`wordIdTables`,
+    * `indexOf`), made on the SOURCE scan because derived frames carry
+    * aggregates and must not be probed. A tiny scan is pinned to
+    * SinglePartition, where no exchange is left for ReuseExchange to
+    * share, so the frame is cut (`graftglue.cut`, a lazy localCheckpoint
+    * that keeps its lineage): every reader shares one tokenize, and plan
+    * construction stays job-free.
+    */
+  private def scanned(docs: DataFrame)(frame: DataFrame => DataFrame): (DataFrame, Boolean) =
+    if (Spread.isTiny(docs)) (graftglue.cut(frame(docs.coalesce(1))), true)
+    else (frame(docs), false)
 
   /** Ids are [[Ranks.position]] − 1 in word order, over the aggregated
     * vocabulary: one group, and at most 36 first-character buckets,
@@ -100,11 +108,11 @@ object Search {
     */
   private def vocabularyFrom(byDocWord: DataFrame, tiny: Boolean): DataFrame = {
     // the word aggregate is read twice by Ranks; at scale both reads share
-    // its exchange (ReuseExchange), on the tiny path a lazy localCheckpoint
-    // of the vocabulary-sized aggregate cuts it
+    // its exchange (ReuseExchange), on the tiny path a cut of the
+    // vocabulary-sized aggregate does
     val agg0 = byDocWord
       .groupBy("word").agg(count(lit(1)).as("df")) // rows are distinct (doc,word)
-    val agg = if (tiny) agg0.localCheckpoint(false) else agg0
+    val agg = if (tiny) graftglue.cut(agg0) else agg0
     Ranks.position(agg, Nil, Seq("word"), 1, "word_id")
       .select(col("word"), col("df"), (col("word_id") - 1).as("word_id"))
   }
@@ -142,60 +150,6 @@ object Search {
   private def queryWords(query: String): Seq[String] =
     TextOps.tokenizeScala(TextOps.filterTextScala(query))
 
-  /** Per-query postings: (doc_id, word, tf, df) for query terms only.
-    * Scoring never needs word ids, so the token stream is filtered to the
-    * ≤|q| query words right after explode (narrow — nothing but matching
-    * occurrences ever reaches a shuffle), tf is the usual two-key count,
-    * and df is a ≤|q|-row aggregate broadcast back onto the postings.
-    * df via groupBy + broadcast join, NOT a count window partitioned by
-    * word: map-side partials mean the final aggregate for a stopword key
-    * sees one row per task, where a window would materialize every
-    * posting of "the" in a single partition — a straggler at corpus
-    * scale. Both consumers fork off the SAME (doc_id, word, tf)
-    * aggregate, and the df branch aggregates `sum(least(tf, 1))` — tf >= 1
-    * by construction, so value-equal to count(*), but written as a real
-    * function of tf because the obvious count(tf) is rewritten to
-    * count(1) (tf is non-null) and the tf column pruned, which
-    * specializes the df branch's copy of the subtree and kills exchange
-    * reuse. With tf genuinely consumed, the two exchange inputs stay
-    * canonically identical and ReuseExchange computes the tokenize +
-    * first shuffle ONCE (plan-shape-locked: one Generate explode). The full
-    * vocabulary (global ids, prefix offsets) is only materialized by
-    * queries whose OUTPUT contains ids — vocab_build, postings_tf, the
-    * persisted index.
-    */
-  def queryPostings(docs: DataFrame, query: String): DataFrame = {
-    val qwords = queryWords(query).distinct
-    // Round-19 metadata-scale path (guide §2.4): on a tiny single-split
-    // scan, pin to SinglePartition and CUT the shared (doc_id, word, tf)
-    // subtree with an eager localCheckpoint — post is query-term-filtered
-    // (≤ |q| words' occurrences aggregated per doc), so the materialized
-    // table is small by construction. Both consumers (df branch + join)
-    // then read the checkpointed partition, tokenize runs exactly once
-    // (the invariant the PlanShapeSpec lock pins), and with the
-    // shuffle_hash hint the df join plans exchange-free — ONE stage where
-    // the reuse-dependent broadcast form paid 4+ AQE stage jobs. At
-    // production split counts `tiny` is false and the plan is unchanged
-    // (ReuseExchange dedups the tokenize, df broadcasts).
-    val tiny = Spread.isTiny(docs)
-    val src = if (tiny) docs.coalesce(1) else docs
-    val post0 = tokens(src).filter(col("word").isin(qwords: _*))
-      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-    // lazy checkpoint: plan construction stays job-free (SearchSpec's
-    // zero-jobs lock); the first consumer materializes the partition and
-    // the second reads the persisted blocks
-    val post = if (tiny) post0.localCheckpoint(false) else post0
-    val df = post.groupBy("word").agg(sum(least(col("tf"), lit(1L))).as("df"))
-    if (tiny) post.join(df.hint("shuffle_hash"), "word")
-    else post.join(broadcast(df), "word")
-  }
-
-  /** Q2-Q4 core: reference scoring over the single-pass query postings. */
-  private def scoresInPlan(spark: SparkSession, docs: DataFrame,
-                           query: String): DataFrame =
-    parityScores(queryPostings(docs, query)
-      .join(broadcast(queryTerms(spark, query)), "word"))
-
   /** The reference's score (quirk Q-b) over postings joined to the query
     * terms: (doc_id, tf, qtf, df) → (doc_id, score = Σ tf·qtf/df²). */
   private def parityScores(joined: DataFrame): DataFrame =
@@ -225,8 +179,7 @@ object Search {
   }
 
   /** Per-doc lengths from docinfo's `n_tokens`. Docs with no kept token
-    * (n_tokens = 0) are excluded from the corpus statistics — matching
-    * the in-plan twin, whose dl table has no row for them. */
+    * (n_tokens = 0) are excluded from the corpus statistics. */
   private def dlFrom(lengths: DataFrame): DataFrame =
     lengths.filter(col("n_tokens") > 0)
       .select(col("doc_id"), col("n_tokens").cast("double").as("dl"))
@@ -241,22 +194,16 @@ object Search {
 
   /** Q2-Q8: score + top-k. Scoring formula is the reference's exactly
     * (quirk Q-b, Query.java:113-115): score(d) = Σ_{w∈q∩d} tf_d·tf_q/df².
-    * No log, no N/df — replicated for parity. Plans as ONE corpus
-    * tokenize + two query-term-sized shuffles + TakeOrderedAndProject;
-    * doc metadata joins the tiny top-k result via broadcast. Ties break on
-    * doc_id (quirk Q-d) and the limit is exact k (quirk Q-c's k+1
-    * off-by-one is a bug, not replicated — documented in SearchSpec).
+    * No log, no N/df — replicated for parity. The indexed query path over
+    * the corpus's lazy index (`indexOf`): one corpus tokenize, df from the
+    * query's vocabulary rows, TakeOrderedAndProject, and doc metadata
+    * broadcast onto the k rows. Ties break on doc_id (quirk Q-d) and the
+    * limit is exact k (quirk Q-c's k+1 off-by-one is a bug, not
+    * replicated — documented in SearchSpec).
     */
   def searchTopK(spark: SparkSession, dir: String,
-                 query: String = DefaultQuery, k: Int = 10): DataFrame = {
-    // Round-19 (guide §2.4 remove shuffles outright): the profile read
-    // 7 AQE stage jobs for 0.4 s of task time — scheduler latency on
-    // query-term-sized aggregates. A tiny single-split scan pinned to
-    // SinglePartition (guarded — no-op at production split counts) lets
-    // every downstream aggregate/join plan exchange-free.
-    val docs = Spread.tight(Tables.documents(spark, dir))
-    topKWithDocInfo(scoresInPlan(spark, docs, query), docInfo(docs), k)
-  }
+                 query: String = DefaultQuery, k: Int = 10): DataFrame =
+    indexedTopK(spark, indexOf(Tables.documents(spark, dir)), query, k)
 
   /** BM25 top-k — the standard probabilistic ranking beside the parity
     * (tf·qtf/df²) and log-idf variants:
@@ -264,46 +211,28 @@ object Search {
     *   score(d) = Σ_{w∈q∩d} ln((N−df+0.5)/(df+0.5)+1) · qtf ·
     *              tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))
     *
-    * (Robertson idf, k1/b the classic 1.2/0.75). Needs two corpus token
-    * passes — the query-filtered postings AND per-doc lengths (dl counts
-    * ALL kept tokens, so the isin filter can't be shared) — but dl/avgdl
-    * are pure corpus statistics a deployment precomputes once per corpus
-    * (text_token_counts is that table), so the benched form's second
-    * pass is the worst case, not the steady state. Determinism: see
-    * bm25Scores.
+    * (Robertson idf, k1/b the classic 1.2/0.75), scored by the indexed
+    * BM25 path over the corpus's lazy index: the document lengths are
+    * docinfo's `n_tokens`, from the same one tokenize as the postings.
+    * Determinism: see bm25Scores.
     */
   def searchTopKBm25(spark: SparkSession, dir: String,
                      query: String = DefaultQuery, k: Int = 10,
-                     k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // guarded SinglePartition pin — see searchTopK
-    val docs = Spread.tight(Tables.documents(spark, dir))
-    val dl = tokens(docs).groupBy("doc_id")
-      .agg(count(lit(1)).cast("double").as("dl"))
-    val scored = bm25Scores(queryPostings(docs, query)
-      .join(broadcast(queryTerms(spark, query)), "word"), dl, k1, b)
-    topKWithDocInfo(scored, docInfo(docs), k)
-  }
+                     k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    bm25TopK(spark, indexOf(Tables.documents(spark, dir)), query, k, k1, b)
 
-  /** BM25 with PRECOMPUTED length statistics — the steady-state form of
-    * the non-indexed tier. `searchTopKBm25`'s second corpus token pass
-    * only exists to derive per-doc lengths; a deployment refreshes that
-    * (doc_id, n_tokens) table once per corpus version (the index's
-    * docinfo carries it), so the benched one-shot form's two
-    * passes collapse to ONE — the query-filtered postings scan — plus a
-    * docinfo-sized read. Identical answer to `searchTopKBm25` /
-    * `searchTopKBm25Indexed` (one oracle gates all three tiers);
-    * zero-kept-token docs carry n_tokens = 0 in the stats table and are
-    * excluded from N/avgdl exactly like the in-plan twin's dl table.
+  /** `searchTopKBm25` with a PRECOMPUTED docinfo table (doc_id, source,
+    * lang, n_tokens) — a deployment refreshes it once per corpus version,
+    * and the persisted index's docinfo is one — in place of the lazy
+    * index's: lengths, N and avgdl are a docinfo-sized read. Identical
+    * answer to `searchTopKBm25` / `searchTopKBm25Indexed` (one oracle
+    * gates all three tiers).
     */
-  def searchTopKBm25Stats(spark: SparkSession, dir: String, dlStats: DataFrame,
+  def searchTopKBm25Stats(spark: SparkSession, dir: String, docinfo: DataFrame,
                           query: String = DefaultQuery, k: Int = 10,
-                          k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // guarded SinglePartition pin — see searchTopK
-    val docs = Spread.tight(Tables.documents(spark, dir))
-    val scored = bm25Scores(queryPostings(docs, query)
-      .join(broadcast(queryTerms(spark, query)), "word"), dlFrom(dlStats), k1, b)
-    topKWithDocInfo(scored, docInfo(docs), k)
-  }
+                          k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    bm25TopK(spark, indexOf(Tables.documents(spark, dir)).copy(docinfo = docinfo),
+      query, k, k1, b)
 
   /** Distributed retrieval EVALUATION — the offline quality job a search
     * pipeline runs on every index build, as ONE batch plan instead of a
@@ -391,15 +320,12 @@ object Search {
     */
   def searchCorpus(spark: SparkSession, corpusDir: String,
                    query: String = "the good person", k: Int = 10): DataFrame = {
-    val corpus = Tables.corpusJson(spark, corpusDir)
-    // guarded SinglePartition pin — see searchTopK
-    val docs = Spread.tight(corpus.select(col("id").as("doc_id"), col("text")))
-    scoresInPlan(spark, docs, query)
-      .orderBy(desc("score"), asc("doc_id")).limit(k)
-      .join(broadcast(corpus.select(col("id").as("doc_id"), col("url"), col("title"))),
-        "doc_id")
-      .orderBy(desc("score"), asc("doc_id"))
-      .select("title", "url")
+    // the corpus as documents: url → source, title → lang
+    val docs = Tables.corpusJson(spark, corpusDir).select(col("id").as("doc_id"),
+      col("url").as("source"), col("title").as("lang"),
+      length(col("text")).as("n_chars"), col("text"))
+    indexedTopK(spark, indexOf(docs), query, k)
+      .select(col("lang").as("title"), col("source").as("url"))
   }
 
   // ---- typed boundary (Dataset[T] views of the pipeline edges) ----
@@ -451,28 +377,43 @@ object Search {
     read("docinfo", StructType.fromDDL(
       "doc_id BIGINT, source STRING, lang STRING, n_chars BIGINT, n_tokens BIGINT")))
 
-  /** The index of a document set, derived from one frame
-    * `(doc_id, source, lang, n_chars, terms)` persisted while `write` runs:
-    * each document is tokenized once (TextOps.termCounts), vocabulary and
-    * postings come from the frame's explode with no (doc, word) shuffle,
-    * and docinfo is a row-local projection whose `n_tokens` = Σtf is the
-    * BM25 document length (0 for a document with no kept token, which the
-    * BM25 statistics then leave out, as the in-plan twin does).
+  /** The per-document frame both index forms derive from:
+    * `(doc_id, source, lang, n_chars, terms)`, each document tokenized once
+    * (TextOps.termCounts). n_chars is cast because some corpora store it
+    * as INT and the index's read schema says BIGINT.
     */
-  private[operators] def withIndexOf[T](docs: DataFrame)(write: Index => T): T = {
-    // MEMORY_AND_DISK: the frame holds every term array, so it must spill;
-    // n_chars is cast because some corpora store it as INT and the index's
-    // read schema says BIGINT
-    val byDoc = docs
-      .select(col("doc_id"), col("source"), col("lang"), col("n_chars").cast("long").as("n_chars"),
-        TextOps.termCounts(col("text")).as("terms"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  private def termFrame(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("source"), col("lang"), col("n_chars").cast("long").as("n_chars"),
+      TextOps.termCounts(col("text")).as("terms"))
+
+  /** The index tables of a term frame: vocabulary and postings come from
+    * its explode with no (doc, word) shuffle, and docinfo is a row-local
+    * projection whose `n_tokens` = Σtf is the BM25 document length (0 for
+    * a document with no kept token, which the BM25 statistics leave out).
+    */
+  private def indexFrom(byDoc: DataFrame): Index = {
     val byDocWord = termRows(byDoc)
-    try write(Index(
+    Index(
       byDocWord.groupBy("word").agg(count(lit(1)).as("df")), // rows are distinct (doc, word)
       byDocWord.withColumn("wb", bucket(col("word"))),
       byDoc.select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
-        aggregate(col("terms.tf"), lit(0L), _ + _).as("n_tokens"))))
+        aggregate(col("terms.tf"), lit(0L), _ + _).as("n_tokens")))
+  }
+
+  /** The lazy index of a document set: nothing is persisted, and a
+    * query over it reads only what the query needs — a `word IN (q)`
+    * filter on the vocabulary is pushed below its aggregate, so df stays
+    * query-sized. On a tiny scan the term frame is cut (`scanned`), so the
+    * vocabulary, postings and docinfo share one tokenize.
+    */
+  def indexOf(docs: DataFrame): Index = indexFrom(scanned(docs)(termFrame)._1)
+
+  /** The index of a document set, its term frame persisted while `write`
+    * runs: the build's three tables share one tokenize. */
+  private[operators] def withIndexOf[T](docs: DataFrame)(write: Index => T): T = {
+    // MEMORY_AND_DISK: the frame holds every term array, so it must spill
+    val byDoc = termFrame(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    try write(indexFrom(byDoc))
     finally byDoc.unpersist()
   }
 
@@ -509,7 +450,7 @@ object Search {
     * AQE propagates over the whole plan while sibling stages are starting,
     * so the query's job count would depend on timing.
     */
-  private def indexedPostings(spark: SparkSession, ix: Index, query: String): DataFrame = {
+  private[graft] def indexedPostings(spark: SparkSession, ix: Index, query: String): DataFrame = {
     val words = queryWords(query).distinct
     val qt = queryTerms(spark, query)
       .join(broadcast(ix.vocabulary.filter(col("word").isin(words: _*))), Seq("word"), "left")
@@ -517,7 +458,7 @@ object Search {
       .join(broadcast(qt), "word")
   }
 
-  /** Parity top-k over an opened index, batch or incremental. */
+  /** Parity top-k over an index: persisted, incremental or lazy. */
   private[operators] def indexedTopK(spark: SparkSession, ix: Index, query: String,
                                      k: Int): DataFrame =
     topKWithDocInfo(parityScores(indexedPostings(spark, ix, query)), ix.docinfo, k)
@@ -527,16 +468,18 @@ object Search {
                         query: String = DefaultQuery, k: Int = 10): DataFrame =
     indexedTopK(spark, openIndex(spark, indexDir), query, k)
 
+  /** BM25 top-k over an index: the one BM25 path of every tier. */
+  private def bm25TopK(spark: SparkSession, ix: Index, query: String, k: Int,
+                       k1: Double, b: Double): DataFrame =
+    topKWithDocInfo(bm25Scores(indexedPostings(spark, ix, query), dlFrom(ix.docinfo), k1, b),
+      ix.docinfo, k)
+
   /** `searchTopKBm25`'s answer (same oracle) with ZERO corpus scans: tf/df
     * from the pruned postings and vocabulary, document lengths from
-    * docinfo's `n_tokens`, N and avgdl a docinfo-sized aggregate — the
-    * in-plan twin's two corpus token passes become index reads.
+    * docinfo's `n_tokens`, N and avgdl a docinfo-sized aggregate.
     */
   def searchTopKBm25Indexed(spark: SparkSession, indexDir: String,
                             query: String = DefaultQuery, k: Int = 10,
-                            k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val ix = openIndex(spark, indexDir)
-    topKWithDocInfo(bm25Scores(indexedPostings(spark, ix, query), dlFrom(ix.docinfo), k1, b),
-      ix.docinfo, k)
-  }
+                            k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    bm25TopK(spark, openIndex(spark, indexDir), query, k, k1, b)
 }

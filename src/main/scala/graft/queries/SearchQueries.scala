@@ -30,17 +30,24 @@ object SearchQueries {
       |  FROM tok t JOIN vocab v USING (word)
       |  GROUP BY t.doc_id, v.word_id, v.word, v.df)""".stripMargin
 
+  /** The query terms of `Search.DefaultQuery` (the=2, fast/table/scan=1). */
+  private val qCte = "q(word, qtf) AS (VALUES ('the', 2), ('fast', 1), ('table', 1), ('scan', 1))"
+
+  /** The parity top-10 over `postings` and `q`: the scores and topk CTEs. */
+  private val parityTopKCtes: String =
+    """scores AS (
+      |  SELECT p.doc_id,
+      |         floor(sum(p.tf * q.qtf / (CAST(p.df AS DOUBLE) * p.df))*1000000000.0+0.5)/1000000000.0 AS score
+      |  FROM postings p JOIN q USING (word) GROUP BY p.doc_id),
+      |topk AS (SELECT doc_id, score FROM scores ORDER BY score DESC, doc_id LIMIT 10)""".stripMargin
+
   /** Shared by search_topk / search_topk_indexed / search_topk_incremental:
     * all three paths must produce this exact answer.
     */
   lazy val searchTopKOracle: String =
     s"""WITH $tokCte, $vocabCte, $postingsCte,
-       |q(word, qtf) AS (VALUES ('the', 2), ('fast', 1), ('table', 1), ('scan', 1)),
-       |scores AS (
-       |  SELECT p.doc_id,
-       |         floor(sum(p.tf * q.qtf / (CAST(p.df AS DOUBLE) * p.df))*1000000000.0+0.5)/1000000000.0 AS score
-       |  FROM postings p JOIN q USING (word) GROUP BY p.doc_id),
-       |topk AS (SELECT doc_id, score FROM scores ORDER BY score DESC, doc_id LIMIT 10)
+       |$qCte,
+       |$parityTopKCtes
        |SELECT t.doc_id, t.score, d.source, d.lang
        |FROM topk t JOIN documents d USING (doc_id)
        |ORDER BY t.score DESC, t.doc_id""".stripMargin
@@ -52,6 +59,12 @@ object SearchQueries {
   private def searchIndex(s: SparkSession, d: String): String =
     Persisted.indexDir(s, d, "index-b3", "documents.parquet", "postings")(
       Search.buildIndex(s, d, _))
+
+  /** `/tmp/graft-<kind>/<name>`, the name derived from the data dir `d`.
+    * It never starts with `_` or `.`: Spark treats such a path as hidden
+    * and warns that it ignored it. */
+  private def cacheDir(kind: String, d: String): String =
+    s"/tmp/graft-$kind/${d.replaceAll("[^A-Za-z0-9.]", "_").replaceAll("^[_.]+", "")}"
 
   def all: Seq[GraftQuery] = Seq(
 
@@ -91,7 +104,7 @@ object SearchQueries {
     // ledger instead of only the TsvSpec byte goldens.
     GraftQuery("tsv_roundtrip",
       (s, d) => {
-        val out = s"/tmp/graft-tsvrt/${d.replaceAll("[^A-Za-z0-9.]", "_")}_vocab"
+        val out = s"${cacheDir("tsvrt", d)}_vocab"
         graft.sources.Tsv.writeVocabulary(
           Search.vocabulary(Tables.documents(s, d)), out, sorted = true)
         graft.sources.Tsv.readVocabulary(s, out).orderBy("word")
@@ -107,7 +120,7 @@ object SearchQueries {
     GraftQuery("tsv_roundtrip_postings",
       (s, d) => {
         val (bdw, vocab) = Search.wordIdTables(Tables.documents(s, d))
-        val out = s"/tmp/graft-tsvrt/${d.replaceAll("[^A-Za-z0-9.]", "_")}_postings"
+        val out = s"${cacheDir("tsvrt", d)}_postings"
         graft.sources.Tsv.writePostings(
           Search.postingsFrom(bdw, vocab).select("doc_id", "word_id", "tf"), out)
         graft.sources.Tsv.readPostings(s, out).orderBy("doc_id", "word_id")
@@ -158,11 +171,12 @@ object SearchQueries {
     // query over a WikiExtractor JSON-lines corpus dir → (title, url).
     // The corpus is staged once from `documents` (id=doc_id, url=source,
     // title=lang) as an AA* JSON-lines file, then Search.searchCorpus runs
-    // the whole 5-job pipeline as one plan. Oracle = search_topk's scoring
+    // the reference's 5-job pipeline as one plan, search_topk's indexed
+    // path over the corpus's lazy index. Oracle = search_topk's scoring
     // projected to the reference's output columns.
     GraftQuery("search_topk_corpus",
       (s, d) => {
-        val dir = s"/tmp/graft-corpus/${d.replaceAll("[^A-Za-z0-9.]", "_")}"
+        val dir = cacheDir("corpus", d)
         if (!new java.io.File(s"$dir/_DONE").exists()) {
           org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
           new java.io.File(dir).mkdirs()
@@ -183,12 +197,8 @@ object SearchQueries {
       },
       Some(
         s"""WITH $tokCte, $vocabCte, $postingsCte,
-           |q(word, qtf) AS (VALUES ('the', 2), ('fast', 1), ('table', 1), ('scan', 1)),
-           |scores AS (
-           |  SELECT p.doc_id,
-           |         floor(sum(p.tf * q.qtf / (CAST(p.df AS DOUBLE) * p.df))*1000000000.0+0.5)/1000000000.0 AS score
-           |  FROM postings p JOIN q USING (word) GROUP BY p.doc_id),
-           |topk AS (SELECT doc_id, score FROM scores ORDER BY score DESC, doc_id LIMIT 10)
+           |$qCte,
+           |$parityTopKCtes
            |SELECT d.lang AS title, d.source AS url
            |FROM topk t JOIN documents d USING (doc_id)
            |ORDER BY t.score DESC, t.doc_id""".stripMargin)),
@@ -197,13 +207,11 @@ object SearchQueries {
     // score = Σ tf_d · tf_q · ln(N/df). Kept alongside the parity formula.
     GraftQuery("search_topk_logidf",
       (s, d) => {
-        val docs = graft.operators.Spread.tight(Tables.documents(s, d))
-        // Corpus size N stays IN the plan (single-row broadcast joined to
-        // every posting) — an eager docs.count() here would run a separate
-        // full-scan job per invocation, doubling corpus reads at scale.
-        val nDf = docs.agg(count(lit(1)).cast("double").as("n_docs"))
-        Search.queryPostings(docs, Search.DefaultQuery)
-          .join(broadcast(Search.queryTerms(s, Search.DefaultQuery)), "word")
+        // N = docinfo rows, in the plan (a single-row broadcast joined to
+        // every posting): an eager count would run a job per invocation
+        val ix = Search.indexOf(Tables.documents(s, d))
+        val nDf = ix.docinfo.agg(count(lit(1)).cast("double").as("n_docs"))
+        Search.indexedPostings(s, ix, Search.DefaultQuery)
           .crossJoin(broadcast(nDf))
           .select(col("doc_id"),
             (col("tf") * col("qtf") * log(col("n_docs") / col("df"))).as("part"))
@@ -214,7 +222,7 @@ object SearchQueries {
       },
       Some(
         s"""WITH $tokCte, $vocabCte, $postingsCte,
-           |q(word, qtf) AS (VALUES ('the', 2), ('fast', 1), ('table', 1), ('scan', 1)),
+           |$qCte,
            |n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
            |scores AS (
            |  SELECT p.doc_id,
@@ -222,7 +230,6 @@ object SearchQueries {
            |  FROM postings p JOIN q USING (word) GROUP BY p.doc_id)
            |SELECT doc_id, score FROM scores ORDER BY score DESC, doc_id LIMIT 10""".stripMargin)),
 
-    // BM25 (k1=1.2, b=0.75, Robertson idf) — the standard probabilistic
     // Exact-phrase top-k: row-local bigram-array filter (no explode, no
     // pre-top-k shuffle), integer counts — hash-gated with no stabilizer.
     GraftQuery("search_phrase",
@@ -239,28 +246,26 @@ object SearchQueries {
           |FROM topk t JOIN documents d2 ON d2.doc_id = t.doc_id
           |ORDER BY phrase_tf DESC, t.doc_id""".stripMargin)),
 
+    // BM25 (k1=1.2, b=0.75, Robertson idf) — the standard probabilistic
     // ranking beside the parity and log-idf formulas, fully hash-gated:
     // doc lengths are exact integer-valued sums (bit-stable avgdl, no
     // stabilizer), the per-term ln is stab(6)-collapsed like log-idf.
+    // Three tiers share the oracle and the one indexed BM25 path; they
+    // differ only in the index they score.
     GraftQuery("search_topk_bm25",
       (s, d) => Search.searchTopKBm25(s, d),
       Some(bm25Oracle)),
 
-    // The same BM25 answer served from the persisted index with ZERO
-    // corpus scans: tf/df from the bucket-pruned postings + vocabulary,
-    // document lengths from docinfo's n_tokens — the deployment shape
-    // the in-plan twin's two token passes collapse into. Shared oracle:
-    // both paths must produce the identical ranking.
+    // The persisted index, with ZERO corpus scans: tf/df from the
+    // bucket-pruned postings + vocabulary, document lengths from docinfo's
+    // n_tokens.
     GraftQuery("search_topk_bm25_indexed",
       (s, d) => Search.searchTopKBm25Indexed(s, searchIndex(s, d)),
       Some(bm25Oracle)),
 
-    // The non-indexed BM25 tier's PRODUCTION form: document lengths come
-    // from the persisted docinfo stats table (refreshed once per corpus
-    // version) instead of a second corpus token pass, so scoring pays one
-    // pass — the query-filtered postings — plus a docinfo-sized read.
-    // Third tier on the shared oracle: in-plan, stats-fed, and fully
-    // indexed must all produce the identical ranking.
+    // The corpus's lazy index with the persisted docinfo (refreshed once
+    // per corpus version) swapped in: document lengths, N and avgdl are a
+    // docinfo-sized read.
     GraftQuery("search_topk_bm25_stats",
       (s, d) => Search.searchTopKBm25Stats(s, d, Search.openIndex(s, searchIndex(s, d)).docinfo),
       Some(bm25Oracle)),
@@ -307,7 +312,7 @@ object SearchQueries {
 
   lazy val bm25Oracle: String =
         s"""WITH $tokCte,
-           |q(word, qtf) AS (VALUES ('the', 2), ('fast', 1), ('table', 1), ('scan', 1)),
+           |$qCte,
            |dl AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS dl FROM tok GROUP BY doc_id),
            |st AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, sum(dl)/count(*) AS avgdl FROM dl),
            |post AS (

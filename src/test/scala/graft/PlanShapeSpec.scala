@@ -96,33 +96,50 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("search_topk runtime plan: corpus tokenized ONCE (shared post subtree cut)") {
-    // Round-19 shape: on the metadata-scale path queryPostings pins the
-    // scan to SinglePartition and CUTS the shared (doc_id, word, tf)
-    // aggregate with an eager localCheckpoint — the tokenize runs exactly
-    // once, in the checkpoint's own job, and the runtime plan reads the
-    // materialized partition (Scan ExistingRDD) on both branches with
-    // ZERO tokenize explodes of its own. (The pre-r19 form relied on AQE
-    // exchange reuse for the same once-only invariant; SinglePartition
-    // removed the exchange, so the reuse lock moved here.) The corpus
-    // parquet may appear at most once more — the doc-info broadcast.
-    val df = SparkEntry.queries("search_topk")(spark, d)
-    df.collect()
-    val whole = df.queryExecution.executedPlan.toString
-    assert(whole.contains("isFinalPlan=true"))
-    val fin = whole.indexOf("== Initial Plan ==") match {
-      case -1 => whole
-      case i => whole.substring(0, i)
+    // On the metadata-scale path Search.indexOf pins the scan to
+    // SinglePartition and CUTS the term frame (graftglue.cut, lazy):
+    // plan construction cuts exactly one frame, holding the one tokenize
+    // (term_counts), and the runtime plan reads the materialized partition
+    // (Scan ExistingRDD) with no tokenize of its own — BM25's document
+    // lengths included. The corpus parquet may appear at most once more.
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        events.add(f -> qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    assert("Generate explode".r.findAllIn(fin).size == 0,
-      "runtime plan re-tokenizes — the shared post checkpoint was lost")
-    assert(fin.contains("Scan ExistingRDD"), "post must read the checkpointed partition")
-    assert("FileScan parquet".r.findAllIn(fin).size <= 1, "extra corpus scans")
-    // and the checkpointed post itself was built from ONE tokenize
-    val post = graft.operators.Search.queryPostings(
-      graft.sources.Tables.documents(spark, d), graft.operators.Search.DefaultQuery)
-    val pp = post.queryExecution.executedPlan.toString
-    assert("Generate explode".r.findAllIn(pp).size == 0,
-      "post join should read the checkpoint, not re-derive the token stream")
+    def count(re: String, s: String) = re.r.findAllIn(s).size
+    for (name <- Seq("search_topk", "search_topk_bm25")) {
+      events.clear()
+      spark.listenerManager.register(listener)
+      val df = try {
+        val df = SparkEntry.queries(name)(spark, d)
+        // events arrive in order: once this marker's arrives, the cuts' have
+        spark.range(1).collect()
+        val deadline = System.nanoTime() + 30000000000L
+        while (!events.asScala.exists(_._1 == "collect") && System.nanoTime() < deadline)
+          Thread.sleep(50)
+        df
+      } finally spark.listenerManager.unregister(listener)
+      val cuts = events.asScala.collect { case ("cut", p) => p }.toSeq
+      assert(cuts.length == 1, s"$name: ${cuts.length} frames cut, expected the one term frame")
+      assert(count("term_counts", cuts.head) == 1, s"$name: the cut frame must hold ONE tokenize")
+      assert(count("Generate explode", cuts.head) == 0, s"$name: the cut frame re-tokenizes")
+      df.collect()
+      val whole = df.queryExecution.executedPlan.toString
+      assert(whole.contains("isFinalPlan=true"))
+      val fin = whole.indexOf("== Initial Plan ==") match {
+        case -1 => whole
+        case i => whole.substring(0, i)
+      }
+      assert(count("Generate explode", fin) == 0 && count("term_counts", fin) == 0,
+        s"$name: runtime plan re-tokenizes — the term frame cut was lost")
+      assert(fin.contains("Scan ExistingRDD"), s"$name: must read the cut term frame")
+      assert(count("FileScan parquet", fin) <= 1, s"$name: extra corpus scans")
+    }
   }
 
   test("dedup_minhash_lsh: all aggregates are hash aggregates") {

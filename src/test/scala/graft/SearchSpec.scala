@@ -120,12 +120,31 @@ class SearchSpec extends AnyFunSuite {
   }
 
   test("out-of-vocabulary query returns empty, both paths") {
-    assert(Search.searchTopK(spark, TestSpark.sf0001, "zzzqx nonexistent 42", 5)
-      .count() == 0)
     val idx = java.nio.file.Files.createTempDirectory("edgeidx").toString
     Search.buildIndex(spark, TestSpark.sf0001, idx)
-    assert(Search.searchTopKIndexed(spark, idx, "zzzqx nonexistent 42", 5)
-      .count() == 0)
+    val inc = incrementalIndex()
+    val docinfo = spark.read.parquet(s"$idx/docinfo")
+    val tracker = spark.sparkContext.statusTracker
+    // no vocabulary word; no kept token at all (empty, digits and punctuation)
+    for (q <- Seq("zzzqx nonexistent 42", "", "42 !!")) {
+      val tiers = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "searchTopK" -> (() => Search.searchTopK(spark, TestSpark.sf0001, q, 5)),
+        "searchTopKBm25" -> (() => Search.searchTopKBm25(spark, TestSpark.sf0001, q, 5)),
+        "searchTopKBm25Stats" ->
+          (() => Search.searchTopKBm25Stats(spark, TestSpark.sf0001, docinfo, q, 5)),
+        "searchTopKIndexed" -> (() => Search.searchTopKIndexed(spark, idx, q, 5)),
+        "searchTopKBm25Indexed" -> (() => Search.searchTopKBm25Indexed(spark, idx, q, 5)),
+        "IncrementalIndex.searchTopK" -> (() => IncrementalIndex.searchTopK(spark, inc, q, 5)))
+      for ((what, plan) <- tiers) {
+        plan().queryExecution.analyzed // absorbs one-time source setup
+        val before = tracker.getJobIdsForGroup(null).length
+        val df = plan()
+        df.queryExecution.analyzed
+        val after = tracker.getJobIdsForGroup(null).length
+        assert(after == before, s"$what '$q': plan build ran ${after - before} eager job(s)")
+        assert(df.count() == 0, s"$what '$q'")
+      }
+    }
   }
 
   /** An incremental index of sf0.001, ingested as two batches (doc_id % 2). */
@@ -142,6 +161,12 @@ class SearchSpec extends AnyFunSuite {
     val inc = incrementalIndex()
     val docinfo = spark.read.parquet(s"$idx/docinfo")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    // the in-plan tiers once more on an 8-file copy, which takes their
+    // scale branch (no SinglePartition pin, no cut)
+    val dir8 = java.nio.file.Files.createTempDirectory("tier8").toString
+    Tables.documents(spark, TestSpark.sf0001).repartition(8)
+      .write.parquet(s"$dir8/documents.parquet")
+    assert(!graft.operators.Spread.isTiny(Tables.documents(spark, dir8)))
     val queries = Seq(Search.DefaultQuery, // default, repeated term
       "the a of the and to is in the table", // stopword-heavy
       "fast zzzqx scan") // one term missing from the vocabulary
@@ -154,6 +179,9 @@ class SearchSpec extends AnyFunSuite {
       assert(parity.nonEmpty, q)
       assert(rows(Search.searchTopKIndexed(spark, idx, q)) == parity, q)
       assert(rows(IncrementalIndex.searchTopK(spark, inc, q)) == parity, q)
+      assert(rows(Search.searchTopKBm25(spark, dir8, q)) == bm25, s"$q x8")
+      assert(rows(Search.searchTopKBm25Stats(spark, dir8, docinfo, q)) == bm25, s"$q x8")
+      assert(rows(Search.searchTopK(spark, dir8, q)) == parity, s"$q x8")
     }
   }
 
