@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.functions.Stable
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftglue
 
@@ -93,21 +92,14 @@ object Quantize {
   }
 
   /** Brute top-k cosine over DEQUANTIZED vectors (the SQ8 serving tier —
-    * bruteForceTopK's shape, 4× less resident memory). Broadcast query
-    * side, corpus side row-local dequant, TakeOrdered per query.
+    * bruteForceTopK's plan, 4× less resident memory): broadcast query
+    * side, corpus side row-local dequant, one per-query top-k.
     */
   def knnSq8(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
     val p = Similarity.prepared(embeddings)
     val (lo, hi) = bounds(p)
-    val dq = p.select(col("vec_id"), dequantArray(col("e"), lo, hi).as("e"))
-      .withColumn("nrm", sqrt(dot(col("e"), col("e"))))
-    val q = dq.filter(col("vec_id") < nQueries)
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    broadcast(q).as("a")
-      .join(dq.as("b"), col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("neighbor_id"),
-        Stable.stab(dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm")), 6).as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Similarity.bruteForcePrepared(
+      p.select(col("vec_id"), dequantArray(col("e"), lo, hi).as("e"))
+        .withColumn("nrm", Similarity.norm(col("e"))), nQueries, k)
   }
 }

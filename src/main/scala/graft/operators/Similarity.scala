@@ -7,13 +7,17 @@ import org.apache.spark.sql.{graftglue, Column, DataFrame}
 
 /** Similarity search over an embedding column (ARRAY<FLOAT>).
   *
-  * Baseline: brute-force cosine top-k — embarrassingly parallel (broadcast
-  * the query set, scan the corpus once, per-partition heaps via
-  * TakeOrderedAndProject / window rank). The scale path is IVF: partition
-  * vectors into coarse cells, route each query to its nearest centroid(s),
-  * and brute-force only inside probed cells — at 100 TB this turns a full
-  * scan per query into a 1/K-th scan, and cells can be written as parquet
-  * partitions so probing becomes partition pruning.
+  * Every kNN tier is one composition of four shared steps: route (the
+  * label or k-means router, `Cells.route`, both returning (query_id,
+  * cell)), candidates (all vectors, the probed cells' members, or LSH
+  * bucket collisions), score (exact cosine, or a PQ ADC shortlist then an
+  * exact rerank) and one per-query top-k (`perQueryTopK`). Brute force is
+  * the baseline: broadcast the query set, scan the corpus once. The scale
+  * path is IVF: vectors partitioned into coarse cells, each query scored
+  * only inside its probed cells — at 100 TB a 1/K-th scan instead of a
+  * full one. Persisted, the IVF layout (`cells` partitioned by cell, plus
+  * `centroids`) turns probing into partition pruning; the PQ layout
+  * (`codes`, `codebooks`) stores codes instead of vectors.
   *
   * All arithmetic is promoted FLOAT→DOUBLE before accumulation, folded
   * left-to-right by `aggregate` (deterministic), and cosine values are
@@ -192,18 +196,53 @@ object Similarity {
       .filter(col("cos") >= threshold)
   }
 
+  // ---------------------------------------------------------------------
+  // kNN: every tier is route → candidates → score → one per-query top-k.
+  // The routers (label, k-means) return (query_id, cell); candidates are
+  // all vectors, the probed cells' members, or LSH bucket collisions; the
+  // score is exact stab(6) cosine, or an ADC shortlist then an exact
+  // rerank; and `perQueryTopK` is the one top-k under all of them.
+  // ---------------------------------------------------------------------
+
+  /** The per-query top-k of every kNN tier, router and ADC shortlist: rank
+    * each query_id's rows by `score` descending, ties to the lower `id`,
+    * and keep ranks 1..k (`rank` BIGINT). The filter sits right over the
+    * row_number, which lets Spark prune per partition with a
+    * WindowGroupLimit before the window's exchange.
+    */
+  def perQueryTopK(rows: DataFrame, k: Int, score: String = "cos",
+                   id: String = "neighbor_id"): DataFrame =
+    rows.withColumn("rank", row_number().over(
+        Window.partitionBy("query_id").orderBy(desc(score), asc(id))).cast("long"))
+      .filter(col("rank") <= k)
+
+  /** Prepared rows as a query side: vec_id renamed query_id. */
+  private def asQueries(p: DataFrame): DataFrame = p.withColumnRenamed("vec_id", "query_id")
+
+  /** The exact stage: join the query side `a` (query_id, e, nrm, …) to the
+    * candidate vectors `b` (vec_id, e, nrm) on `on`, score each pair by
+    * stab(6) cosine and keep each query's top k. `keep` adds `a`-side
+    * columns (the probed cell) to the (query_id, neighbor_id, cos, rank)
+    * output.
+    */
+  private def exactTopK(qside: DataFrame, corpus: DataFrame, on: Column, k: Int,
+                        keep: Column*): DataFrame =
+    perQueryTopK(qside.as("a").join(corpus.as("b"), on)
+      .select((col("a.query_id") +: keep) ++
+        Seq(col("b.vec_id").as("neighbor_id"), cosine().as("cos")): _*), k)
+
   /** LSH-bucketed ANN top-k — the sign-bit scale path beside IVF: a corpus
     * vector is a candidate iff it shares at least one (band, bh) sign-bucket
-    * with the query in the pre-built sketch `br`; exact cosine then ranks
-    * candidates and row_number keeps k. The query-side band rows (nQueries ×
-    * bands — metadata-scale) broadcast into an equi-join against the corpus
+    * with the query in the pre-built sketch `br`; the exact stage then ranks
+    * candidates. The query-side band rows (nQueries × bands —
+    * metadata-scale) broadcast into an equi-join against the corpus
     * sketch, so the plan is broadcast-join + distinct + two vec_id
     * equi-joins: linear in the corpus at any size, no nested loop anywhere,
     * and only candidate vectors ever reach the ArrayDot cosine. Unlike IVF
     * there is no routing step to keep consistent with the layout — the
     * sketch is a pure corpus function, so streamed appends need no
     * centroid-generation discipline. Deterministic end-to-end (md5-parity
-    * planes), hence SQL-oracle-able, unlike the kmeans tier.
+    * planes), hence SQL-oracle-able.
     */
   def knnLshFrom(embeddings: DataFrame, br: DataFrame, nQueries: Int,
                  k: Int): DataFrame = {
@@ -214,31 +253,23 @@ object Similarity {
           col("x.vec_id") =!= col("y.vec_id"))
       .select(col("x.vec_id").as("query_id"), col("y.vec_id").as("neighbor_id"))
       .distinct()
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    cand
-      .join(broadcast(p.filter(col("vec_id") < nQueries)).as("a"),
-        col("query_id") === col("a.vec_id"))
-      .join(p.as("b"), col("neighbor_id") === col("b.vec_id"))
-      .select(col("query_id"), col("neighbor_id"), cosine().as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    exactTopK(cand.join(broadcast(asQueries(p.filter(col("vec_id") < nQueries))), "query_id"),
+      p, col("a.neighbor_id") === col("b.vec_id"), k)
   }
 
   /** Brute-force top-k: for each query vector (vec_id < nQueries), the k
     * nearest other vectors by cosine. The tiny query side is broadcast; the
     * corpus side streams.
     */
-  def bruteForceTopK(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val p = prepared(embeddings)
-    val q = p.filter(col("vec_id") < nQueries)
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    broadcast(q).as("a")
-      .join(p.as("b"), col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("neighbor_id"),
-        cosine().as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
+  def bruteForceTopK(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame =
+    bruteForcePrepared(prepared(embeddings), nQueries, k)
+
+  /** Brute force over already-prepared vectors (vec_id, e, nrm) — also the
+    * SQ8 tier's, over dequantized vectors.
+    */
+  def bruteForcePrepared(p: DataFrame, nQueries: Int, k: Int): DataFrame =
+    exactTopK(broadcast(asQueries(p.filter(col("vec_id") < nQueries))), p,
+      col("a.query_id") =!= col("b.vec_id"), k)
 
   /** Offline ANN quality evaluation — recall of an approximate tier
     * against the exact ground truth, per query: |approx ∩ exact| / |exact|
@@ -258,115 +289,32 @@ object Similarity {
       .select(col("query_id"), col("n_hit"), col("k_eval"),
         (col("n_hit").cast("double") / col("k_eval")).as("recall"))
 
-  /** IVF centroids: per-label mean vector, element-stabilized. Uses the
-    * `label` column as the coarse partitioner (stand-in for k-means cells —
-    * the routing/probing mechanics are identical).
-    * Returns (label, i (1-based), c).
-    */
-  def ivfCentroids(embeddings: DataFrame): DataFrame =
-    embeddings.select(col("label"), posexplode(toDouble(col("embedding"))))
-      .groupBy(col("label"), (col("pos") + 1).as("i"))
-      .agg(Stable.stab(avg("col"), 6).as("c"))
-
   /** Embedding-quality QA: each vector's cosine to its own label's
     * centroid, bottom-k per label — the mislabeled/outlier candidates a
     * pipeline reviews before training on the labels. Centroids are the
-    * same stab(6)-collapsed per-dim averages the IVF tiers pin
-    * cross-engine ([[ivfCentroids]]), reassembled into per-label arrays
-    * (labels-count rows, broadcast), so the affinity pass is one
-    * ROW-LOCAL ArrayDot over the corpus — one explode aggregate + one
-    * broadcast join, nothing quadratic, and WindowGroupLimit prunes the
-    * per-label bottom-k. cos(v, mean) needs no count: the centroid IS
-    * the mean, joined whole.
+    * per-label stab(6) means the label-cell IVF tiers route by
+    * ([[LabelCells]]), one array per label (labels-count rows, broadcast),
+    * so the affinity pass is one ROW-LOCAL ArrayDot over the corpus — one
+    * aggregate + one broadcast join, nothing quadratic, and
+    * WindowGroupLimit prunes the per-label bottom-k. cos(v, mean) needs no
+    * count: the centroid IS the mean, joined whole.
     */
   def labelOutliers(embeddings: DataFrame, k: Int): DataFrame = {
-    val cent = ivfCentroids(embeddings)
-      .groupBy("label")
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("c")))),
-        s => s.getField("c")).as("cv"))
-    val p = prepared(embeddings)
+    val cent = LabelCells.centroids(embeddings)
+      .select(col("cell").as("label"), col("c").as("cv"))
     val w = Window.partitionBy("label").orderBy(asc("cos"), asc("vec_id"))
-    embeddings.select(col("vec_id"), col("label")).join(p, "vec_id")
+    embeddings.select(col("vec_id"), col("label"), toDouble(col("embedding")).as("e"))
       .join(broadcast(cent), "label")
       .select(col("label"), col("vec_id"),
         Stable.stab(dot(col("e"), col("cv")) /
-          (col("nrm") * norm(col("cv"))), 6).as("cos"))
+          (norm(col("e")) * norm(col("cv"))), 6).as("cos"))
       .withColumn("rn", row_number().over(w).cast("long"))
       .filter(col("rn") <= k)
       .select("label", "rn", "vec_id", "cos")
   }
 
-  /** Persist the IVF layout: embeddings written as parquet partitioned by
-    * cell label, centroids alongside. At scale, probing a cell is then
-    * partition pruning at file-listing time — the ANN twin of
-    * Search.buildIndex. Both tables materialize under one DirSwap marker
-    * scope, so a crashed (re)build can never leave a mixed or partial
-    * generation (same discipline as VectorStreams.retrainIndex).
-    */
-  def buildIvfIndex(embeddings: DataFrame, indexDir: String): Unit =
-    DirSwap.swap(indexDir, Seq(
-      "cells" -> { out =>
-        // batch=base: the cells table is batch-keyed (BatchCommit) so the
-        // streaming ingest's writes are replay-idempotent; the build is the
-        // base generation (named, so no stream's numeric id collides)
-        embeddings.write.partitionBy("label").parquet(s"$out/batch=base")
-        DirSwap.markComplete(out)
-      },
-      "centroids" -> { out => ivfCentroids(embeddings).write.parquet(out) }))
-
-  /** Committed-batches view of a batch-keyed cells table (build writes
-    * batch=base, each streaming micro-batch its own numeric id — see
-    * VectorStreams.vectorIngest). Partition pruning on the cell/label
-    * column still applies per batch dir.
-    */
-  def cellsTable(spark: org.apache.spark.sql.SparkSession, indexDir: String): DataFrame =
-    BatchCommit.readCommitted(spark, s"$indexDir/cells").getOrElse(
-      throw new IllegalStateException(s"$indexDir/cells has no committed batches"))
-
-  /** Query the persisted IVF index: route each query vector to its
-    * `nprobe` nearest centroids (tiny centroid table, driver-side per
-    * query), then scan ONLY the probed cell partitions — `label IN (...)`
-    * prunes every other cell's files. Same cosine/top-k semantics as
-    * ivfTopK at nprobe=1; larger nprobe trades a proportionally larger
-    * pruned scan for recall near cell boundaries (cells partition the
-    * corpus, so each neighbor is still scored at most once — its label
-    * matches at most one of a query's probe rows, no dedup needed).
-    */
-  def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                     queries: DataFrame, k: Int, nprobe: Int = 1): DataFrame = {
-    val cent = spark.read.parquet(s"$indexDir/centroids")
-    val q = prepared(queries)
-    val qd = broadcast(q)
-      .select(col("vec_id").as("query_id"), posexplode(col("e")).as(Seq("pos", "qe")))
-      .join(broadcast(cent), (col("pos") + 1) === col("i"))
-      .groupBy("query_id", "label")
-      .agg(Stable.stab(sum(col("qe") * col("c")), 6).as("qdot"))
-    val probes = qd.withColumn("rn",
-        row_number().over(Window.partitionBy("query_id").orderBy(desc("qdot"), asc("label"))))
-      .filter(col("rn") <= nprobe).select("query_id", "label")
-    val probed = probes.select("label").distinct()
-      .collect().map(_.getInt(0)).toSeq // ≤ |queries|×nprobe cells — metadata-scale
-    // carry `label` through preparation instead of joining back a second
-    // (unpruned!) cells scan to recover it — one pruned scan, no join
-    val cells = cellsTable(spark, indexDir)
-      .filter(col("label").isin(probed: _*))
-      .select(col("vec_id"), toDouble(col("embedding")).as("e"), col("label"))
-      .withColumn("nrm", norm(col("e")))
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    broadcast(q.join(probes.withColumnRenamed("label", "probe_label"),
-        col("vec_id") === col("query_id"))).as("a")
-      .join(cells.as("b"),
-        col("b.label") === col("probe_label") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("query_id"), col("probe_label"), col("b.vec_id").as("neighbor_id"),
-        cosine().as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
-
   // ---------------------------------------------------------------------
-  // Learned IVF cells: Lloyd k-means as DataFrame ops (replaces the
-  // `label` column stand-in — real coarse quantization, same routing and
-  // pruning mechanics).
+  // Learned IVF cells: Lloyd k-means as DataFrame ops.
   // ---------------------------------------------------------------------
 
   /** Row-local argmin over the k centroids, inlined as literal-array
@@ -396,16 +344,16 @@ object Similarity {
         lit(cell).as("cell"))
     }: _*))
 
-  /** Assign each vector in `p` (vec_id, e) to its nearest centroid in
-    * `cent` (cell, c) by squared euclidean distance. The centroid table
-    * is k rows — collected here (metadata-bounded, the same k×dim the
-    * trainer itself collects every round) and inlined, so the assignment
-    * plan is one narrow projection with zero joins and zero shuffles.
+  /** Append to `p` (vec_id, e, …) the `cell` of each vector's nearest
+    * centroid in `cent` (cell, c) by squared euclidean distance. The
+    * centroid table is k rows — collected here (metadata-bounded, the same
+    * k×dim the trainer itself collects every round) and inlined, so the
+    * assignment is one narrow projection with zero joins and zero shuffles.
     */
   def kmeansAssign(p: DataFrame, cent: DataFrame): DataFrame = {
     val cs = cent.select("cell", "c").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
-    p.select(col("vec_id"), argminCell(col("e"), cs).getField("cell").as("cell"))
+    p.withColumn("cell", argminCell(col("e"), cs).getField("cell"))
   }
 
   /** Lloyd k-means over the embedding column: k deterministic md5-sampled
@@ -482,83 +430,145 @@ object Similarity {
     cent.toDF("cell", "c")
   }
 
-  /** Route queries (query_id, e) to their `nprobe` nearest k-means cells.
-    * The routing distance is stab(6)-collapsed like the assignment's, so
-    * the probe set is oracle-re-derivable (ties to the lower cell id).
+  // ---------------------------------------------------------------------
+  // IVF: one layout, one builder, one in-plan tier and one indexed reader;
+  // what differs between the label and k-means cells is a `Cells` value.
+  // ---------------------------------------------------------------------
+
+  /** An IVF coarse quantizer: the centroid table (cell INT, c ARRAY<DOUBLE>)
+    * it derives from a corpus, the cell of every corpus vector, and the
+    * router that sends each query (query_id, e) to its `nprobe` best cells
+    * as (query_id, cell) — ties to the lower cell id, so every probe set
+    * is oracle-re-derivable.
     */
-  private def kmeansProbes(q: DataFrame, cent: DataFrame, nprobe: Int): DataFrame = {
-    val scored = q.crossJoin(broadcast(cent))
-      .select(col("query_id"), col("cell"),
-        Stable.stab(dot(col("c"), col("c")) - lit(2.0) * dot(col("e"), col("c")), 6).as("d"))
-    scored.withColumn("rn", row_number().over(
-        Window.partitionBy("query_id").orderBy(asc("d"), asc("cell"))))
-      .filter(col("rn") <= nprobe).select("query_id", "cell")
+  sealed trait Cells {
+    /** Output name of the probed-cell column. */
+    def probe: String
+    def centroids(embeddings: DataFrame): DataFrame
+    /** (vec_id, e, nrm, cell) for every corpus vector. */
+    def assign(embeddings: DataFrame, cent: DataFrame): DataFrame
+    def route(q: DataFrame, cent: DataFrame, nprobe: Int): DataFrame
+  }
+
+  /** The `label` column as cells — a stand-in for learned cells with the
+    * same routing and pruning mechanics. Centroids are the per-label
+    * stab(6) means; a query routes by its stab(6) dot product with each
+    * centroid, summed per dimension over the posexploded arrays (the
+    * arithmetic `knnIvfOracleN` replays). In-plan: no Spark job.
+    */
+  case object LabelCells extends Cells {
+    val probe = "probe_label"
+    def centroids(embeddings: DataFrame): DataFrame =
+      embeddings.groupBy(col("label").as("cell"))
+        .agg(arrayMean(toDouble(col("embedding"))).as("c"))
+    def assign(embeddings: DataFrame, cent: DataFrame): DataFrame =
+      embeddings.select(col("vec_id"), toDouble(col("embedding")).as("e"),
+          col("label").as("cell"))
+        .withColumn("nrm", norm(col("e")))
+    def route(q: DataFrame, cent: DataFrame, nprobe: Int): DataFrame =
+      perQueryTopK(q.select(col("query_id"), posexplode(col("e")).as(Seq("pos", "qe")))
+          .join(broadcast(cent.select(col("cell"), posexplode(col("c")).as(Seq("pos", "c")))),
+            "pos")
+          .groupBy("query_id", "cell")
+          .agg(Stable.stab(sum(col("qe") * col("c")), 6).as("qdot")),
+        nprobe, "qdot", "cell").select("query_id", "cell")
+  }
+
+  /** Lloyd k-means cells ([[kmeansCentroids]], trained with driver
+    * collects). A query routes to its nearest centroids by argminCell's
+    * stab(6) squared distance, negated so nearest ranks first.
+    */
+  final case class KmeansCells(k: Int = 8, iters: Int = 5) extends Cells {
+    val probe = "probe_cell"
+    def centroids(embeddings: DataFrame): DataFrame = kmeansCentroids(embeddings, k, iters)
+    def assign(embeddings: DataFrame, cent: DataFrame): DataFrame =
+      kmeansAssign(prepared(embeddings), cent)
+    def route(q: DataFrame, cent: DataFrame, nprobe: Int): DataFrame =
+      perQueryTopK(q.crossJoin(broadcast(cent)).select(col("query_id"), col("cell"),
+          (-Stable.stab(dot(col("c"), col("c")) - lit(2.0) * dot(col("e"), col("c")), 6))
+            .as("nd")),
+        nprobe, "nd", "cell").select("query_id", "cell")
+  }
+
+  /** The exact stage over probed cells: each routed query row (query_id,
+    * e, nrm, cell) meets the members of its cell. Cells partition the
+    * corpus, so each neighbor is scored at most once — no dedup needed.
+    */
+  private def probedTopK(qside: DataFrame, members: DataFrame, k: Int,
+                         probe: String): DataFrame =
+    exactTopK(qside, members,
+      col("a.cell") === col("b.cell") && col("a.query_id") =!= col("b.vec_id"), k,
+      col("a.cell").as(probe))
+
+  /** IVF ANN over a query TABLE (vec_id, embedding): derive the centroids,
+    * route each query to its `nprobe` best cells, exact cosine top-k
+    * among the probed cells' members. With label cells the whole plan is
+    * built with zero Spark jobs (spec-pinned), so it composes into a
+    * larger lazy plan; candidates come from an EQUI-join of the routed
+    * query side against the cell-keyed corpus — at a million queries it
+    * shuffles by cell instead of broadcasting. nprobe = 1 is the classic
+    * probe-1 IVF (`knn_ivf`); every label-cell tier shares one SQL oracle.
+    */
+  def ivfTopKBatch(embeddings: DataFrame, queries: DataFrame, k: Int,
+                   nprobe: Int = 2, cells: Cells = LabelCells): DataFrame = {
+    val cent = cells.centroids(embeddings)
+    val q = asQueries(prepared(queries))
+    probedTopK(q.join(cells.route(q, cent, nprobe), "query_id"),
+      cells.assign(embeddings, cent), k, cells.probe)
   }
 
   /** ANN over learned k-means cells: train centroids, assign the corpus,
-    * route each query (vec_id < nQueries) to its `nprobe` nearest cells,
-    * exact cosine top-k inside probed cells only. Cells partition the
-    * corpus, so each neighbor is scored at most once — no dedup needed.
+    * route each query (vec_id < nQueries) to its `nprobe` nearest cells.
     */
   def knnIvfKmeans(embeddings: DataFrame, nQueries: Int, k: Int,
-                   kCells: Int = 8, iters: Int = 5, nprobe: Int = 2): DataFrame = {
-    val p = prepared(embeddings)
-    val cent = kmeansCentroids(embeddings, kCells, iters)
-    val cells = p.join(kmeansAssign(p.select("vec_id", "e"), cent), "vec_id")
-    val q = p.filter(col("vec_id") < nQueries)
-      .withColumnRenamed("vec_id", "query_id")
-    val qside = q.join(kmeansProbes(q.select("query_id", "e"), cent, nprobe), "query_id")
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    broadcast(qside).as("a")
-      .join(cells.as("b"),
-        col("a.cell") === col("b.cell") && col("a.query_id") =!= col("b.vec_id"))
-      .select(col("a.query_id"), col("a.cell").as("probe_cell"),
-        col("b.vec_id").as("neighbor_id"), cosine().as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
+                   kCells: Int = 8, iters: Int = 5, nprobe: Int = 2): DataFrame =
+    ivfTopKBatch(embeddings, embeddings.filter(col("vec_id") < nQueries), k, nprobe,
+      KmeansCells(kCells, iters))
 
-  /** Persist the k-means IVF layout: corpus written as parquet partitioned
-    * by learned cell, centroid arrays alongside — probing a cell is then
-    * partition pruning at file-listing time (same mechanics as
-    * buildIvfIndex, with learned cells instead of the label column).
+  /** Persist an IVF layout: `cells` (vec_id, e, nrm) parquet-partitioned by
+    * cell, `centroids` (cell, c) alongside — probing a cell is then
+    * partition pruning at file-listing time, the ANN twin of
+    * Search.buildIndex. Both tables materialize under one DirSwap marker
+    * scope, so a crashed (re)build never leaves a mixed or partial
+    * generation (same discipline as VectorStreams.retrainIndex).
     */
-  def buildKmeansIvfIndex(embeddings: DataFrame, indexDir: String,
-                          kCells: Int = 8, iters: Int = 5): Unit = {
-    val p = prepared(embeddings)
-    val cent = kmeansCentroids(embeddings, kCells, iters)
+  def buildIvfIndex(embeddings: DataFrame, indexDir: String, cells: Cells): Unit = {
+    val cent = cells.centroids(embeddings)
     DirSwap.swap(indexDir, Seq(
       "cells" -> { out =>
-        p.join(kmeansAssign(p.select("vec_id", "e"), cent), "vec_id")
-          .write.partitionBy("cell").parquet(s"$out/batch=base")
-        DirSwap.markComplete(out) // content in batch=base (see buildIvfIndex)
+        // batch=base: the cells table is batch-keyed (BatchCommit) so the
+        // streaming ingest's writes are replay-idempotent; the build is the
+        // base generation (named, so no stream's numeric id collides)
+        cells.assign(embeddings, cent).write.partitionBy("cell").parquet(s"$out/batch=base")
+        DirSwap.markComplete(out)
       },
-      // the trainer already collected cent as a LocalRelation
       "centroids" -> { out => cent.write.parquet(out) }))
   }
 
-  /** Query the persisted k-means IVF index. The probed cell set (≤
-    * queries × nprobe — metadata-scale) is collected only to drive
-    * `cell IN (...)` partition pruning on the cells scan.
+  /** Committed-batches view of a batch-keyed cells table (build writes
+    * batch=base, each streaming micro-batch its own numeric id — see
+    * VectorStreams.vectorIngest). Partition pruning on the cell column
+    * still applies per batch dir.
     */
-  def knnIvfKmeansIndexed(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                          queries: DataFrame, k: Int, nprobe: Int = 2): DataFrame = {
-    val cent = spark.read.parquet(s"$indexDir/centroids")
-    val q = prepared(queries).withColumnRenamed("vec_id", "query_id")
-    val probes = kmeansProbes(q.select("query_id", "e"), cent, nprobe)
-    val probed = probes.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSeq // ≤ |queries|×nprobe cells — metadata-scale
-    val cells = cellsTable(spark, indexDir)
-      .filter(col("cell").isin(probed: _*))
-    val qside = q.join(probes, "query_id")
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    broadcast(qside).as("a")
-      .join(cells.as("b"),
-        col("a.cell") === col("b.cell") && col("a.query_id") =!= col("b.vec_id"))
-      .select(col("a.query_id"), col("a.cell").as("probe_cell"),
-        col("b.vec_id").as("neighbor_id"), cosine().as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+  def cellsTable(spark: org.apache.spark.sql.SparkSession, indexDir: String): DataFrame =
+    BatchCommit.readCommitted(spark, s"$indexDir/cells").getOrElse(
+      throw new IllegalStateException(s"$indexDir/cells has no committed batches"))
+
+  /** Query a persisted IVF index: route each query to its `nprobe` best
+    * cells by the index's centroids, then scan ONLY the probed cell
+    * partitions. The probed cell ids (≤ queries × nprobe — metadata-scale)
+    * are collected at construction only to turn `cell IN (...)` into
+    * partition pruning: one pruned scan, no join-back. Same rows as
+    * `ivfTopKBatch` with the same `cells`.
+    */
+  def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, indexDir: String,
+                     cells: Cells, queries: DataFrame, k: Int,
+                     nprobe: Int = 2): DataFrame = {
+    val q = asQueries(prepared(queries))
+    val probes = cells.route(q, spark.read.parquet(s"$indexDir/centroids"), nprobe)
+    val probed = probes.select("cell").distinct().collect().map(_.getInt(0)).toSeq
+    probedTopK(broadcast(q.join(probes, "query_id")),
+      cellsTable(spark, indexDir).filter(col("cell").isin(probed: _*)), k, cells.probe)
   }
 
   // ---------------------------------------------------------------------
@@ -582,7 +592,9 @@ object Similarity {
   def pqCodebooks(prep: DataFrame, m: Int, kCodes: Int,
                   iters: Int): Seq[Seq[(Int, Seq[Double])]] = {
     // dim from one row — a LIMIT-1 job at train/index-build time
-    val dim = prep.select(size(col("e")).as("d")).limit(1).collect()(0).getInt(0)
+    val first = prep.select(size(col("e"))).limit(1).collect()
+    require(first.nonEmpty, "pqCodebooks: the input table is empty, no vectors to train on")
+    val dim = first(0).getInt(0)
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val sub = dim / m
     (0 until m).map { j =>
@@ -593,44 +605,21 @@ object Similarity {
     }
   }
 
-  /** Encode each vector as its m per-subspace nearest-code ids — a NARROW
-    * projection (the inlined argmin per subspace; no join, no shuffle),
-    * exactly the assignment shape of the k-means tier.
+  /** Encode each vector of `prep` (vec_id, e, …) as its m per-subspace
+    * nearest-code ids: (vec_id, codes, …) with `e` replaced and any other
+    * column (the norm) kept — a NARROW projection (the inlined argmin per
+    * subspace; no join, no shuffle), the assignment shape of the k-means
+    * tier.
     */
   def pqEncode(prep: DataFrame, cbs: Seq[Seq[(Int, Seq[Double])]]): DataFrame = {
-    val m = cbs.length
     val sub = cbs.head.head._2.length
-    val codes = array((0 until m).map { j =>
+    val codes = array(cbs.indices.map { j =>
       argminCell(slice(col("e"), j * sub + 1, sub), cbs(j)).getField("cell")
     }: _*)
-    prep.select(col("vec_id"), codes.as("codes"))
+    prep.select((col("vec_id") +: codes.as("codes") +:
+      prep.columns.filterNot(Set("vec_id", "e")).map(col).toSeq): _*)
   }
 
-  /** PQ ANN top-k with exact re-rank. Stage 1 scores every corpus CODE row
-    * against each query's ADC lookup table (lut[j·kCodes + code] =
-    * q_subⱼ · c_{j,code}, built driver-side per query — nQueries × m ×
-    * kCodes doubles, metadata-bounded) with one codegen'd `aggregate`
-    * over the m codes, normalizes by the stored vector norm, and keeps
-    * the top `shortlist`·k per query; stage 2 re-ranks the shortlist with
-    * EXACT cosines against the full vectors (broadcast-joined — the
-    * shortlist is query-count-sized). Scan cost of stage 1 is the code
-    * table, not the vectors — the whole point at corpus scale.
-    */
-  def knnPq(embeddings: DataFrame, nQueries: Int, k: Int,
-            m: Int = 8, kCodes: Int = 16, iters: Int = 5,
-            shortlist: Int = 10): DataFrame = {
-    val p = prepared(embeddings)
-    val prepCut = p.select("vec_id", "e")
-    val cbs = pqCodebooks(prepCut, m, kCodes, iters)
-    val codes = pqEncode(prepCut, cbs)
-      .join(p.select("vec_id", "nrm"), "vec_id")
-    knnPqFromCodes(embeddings, codes, cbs, nQueries, k, shortlist)
-  }
-
-  /** Codebooks ⇄ rows (j, code, c) — the persistence format. Training is
-    * deterministic (hash-seeded, stab'd means), so codebook and code
-    * tables rebuilt independently from the same corpus always agree.
-    */
   /** PQ reconstruction card — the emb_sq8_error sibling for the product
     * quantizer: per vector, the L2 error and cosine between the original
     * and its codebook reconstruction (each subspace's assigned centroid,
@@ -662,6 +651,10 @@ object Similarity {
         Stable.stab(col("sdt") / (col("nrm") * sqrt(col("srn"))), 6).as("cos"))
   }
 
+  /** Codebooks ⇄ rows (j, code, c) — the persistence format. Training is
+    * deterministic (hash-seeded, stab'd means), so codebook and code
+    * tables rebuilt independently from the same corpus always agree.
+    */
   def pqCodebooksToDf(spark: org.apache.spark.sql.SparkSession,
                       cbs: Seq[Seq[(Int, Seq[Double])]]): DataFrame = {
     import spark.implicits._
@@ -679,7 +672,8 @@ object Similarity {
     * `codebooks` (j, code, c) and the batch-keyed `codes` table (vec_id,
     * codes, nrm — batch=base; streaming ingest adds its own committed
     * batch dirs, see VectorStreams.pqIngest). Same crash-recoverable
-    * build/maintenance discipline as the IVF layouts.
+    * build/maintenance discipline as the IVF layout; a layout of its own
+    * because it stores no vectors.
     */
   def buildPqIndex(embeddings: DataFrame, indexDir: String,
                    m: Int = 8, kCodes: Int = 16, iters: Int = 5): Unit = {
@@ -687,9 +681,7 @@ object Similarity {
     val cbs = pqCodebooks(p.select("vec_id", "e"), m, kCodes, iters)
     DirSwap.swap(indexDir, Seq(
       "codes" -> { out =>
-        pqEncode(p.select("vec_id", "e"), cbs)
-          .join(p.select("vec_id", "nrm"), "vec_id")
-          .write.parquet(s"$out/batch=base")
+        pqEncode(p, cbs).write.parquet(s"$out/batch=base")
         DirSwap.markComplete(out)
       },
       // the trainer collected cbs driver-side; this write reads nothing live
@@ -703,285 +695,104 @@ object Similarity {
     BatchCommit.readCommitted(spark, s"$indexDir/codes").getOrElse(
       throw new IllegalStateException(s"$indexDir/codes has no committed batches"))
 
-  /** The PQ query against the persisted index. `embeddings` supplies the
-    * query vectors and the exact re-rank side only — at corpus scale the
-    * shortlist's full-vector reads are a pruned point-lookup against the
-    * source table, never a second full scan; stage 1 reads codes alone.
+  /** Per-query ADC lookup tables, built in-plan: lut[j·kc + code] = the
+    * query's j-th subvector · centroid c_{j,code}. Each query explodes
+    * over j ∈ 0..dim−1 (a superset of the m subspace ids) and equi-joins
+    * the broadcast codebook rows (a BroadcastHashJoin, never a nested
+    * loop); the subspace width is size(c). The m subspaces and the code
+    * width kc are read from the codebook rows (max + 1), and each entry is
+    * placed by its (j, code) key — so codebooks narrower than the trainer's
+    * kCodes (a corpus with fewer vectors) or with a hole (a Lloyd cell
+    * that dropped out; its slot stays null, no code points at it) still
+    * line up. Returns (query_id, kc, lut).
     */
-  def knnPqIndexed(spark: org.apache.spark.sql.SparkSession, indexDir: String,
-                   embeddings: DataFrame, nQueries: Int, k: Int,
-                   shortlist: Int = 10): DataFrame =
-    knnPqFromCodes(embeddings, pqCodesTable(spark, indexDir),
-      pqCodebooksFromDf(spark.read.parquet(s"$indexDir/codebooks")),
-      nQueries, k, shortlist)
-
-  /** The PQ query against prebuilt (codes, codebooks) — what a deployment
-    * runs against the persisted index (training amortized per corpus).
-    */
-  def knnPqFromCodes(embeddings: DataFrame, codes: DataFrame,
-                     cbs: Seq[Seq[(Int, Seq[Double])]],
-                     nQueries: Int, k: Int, shortlist: Int = 10): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val m = cbs.length
-    val kCodes = cbs.map(_.map(_._1).max).max + 1
-    val sub = cbs.head.head._2.length
-    val p = prepared(embeddings)
-    // query vectors to the driver: nQueries rows — the same metadata-bounded
-    // collect the probe-routing tiers make; LUTs are pure driver arithmetic
-    val qvecs = p.filter(col("vec_id") < nQueries)
-      .select("vec_id", "e").as[(Long, Seq[Double])].collect()
-    val luts = qvecs.map { case (qid, qe) =>
-      val lut = new Array[Double](m * kCodes)
-      for (j <- 0 until m; (code, c) <- cbs(j)) {
-        var d = 0.0
-        var i = 0
-        while (i < sub) { d += qe(j * sub + i) * c(i); i += 1 }
-        lut(j * kCodes + code) = d
-      }
-      (qid, lut.toSeq)
-    }.toSeq
-    val lutDf = luts.toDF("query_id", "lut")
-    val adc = aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
-      (acc, j) => acc +
-        element_at(col("lut"), j * kCodes + element_at(col("codes"), j + 1) + 1))
-    val w = Window.partitionBy("query_id").orderBy(desc("adc_cos"), asc("neighbor_id"))
-    val short = codes.crossJoin(broadcast(lutDf))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        // stab(6): LUT entries and the m-term fold are order-identical
-        // across engines, so the quantized ADC score — and with it the
-        // shortlist membership — is oracle-re-derivable
-        Stable.stab(adc / col("nrm"), 6).as("adc_cos"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= shortlist * k)
-      .select("query_id", "neighbor_id")
-    // exact re-rank: true cosines for shortlist rows only
-    val wx = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    broadcast(short.join(p.withColumnRenamed("vec_id", "query_id"), "query_id")).as("a")
-      .join(p.as("b"), col("neighbor_id") === col("b.vec_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        Stable.stab(dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm")), 6).as("cos"))
-      .withColumn("rank", row_number().over(wx).cast("long"))
-      .filter(col("rank") <= k)
-  }
-
-  // ---------------------------------------------------------------------
-  // Batch ANN routing — the corpus×corpus shape. The serving tiers above
-  // collect the query vectors (and probed cell ids) driver-side: correct
-  // and metadata-bounded for tens of queries, wrong for the one ANN
-  // pattern an LLM-data pipeline runs at FULL scale, a million-row query
-  // table joined against the corpus (semantic dedup, cross-corpus
-  // linking). These variants route a query TABLE with ZERO driver
-  // collects: centroids/codebooks ride as broadcast tables, routing and
-  // LUT construction stay in-plan, and plan construction runs no Spark
-  // job (spec-pinned) — so the whole thing composes into a larger lazy
-  // plan like any other operator.
-  // ---------------------------------------------------------------------
-
-  /** In-plan probe routing shared by every batch tier: score each query
-    * against the broadcast per-label centroid table, keep the `nprobe`
-    * best labels. ONE definition — the serving/batch bit-identity pins
-    * and the shared IVF oracle rest on all tiers computing exactly this
-    * arithmetic, so it must not fork per tier. Returns
-    * (query_id, label).
-    */
-  private def labelProbesInPlan(q: DataFrame, cent: DataFrame,
-                                nprobe: Int): DataFrame =
-    q.select(col("query_id"), posexplode(col("e")).as(Seq("pos", "qe")))
-      .join(broadcast(cent), (col("pos") + 1) === col("i"))
-      .groupBy("query_id", "label")
-      .agg(Stable.stab(sum(col("qe") * col("c")), 6).as("qdot"))
-      .withColumn("rn",
-        row_number().over(Window.partitionBy("query_id").orderBy(desc("qdot"), asc("label"))))
-      .filter(col("rn") <= nprobe)
-      .select("query_id", "label")
-
-  /** In-plan per-query ADC lookup tables shared by the batch PQ tiers —
-    * fold order identical to the driver-built LUTs (the knn_pq_batch ==
-    * knn_pq equality spec rests on this single definition). Returns
-    * (query_id, lut ARRAY<DOUBLE> of m·kCodes entries).
-    */
-  private def pqLutsInPlan(q: DataFrame, codebooks: DataFrame,
-                           m: Int, kCodes: Int): DataFrame =
-    q.select(col("query_id"), col("e"),
-        explode(sequence(lit(0), lit(m - 1))).as("j"))
+  private def pqLuts(q: DataFrame, codebooks: DataFrame): DataFrame = {
+    val sub = size(col("c"))
+    q.select(col("query_id"), col("e"), explode(sequence(lit(0), size(col("e")) - 1)).as("j"))
       .join(broadcast(codebooks.select("j", "code", "c")), "j")
-      .select(col("query_id"),
-        (col("j") * kCodes + col("code")).as("idx"),
-        dot(slice(col("e"), col("j") * size(col("c")) + 1, size(col("c"))),
-          col("c")).as("d"))
       .groupBy("query_id")
-      .agg(transform(array_sort(collect_list(struct(col("idx"), col("d")))),
-        s => s.getField("d")).as("lut"))
-
-  /** The ADC accumulation over a row's m codes against the joined lut. */
-  private def adcExpr(m: Int, kCodes: Int): Column =
-    aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
-      (acc, j) => acc +
-        element_at(col("lut"), j * kCodes + element_at(col("codes"), j + 1) + 1))
-
-  /** Label-IVF ANN over a query TABLE (vec_id, embedding), zero driver
-    * collects: per-label centroids aggregate in-plan, each query routes
-    * to its `nprobe` best cells through a broadcast centroid join, and
-    * candidates come from an EQUI-join of the routed query side against
-    * the label-keyed corpus — at a million queries the join shuffles by
-    * cell instead of broadcasting, which is exactly the right shape (the
-    * serving twin `ivfTopKIndexed` instead collects probed cell ids to
-    * drive partition pruning — better for tens of queries, impossible
-    * for a table). Same cosine/top-k/tie-break semantics as ivfTopK, so
-    * the same SQL oracle gates it.
-    */
-  def ivfTopKBatch(embeddings: DataFrame, queries: DataFrame, k: Int,
-                   nprobe: Int = 2): DataFrame = {
-    val p = prepared(embeddings)
-    val cent = ivfCentroids(embeddings)
-    val q = prepared(queries).withColumnRenamed("vec_id", "query_id")
-    val probes = labelProbesInPlan(q, cent, nprobe)
-      .withColumnRenamed("label", "probe_label")
-    val cells = embeddings.select(col("vec_id"), col("label")).join(p, "vec_id")
-    val qside = q.join(probes, "query_id")
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    qside.as("a")
-      .join(cells.as("b"),
-        col("b.label") === col("probe_label") && col("a.query_id") =!= col("b.vec_id"))
-      .select(col("query_id"), col("probe_label"), col("b.vec_id").as("neighbor_id"),
-        cosine().as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+      .agg((max("j") + 1).as("m"), (max("code") + 1).as("kc"),
+        collect_list(struct(col("j"), col("code"),
+          dot(slice(col("e"), col("j") * sub + 1, sub), col("c")).as("d"))).as("ds"))
+      .withColumn("byKey", map_from_entries(transform(col("ds"),
+        x => struct(x("j") * col("kc") + x("code"), x("d")))))
+      .select(col("query_id"), col("kc"),
+        transform(sequence(lit(0), col("m") * col("kc") - 1),
+          i => element_at(col("byKey"), i)).as("lut"))
   }
 
-  /** PQ ANN over a query TABLE, zero driver collects: the ADC lookup
-    * tables are built IN-PLAN — each query explodes over the m subspace
-    * ids, equi-joins the broadcast codebook rows (j, code, c) (a
-    * BroadcastHashJoin, same trick as the LSH plane table), computes the
-    * subvector·centroid dot with the codegen'd ArrayDot over a slice
-    * (subspace width = size(c), read per row — nothing structural is
-    * collected), and reassembles per-query LUT arrays with an
-    * array_sort'd collect_list (idx is unique per query, so the sort
-    * makes the assembly deterministic). The ADC scoring and exact re-rank
-    * stages are IDENTICAL expressions to knnPqFromCodes — identical fold
-    * orders, so the batch path returns bit-identical rows to the serving
-    * path (spec-pinned). `m`/`kCodes` are index-structure constants, the
-    * same ones the build fixed.
+  /** The ADC score of a code row against its query's lut: the m looked-up
+    * dots folded left to right from 0.0 (the order the oracle's
+    * `list_sum(list(d ORDER BY j))` replays).
+    */
+  private def adc: Column =
+    aggregate(sequence(lit(0), size(col("codes")) - 1), lit(0.0),
+      (acc, j) => acc +
+        element_at(col("lut"), j * col("kc") + element_at(col("codes"), j + 1) + 1))
+
+  /** The ADC stage shared by every PQ tier, over a query TABLE with zero
+    * driver collects: in-plan LUTs, an ADC scan of the code table keeping
+    * the top `shortlist`·k per query (stab(6) adc_cos — LUT entries and
+    * the m-term fold are order-identical across engines, so shortlist
+    * membership is oracle-re-derivable), then the exact stage re-ranks
+    * the shortlist against the full vectors. Stage 1 reads codes alone.
     *
-    * Scale notes: the LUT side grows with the query table (m·kCodes
-    * doubles per query) — the broadcast hint on it fits serving and
-    * thousands-of-queries batches; for a corpus-sized query table drop
-    * the hint and let the ADC stage shuffle, or IVF-route first
-    * (ivfTopKBatch) and ADC within cells. The brute ADC×queries product
-    * is inherent to un-routed PQ, not to this formulation.
+    * Unrouted (`nprobe` 0) every code row meets every query through a
+    * broadcast nested loop — the brute ADC×queries product inherent to
+    * flat PQ; the LUT side grows with the query table (m·kc doubles per
+    * query), which fits serving and thousands-of-queries batches. Routed
+    * (`nprobe` > 0, IVF-PQ — FAISS's default shape) each query goes to its
+    * `nprobe` best LABEL cells and the ADC stage becomes an EQUI-join of
+    * the routed (query, lut, cell) side against the cell-keyed code table:
+    * no nested loop anywhere (PlanShapeSpec-locked). `codes` is (vec_id,
+    * codes, nrm), plus `cell` when routed — a deployment stores it at
+    * encode time.
     */
   def knnPqBatchFromCodes(embeddings: DataFrame, queries: DataFrame,
                           codes: DataFrame, codebooks: DataFrame,
-                          m: Int = 8, kCodes: Int = 16,
-                          k: Int = 5, shortlist: Int = 10): DataFrame = {
-    val p = prepared(embeddings)
-    val q = prepared(queries).withColumnRenamed("vec_id", "query_id")
-    val luts = pqLutsInPlan(q, codebooks, m, kCodes)
-    val w = Window.partitionBy("query_id").orderBy(desc("adc_cos"), asc("neighbor_id"))
-    val short = codes.crossJoin(broadcast(luts))
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        Stable.stab(adcExpr(m, kCodes) / col("nrm"), 6).as("adc_cos"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= shortlist * k)
-      .select("query_id", "neighbor_id")
-    val wx = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    short.join(q, "query_id").as("a")
-      .join(p.as("b"), col("neighbor_id") === col("b.vec_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        Stable.stab(dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm")), 6).as("cos"))
-      .withColumn("rank", row_number().over(wx).cast("long"))
-      .filter(col("rank") <= k)
+                          k: Int = 5, shortlist: Int = 10, nprobe: Int = 0): DataFrame = {
+    val q = asQueries(prepared(queries))
+    val luts = pqLuts(q, codebooks)
+    val scored =
+      if (nprobe <= 0) codes.crossJoin(broadcast(luts))
+      else codes.join(broadcast(luts.join(
+        LabelCells.route(q, LabelCells.centroids(embeddings), nprobe), "query_id")), "cell")
+    val short = perQueryTopK(scored.filter(col("query_id") =!= col("vec_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"),
+          Stable.stab(adc / col("nrm"), 6).as("adc_cos")),
+      shortlist * k, "adc_cos")
+    exactTopK(short.select("query_id", "neighbor_id").join(q, "query_id"),
+      prepared(embeddings), col("a.neighbor_id") === col("b.vec_id"), k)
   }
 
-  /** IVF-PQ — the production composition (FAISS's default shape): coarse
-    * cells bound WHICH codes are scored, PQ codes bound WHAT a score
-    * costs. Each query routes to its `nprobe` nearest cells (in-plan,
-    * broadcast centroid join), and the ADC stage becomes an EQUI-JOIN of
-    * the routed (query, lut, cell) side against the cell-keyed code
-    * table — the un-routed PQ tier's cross-join disappears entirely, so
-    * this is the one ANN tier with bounded candidates AND no
-    * nested-loop anywhere (PlanShapeSpec-locked). At corpus scale the
-    * code table is partitioned by cell, so the join side prunes like
-    * every other IVF scan; cells partition the corpus, so no candidate
-    * is scored twice. Exact-cosine re-rank as in every PQ tier —
-    * approximation affects recall only, never reported scores. Zero
-    * driver collects, same as the other batch routers.
-    *
-    * `codes` must carry the cell column (vec_id, codes, nrm, label) — a
-    * deployment stores it in the code table at encode time; the
-    * registered query derives it with one metadata join.
+  /** PQ ANN top-k with the codebooks trained in the same call (m
+    * subspaces × kCodes codes): encode the corpus, then the ADC stage for
+    * the queries vec_id < nQueries.
     */
-  def knnIvfPqBatchFromCodes(embeddings: DataFrame, queries: DataFrame,
-                             codes: DataFrame, codebooks: DataFrame,
-                             m: Int = 8, kCodes: Int = 16,
-                             k: Int = 5, nprobe: Int = 2,
-                             shortlist: Int = 10): DataFrame = {
+  def knnPq(embeddings: DataFrame, nQueries: Int, k: Int,
+            m: Int = 8, kCodes: Int = 16, iters: Int = 5,
+            shortlist: Int = 10): DataFrame = {
     val p = prepared(embeddings)
-    val q = prepared(queries).withColumnRenamed("vec_id", "query_id")
-    val probes = labelProbesInPlan(q, ivfCentroids(embeddings), nprobe)
-    val luts = pqLutsInPlan(q, codebooks, m, kCodes)
-    // the routed query side: (query_id, lut, label) — ≤ nQueries×nprobe
-    // rows; the ADC stage is an equi-join on the probed cell
-    val qside = luts.join(probes, "query_id")
-    val w = Window.partitionBy("query_id").orderBy(desc("adc_cos"), asc("neighbor_id"))
-    val short = codes.join(broadcast(qside), "label")
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        Stable.stab(adcExpr(m, kCodes) / col("nrm"), 6).as("adc_cos"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= shortlist * k)
-      .select("query_id", "neighbor_id")
-    val wx = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    short.join(q, "query_id").as("a")
-      .join(p.as("b"), col("neighbor_id") === col("b.vec_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        Stable.stab(dot(col("a.e"), col("b.e")) / (col("a.nrm") * col("b.nrm")), 6).as("cos"))
-      .withColumn("rank", row_number().over(wx).cast("long"))
-      .filter(col("rank") <= k)
+    val cbs = pqCodebooks(p.select("vec_id", "e"), m, kCodes, iters)
+    knnPqBatchFromCodes(embeddings, embeddings.filter(col("vec_id") < nQueries),
+      pqEncode(p, cbs), pqCodebooksToDf(embeddings.sparkSession, cbs), k, shortlist)
   }
 
-  /** The batch PQ query against a persisted index dir — reads the
-    * codebook table as a DataFrame (never collected; contrast
-    * knnPqIndexed, which collects it to build LUTs driver-side).
+  /** The PQ query against a persisted index dir: the codebook table is
+    * read as a DataFrame, never collected. `embeddings` supplies the
+    * exact re-rank side only — at corpus scale the shortlist's full-vector
+    * reads are a pruned point-lookup, never a second full scan.
     */
   def knnPqBatch(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                  embeddings: DataFrame, queries: DataFrame,
-                 m: Int = 8, kCodes: Int = 16,
                  k: Int = 5, shortlist: Int = 10): DataFrame =
     knnPqBatchFromCodes(embeddings, queries, pqCodesTable(spark, indexDir),
-      spark.read.parquet(s"$indexDir/codebooks"), m, kCodes, k, shortlist)
+      spark.read.parquet(s"$indexDir/codebooks"), k, shortlist)
 
-  /** IVF probe-1 ANN: route each query (vec_id < nQueries) to its best
-    * centroid by dot product, then brute-force cosine top-k inside that
-    * cell only.
-    */
-  def ivfTopK(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val p = prepared(embeddings)
-    val q = p.filter(col("vec_id") < nQueries)
-    val cent = ivfCentroids(embeddings)
-    // query × centroid-element dot products
-    val qd = broadcast(q)
-      .select(col("vec_id").as("query_id"), posexplode(col("e")).as(Seq("pos", "qe")))
-      .join(broadcast(cent), (col("pos") + 1) === col("i"))
-      .groupBy("query_id", "label")
-      .agg(Stable.stab(sum(col("qe") * col("c")), 6).as("qdot"))
-    val best = qd.withColumn("rn",
-        row_number().over(Window.partitionBy("query_id").orderBy(desc("qdot"), asc("label"))))
-      .filter(col("rn") === 1).select("query_id", "label")
-    val cell = embeddings.select(col("vec_id"), col("label"))
-      .join(p, "vec_id")
-    val w = Window.partitionBy("query_id").orderBy(desc("cos"), asc("neighbor_id"))
-    broadcast(q.join(embeddings.select("vec_id", "label"), "vec_id")
-        .join(best.withColumnRenamed("label", "probe_label"), col("vec_id") === col("query_id")))
-      .as("a")
-      .join(cell.as("b"),
-        col("b.label") === col("probe_label") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("query_id"), col("probe_label"), col("b.vec_id").as("neighbor_id"),
-        cosine().as("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
+  /** [[knnPqBatch]] for the queries vec_id < nQueries of `embeddings`. */
+  def knnPqIndexed(spark: org.apache.spark.sql.SparkSession, indexDir: String,
+                   embeddings: DataFrame, nQueries: Int, k: Int,
+                   shortlist: Int = 10): DataFrame =
+    knnPqBatch(spark, indexDir, embeddings,
+      embeddings.filter(col("vec_id") < nQueries), k, shortlist)
 }

@@ -32,7 +32,8 @@ object Persisted {
   private val RetiredKinds = Seq("ivf", "ivfk", "index",
     // round 11: the gated trainer (md5 seeds + stab'd argmin) changed the
     // kmeans/PQ layouts — the b1 generations are unreachable
-    "ivfk-b1", "pq-b1", "index-b2") // b2: the word-id-keyed search index
+    "ivfk-b1", "pq-b1", "index-b2", // b2: the word-id-keyed search index
+    "ivf-b1") // the label IVF index moved onto the k-means cells layout
 
   /** Version suffix of the incremental-index cache dirs: bump it with the
     * search index's layout or derivation. */
@@ -50,11 +51,20 @@ object Persisted {
     val fs = inc.getFileSystem(conf)
     if (fs.exists(inc))
       fs.listStatus(inc).map(_.getPath)
-        .filter(p => !p.getName.endsWith(IncVersion))
+        .filter(p => !p.getName.endsWith(IncVersion) || p.getName.startsWith("_"))
         .foreach(fs.delete(_, true))
   }
 
-  private def sanitized(d: String): String = d.replaceAll("[^A-Za-z0-9.]", "_")
+  /** The cache-entry name of data dir `d` — THE sanitizer of every
+    * `/tmp/graft-*` cache: characters outside [A-Za-z0-9.] become `_`,
+    * and leading `_`/`.` are dropped, since Spark skips a path whose name
+    * starts with either as hidden (`All paths were ignored`).
+    */
+  def sanitized(d: String): String =
+    d.replaceAll("[^A-Za-z0-9.]", "_").replaceAll("^[_.]+", "")
+
+  /** Kind dirs swept of legacy entries in this JVM (see pruneStale). */
+  private val swept = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Drop this corpus's superseded cache entries under the kind dir: any
     * sibling whose name shares the sanitized-SF-dir prefix but isn't the
@@ -63,14 +73,18 @@ object Persisted {
     * long-lived builder leaks one generation per bump. Entries of OTHER SF
     * dirs never match the `prefix + "_"` test (suffixes and fingerprints
     * always start with `_`; no test SF dir's sanitized name is a proper
-    * `_`-followed prefix of another's).
+    * `_`-followed prefix of another's). The first call per kind dir in a
+    * JVM also drops every `_`-prefixed entry: names the sanitizer made
+    * before it dropped the leading `_`, unreachable since.
     */
   private def pruneStale(fs: FileSystem, kindDir: Path, d: String,
                          keep: String): Unit = {
     if (!fs.exists(kindDir)) return
     val prefix = sanitized(d) + "_"
+    val legacy = swept.add(kindDir.toString)
     fs.listStatus(kindDir).map(_.getPath)
-      .filter(p => p.getName != keep && p.getName.startsWith(prefix))
+      .filter(p => p.getName != keep &&
+        (p.getName.startsWith(prefix) || legacy && p.getName.startsWith("_")))
       .foreach(fs.delete(_, true))
   }
 

@@ -64,7 +64,7 @@ object SearchQueries {
     * It never starts with `_` or `.`: Spark treats such a path as hidden
     * and warns that it ignored it. */
   private def cacheDir(kind: String, d: String): String =
-    s"/tmp/graft-$kind/${d.replaceAll("[^A-Za-z0-9.]", "_").replaceAll("^[_.]+", "")}"
+    s"/tmp/graft-$kind/${Persisted.sanitized(d)}"
 
   def all: Seq[GraftQuery] = Seq(
 

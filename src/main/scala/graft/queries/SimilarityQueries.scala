@@ -21,6 +21,64 @@ object SimilarityQueries {
     s"floor(list_sum(list_transform(range(1, len($a.e)+1), i -> $a.e[i]*$b.e[i]))" +
       s"/($a.nrm*$b.nrm)*1000000.0+0.5)/1000000.0"
 
+  /** Exact-cosine candidates `name`: every (query vec_id < 10, other
+    * vector) pair with its cos — the brute-force scoring of knn_brute and
+    * of both recall oracles' ground truth.
+    */
+  private def bruteCandCte(name: String): String =
+    s"""$name AS (
+       |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, ${cosSql("a", "b")} AS cos
+       |  FROM n a JOIN n b ON a.vec_id < 10 AND b.vec_id <> a.vec_id)""".stripMargin
+
+  /** The per-query ranking CTE `name` over `src` (`cols` plus `rank` by
+    * cos desc, ties to the lower neighbor_id) — the SQL twin of
+    * Similarity.perQueryTopK before its rank filter.
+    */
+  private def rankCte(name: String, cols: String, src: String): String = {
+    val pad = " " * (name.length + 5)
+    s"""$name AS (SELECT $cols,
+       |$pad  row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
+       |${pad}FROM $src)""".stripMargin
+  }
+
+  /** Brute-force ground truth bc → br → brute (query_id, neighbor_id):
+    * the exact top-5 both recall oracles score an ANN tier against.
+    */
+  private val bruteCtes: String =
+    s"""${bruteCandCte("bc")},
+       |${rankCte("br", "query_id, neighbor_id", "bc")},
+       |brute AS (SELECT query_id, neighbor_id FROM br WHERE rank <= 5)""".stripMargin
+
+  /** stab(6) as the label-cell oracles spell it. */
+  private def stabLit(x: String): String = s"floor($x*1000000.0+0.5)/1000000.0"
+
+  /** Per-label centroid rows `cent` (label, i, c): the stab'd per-dim
+    * means of Similarity.LabelCells, `stab` spelling the stabilizer.
+    */
+  private def labelCentCte(stab: String => String): String =
+    s"""cent AS (
+       |  SELECT label, i, ${stab("avg(e[i])")} AS c
+       |  FROM (SELECT em.label, v.e FROM embeddings em JOIN v ON em.vec_id = v.vec_id),
+       |       unnest(range(1, len(e)+1)) t(i)
+       |  GROUP BY label, i)""".stripMargin
+
+  /** The label router cent → qd → probes (query_id, probe_label): stab'd
+    * query·centroid dots, the `nprobe` best labels per query, ties to the
+    * lower label — the SQL twin of Similarity.LabelCells.route.
+    */
+  private def labelRouteCtes(nQueries: Int, nprobe: Int, stab: String => String): String =
+    s"""${labelCentCte(stab)},
+       |qd AS (
+       |  SELECT q.vec_id AS query_id, cent.label,
+       |    ${stab("sum(q.e[cent.i] * cent.c)")} AS qdot
+       |  FROM v q, cent WHERE q.vec_id < $nQueries
+       |  GROUP BY 1, 2),
+       |probes AS (
+       |  SELECT query_id, label AS probe_label FROM (
+       |    SELECT query_id, label,
+       |      row_number() OVER (PARTITION BY query_id ORDER BY qdot DESC, label) AS rn
+       |    FROM qd) WHERE rn <= $nprobe)""".stripMargin
+
   /** The sign-bit LSH sketch of the embeddings (vec_id, band, bh),
     * materialized once per SF dir — the 1024-projection stage is the
     * expensive part of blocked near-dup, and it's a pure corpus function
@@ -101,11 +159,7 @@ object SimilarityQueries {
         .orderBy("label", "rn"),
       Some(
         s"""WITH $prepCte,
-           |cent AS (
-           |  SELECT label, i, floor(avg(e[i])*1000000.0+0.5)/1000000.0 AS c
-           |  FROM (SELECT em.label, v.e FROM embeddings em JOIN v ON em.vec_id = v.vec_id),
-           |       unnest(range(1, len(e)+1)) t(i)
-           |  GROUP BY label, i),
+           |${labelCentCte(stabLit)},
            |cl AS (SELECT label, list(c ORDER BY i) AS cv FROM cent GROUP BY label),
            |aff AS (
            |  SELECT em.label, em.vec_id,
@@ -126,19 +180,15 @@ object SimilarityQueries {
         .orderBy("query_id", "rank"),
       Some(
         s"""WITH $prepCte,
-           |c AS (
-           |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, ${cosSql("a", "b")} AS cos
-           |  FROM n a JOIN n b ON a.vec_id < 10 AND b.vec_id <> a.vec_id),
-           |r AS (SELECT query_id, neighbor_id, cos,
-           |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-           |      FROM c)
+           |${bruteCandCte("c")},
+           |${rankCte("r", "query_id, neighbor_id, cos", "c")}
            |SELECT query_id, neighbor_id, cos, rank FROM r
            |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
 
-    // Persisted cell-partitioned IVF index (Similarity.buildIvfIndex →
-    // ivfTopKIndexed): probing = parquet partition pruning, here with
-    // nprobe=2 — the second-nearest cell recovers neighbors that fall
-    // across the boundary of the best cell (the kmeans tier already
+    // Persisted cell-partitioned IVF index over label cells
+    // (Similarity.buildIvfIndex → ivfTopKIndexed): probing = parquet
+    // partition pruning, here with nprobe=2 — the second-nearest cell
+    // recovers neighbors that fall across the boundary of the best cell (the kmeans tier already
     // probes 2; probe-1 was a structural recall gap). Index built on
     // first use per SF dir; the oracle derives the same 2-cell probe set
     // in SQL, so the widened path stays hash-gated.
@@ -146,19 +196,24 @@ object SimilarityQueries {
       (s, d) => {
         import org.apache.spark.sql.functions.col
         val emb = Tables.embeddings(s, d)
-        val idx = ivfIndexDir(s, d, "ivf-b1")(Similarity.buildIvfIndex(emb, _))
-        Similarity.ivfTopKIndexed(s, idx, emb.filter(col("vec_id") < 10), 5, nprobe = 2)
+        val cells = Similarity.LabelCells
+        val idx = ivfIndexDir(s, d, "ivf-b2")(Similarity.buildIvfIndex(emb, _, cells))
+        Similarity.ivfTopKIndexed(s, idx, cells, emb.filter(col("vec_id") < 10), 5)
           .select("query_id", "probe_label", "neighbor_id", "cos", "rank")
           .orderBy("query_id", "rank")
       },
       Some(knnIvfOracleN(2))),
 
     // IVF probe-1 ANN: label as coarse cell, nearest centroid by dot, then
-    // exact cosine inside the probed cell.
+    // exact cosine inside the probed cell (knn_ivf_batch at nprobe=1).
     GraftQuery("knn_ivf",
-      (s, d) => Similarity.ivfTopK(Tables.embeddings(s, d), 10, 5)
-        .select("query_id", "probe_label", "neighbor_id", "cos", "rank")
-        .orderBy("query_id", "rank"),
+      (s, d) => {
+        import org.apache.spark.sql.functions.col
+        val emb = Tables.embeddings(s, d)
+        Similarity.ivfTopKBatch(emb, emb.filter(col("vec_id") < 10), 5, nprobe = 1)
+          .select("query_id", "probe_label", "neighbor_id", "cos", "rank")
+          .orderBy("query_id", "rank")
+      },
       Some(knnIvfOracle)),
 
     // LSH-bucketed ANN top-5: candidates share >= 1 sign-bucket with the
@@ -198,17 +253,9 @@ object SimilarityQueries {
            |  SELECT cand.query_id, cand.neighbor_id, ${cosSql("a", "b")} AS cos
            |  FROM cand JOIN n a ON cand.query_id = a.vec_id
            |            JOIN n b ON cand.neighbor_id = b.vec_id),
-           |lr AS (SELECT query_id, neighbor_id,
-           |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-           |       FROM lc),
+           |${rankCte("lr", "query_id, neighbor_id", "lc")},
            |lsh AS (SELECT query_id, neighbor_id FROM lr WHERE rank <= 5),
-           |bc AS (
-           |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, ${cosSql("a", "b")} AS cos
-           |  FROM n a JOIN n b ON a.vec_id < 10 AND b.vec_id <> a.vec_id),
-           |br AS (SELECT query_id, neighbor_id,
-           |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-           |       FROM bc),
-           |brute AS (SELECT query_id, neighbor_id FROM br WHERE rank <= 5),
+           |$bruteCtes,
            |hit AS (
            |  SELECT b.query_id,
            |    CASE WHEN l.neighbor_id IS NULL THEN 0 ELSE 1 END AS h
@@ -225,29 +272,16 @@ object SimilarityQueries {
     // nprobe=2 buys). Oracle replays the IVF routing + brute CTEs.
     GraftQuery("ann_recall_ivf",
       (s, d) => {
+        import org.apache.spark.sql.functions.col
         val emb = Tables.embeddings(s, d)
         Similarity.annRecall(
           Similarity.bruteForceTopK(emb, 10, 5),
-          Similarity.ivfTopK(emb, 10, 5))
+          Similarity.ivfTopKBatch(emb, emb.filter(col("vec_id") < 10), 5, nprobe = 1))
           .orderBy("query_id")
       },
       Some(
         s"""WITH $prepCte,
-           |cent AS (
-           |  SELECT label, i, floor(avg(e[i])*1000000.0+0.5)/1000000.0 AS c
-           |  FROM (SELECT em.label, v.e FROM embeddings em JOIN v ON em.vec_id = v.vec_id),
-           |       unnest(range(1, len(e)+1)) t(i)
-           |  GROUP BY label, i),
-           |qd AS (
-           |  SELECT q.vec_id AS query_id, cent.label,
-           |    floor(sum(q.e[cent.i] * cent.c)*1000000.0+0.5)/1000000.0 AS qdot
-           |  FROM v q, cent WHERE q.vec_id < 10
-           |  GROUP BY 1, 2),
-           |probes AS (
-           |  SELECT query_id, label AS probe_label FROM (
-           |    SELECT query_id, label,
-           |      row_number() OVER (PARTITION BY query_id ORDER BY qdot DESC, label) AS rn
-           |    FROM qd) WHERE rn <= 1),
+           |${labelRouteCtes(10, 1, stabLit)},
            |cell AS (SELECT em.vec_id, em.label, n.e, n.nrm
            |         FROM embeddings em JOIN n ON em.vec_id = n.vec_id),
            |ic AS (
@@ -256,17 +290,9 @@ object SimilarityQueries {
            |  FROM n a
            |    JOIN probes ON probes.query_id = a.vec_id
            |    JOIN cell b ON b.label = probes.probe_label AND b.vec_id <> a.vec_id),
-           |ir AS (SELECT query_id, neighbor_id,
-           |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-           |       FROM ic),
+           |${rankCte("ir", "query_id, neighbor_id", "ic")},
            |ivf AS (SELECT query_id, neighbor_id FROM ir WHERE rank <= 5),
-           |bc AS (
-           |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, ${cosSql("a", "b")} AS cos
-           |  FROM n a JOIN n b ON a.vec_id < 10 AND b.vec_id <> a.vec_id),
-           |br AS (SELECT query_id, neighbor_id,
-           |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-           |       FROM bc),
-           |brute AS (SELECT query_id, neighbor_id FROM br WHERE rank <= 5),
+           |$bruteCtes,
            |hit AS (
            |  SELECT b.query_id,
            |    CASE WHEN l.neighbor_id IS NULL THEN 0 ELSE 1 END AS h
@@ -338,8 +364,8 @@ object SimilarityQueries {
     // BATCH ANN routing, IVF tier: a query TABLE routed with zero driver
     // collects — centroid aggregation, probe routing, and the cell
     // equi-join all in one lazy plan (the corpus×corpus shape a semantic
-    // dedup join needs; the *_indexed serving twins instead collect probe
-    // ids for partition pruning). Probe-2, same semantics as
+    // dedup join needs; the *_indexed tiers instead collect probe ids for
+    // partition pruning). Probe-2, same semantics as
     // knn_ivf_indexed, so the same SQL oracle hash-gates it; PlanShapeSpec
     // pins that building the plan runs no Spark job.
     GraftQuery("knn_ivf_batch",
@@ -352,12 +378,10 @@ object SimilarityQueries {
       },
       Some(knnIvfOracleN(2))),
 
-    // BATCH ANN routing, PQ tier: ADC lookup tables built IN-PLAN from
-    // the broadcast codebook table (the serving twin knn_pq collects the
-    // query vectors and builds LUTs driver-side). Bit-identical rows to
-    // knn_pq (identical fold orders — SimilaritySpec pins equality), so
-    // the SAME SQL oracle hash-gates both since round 11; PlanShapeSpec
-    // pins the zero-job construction.
+    // BATCH ANN routing, PQ tier: knn_pq's query as a query TABLE. Both
+    // run the one ADC stage (lookup tables built IN-PLAN from the
+    // broadcast codebook table), so the SAME SQL oracle hash-gates both;
+    // PlanShapeSpec pins the zero-job construction.
     GraftQuery("knn_pq_batch",
       (s, d) => {
         import org.apache.spark.sql.functions.col
@@ -385,9 +409,9 @@ object SimilarityQueries {
         // cell column joined from the source table — a deployment stores
         // it in the code table at encode time (metadata-scale join here)
         val codes = Similarity.pqCodesTable(s, pqIndexDir(s, d))
-          .join(emb.select(col("vec_id"), col("label")), "vec_id")
-        Similarity.knnIvfPqBatchFromCodes(emb, emb.filter(col("vec_id") < 10),
-            codes, s.read.parquet(s"${pqIndexDir(s, d)}/codebooks"))
+          .join(emb.select(col("vec_id"), col("label").as("cell")), "vec_id")
+        Similarity.knnPqBatchFromCodes(emb, emb.filter(col("vec_id") < 10),
+            codes, s.read.parquet(s"${pqIndexDir(s, d)}/codebooks"), nprobe = 2)
           .select("query_id", "neighbor_id", "cos", "rank")
           .orderBy("query_id", "rank")
       },
@@ -412,8 +436,9 @@ object SimilarityQueries {
       (s, d) => {
         import org.apache.spark.sql.functions.col
         val emb = Tables.embeddings(s, d)
-        val idx = ivfIndexDir(s, d, "ivfk-b2")(Similarity.buildKmeansIvfIndex(emb, _))
-        Similarity.knnIvfKmeansIndexed(s, idx, emb.filter(col("vec_id") < 10), 5)
+        val cells = Similarity.KmeansCells()
+        val idx = ivfIndexDir(s, d, "ivfk-b2")(Similarity.buildIvfIndex(emb, _, cells))
+        Similarity.ivfTopKIndexed(s, idx, cells, emb.filter(col("vec_id") < 10), 5)
           .select("query_id", "probe_cell", "neighbor_id", "cos", "rank")
           .orderBy("query_id", "rank")
       },
@@ -474,9 +499,7 @@ object SimilarityQueries {
        |  SELECT cand.query_id, cand.neighbor_id, ${cosSql("a", "b")} AS cos
        |  FROM cand JOIN n a ON cand.query_id = a.vec_id
        |            JOIN n b ON cand.neighbor_id = b.vec_id),
-       |r AS (SELECT query_id, neighbor_id, cos,
-       |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-       |      FROM c)
+       |${rankCte("r", "query_id, neighbor_id, cos", "c")}
        |SELECT query_id, neighbor_id, cos, rank FROM r
        |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
 
@@ -488,21 +511,7 @@ object SimilarityQueries {
     */
   def knnIvfOracleN(nprobe: Int): String =
     s"""WITH $prepCte,
-           |cent AS (
-           |  SELECT label, i, floor(avg(e[i])*1000000.0+0.5)/1000000.0 AS c
-           |  FROM (SELECT em.label, v.e FROM embeddings em JOIN v ON em.vec_id = v.vec_id),
-           |       unnest(range(1, len(e)+1)) t(i)
-           |  GROUP BY label, i),
-           |qd AS (
-           |  SELECT q.vec_id AS query_id, cent.label,
-           |    floor(sum(q.e[cent.i] * cent.c)*1000000.0+0.5)/1000000.0 AS qdot
-           |  FROM v q, cent WHERE q.vec_id < 10
-           |  GROUP BY 1, 2),
-           |probes AS (
-           |  SELECT query_id, label AS probe_label FROM (
-           |    SELECT query_id, label,
-           |      row_number() OVER (PARTITION BY query_id ORDER BY qdot DESC, label) AS rn
-           |    FROM qd) WHERE rn <= $nprobe),
+           |${labelRouteCtes(10, nprobe, stabLit)},
            |cell AS (SELECT em.vec_id, em.label, n.e, n.nrm
            |         FROM embeddings em JOIN n ON em.vec_id = n.vec_id),
            |c AS (
@@ -511,9 +520,7 @@ object SimilarityQueries {
            |  FROM n a
            |    JOIN probes ON probes.query_id = a.vec_id
            |    JOIN cell b ON b.label = probes.probe_label AND b.vec_id <> a.vec_id),
-           |r AS (SELECT query_id, probe_label, neighbor_id, cos,
-           |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-           |      FROM c)
+           |${rankCte("r", "query_id, probe_label, neighbor_id, cos", "c")}
            |SELECT query_id, probe_label, neighbor_id, cos, rank FROM r
        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
 
@@ -601,21 +608,19 @@ object SimilarityQueries {
        |    ${cosSql("a", "b")} AS cos
        |  FROM n a JOIN kprobes p ON p.query_id = a.vec_id
        |  JOIN kcells b ON b.cell = p.cell AND b.vec_id <> a.vec_id),
-       |r AS (SELECT query_id, probe_cell, neighbor_id, cos,
-       |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-       |      FROM cand)
+       |${rankCte("r", "query_id, probe_cell, neighbor_id, cos", "cand")}
        |SELECT query_id, probe_cell, neighbor_id, cos, rank FROM r
        |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
 
   /** Oracle for the PQ tiers: m per-subspace gated trainings (the j-th
     * over `e[j·sub+1 : (j+1)·sub]`), stab'd-argmin encode, per-query ADC
     * lookup rows (raw subvector·centroid dots — identical fold order to
-    * both the driver-built and in-plan LUTs), the m-term ADC fold
-    * re-assembled in j order (`list_sum(list(d ORDER BY j))` ≡ the
-    * left-fold `aggregate` with 0.0 seed), stab'd adc_cos shortlist, and
-    * the exact stab'd-cosine re-rank. With `routed=true` the candidate
-    * set is first restricted to the query's `nprobe` best LABEL cells
-    * (the IVF-PQ composition — same probe arithmetic as knnIvfOracleN).
+    * the in-plan LUTs), the m-term ADC fold re-assembled in j order
+    * (`list_sum(list(d ORDER BY j))` ≡ the left-fold `aggregate` with 0.0
+    * seed), stab'd adc_cos shortlist, and the exact stab'd-cosine
+    * re-rank. With `nprobe` > 0 the candidate set is first restricted to
+    * the query's `nprobe` best LABEL cells (the IVF-PQ composition — the
+    * label router CTEs of knnIvfOracleN).
     */
   def knnPqOracle(m: Int, kCodes: Int, iters: Int, sub: Int,
                   nQueries: Int, k: Int, shortlist: Int,
@@ -636,22 +641,7 @@ object SimilarityQueries {
       s"  SELECT $j AS j, e.vec_id, l.query_id, l.d FROM enc$j e JOIN lut$j l ON l.code = e.cell")
       .mkString("\n  UNION ALL\n")
     val routeCtes = if (nprobe <= 0) "" else
-      s""",
-         |cent AS (
-         |  SELECT label, i, ${stabSql("avg(e[i])")} AS c
-         |  FROM (SELECT em.label, v.e FROM embeddings em JOIN v ON em.vec_id = v.vec_id),
-         |       unnest(range(1, len(e)+1)) t(i)
-         |  GROUP BY label, i),
-         |qd AS (
-         |  SELECT q.vec_id AS query_id, cent.label,
-         |    ${stabSql("sum(q.e[cent.i] * cent.c)")} AS qdot
-         |  FROM v q, cent WHERE q.vec_id < $nQueries
-         |  GROUP BY 1, 2),
-         |probes AS (
-         |  SELECT query_id, label AS probe_label FROM (
-         |    SELECT query_id, label,
-         |      row_number() OVER (PARTITION BY query_id ORDER BY qdot DESC, label) AS rn
-         |    FROM qd) WHERE rn <= $nprobe)""".stripMargin
+      ",\n" + labelRouteCtes(nQueries, nprobe, stabSql)
     val routeJoin = if (nprobe <= 0) "" else
       s"""
          |  JOIN embeddings em ON em.vec_id = a.vec_id
@@ -677,9 +667,7 @@ object SimilarityQueries {
        |cand AS (
        |  SELECT s.query_id, s.neighbor_id, ${cosSql("a", "b")} AS cos
        |  FROM short s JOIN n a ON a.vec_id = s.query_id JOIN n b ON b.vec_id = s.neighbor_id),
-       |r AS (SELECT query_id, neighbor_id, cos,
-       |        row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-       |      FROM cand)
+       |${rankCte("r", "query_id, neighbor_id, cos", "cand")}
        |SELECT query_id, neighbor_id, cos, rank FROM r
        |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
   }

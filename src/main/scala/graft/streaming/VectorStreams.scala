@@ -6,8 +6,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming twin of the vector-index pipeline: embeddings arrive
   * continuously and fold into the persisted k-means IVF layout, so ANN
-  * queries (`Similarity.knnIvfKmeansIndexed`) keep partition-pruning to
-  * probed cells while the corpus grows.
+  * queries (`Similarity.ivfTopKIndexed` with k-means cells) keep
+  * partition-pruning to probed cells while the corpus grows.
   *
   * Centroids stay FIXED during ingest — the standard IVF discipline: cell
   * assignment must agree with what queries probe, so the coarse quantizer
@@ -37,8 +37,7 @@ object VectorStreams {
     graft.operators.DirSwap.requireClean(indexDir, "centroids")
     val cent = spark.read.parquet(s"$indexDir/centroids")
     val p = Similarity.prepared(batch)
-    graft.operators.BatchCommit.writeBatch(
-      p.join(Similarity.kmeansAssign(p.select("vec_id", "e"), cent), "vec_id"),
+    graft.operators.BatchCommit.writeBatch(Similarity.kmeansAssign(p, cent),
       s"$indexDir/cells", batchId, partitionCols = Seq("cell"))
     // post-write guard: a retrain acquiring the lease mid-batch could
     // fold the generation this batch just wrote into — fail before the
@@ -48,8 +47,8 @@ object VectorStreams {
   }
 
   /** Always-on embedding ingest: readStream of (vec_id, embedding) →
-    * foreachBatch into the IVF index built by
-    * `Similarity.buildKmeansIvfIndex`. foreachBatch (not a stateful
+    * foreachBatch into a k-means IVF index built by
+    * `Similarity.buildIvfIndex`. foreachBatch (not a stateful
     * operator) because the index is a persistent queryable table shared
     * with batch queries — same layout decision as IncrementalIndex and
     * the near-dup signature store; same batch-keyed replay idempotence
@@ -78,16 +77,14 @@ object VectorStreams {
     val cbs = Similarity.pqCodebooksFromDf(
       spark.read.parquet(s"$indexDir/codebooks"))
     val p = Similarity.prepared(batch)
-    graft.operators.BatchCommit.writeBatch(
-      Similarity.pqEncode(p.select("vec_id", "e"), cbs)
-        .join(p.select("vec_id", "nrm"), "vec_id"),
+    graft.operators.BatchCommit.writeBatch(Similarity.pqEncode(p, cbs),
       s"$indexDir/codes", batchId)
     graft.operators.Lease.check(indexDir) // see ingestVectorBatch
     graft.operators.BatchCommit.requireIntact(spark, s"$indexDir/codes", batchId)
   }
 
   /** Always-on PQ ingest: arriving embeddings are encoded and folded into
-    * the persisted code table; ANN queries (`Similarity.knnPqIndexed`)
+    * the persisted code table; ANN queries (`Similarity.knnPqBatch`)
     * keep scanning codes-only while the corpus grows.
     */
   def pqIngest(vectors: DataFrame, indexDir: String): StreamingQuery =
@@ -219,9 +216,7 @@ object VectorStreams {
     val cbs = Similarity.pqCodebooks(p.select("vec_id", "e"), m, kCodes, iters)
     graft.operators.DirSwap.swap(indexDir, Seq(
       "codes" -> { out =>
-        Similarity.pqEncode(p.select("vec_id", "e"), cbs)
-          .join(p.select("vec_id", "nrm"), "vec_id")
-          .write.parquet(s"$out/batch=base")
+        Similarity.pqEncode(p, cbs).write.parquet(s"$out/batch=base")
         // folded-ledger: ids this re-encode absorbs must not replay in
         // next to their folded copy (possibly coded by OLD codebooks)
         graft.operators.BatchCommit.recordFolded(spark, out, s"$indexDir/codes",
@@ -272,7 +267,7 @@ object VectorStreams {
         // here: the ingest's checkpoint must have COMMITTED its last batch
         // before the retrain — a batch crash-replayed across the fold
         // would re-enter under the new centroids next to its folded copy.
-        cur.join(Similarity.kmeansAssign(cur.select("vec_id", "e"), cent), "vec_id")
+        Similarity.kmeansAssign(cur, cent)
           .write.partitionBy("cell").parquet(s"$out/batch=base")
         // folded-ledger: a pre-fold batch replayed after this retrain
         // would re-enter celled by the NEW centroids next to its folded

@@ -360,8 +360,10 @@ class MaintenanceSpec extends AnyFunSuite {
     // unique kind per test run → a fresh /tmp/graft-<kind> namespace
     val kind = s"spec-pub-${java.util.UUID.randomUUID.toString.take(8)}"
     val kindDir = Paths.get(s"/tmp/graft-$kind")
-    def entryName: String = d.replaceAll("[^A-Za-z0-9.]", "_") +
+    def entryName: String = Persisted.sanitized(d) +
       s"_${Persisted.fingerprint(spark, d, "src.parquet")}"
+    // a leading `_` would make Spark skip the entry as a hidden path
+    assert(!entryName.startsWith("_") && !entryName.startsWith("."), entryName)
     try {
       // 1. crashed-write debris: a dir with data files but NO _SUCCESS must
       //    be rebuilt, not read through (the round-11 in-place overwrite

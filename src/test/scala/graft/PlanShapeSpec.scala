@@ -44,10 +44,6 @@ class PlanShapeSpec extends AnyFunSuite {
       Thread.sleep(1000)
       assert(jobs == 0,
         s"batch ANN plan construction submitted $jobs Spark job(s) — a driver collect leaked in")
-      // contrast: the SERVING twin collects query vectors at construction
-      graft.operators.Similarity.knnPqFromCodes(emb, codes, cbs, 10, 5)
-      Thread.sleep(1000)
-      assert(jobs > 0, "expected the serving twin's construction-time collect as contrast")
       // and the batch plans are real: they execute to full k per query
       assert(ivfPlan.count() == 50L)
       assert(pqPlan.count() == 50L)
@@ -208,13 +204,13 @@ class PlanShapeSpec extends AnyFunSuite {
   test("knn_ivf_indexed: single label-pruned cells scan, no unpruned join-back") {
     val df = SparkEntry.queries("knn_ivf_indexed")(spark, d)
     val scans = df.queryExecution.executedPlan.toString
-    assert(scans.contains("PartitionFilters: [label"))
+    assert(scans.contains("PartitionFilters: [cell"))
     // the regression shape was a SECOND, unpruned cells scan reading just
-    // (vec_id, label) joined back to recover the partition column; its
+    // (vec_id, cell) joined back to recover the partition column; its
     // scan signature must not reappear (all other scans read embeddings
     // or centroid columns)
-    assert("FileScan parquet \\[vec_id#\\d+,\\s*label#\\d+\\]".r
-      .findFirstIn(scans).isEmpty, "unpruned (vec_id,label) cells scan")
+    assert("FileScan parquet \\[vec_id#\\d+,\\s*cell#\\d+\\]".r
+      .findFirstIn(scans).isEmpty, "unpruned (vec_id,cell) cells scan")
   }
 
   test("knn_pq: ADC stage scans the code table, vectors only in the re-rank") {

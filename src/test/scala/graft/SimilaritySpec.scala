@@ -170,9 +170,10 @@ class SimilaritySpec extends AnyFunSuite {
     for (d <- Seq(TestSpark.sf0001, TestSpark.sf001)) {
       val emb = graft.sources.Tables.embeddings(spark, d)
       val dir = java.nio.file.Files.createTempDirectory("graft_ivf_np").toString
-      Similarity.buildIvfIndex(emb, dir)
+      Similarity.buildIvfIndex(emb, dir, Similarity.LabelCells)
       val q = emb.filter(col("vec_id") < 10)
-      def top(n: Int) = Similarity.ivfTopKIndexed(spark, dir, q, 5, nprobe = n)
+      def top(n: Int) =
+        Similarity.ivfTopKIndexed(spark, dir, Similarity.LabelCells, q, 5, nprobe = n)
         .select("query_id", "neighbor_id")
         .as[(Long, Long)].collect().toSet
       val p1 = top(1)
@@ -197,14 +198,14 @@ class SimilaritySpec extends AnyFunSuite {
     // path — centroids aggregate to identical stab'd values either way,
     // so rows (cosines and ranks included) must match exactly
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_batch").toString
-    Similarity.buildIvfIndex(emb, dir)
+    Similarity.buildIvfIndex(emb, dir, Similarity.LabelCells)
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("query_id", "probe_label", "neighbor_id", "cos", "rank")
       .as[(Long, Int, Long, Double, Long)].collect().sortBy(r => (r._1, r._5)).toSeq
     assert(rows(Similarity.ivfTopKBatch(emb, q, 5, nprobe = 2)) ==
-      rows(Similarity.ivfTopKIndexed(spark, dir, q, 5, nprobe = 2)))
-    // PQ: in-plan LUTs vs driver-built LUTs — identical fold orders, so
-    // the shortlists, exact-re-rank cosines, and ranks are bit-identical
+      rows(Similarity.ivfTopKIndexed(spark, dir, Similarity.LabelCells, q, 5, nprobe = 2)))
+    // PQ: codebooks trained inside the call vs a query table against
+    // prebuilt codes — training is deterministic, so the rows are equal
     val p = Similarity.prepared(emb)
     val cbs = Similarity.pqCodebooks(p.select("vec_id", "e"), 8, 16, 5)
     val codes = Similarity.pqEncode(p.select("vec_id", "e"), cbs)
@@ -212,7 +213,7 @@ class SimilaritySpec extends AnyFunSuite {
     def pqRows(df: org.apache.spark.sql.DataFrame) = df
       .select("query_id", "neighbor_id", "cos", "rank")
       .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)).toSeq
-    val serving = pqRows(Similarity.knnPqFromCodes(emb, codes, cbs, 10, 5))
+    val serving = pqRows(Similarity.knnPq(emb, 10, 5))
     val batch = pqRows(Similarity.knnPqBatchFromCodes(emb, q, codes,
       Similarity.pqCodebooksToDf(spark, cbs)))
     assert(serving == batch)
@@ -228,9 +229,9 @@ class SimilaritySpec extends AnyFunSuite {
     val cbs = Similarity.pqCodebooks(p.select("vec_id", "e"), 8, 16, 5)
     val codes = Similarity.pqEncode(p.select("vec_id", "e"), cbs)
       .join(p.select("vec_id", "nrm"), "vec_id")
-      .join(emb.select("vec_id", "label"), "vec_id")
-    val ivfpq = Similarity.knnIvfPqBatchFromCodes(emb, q, codes,
-        Similarity.pqCodebooksToDf(spark, cbs))
+      .join(emb.select(col("vec_id"), col("label").as("cell")), "vec_id")
+    val ivfpq = Similarity.knnPqBatchFromCodes(emb, q, codes,
+        Similarity.pqCodebooksToDf(spark, cbs), nprobe = 2)
       .select("query_id", "neighbor_id", "cos")
       .as[(Long, Long, Double)].collect()
     assert(ivfpq.length == 50) // full k for every query
@@ -268,8 +269,10 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("ivfTopK routes each query to its own cell") {
+    import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val r = Similarity.ivfTopK(vecs, 2, 3)
+    // the probe-1 tier: ivfTopKBatch at nprobe = 1
+    val r = Similarity.ivfTopKBatch(vecs, vecs.filter(col("vec_id") < 2), 3, nprobe = 1)
       .select("query_id", "probe_label", "neighbor_id")
       .as[(Long, Int, Long)].collect().toSeq
     // query 0 probes label 0 (centroid along x), finds 10 and 11 only
@@ -278,5 +281,67 @@ class SimilaritySpec extends AnyFunSuite {
     // query 1 probes label 1, finds 12
     assert(r.filter(_._1 == 1L).map(_._2).forall(_ == 1))
     assert(r.filter(_._1 == 1L).map(_._3).toSet == Set(12L))
+  }
+
+  test("ADC stage keys its LUT by (j, code): short and holed codebooks match brute force") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val emb = graft.sources.Tables.embeddings(spark, TestSpark.sf0001)
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select("query_id", "neighbor_id", "cos", "rank")
+      .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)).toSeq
+    // with shortlist·k ≥ corpus − 1 the exact rerank sees every candidate,
+    // so whatever the codebooks, the rows are brute force's
+    def check(corpus: org.apache.spark.sql.DataFrame,
+              cbs: Seq[Seq[(Int, Seq[Double])]], shortlist: Int): Unit = {
+      val got = rows(Similarity.knnPqBatchFromCodes(corpus, corpus.filter(col("vec_id") < 10),
+        Similarity.pqEncode(Similarity.prepared(corpus), cbs),
+        Similarity.pqCodebooksToDf(spark, cbs), k = 5, shortlist = shortlist))
+      assert(got.length == 50)
+      assert(got == rows(Similarity.bruteForceTopK(corpus, 10, 5)))
+    }
+    // a 12-vector corpus: every subspace trains 12 codes, not kCodes = 16
+    val small = emb.filter(col("vec_id") < 12)
+    val smallCbs = Similarity.pqCodebooks(
+      Similarity.prepared(small).select("vec_id", "e"), 8, 16, 5)
+    assert(smallCbs.forall(_.length == 12))
+    check(small, smallCbs, shortlist = 3)
+    // a Lloyd cell that dropped out: code 3 of subspace 0 is missing
+    val cbs = Similarity.pqCodebooks(Similarity.prepared(emb).select("vec_id", "e"), 8, 16, 5)
+    val holed = cbs.updated(0, cbs(0).filterNot(_._1 == 3))
+    assert(holed(0).length == cbs(0).length - 1)
+    check(emb, holed, shortlist = 100)
+  }
+
+  test("pqCodebooks on an empty table names the empty input") {
+    val emb = graft.sources.Tables.embeddings(spark, TestSpark.sf0001)
+    val err = intercept[IllegalArgumentException](Similarity.pqCodebooks(
+      Similarity.prepared(emb.limit(0)).select("vec_id", "e"), 8, 16, 5))
+    assert(err.getMessage.contains("empty"), err.getMessage)
+  }
+
+  test("kNN tiers on an 8-file copy take the scale branch and return the same rows") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val emb = graft.sources.Tables.embeddings(spark, TestSpark.sf0001)
+    val dir = java.nio.file.Files.createTempDirectory("graft_emb8").toString
+    emb.repartition(8).write.parquet(s"$dir/embeddings.parquet")
+    val emb8 = graft.sources.Tables.embeddings(spark, dir)
+    // the trainer behind knn_ivf_kmeans and the PQ codebooks plans through
+    // Spread.tight: on this copy it keeps the partitioned (scale) plan
+    assert(!graft.operators.Spread.isTiny(emb8))
+    assert(graft.operators.Spread.isTiny(emb))
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
+      .as[(Long, Long, Double, Long)].collect().sortBy(r => (r._1, r._4)).toSeq
+    type Tier = org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame
+    for ((name, tier) <- Seq[(String, Tier)](
+        "knnIvfKmeans" -> (e => Similarity.knnIvfKmeans(e, 10, 5)),
+        "knnPq" -> (e => Similarity.knnPq(e, 10, 5)),
+        "ivfTopKBatch" -> (e => Similarity.ivfTopKBatch(e, e.filter(col("vec_id") < 10), 5)))) {
+      val one = rows(tier(emb))
+      assert(one.length == 50, name)
+      assert(rows(tier(emb8)) == one, name)
+    }
   }
 }

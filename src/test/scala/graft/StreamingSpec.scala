@@ -443,8 +443,8 @@ class StreamingSpec extends AnyFunSuite {
     val emb = graft.sources.Tables.embeddings(spark, TestSpark.sf0001)
     val idx = java.nio.file.Files.createTempDirectory("vecidx").toString
     // build the index (and train centroids) on the first half of the corpus
-    graft.operators.Similarity.buildKmeansIvfIndex(
-      emb.filter(col("vec_id") % 2 === 0), idx)
+    graft.operators.Similarity.buildIvfIndex(
+      emb.filter(col("vec_id") % 2 === 0), idx, graft.operators.Similarity.KmeansCells())
     def cellsNow = graft.operators.Similarity.cellsTable(spark, idx)
     val before = cellsNow.count()
     // stream in the second half as two micro-batches
@@ -471,13 +471,13 @@ class StreamingSpec extends AnyFunSuite {
     val cent = spark.read.parquet(s"$idx/centroids")
     val p = graft.operators.Similarity.prepared(emb.filter(col("vec_id") % 2 === 1))
     val want = graft.operators.Similarity.kmeansAssign(p.select("vec_id", "e"), cent)
-      .as[(Long, Int)].collect().toMap
+      .select("vec_id", "cell").as[(Long, Int)].collect().toMap
     val got = cells.select("vec_id", "cell").as[(Long, Int)].collect()
       .filter(x => x._1 % 2 == 1).toMap
     assert(got == want)
     // ANN query over the grown index still partition-prunes
-    val df = graft.operators.Similarity.knnIvfKmeansIndexed(
-      spark, idx, emb.filter(col("vec_id") < 5), 3)
+    val df = graft.operators.Similarity.ivfTopKIndexed(
+      spark, idx, graft.operators.Similarity.KmeansCells(), emb.filter(col("vec_id") < 5), 3)
     assert(df.queryExecution.executedPlan.toString.contains("PartitionFilters: [cell"))
     assert(df.count() > 0)
   }
@@ -545,8 +545,8 @@ class StreamingSpec extends AnyFunSuite {
     val orig = (0 until 240).map(i => mk(i, origCenters(i % 8)))
     val drift = (240 until 480).map(i => mk(i, driftCenters(i % 8)))
     val idx = java.nio.file.Files.createTempDirectory("retrainidx").toString
-    graft.operators.Similarity.buildKmeansIvfIndex(
-      orig.toDF("vec_id", "embedding", "label"), idx, kCells = 8, iters = 5)
+    graft.operators.Similarity.buildIvfIndex(
+      orig.toDF("vec_id", "embedding", "label"), idx, graft.operators.Similarity.KmeansCells(8, 5))
     val mem = MemoryStream[(Long, Array[Float], Int)]
     val q = graft.streaming.VectorStreams.vectorIngest(
       mem.toDF.toDF("vec_id", "embedding", "label"), idx)
@@ -566,8 +566,9 @@ class StreamingSpec extends AnyFunSuite {
         .sortBy { case (id, c) => (-c, id) }.take(5).map(_._1).toSet
     }.toMap
     def recallNow(): Double = {
-      val approx = graft.operators.Similarity.knnIvfKmeansIndexed(
-          spark, idx, queries.toDF("vec_id", "embedding", "label"), 5, nprobe = 1)
+      val approx = graft.operators.Similarity.ivfTopKIndexed(
+          spark, idx, graft.operators.Similarity.KmeansCells(),
+          queries.toDF("vec_id", "embedding", "label"), 5, nprobe = 1)
         .select("query_id", "neighbor_id").as[(Long, Long)].collect()
         .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
       queries.map { case (qid, _, _) =>

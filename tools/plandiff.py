@@ -29,11 +29,13 @@ KINDS = ("Exchange", "Window", "Join", "Aggregate", "Sort")
 
 def _strip_path(m):
     parts = [p for p in m.group(1).split("/") if p]
-    kind = [p for p in parts if p.startswith("graft-")]
-    # a component starting with "_" is a persisted dir named after the
-    # data dir path and its mtime; drop it with the prefix
-    tail = [p for p in parts[-2:] if not p.startswith("_") and p not in kind]
-    return "file:…/" + "/".join(kind[:1] + (["…"] if kind else []) + tail)
+    k = next((i for i, p in enumerate(parts) if p.startswith("graft-")), None)
+    # the component after a graft-<kind> dir is a persisted entry named
+    # after the data dir path and its mtime; drop it with the prefix
+    skip = set() if k is None else {k, k + 1}
+    tail = [p for i, p in enumerate(parts) if i >= len(parts) - 2 and i not in skip]
+    kind = [] if k is None else [parts[k], "…"]
+    return "file:…/" + "/".join(kind + tail)
 
 
 RULES = [
