@@ -700,46 +700,47 @@ object Dedup {
       expr("shiftleft(CAST(1 AS BIGINT), j)"))
   }
 
-  /** SimHash near-dup pairs at hamming distance <= maxHamming, via
-    * pigeonhole banding instead of an all-pairs nested-loop join: split the
-    * hash into maxHamming+1 disjoint `chunks` — any pair within the
-    * distance budget differs in at most maxHamming bits, so at least one
-    * chunk is untouched and the pair collides on an exact (chunk, value)
-    * key. Candidate generation is therefore an equi-join on chunk buckets
-    * (shuffle-hash-joinable at any scale); the exact hamming filter then
-    * drops false candidates. Identical output to the all-pairs formulation.
+  /** Near-dup pairs at hamming distance <= `maxHamming` over the
+    * `bits`-wide hash column `hash` of `df`, by pigeonhole blocking
+    * instead of an all-pairs nested-loop join: each row emits candidate
+    * keys such that any two hashes within the budget share at least one,
+    * so candidate generation is an EQUI-join on the key (shuffle-hash-
+    * joinable at any scale), and the exact bit_count verify drops the
+    * false candidates — identical output to the all-pairs formulation.
+    * The keys follow from `maxHamming`:
+    *   - 1: the hash and its `bits` one-bit flips (two hashes one bit
+    *     apart meet on a flip of either);
+    *   - >= 2: `maxHamming + 1` disjoint chunks, the first
+    *     `bits % (maxHamming + 1)` one bit wider (16 bits → 6/5/5,
+    *     60 → 20/20/20) — a pair differing in at most maxHamming bits
+    *     leaves one chunk untouched. A key is the chunk value with the
+    *     chunk index in its high word.
+    * A pair can meet on several keys, hence the distinct. Null hashes
+    * never pair. Returns (doc_a, doc_b, hamming) with doc_a < doc_b.
     */
-  private def simhashPairsOf(sh: DataFrame, maxHamming: Int,
-                             chunks: Seq[Column]): DataFrame = {
-    require(maxHamming == 2, "the chunk layouts are specialized to maxHamming = 2")
-    val cs = array(chunks.zipWithIndex.map { case (c, k) =>
-      struct(lit(k).as("ck"), c.as("cv"))
-    }: _*)
-    val cr = sh.select(col("doc_id"), col("simhash"), explode(cs).as("c"))
-      .select(col("doc_id"), col("simhash"), col("c.ck").as("ck"), col("c.cv").as("cv"))
-    cr.as("a").join(cr.as("b"),
-        col("a.ck") === col("b.ck") && col("a.cv") === col("b.cv") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long").as("hamming"))
+  def hammingPairs(df: DataFrame, id: String, hash: String, bits: Int,
+                   maxHamming: Int): DataFrame = {
+    require(bits >= 1 && bits <= 64 && maxHamming >= 1,
+      s"hammingPairs: $bits bits, maxHamming $maxHamming")
+    val h = col(hash)
+    val keys =
+      if (maxHamming == 1) h +: (0 until bits).map(k => h.bitwiseXOR(lit(1L << k)))
+      else {
+        val n = maxHamming + 1
+        val widths = (0 until n).map(k => bits / n + (if (k < bits % n) 1 else 0))
+        widths.indices.map { k =>
+          shiftright(h, widths.take(k).sum).bitwiseAND(lit((1L << widths(k)) - 1))
+            .bitwiseOR(lit(k.toLong << 32))
+        }
+      }
+    val kr = df.filter(h.isNotNull).select(col(id), h, explode(array(keys: _*)).as("key"))
+    kr.as("a").join(kr.as("b"),
+        col("a.key") === col("b.key") && col(s"a.$id") < col(s"b.$id"))
+      .select(col(s"a.$id").as("doc_a"), col(s"b.$id").as("doc_b"),
+        bit_count(col(s"a.$hash").bitwiseXOR(col(s"b.$hash"))).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .distinct() // a pair can collide on 2-3 chunks
+      .distinct()
   }
-
-  /** Pigeonhole pairs over the 16-bit hash: chunks are bits 0-5, 6-10
-    * and 11-15. */
-  def simhashPairs(sh: DataFrame, maxHamming: Int = 2): DataFrame =
-    simhashPairsOf(sh, maxHamming, Seq(
-      col("simhash").bitwiseAND(63),
-      shiftright(col("simhash"), 6).bitwiseAND(31),
-      shiftright(col("simhash"), 11).bitwiseAND(31)))
-
-  /** Pigeonhole pairs over the 60-bit hash: 3 disjoint 20-bit chunks, so
-    * candidate buckets are ~2^20 per chunk. */
-  def simhashPairs60(sh: DataFrame, maxHamming: Int = 2): DataFrame =
-    simhashPairsOf(sh, maxHamming, (0 until 3).map { k =>
-      shiftright(col("simhash"), k * 20).bitwiseAND(lit((1L << 20) - 1))
-    })
 
   /** Content-novelty filter for an ingest batch — the "seen this exact
     * document before?" gate a crawler runs on every snapshot (re-fetches

@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Row}
 
+import scala.util.control.NonFatal
+
 /** Multimodal column plumbing: image/audio/video as opaque BINARY payloads
   * with typed metadata, plus a decode/feature-extract stage.
   *
@@ -15,18 +17,154 @@ import org.apache.spark.sql.{DataFrame, Row}
   * byte-derived STUB survives only as the corrupt-payload fallback, so a
   * payload no codec can parse is data, not a crash.
   *
-  * Scale posture: payloads never pass through a shuffle here — decode is a
-  * narrow mapPartitions directly over the scan; metadata-only queries
-  * (count by modality, size stats) prune the payload column entirely at the
-  * parquet reader.
+  * Scale posture: payloads never pass through a shuffle here — every
+  * encoder and decoder is one narrow mapPartitions directly over the scan
+  * ([[decodeFrame]]); metadata-only queries (count by modality, size
+  * stats) prune the payload column entirely at the parquet reader.
   */
 object Multimodal {
 
+  private val idField = StructField("media_id", LongType, nullable = false)
+
   val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
+    idField,
     StructField("modality", StringType, nullable = false),
     StructField("payload", BinaryType),
     StructField("meta_source", StringType)))
+
+  /** Nullable output fields, by name and type. */
+  private def fieldsOf(specs: (String, DataType)*): Seq[StructField] =
+    specs.map { case (n, t) => StructField(n, t) }
+
+  /** The one frame every encoder and decoder runs in: `in`'s rows (a LONG
+    * id first, then what the codec reads) map narrowly, per partition and
+    * never through a shuffle, to rows of `media_id LONG NOT NULL` +
+    * `fields`. `decoder` is evaluated once per partition, so pooled
+    * readers live in it; it maps one input row to its output rows, id
+    * excluded (Rows, not Seqs: a Seq literal of Int and Long values
+    * would widen the Ints, which the Int fields reject). A NonFatal
+    * throw or a null result becomes the one all-null row — corrupt files
+    * are data, not crashes; an empty result emits no row.
+    */
+  private def decodeFrame(in: DataFrame, fields: Seq[StructField])(
+      decoder: => Row => Seq[Row]): DataFrame = {
+    val nulls = Seq(Row.fromSeq(Seq.fill(fields.length)(null)))
+    val out = in.rdd.mapPartitions { rows =>
+      val decode = decoder
+      rows.flatMap { r =>
+        val res = try decode(r) catch { case NonFatal(_) => null }
+        (if (res == null) nulls else res).map(v => Row.fromSeq(r.getLong(0) +: v.toSeq))
+      }
+    }
+    in.sparkSession.createDataFrame(out, StructType(idField +: fields))
+  }
+
+  /** [[decodeFrame]] over the payload column, one output row per media:
+    * `decoder` maps the payload bytes to the row's values, or null.
+    */
+  private def decodeEach(media: DataFrame, fields: Seq[StructField])(
+      decoder: => Array[Byte] => Row): DataFrame =
+    decodeFrame(media.select("media_id", "payload"), fields) {
+      val decode = decoder
+      r => Option(decode(r.getAs[Array[Byte]](1))).map(Seq(_)).orNull
+    }
+
+  /** A fixture as a media table (media_id, payload) over one doc population
+    * (doc_id % 3 == `residue`) — generated in place, never shuffled.
+    */
+  private def encodeEach(docs: DataFrame, residue: Int)(
+      encode: Long => Array[Byte]): DataFrame =
+    decodeFrame(docs.filter(col("doc_id") % 3 === residue).select("doc_id"),
+      Seq(StructField("payload", BinaryType, nullable = false))) { r =>
+      Seq(Row(encode(r.getLong(0))))
+    }
+
+  /** The one image read: javax.imageio over the payload bytes, null when
+    * no reader parses them. NonFatal, not just IOException: ImageIO
+    * readers throw runtime exceptions (IllegalArgument,
+    * ArrayIndexOutOfBounds, NegativeArraySize) on payloads with a valid
+    * magic number but a malformed body — those are corrupt DATA.
+    */
+  private def readImage(payload: Array[Byte]): java.awt.image.BufferedImage =
+    try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
+    catch { case NonFatal(_) => null }
+
+  /** [[decodeEach]] over the decoded image; an unreadable payload is the
+    * null row. */
+  private def decodeImages(media: DataFrame, fields: Seq[StructField])(
+      decoder: java.awt.image.BufferedImage => Row): DataFrame =
+    decodeEach(media, fields) { p =>
+      val img = readImage(p)
+      if (img == null) null else decoder(img)
+    }
+
+  /** Open `payload` with the first javax.imageio reader that accepts it
+    * and hand the reader to `f`; None when no reader does. Reader and
+    * stream are released in finally (an unclosed ImageInputStream leaks
+    * its disk-cache temp file).
+    */
+  private def withReader[T](payload: Array[Byte])(
+      f: javax.imageio.ImageReader => T): Option[T] = {
+    val iis = javax.imageio.ImageIO.createImageInputStream(
+      new java.io.ByteArrayInputStream(payload))
+    try {
+      val readers = javax.imageio.ImageIO.getImageReaders(iis)
+      if (!readers.hasNext) None
+      else {
+        val reader = readers.next()
+        try { reader.setInput(iis); Some(f(reader)) } finally reader.dispose()
+      }
+    } finally try iis.close() catch { case _: java.io.IOException => () }
+  }
+
+  private def openAudio(payload: Array[Byte]): javax.sound.sampled.AudioInputStream =
+    javax.sound.sampled.AudioSystem.getAudioInputStream(
+      new java.io.ByteArrayInputStream(payload))
+
+  /** The one 16-bit PCM read the four signal decoders share: (sample
+    * rate, raw frame bytes) of a WAV payload. They all read the frames as
+    * 16-bit mono little-endian signed PCM, and a VALID WAV in any other
+    * layout (stereo, 8-bit, big-endian, float) would decode into a
+    * silently wrong signature rather than fail — so the format is checked
+    * up front and a mismatch is null, the corrupt-payload row.
+    */
+  private def readPcm16(payload: Array[Byte]): (Int, Array[Byte]) = {
+    val ais = openAudio(payload)
+    val f = ais.getFormat
+    if (f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
+        f.getSampleSizeInBits == 16 && f.getChannels == 1 && !f.isBigEndian)
+      (f.getSampleRate.toInt, ais.readAllBytes())
+    else null
+  }
+
+  /** Sample i of 16-bit little-endian PCM bytes. */
+  private def sample(pcm: Array[Byte], i: Int): Int =
+    ((pcm(2 * i + 1).toInt << 8) | (pcm(2 * i) & 0xff)).toShort
+
+  /** [[decodeEach]] over (sample rate, PCM bytes); a payload that is not
+    * 16-bit mono PCM is the null row. */
+  private def decodePcm(media: DataFrame, fields: Seq[StructField])(
+      decoder: (Int, Array[Byte]) => Row): DataFrame =
+    decodeEach(media, fields) { p =>
+      val pcm = readPcm16(p)
+      if (pcm == null) null else decoder(pcm._1, pcm._2)
+    }
+
+  /** Big-endian unsigned integer of `len` bytes at `off`. EBML uints are
+    * 0..8 octets (RFC 8794 §7.1); a wider field is malformed and throws
+    * rather than wrapping through the Long shift.
+    */
+  private def beUint(buf: Array[Byte], off: Int, len: Int): Long = {
+    require(len <= 8, s"uint of $len octets")
+    var v = 0L
+    var i = 0
+    while (i < len) { v = (v << 8) | (buf(off + i) & 0xffL); i += 1 }
+    v
+  }
+
+  private def be32(buf: Array[Byte], off: Int): Long = beUint(buf, off, 4)
+
+  private def be16(buf: Array[Byte], off: Int): Int = beUint(buf, off, 2).toInt
 
   /** Synthesize a deterministic media table from `documents`: payload =
     * UTF-8 bytes of the text (stand-in for real image/audio bytes),
@@ -152,75 +290,42 @@ object Multimodal {
     * (javax.imageio sequence writer). Narrow: payloads are generated in
     * place, never shuffled.
     */
-  def withRealMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val base = fromDocuments(docs)
-    val out = base.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val payload = r.getString(1) match {
-          case "image" => encodePng(id)
-          case "audio" => encodeWav(id)
-          case _ => encodeGif(id)
-        }
-        Row(id, r.getString(1), payload, r.getString(3))
+  def withRealMedia(docs: DataFrame): DataFrame =
+    decodeFrame(fromDocuments(docs), mediaSchema.fields.toSeq.tail) { r =>
+      val id = r.getLong(0)
+      val payload = r.getString(1) match {
+        case "image" => encodePng(id)
+        case "audio" => encodeWav(id)
+        case _ => encodeGif(id)
       }
+      Seq(Row(r.getString(1), payload, r.getString(3)))
     }
-    spark.createDataFrame(out, mediaSchema)
-  }
 
   /** Decode video (multi-frame GIF) payloads with the real codec: frame
-    * count from the reader's frame enumeration, dims from frame 0. Narrow
-    * mapPartitions over the scan; non-decodable payloads surface as NULL
-    * fields rather than a crash.
+    * count from the reader's frame enumeration, dims from frame 0, through
+    * one pooled GIF reader per partition. Non-decodable payloads surface
+    * as NULL fields rather than a crash.
     */
-  def decodeVideoMeta(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("n_frames", IntegerType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType)))
-    val out = media.select("media_id", "payload").rdd.mapPartitions { rows =>
+  def decodeVideoMeta(media: DataFrame): DataFrame =
+    decodeEach(media, fieldsOf("n_frames" -> IntegerType, "width" -> IntegerType,
+        "height" -> IntegerType)) {
       lazy val gifReader =
         javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-      rows.map { r =>
-        val meta = gifMetaFast(gifReader, r.getAs[Array[Byte]]("payload"))
-        if (meta == null) Row(r.getLong(0), null, null, null)
-        else Row(r.getLong(0), meta._1, meta._2, meta._3)
-      }
+      p => Option(gifMeta(gifReader, p)).map(Row.fromTuple).orNull
     }
-    spark.createDataFrame(out, schema)
-  }
 
-  /** (n_frames, width, height) of a GIF payload, or null if no reader can
-    * parse it (NonFatal: corrupt files are data, not crashes).
+  /** (n_frames, width, height) of a video payload through a caller-POOLED
+    * GIF reader (one per partition, like `extractFeatures`' PNG reader):
+    * the per-row `getImageReaders` SPI registry scan + reader construction
+    * is the residual decode-meta jitter the round-11 pin chased. Anything
+    * the GIF codec can't parse falls back to the generic per-row reader,
+    * so a foreign-codec payload still decodes; null if none parses it.
     */
-  private def decodeGifMeta(payload: Array[Byte]): (Int, Int, Int) =
-    try {
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(payload))
-      val readers = javax.imageio.ImageIO.getImageReaders(iis)
-      if (!readers.hasNext) null
-      else {
-        val reader = readers.next()
-        try {
-          reader.setInput(iis)
-          (reader.getNumImages(true), reader.getWidth(0), reader.getHeight(0))
-        } finally { reader.dispose(); iis.close() }
-      }
-    } catch { case scala.util.control.NonFatal(_) => null }
-
-  /** Same metadata via a caller-POOLED GIF reader (one per partition, like
-    * `extractFeatures`' PNG reader): the per-row `getImageReaders` SPI
-    * registry scan + reader construction is the residual decode-meta
-    * jitter the round-11 pin chased. Returns null on anything the GIF
-    * codec can't parse — callers fall back to the generic per-row path so
-    * a foreign-codec payload still decodes exactly as before.
-    */
-  private def gifMetaPooled(reader: javax.imageio.ImageReader,
-                            payload: Array[Byte]): (Int, Int, Int) =
-    try {
+  private def gifMeta(reader: javax.imageio.ImageReader,
+                      payload: Array[Byte]): (Int, Int, Int) = {
+    def meta(r: javax.imageio.ImageReader) =
+      (r.getNumImages(true), r.getWidth(0), r.getHeight(0))
+    val pooled = try {
       val iis = javax.imageio.ImageIO.createImageInputStream(
         new java.io.ByteArrayInputStream(payload))
       try {
@@ -230,86 +335,35 @@ object Multimodal {
         // copy-pasted here, which made every row fall through to the slow
         // per-row SPI path). ignoreMetadata=true is still safe.
         reader.setInput(iis, false, true)
-        (reader.getNumImages(true), reader.getWidth(0), reader.getHeight(0))
+        meta(reader)
       } finally { reader.setInput(null); iis.close() }
-    } catch { case scala.util.control.NonFatal(_) => null }
-
-  private def gifMetaFast(reader: javax.imageio.ImageReader,
-                          payload: Array[Byte]): (Int, Int, Int) = {
-    val m = gifMetaPooled(reader, payload)
-    if (m != null) m else decodeGifMeta(payload)
+    } catch { case NonFatal(_) => null }
+    if (pooled != null) pooled
+    else try withReader(payload)(meta).orNull catch { case NonFatal(_) => null }
   }
 
   /** Decode audio payloads with the real codec (javax.sound.sampled):
     * parses the WAV header for true sample rate / frame count / channels.
-    * Narrow mapPartitions over the scan; non-decodable payloads surface as
-    * NULL fields rather than a crash.
+    * Non-decodable payloads surface as NULL fields rather than a crash.
     */
-  def decodeAudioMeta(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("sample_rate", IntegerType),
-      StructField("n_frames", LongType),
-      StructField("channels", IntegerType)))
-    val out = media.select("media_id", "payload").rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val meta = try {
-          val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("payload")))
-          val f = ais.getFormat
-          (f.getSampleRate.toInt, ais.getFrameLength, f.getChannels)
-        } catch { case _: Exception => null }
-        if (meta == null) Row(r.getLong(0), null, null, null)
-        else Row(r.getLong(0), meta._1, meta._2, meta._3)
-      }
+  def decodeAudioMeta(media: DataFrame): DataFrame =
+    decodeEach(media, fieldsOf("sample_rate" -> IntegerType, "n_frames" -> LongType,
+        "channels" -> IntegerType)) { p =>
+      val ais = openAudio(p)
+      val f = ais.getFormat
+      Row(f.getSampleRate.toInt, ais.getFrameLength, f.getChannels)
     }
-    spark.createDataFrame(out, schema)
-  }
 
   /** Decode image payloads with the real codec (javax.imageio): parses the
-    * PNG header/IDAT for true width × height. Narrow mapPartitions over the
-    * scan; non-decodable payloads surface as NULL dims rather than a crash
-    * (a 100 TB corpus always contains corrupt files).
+    * PNG header/IDAT for true width × height. Non-decodable payloads
+    * surface as NULL dims rather than a crash (a 100 TB corpus always
+    * contains corrupt files).
     */
-  def decodeImageDims(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType)))
-    val out = media.select("media_id", "payload").rdd.mapPartitions { rows =>
-      rows.map { r =>
-        // NonFatal, not just IOException: ImageIO readers throw runtime
-        // exceptions (IllegalArgument, ArrayIndexOutOfBounds, NegativeArray
-        // Size) on payloads with a valid magic number but malformed body —
-        // those are corrupt DATA, not crashes.
-        val img = try {
-          javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("payload")))
-        } catch { case scala.util.control.NonFatal(_) => null }
-        if (img == null) Row(r.getLong(0), null, null)
-        else Row(r.getLong(0), img.getWidth, img.getHeight)
-      }
+  def decodeImageDims(media: DataFrame): DataFrame =
+    decodeImages(media, fieldsOf("width" -> IntegerType, "height" -> IntegerType)) { img =>
+      Row(img.getWidth, img.getHeight)
     }
-    spark.createDataFrame(out, schema)
-  }
 
-  /** Perceptual (average) hash of image payloads from REAL pixel decode —
-    * the image-dedup primitive (near-identical images collide; aHash is
-    * the simplest of the pHash family). To keep the hash cross-engine
-    * exact, the usual area-resample is replaced by a fixed 6×10 POINT
-    * GRID: sample gray at (⌊gx·w/6⌋, ⌊gy·h/10⌋), bit j = gy·6+gx set iff
-    * 60·g_j > Σg — all integer arithmetic, so the DuckDB twin re-derives
-    * the identical 60-bit hash from the synthesis contract while Spark
-    * computes it from the DECODED PNG bytes. The mean-threshold makes
-    * the hash invariant to uniform brightness shifts (60·(g+c) >
-    * Σg+60·c ⇔ 60·g > Σg) — the fixture's same-dims images are exactly
-    * such shifts (mod-256 wraparound aside), which is what the pairs
-    * query surfaces. 60 bits on purpose: the hash drops straight into
-    * the simhashPairs60 pigeonhole banding for hamming-≤2 pair
-    * generation at scale.
-    */
   /** The 6×10-grid mean-threshold hash of one decoded frame — shared by
     * the image and video tiers so the two modalities can never drift.
     */
@@ -400,46 +454,16 @@ object Multimodal {
     hash
   }
 
-  def decodeImagePHash(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("phash", LongType)))
-    val out = media.select("media_id", "payload").rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val img = try {
-          javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("payload")))
-        } catch { case scala.util.control.NonFatal(_) => null }
-        if (img == null) Row(r.getLong(0), null)
-        else Row(r.getLong(0), gridPHash(img))
-      }
-    }
-    spark.createDataFrame(out, schema)
-  }
+  def decodeImagePHash(media: DataFrame): DataFrame =
+    decodeImages(media, fieldsOf("phash" -> LongType))(img => Row(gridPHash(img)))
 
-  /** Near-dup image pairs at hamming ≤ 1 over the 15-bit pHash by
-    * single-bit-flip pigeonhole blocking: every image emits its hash
-    * plus the 15 one-bit-flipped variants as join keys, so two hashes
-    * within hamming 1 share at least one key and the candidate stage is
-    * a pure EQUI-join (16 keys/image — constant blowup; no banding
-    * machinery needed at this hash width). Exact bit_count verify +
-    * distinct on the (a < b) pairs.
+  /** The sign fingerprint over PCM samples `idx`, first index in the
+    * highest bit: bit set iff the sample is strictly positive. Null when
+    * the clip ends before the last index.
     */
-  def phashPairs1(hashes: DataFrame): DataFrame = {
-    val keys = hashes.filter(col("phash").isNotNull)
-      .select(col("media_id"), col("phash"),
-        explode(typedLit((-1 until 15).toList)).as("k"))
-      .select(col("media_id"), col("phash"),
-        when(col("k") === -1, col("phash"))
-          .otherwise(expr("phash ^ shiftleft(CAST(1 AS BIGINT), k)")).as("key"))
-    keys.as("a").join(keys.as("b"),
-        col("a.key") === col("b.key") && col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("doc_a"), col("b.media_id").as("doc_b"),
-        expr("bit_count(a.phash ^ b.phash)").cast("long").as("hamming"))
-      .filter(col("hamming") <= 1)
-      .distinct()
-  }
+  private def signFp(pcm: Array[Byte], idx: Seq[Int]): Row =
+    if (idx.exists(_ >= pcm.length / 2)) null
+    else Row(idx.foldLeft(0L)((bits, i) => (bits << 1) | (if (sample(pcm, i) > 0) 1L else 0L)))
 
   /** 60-bit PCM sign fingerprint from REAL audio decode: bit i (of
     * samples 1..60) is set iff the decoded 16-bit sample is strictly
@@ -447,58 +471,15 @@ object Multimodal {
     * content signature — amplitude-invariant (any gain > 0 preserves
     * it), and two clips whose rate-normalized pitch is close differ in
     * only a few sign bits, so the fingerprint drops straight into the
-    * simhashPairs60 pigeonhole machinery for near-dup blocking. The
+    * `Dedup.hammingPairs` pigeonhole join for near-dup blocking. The
     * fixture's synthesis contract makes each bit EXACTLY re-derivable
     * by integer arithmetic — sign(sin(2π·f·i/rate)) is decided by
     * (f·i) mod rate vs rate/2, with |sin|·12000 ≥ 3.4 whenever the
     * residue is nonzero — so the oracle replays the fingerprint with
     * no floating point at all (MultimodalQueries.audioFpCte).
     */
-  /** All three audio decoders below read raw frames as 16-bit mono
-    * little-endian signed PCM; a VALID WAV in any other layout (stereo,
-    * 8-bit, big-endian, float) would decode into a silently wrong
-    * signature rather than fail, so the frame format is checked up front
-    * and a mismatch surfaces as the null row every corrupt-payload path
-    * already uses (round-14 advice).
-    */
-  private def isPcm16MonoLe(f: javax.sound.sampled.AudioFormat): Boolean =
-    f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-      f.getSampleSizeInBits == 16 && f.getChannels == 1 && !f.isBigEndian
-
-  def decodeAudioSignFp(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("fp", LongType)))
-    val out = media.select("media_id", "payload").rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val fp = try {
-          val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("payload")))
-          val buf = new Array[Byte](2 * 61) // samples 0..60, 16-bit mono LE
-          var off = 0
-          var n = 0
-          while (isPcm16MonoLe(ais.getFormat) && off < buf.length && n >= 0) {
-            n = ais.read(buf, off, buf.length - off)
-            if (n > 0) off += n
-          }
-          if (off < buf.length) null
-          else {
-            var bits = 0L
-            var i = 1
-            while (i <= 60) {
-              val s = ((buf(2 * i + 1).toInt << 8) | (buf(2 * i) & 0xff)).toShort
-              bits = (bits << 1) | (if (s > 0) 1L else 0L)
-              i += 1
-            }
-            java.lang.Long.valueOf(bits)
-          }
-        } catch { case scala.util.control.NonFatal(_) => null }
-        Row(r.getLong(0), fp)
-      }
-    }
-    spark.createDataFrame(out, schema)
-  }
+  def decodeAudioSignFp(media: DataFrame): DataFrame =
+    decodePcm(media, fieldsOf("fp" -> LongType))((_, pcm) => signFp(pcm, 1 to 60))
 
   /** ABSOLUTE-pitch variant of the sign fingerprint: the PCM is first
     * nearest-neighbor resampled to a common 22050 Hz grid (src index
@@ -511,38 +492,10 @@ object Multimodal {
     * verify absorbs.
     */
   def decodeAudioSignFpCommon(media: DataFrame,
-                              commonRate: Int = 22050): DataFrame = {
-    val spark = media.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("fp", LongType)))
-    val out = media.select("media_id", "payload").rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val fp = try {
-          val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("payload")))
-          val rate = ais.getFormat.getSampleRate.toInt
-          val bytes = ais.readAllBytes()
-          val n = bytes.length / 2
-          var bits = 0L
-          var i = 1
-          var ok = isPcm16MonoLe(ais.getFormat)
-          while (i <= 60 && ok) {
-            val src = (i.toLong * rate / commonRate).toInt
-            if (src >= n) ok = false
-            else {
-              val s = ((bytes(2 * src + 1).toInt << 8) | (bytes(2 * src) & 0xff)).toShort
-              bits = (bits << 1) | (if (s > 0) 1L else 0L)
-            }
-            i += 1
-          }
-          if (!ok) null else java.lang.Long.valueOf(bits)
-        } catch { case scala.util.control.NonFatal(_) => null }
-        Row(r.getLong(0), fp)
-      }
+                              commonRate: Int = 22050): DataFrame =
+    decodePcm(media, fieldsOf("fp" -> LongType)) { (rate, pcm) =>
+      signFp(pcm, (1 to 60).map(i => (i.toLong * rate / commonRate).toInt))
     }
-    spark.createDataFrame(out, schema)
-  }
 
   /** Zero-crossing-rate pitch estimate over the FULL decoded PCM stream
     * (the sign fingerprint reads 60 samples; this walks every frame):
@@ -554,42 +507,21 @@ object Multimodal {
     * derives them from the REAL decoded bytes, so a codec bug anywhere
     * in the stream (not just the head) hash-fails.
     */
-  def decodeAudioZcr(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("n_frames", LongType),
-      StructField("zcr", LongType),
-      StructField("pitch_hz", LongType)))
-    val out = media.select("media_id", "payload").rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val res = try {
-          val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("payload")))
-          val rate = ais.getFormat.getSampleRate.toInt
-          if (!isPcm16MonoLe(ais.getFormat)) null
-          else {
-            val bytes = ais.readAllBytes()
-            val n = bytes.length / 2
-            var zcr = 0L
-            var prev = 0
-            var i = 0
-            while (i < n) {
-              val s = ((bytes(2 * i + 1).toInt << 8) | (bytes(2 * i) & 0xff)).toShort.toInt
-              if (prev * s < 0) zcr += 1
-              if (s != 0) prev = s else prev = 0
-              i += 1
-            }
-            val pitch = math.floor(zcr.toDouble * rate / (2.0 * (n - 1)) + 0.5).toLong
-            (n.toLong, zcr, pitch)
-          }
-        } catch { case scala.util.control.NonFatal(_) => null }
-        if (res == null) Row(r.getLong(0), null, null, null)
-        else Row(r.getLong(0), res._1, res._2, res._3)
+  def decodeAudioZcr(media: DataFrame): DataFrame =
+    decodePcm(media, fieldsOf("n_frames" -> LongType, "zcr" -> LongType,
+        "pitch_hz" -> LongType)) { (rate, pcm) =>
+      val n = pcm.length / 2
+      var zcr = 0L
+      var prev = 0
+      var i = 0
+      while (i < n) {
+        val s = sample(pcm, i)
+        if (prev * s < 0) zcr += 1
+        prev = s
+        i += 1
       }
+      Row(n.toLong, zcr, math.floor(zcr.toDouble * rate / (2.0 * (n - 1)) + 0.5).toLong)
     }
-    spark.createDataFrame(out, schema)
-  }
 
   // ==================== SPECTRAL AUDIO TIER (round 15) ====================
 
@@ -669,17 +601,8 @@ object Multimodal {
     * over the audio doc population — same narrow generate-in-place shape
     * as withRealMedia.
     */
-  def withSpectralMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    val out = docs.filter(col("doc_id") % 3 === 1).select("doc_id")
-      .rdd.mapPartitions(_.map { r =>
-        Row(r.getLong(0), encodeWavSpectral(r.getLong(0)))
-      })
-    spark.createDataFrame(out, schema)
-  }
+  def withSpectralMedia(docs: DataFrame): DataFrame =
+    encodeEach(docs, 1)(encodeWavSpectral)
 
   /** Spectral fingerprint from REAL audio decode — the production
     * technique the sign tiers approximate (Chromaprint/Shazam family,
@@ -698,107 +621,68 @@ object Multimodal {
     * short for the resample window (src index past the clip).
     */
   def decodeAudioSpectral(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("fp", LongType),
-      StructField("dom", LongType),
-      StructField("prof", StringType)))
     val w = SpecWindow
     val nb = SpecBins
     val common = SpecCommonRate
     val shiftD = SpecShift
     val ctab = specCos
-    val out = media.select("media_id", "payload").rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val res = try {
-          val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("payload")))
-          val rate = ais.getFormat.getSampleRate.toInt
-          if (!isPcm16MonoLe(ais.getFormat)) null
-          else {
-            val bytes = ais.readAllBytes()
-            val n = bytes.length / 2
-            if (((w - 1).toLong * rate / common).toInt >= n) null
-            else {
-              val y = new Array[Long](w)
-              var i = 0
-              while (i < w) {
-                val src = (i.toLong * rate / common).toInt
-                y(i) = ((bytes(2 * src + 1).toInt << 8) | (bytes(2 * src) & 0xff)).toShort.toLong
-                i += 1
-              }
-              val e = new Array[Long](nb)
-              var k = 1
-              while (k <= nb) {
-                var re = 0L
-                var im = 0L
-                var j = 0
-                while (j < w) {
-                  val y_j = y(j)
-                  re += y_j * ctab((k * j) % 256)
-                  im += y_j * ctab((k * j + 192) % 256)
-                  j += 1
-                }
-                val rq = Math.floorDiv(re, shiftD)
-                val iq = Math.floorDiv(im, shiftD)
-                e(k - 1) = rq * rq + iq * iq
-                // contract bound: keeps prof's e*1024 far inside Long and
-                // the oracle's HUGEINT path value-identical
-                require(e(k - 1) < (1L << 40),
-                  s"spectral energy out of contract bound: ${e(k - 1)}")
-                k += 1
-              }
-              val mx = e.max
-              val tot = e.sum
-              var fp = 0L
-              var dom = -1
-              var kk = 0
-              while (kk < nb) {
-                if (16L * e(kk) > mx) fp |= 1L << kk
-                if (dom < 0 && e(kk) == mx) dom = kk + 1
-                kk += 1
-              }
-              val prof = e.map(x => (x * 1024L) / tot).mkString(" ")
-              (fp, dom.toLong, prof)
-            }
+    decodePcm(media, fieldsOf("fp" -> LongType, "dom" -> LongType,
+        "prof" -> StringType)) { (rate, pcm) =>
+      if (((w - 1).toLong * rate / common).toInt >= pcm.length / 2) null
+      else {
+        val y = Array.tabulate(w)(i => sample(pcm, (i.toLong * rate / common).toInt).toLong)
+        val e = new Array[Long](nb)
+        var k = 1
+        while (k <= nb) {
+          var re = 0L
+          var im = 0L
+          var j = 0
+          while (j < w) {
+            val y_j = y(j)
+            re += y_j * ctab((k * j) % 256)
+            im += y_j * ctab((k * j + 192) % 256)
+            j += 1
           }
-        } catch { case scala.util.control.NonFatal(_) => null }
-        if (res == null) Row(r.getLong(0), null, null, null)
-        else Row(r.getLong(0), res._1, res._2, res._3)
+          val rq = Math.floorDiv(re, shiftD)
+          val iq = Math.floorDiv(im, shiftD)
+          e(k - 1) = rq * rq + iq * iq
+          // contract bound: keeps prof's e*1024 far inside Long and
+          // the oracle's HUGEINT path value-identical
+          require(e(k - 1) < (1L << 40),
+            s"spectral energy out of contract bound: ${e(k - 1)}")
+          k += 1
+        }
+        val mx = e.max
+        val tot = e.sum
+        var fp = 0L
+        var dom = -1
+        var kk = 0
+        while (kk < nb) {
+          if (16L * e(kk) > mx) fp |= 1L << kk
+          if (dom < 0 && e(kk) == mx) dom = kk + 1
+          kk += 1
+        }
+        Row(fp, dom.toLong, e.map(x => (x * 1024L) / tot).mkString(" "))
       }
     }
-    spark.createDataFrame(out, schema)
   }
 
-  /** Spectral near-dup pairs: single-bit-flip pigeonhole over the 24-bit
+  /** Spectral near-dup pairs: `Dedup.hammingPairs` over the 24-bit
     * significant-band fingerprint (hamming <= 1 — each clip emits 25
-    * equi-join keys, the phashPairs1 shape), then the EXACT verify on the
+    * one-bit-flip equi-join keys), then the EXACT verify on the
     * normalized energy profiles: L1 distance <= maxL1. The fixture's
     * measured margins (BASELINE.md): same-content cross-rate pairs sit at
     * hamming <= 1 / L1 <= 100; the planted equal-sign tri-vs-sq partners
     * at hamming >= 2 / L1 >= 184; distinct fundamentals at L1 >= 1500.
     */
   def spectralPairs(sp: DataFrame, maxL1: Long = 160): DataFrame = {
-    val clean = sp.filter(col("fp").isNotNull)
-    val keys = clean
-      .select(col("media_id"), col("fp"),
-        explode(typedLit((-1 until SpecBins).toList)).as("k"))
-      .select(col("media_id"), col("fp"),
-        when(col("k") === -1, col("fp"))
-          .otherwise(expr("fp ^ shiftleft(CAST(1 AS BIGINT), k)")).as("key"))
-    // dedupe candidates BEFORE the profile verify: two clips within
-    // hamming 1 share up to 25 of their flip keys, and evaluating the
-    // interpreted 24-element L1 fold per DUPLICATE (not per pair) was a
-    // measured 25x blowup (112 s → 4 s at sf0.1). The key join carries
-    // only (id, fp); profiles join once per surviving pair.
-    val cand = keys.as("a").join(keys.as("b"),
-        col("a.key") === col("b.key") && col("a.media_id") < col("b.media_id"))
-      .select(col("a.media_id").as("doc_a"), col("b.media_id").as("doc_b"),
-        expr("bit_count(a.fp ^ b.fp)").cast("long").as("hamming"))
-      .filter(col("hamming") <= 1)
-      .distinct()
-    val prof = clean.select(col("media_id"),
+    // the join's distinct dedupes candidates BEFORE the profile verify:
+    // two clips within hamming 1 share up to 25 of their flip keys, and
+    // evaluating the interpreted 24-element L1 fold per DUPLICATE (not
+    // per pair) was a measured 25x blowup (112 s → 4 s at sf0.1). The key
+    // join carries only (id, fp); profiles join once per surviving pair.
+    val cand = Dedup.hammingPairs(sp, "media_id", "fp", SpecBins, 1)
+    val prof = sp.filter(col("fp").isNotNull).select(col("media_id"),
       transform(split(col("prof"), " "), x => x.cast("long")).as("pv"))
     cand
       .join(prof.as("pa"), col("doc_a") === col("pa.media_id"))
@@ -968,14 +852,28 @@ object Multimodal {
   /** The mp4 fixture as a media table (media_id, payload) over the video
     * doc population — generate-in-place, never shuffled.
     */
-  def withMp4Media(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    val out = docs.filter(col("doc_id") % 3 === 2).select("doc_id")
-      .rdd.mapPartitions(_.map(r => Row(r.getLong(0), encodeMp4(r.getLong(0)))))
-    spark.createDataFrame(out, schema)
+  def withMp4Media(docs: DataFrame): DataFrame = encodeEach(docs, 2)(encodeMp4)
+
+  /** The one ISO-BMFF box walk (ISO/IEC 14496-12 §4.2) over
+    * buf[start, end): each box's 32-bit big-endian size and fourcc are
+    * read and checked — a truncated header, size < 8, or a box past its
+    * parent throws, the decode frame's null row — then
+    * `visit(type, offset, size, parent type)` sees the box, and boxes of a
+    * `containers` type are walked into.
+    */
+  private def walkBoxes(buf: Array[Byte], start: Int, end: Int, parent: String,
+                        containers: Set[String])(
+      visit: (String, Int, Int, String) => Unit): Unit = {
+    var off = start
+    while (off < end) {
+      require(off + 8 <= end, "truncated box header")
+      val size = be32(buf, off)
+      require(size >= 8 && off + size <= end, s"box size $size at $off")
+      val typ = new String(buf, off + 4, 4, "US-ASCII")
+      visit(typ, off, size.toInt, parent)
+      if (containers(typ)) walkBoxes(buf, off + 8, off + size.toInt, typ, containers)(visit)
+      off += size.toInt
+    }
   }
 
   /** mp4 metadata via a REAL size-driven box walk: top-level boxes are
@@ -985,58 +883,25 @@ object Multimodal {
     * Malformed trees (size < 8, box past its parent, truncated header,
     * or no mvhd) surface as the null row — corrupt files are data.
     */
-  def decodeMp4Meta(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("timescale", IntegerType),
-      StructField("duration", IntegerType),
-      StructField("n_tracks", IntegerType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType)))
-    val out = media.select("media_id", "payload").rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val buf = r.getAs[Array[Byte]]("payload")
-        def be32(off: Int): Long =
-          ((buf(off) & 0xffL) << 24) | ((buf(off + 1) & 0xffL) << 16) |
-            ((buf(off + 2) & 0xffL) << 8) | (buf(off + 3) & 0xffL)
-        var ts, dur = -1L
-        var nTracks = 0
-        var w, h = 0L
-        var ok = true
-        def walk(start: Int, end: Int): Unit = {
-          var off = start
-          while (ok && off < end) {
-            if (off + 8 > end) { ok = false }
-            else {
-              val size = be32(off)
-              val typ = new String(buf, off + 4, 4, "US-ASCII")
-              if (size < 8 || off + size > end) ok = false
-              else {
-                typ match {
-                  case "moov" | "trak" => walk(off + 8, off + size.toInt)
-                  case "mvhd" if size >= 8 + 24 =>
-                    ts = be32(off + 20); dur = be32(off + 24)
-                  case "tkhd" if size >= 8 + 84 =>
-                    nTracks += 1
-                    w = math.max(w, be32(off + 84) >> 16)
-                    h = math.max(h, be32(off + 88) >> 16)
-                  case _ => ()
-                }
-                off += size.toInt
-              }
-            }
-          }
+  def decodeMp4Meta(media: DataFrame): DataFrame =
+    decodeEach(media, fieldsOf("timescale" -> IntegerType, "duration" -> IntegerType,
+        "n_tracks" -> IntegerType, "width" -> IntegerType, "height" -> IntegerType)) { buf =>
+      var ts, dur = -1L
+      var nTracks = 0
+      var w, h = 0L
+      walkBoxes(buf, 0, buf.length, "", Set("moov", "trak")) { (typ, off, size, _) =>
+        typ match {
+          case "mvhd" if size >= 8 + 24 =>
+            ts = be32(buf, off + 20); dur = be32(buf, off + 24)
+          case "tkhd" if size >= 8 + 84 =>
+            nTracks += 1
+            w = math.max(w, be32(buf, off + 84) >> 16)
+            h = math.max(h, be32(buf, off + 88) >> 16)
+          case _ => ()
         }
-        try walk(0, buf.length)
-        catch { case scala.util.control.NonFatal(_) => ok = false }
-        if (!ok || ts < 0)
-          Row(r.getLong(0), null, null, null, null, null)
-        else Row(r.getLong(0), ts.toInt, dur.toInt, nTracks, w.toInt, h.toInt)
       }
+      if (ts < 0) null else Row(ts.toInt, dur.toInt, nTracks, w.toInt, h.toInt)
     }
-    spark.createDataFrame(out, schema)
-  }
 
   /** Per-TRACK mp4 metadata (round 16) — what a curation pipeline
     * filters on before spending decode: handler type from mdia/hdlr,
@@ -1046,99 +911,50 @@ object Multimodal {
     * One output row per trak; a malformed tree yields the single null
     * row — corrupt files are data.
     */
-  def decodeMp4Tracks(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("track_id", IntegerType),
-      StructField("handler", StringType),
-      StructField("codec", StringType),
-      StructField("channels", IntegerType),
-      StructField("sample_rate", IntegerType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType)))
-    val out = media.select("media_id", "payload").rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val mediaId = r.getLong(0)
-        val buf = r.getAs[Array[Byte]]("payload")
-        def be32(off: Int): Long =
-          ((buf(off) & 0xffL) << 24) | ((buf(off + 1) & 0xffL) << 16) |
-            ((buf(off + 2) & 0xffL) << 8) | (buf(off + 3) & 0xffL)
-        def be16(off: Int): Int = ((buf(off) & 0xff) << 8) | (buf(off + 1) & 0xff)
-        var ok = true
-        val tracks = scala.collection.mutable.ArrayBuffer
-          .empty[(Int, String, String, Integer, Integer, Integer, Integer)]
-        // per-trak working state; the first stsd entry's offset/size are
-        // BUFFERED and resolved after the trak walk completes — ISO BMFF
-        // does not mandate hdlr-before-minf box order, so audio/video
-        // fields must not depend on having seen the handler first
-        var trkId = -1
-        var handler: String = null
-        var codec: String = null
-        var ch, rate, tw, th: Integer = null
-        var entryOff, entrySz = -1
-        def walk(start: Int, end: Int, in: String): Unit = {
-          var off = start
-          while (ok && off < end) {
-            if (off + 8 > end) { ok = false }
-            else {
-              val size = be32(off)
-              val typ = new String(buf, off + 4, 4, "US-ASCII")
-              if (size < 8 || off + size > end) ok = false
-              else {
-                typ match {
-                  case "moov" | "mdia" | "minf" | "stbl" =>
-                    walk(off + 8, off + size.toInt, typ)
-                  case "trak" =>
-                    trkId = -1; handler = null; codec = null
-                    ch = null; rate = null; tw = null; th = null
-                    entryOff = -1; entrySz = -1
-                    walk(off + 8, off + size.toInt, typ)
-                    if (ok) {
-                      // resolve the buffered sample entry now that the whole
-                      // trak (hdlr included, wherever it sat) has been walked
-                      if (entryOff >= 0) {
-                        if (handler == "soun" && entrySz >= 36) {
-                          ch = Integer.valueOf(be16(entryOff + 24))
-                          rate = Integer.valueOf((be32(entryOff + 32) >> 16).toInt)
-                        } else if (handler == "vide" && entrySz >= 36) {
-                          tw = Integer.valueOf(be16(entryOff + 32))
-                          th = Integer.valueOf(be16(entryOff + 34))
-                        }
-                      }
-                      tracks += ((trkId, handler, codec, ch, rate, tw, th))
-                    }
-                  case "tkhd" if size >= 8 + 16 =>
-                    trkId = be32(off + 20).toInt
-                  case "hdlr" if in == "mdia" && size >= 8 + 12 =>
-                    handler = new String(buf, off + 16, 4, "US-ASCII")
-                  case "stsd" if size >= 8 + 16 =>
-                    // verflags(4) count(4), then the first sample entry
-                    val e = off + 16
-                    val esz = be32(e)
-                    if (esz < 16 || e + esz > off + size) ok = false
-                    else {
-                      codec = new String(buf, e + 4, 4, "US-ASCII")
-                      entryOff = e; entrySz = esz.toInt
-                    }
-                  case _ => ()
-                }
-                off += size.toInt
-              }
-            }
-          }
-        }
-        try walk(0, buf.length, "")
-        catch { case scala.util.control.NonFatal(_) => ok = false }
-        if (!ok || tracks.isEmpty)
-          Seq(Row(mediaId, null, null, null, null, null, null, null))
-        else tracks.map { case (id, hd, cc, c, sr, w0, h0) =>
-          Row(mediaId, id, hd, cc, c, sr, w0, h0)
-        }
+  def decodeMp4Tracks(media: DataFrame): DataFrame =
+    decodeFrame(media.select("media_id", "payload"), fieldsOf("track_id" -> IntegerType,
+        "handler" -> StringType, "codec" -> StringType, "channels" -> IntegerType,
+        "sample_rate" -> IntegerType, "width" -> IntegerType, "height" -> IntegerType)) { r =>
+      val buf = r.getAs[Array[Byte]](1)
+      val containers = Set("moov", "mdia", "minf", "stbl")
+      val tracks = scala.collection.mutable.ArrayBuffer.empty[Row]
+      // per-trak working state; the first stsd entry's offset/size are
+      // BUFFERED and resolved after the trak walk completes — ISO BMFF
+      // does not mandate hdlr-before-minf box order, so audio/video
+      // fields must not depend on having seen the handler first
+      var trkId = -1
+      var handler: String = null
+      var codec: String = null
+      var entryOff, entrySz = -1
+      def visit(typ: String, off: Int, size: Int, parent: String): Unit = typ match {
+        case "trak" =>
+          trkId = -1; handler = null; codec = null; entryOff = -1; entrySz = -1
+          walkBoxes(buf, off + 8, off + size, typ, containers)(visit)
+          // resolve the buffered sample entry now that the whole trak
+          // (hdlr included, wherever it sat) has been walked
+          val soun = entryOff >= 0 && handler == "soun" && entrySz >= 36
+          val vide = entryOff >= 0 && handler == "vide" && entrySz >= 36
+          tracks += Row(trkId, handler, codec,
+            if (soun) be16(buf, entryOff + 24) else null,
+            if (soun) (be32(buf, entryOff + 32) >> 16).toInt else null,
+            if (vide) be16(buf, entryOff + 32) else null,
+            if (vide) be16(buf, entryOff + 34) else null)
+        case "tkhd" if size >= 8 + 16 =>
+          trkId = be32(buf, off + 20).toInt
+        case "hdlr" if parent == "mdia" && size >= 8 + 12 =>
+          handler = new String(buf, off + 16, 4, "US-ASCII")
+        case "stsd" if size >= 8 + 16 =>
+          // verflags(4) count(4), then the first sample entry
+          val e = off + 16
+          val esz = be32(buf, e)
+          require(esz >= 16 && e + esz <= off + size, s"stsd entry size $esz")
+          codec = new String(buf, e + 4, 4, "US-ASCII")
+          entryOff = e; entrySz = esz.toInt
+        case _ => ()
       }
+      walkBoxes(buf, 0, buf.length, "", containers)(visit)
+      if (tracks.isEmpty) null else tracks.toSeq
     }
-    spark.createDataFrame(out, schema)
-  }
 
   // ==================== WEBM/EBML METADATA TIER (round 15) ====================
 
@@ -1239,14 +1055,49 @@ object Multimodal {
   /** The webm fixture as a media table (media_id, payload) over the
     * video doc population — generate-in-place, never shuffled.
     */
-  def withWebmMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    val out = docs.filter(col("doc_id") % 3 === 2).select("doc_id")
-      .rdd.mapPartitions(_.map(r => Row(r.getLong(0), encodeWebm(r.getLong(0)))))
-    spark.createDataFrame(out, schema)
+  def withWebmMedia(docs: DataFrame): DataFrame = encodeEach(docs, 2)(encodeWebm)
+
+  /** EBML VINT at `off` as (value, next offset). For IDs the marker bit
+    * is KEPT (EBML ids are compared with it, per RFC 8794 §5); for sizes
+    * it is STRIPPED. An all-zero lead byte or a VINT running past `end`
+    * throws.
+    */
+  private def readVint(buf: Array[Byte], off: Int, end: Int,
+                       keepMarker: Boolean): (Long, Int) = {
+    require(off < end, "VINT past its parent")
+    val b0 = buf(off) & 0xff
+    require(b0 != 0, "zero VINT lead byte")
+    val width = java.lang.Integer.numberOfLeadingZeros(b0) - 23 // 1..8
+    require(off + width <= end, "VINT past its parent")
+    val lead = if (keepMarker) b0.toLong else b0.toLong & ((0x80 >> (width - 1)) - 1)
+    ((lead << (8 * (width - 1))) | beUint(buf, off + 1, width - 1), off + width)
+  }
+
+  /** An EBML float element: IEEE-754 float32 or float64, per the spec. */
+  private def ebmlFloat(buf: Array[Byte], off: Int, len: Int): Double =
+    if (len == 8) java.lang.Double.longBitsToDouble(beUint(buf, off, 8))
+    else {
+      require(len == 4, s"float of $len octets")
+      java.lang.Float.intBitsToFloat(beUint(buf, off, 4).toInt).toDouble
+    }
+
+  /** The one EBML element walk (RFC 8794) over buf[start, end): each
+    * element's ID and size VINTs are decoded and checked — a bad VINT,
+    * an element past its parent, or a size beyond Int throws, the decode
+    * frame's null row — then `visit(id, payload offset, size)` sees the
+    * element, and elements whose ID is in `containers` are walked into.
+    */
+  private def walkEbml(buf: Array[Byte], start: Int, end: Int, containers: Set[Long])(
+      visit: (Long, Int, Int) => Unit): Unit = {
+    var off = start
+    while (off < end) {
+      val (eid, o1) = readVint(buf, off, end, keepMarker = true)
+      val (sz, o2) = readVint(buf, o1, end, keepMarker = false)
+      require(o2 + sz <= end && sz <= Int.MaxValue, s"element size $sz at $o2")
+      visit(eid, o2, sz.toInt)
+      if (containers(eid)) walkEbml(buf, o2, o2 + sz.toInt, containers)(visit)
+      off = o2 + sz.toInt
+    }
   }
 
   /** webm metadata via a REAL EBML walk: element IDs read by their
@@ -1258,99 +1109,33 @@ object Multimodal {
     * (truncated VINT, element past its parent, an all-zero ID/size
     * byte, no Info) surface as the null row — corrupt files are data.
     */
-  def decodeWebmMeta(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("timescale", IntegerType),
-      StructField("duration", IntegerType),
-      StructField("n_tracks", IntegerType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType)))
-    val out = media.select("media_id", "payload").rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val buf = r.getAs[Array[Byte]]("payload")
-        var ts, dur = -1L
-        var nTracks = 0
-        var w, h = 0L
-        var ok = true
-        var sawInfo = false
-        // (value, next-offset). For IDs the marker bit is KEPT (EBML ids
-        // are compared with it, per RFC 8794 §5); for sizes it is
-        // STRIPPED. An all-zero lead byte or a VINT running past `end`
-        // poisons the parse.
-        def readVint(off: Int, end: Int, keepMarker: Boolean): (Long, Int) = {
-          if (!ok || off >= end) { ok = false; (0L, end) }
-          else {
-            val b0 = buf(off) & 0xff
-            if (b0 == 0) { ok = false; (0L, end) }
-            else {
-              val width = java.lang.Integer.numberOfLeadingZeros(b0) - 23 // 1..8
-              if (off + width > end) { ok = false; (0L, end) }
-              else {
-                var v = if (keepMarker) b0.toLong
-                        else b0.toLong & ((0x80 >> (width - 1)) - 1)
-                var i = 1
-                while (i < width) { v = (v << 8) | (buf(off + i) & 0xffL); i += 1 }
-                (v, off + width)
-              }
-            }
-          }
+  def decodeWebmMeta(media: DataFrame): DataFrame =
+    decodeEach(media, fieldsOf("timescale" -> IntegerType, "duration" -> IntegerType,
+        "n_tracks" -> IntegerType, "width" -> IntegerType, "height" -> IntegerType)) { buf =>
+      var ts, dur = -1L
+      var nTracks = 0
+      var w, h = 0L
+      var sawInfo = false
+      // Segment / Tracks / TrackEntry / Video / Info
+      walkEbml(buf, 0, buf.length,
+          Set(0x18538067L, 0x1654AE6BL, 0xAEL, 0xE0L, 0x1549A966L)) { (eid, o, sz) =>
+        eid match {
+          case 0xAEL => nTracks += 1 // TrackEntry
+          case 0x1549A966L => sawInfo = true // Info
+          case 0x2AD7B1L => ts = beUint(buf, o, sz) // TimestampScale
+          case 0x4489L => dur = ebmlFloat(buf, o, sz).toLong // Duration
+          case 0xB0L => w = math.max(w, beUint(buf, o, sz)) // PixelWidth
+          case 0xBAL => h = math.max(h, beUint(buf, o, sz)) // PixelHeight
+          case _ => () // EBMLHeader internals, Void, unknown: skip
         }
-        // EBML uints are 0..8 octets (RFC 8794 §7.1); a wider payload is
-        // malformed and poisons the parse rather than wrapping through
-        // the Long shift.
-        def beUint(off: Int, len: Int): Long = {
-          if (len > 8) { ok = false; 0L }
-          else {
-            var v = 0L
-            var i = 0
-            while (i < len) { v = (v << 8) | (buf(off + i) & 0xffL); i += 1 }
-            v
-          }
-        }
-        def walk(start: Int, end: Int): Unit = {
-          var off = start
-          while (ok && off < end) {
-            val (eid, o1) = readVint(off, end, keepMarker = true)
-            val (sz, o2) = readVint(o1, end, keepMarker = false)
-            if (!ok || o2 + sz > end || sz > Int.MaxValue) ok = false
-            else {
-              val pEnd = o2 + sz.toInt
-              eid match {
-                case 0x18538067L | 0x1654AE6BL | 0xAEL | 0xE0L => // Segment/Tracks/TrackEntry/Video
-                  if (eid == 0xAEL) nTracks += 1
-                  walk(o2, pEnd)
-                case 0x1549A966L => sawInfo = true; walk(o2, pEnd) // Info
-                case 0x2AD7B1L => ts = beUint(o2, sz.toInt) // TimestampScale
-                case 0x4489L => // Duration: float32 or float64 per spec
-                  if (sz == 8L)
-                    dur = java.lang.Double.longBitsToDouble(beUint(o2, 8)).toLong
-                  else if (sz == 4L)
-                    dur = java.lang.Float.intBitsToFloat(beUint(o2, 4).toInt).toLong
-                  else ok = false
-                case 0xB0L => w = math.max(w, beUint(o2, sz.toInt)) // PixelWidth
-                case 0xBAL => h = math.max(h, beUint(o2, sz.toInt)) // PixelHeight
-                case _ => () // EBMLHeader internals, Void, unknown: skip
-              }
-              off = pEnd
-            }
-          }
-        }
-        try walk(0, buf.length)
-        catch { case scala.util.control.NonFatal(_) => ok = false }
-        // a well-formed foreign file may still carry >32-bit values; the
-        // Int schema cannot represent them, so they take the null row
-        // (out-of-model, not silently wrapped) — same contract as corrupt
-        if (!ok || !sawInfo || ts < 0 || dur < 0 ||
-            ts > Int.MaxValue || dur > Int.MaxValue ||
-            w > Int.MaxValue || h > Int.MaxValue)
-          Row(r.getLong(0), null, null, null, null, null)
-        else Row(r.getLong(0), ts.toInt, dur.toInt, nTracks, w.toInt, h.toInt)
       }
+      // a well-formed foreign file may still carry >32-bit values; the
+      // Int schema cannot represent them, so they take the null row
+      // (out-of-model, not silently wrapped) — same contract as corrupt
+      if (!sawInfo || ts < 0 || dur < 0 || ts > Int.MaxValue || dur > Int.MaxValue ||
+          w > Int.MaxValue || h > Int.MaxValue) null
+      else Row(ts.toInt, dur.toInt, nTracks, w.toInt, h.toInt)
     }
-    spark.createDataFrame(out, schema)
-  }
 
   /** Per-TRACK webm metadata (round 16) — the EBML twin of
     * decodeMp4Tracks: TrackNumber/TrackType uints, the CodecID string,
@@ -1359,104 +1144,38 @@ object Multimodal {
     * TrackEntry; malformed trees or out-of-Int values yield the single
     * null row — corrupt files are data.
     */
-  def decodeWebmTracks(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("track_num", IntegerType),
-      StructField("track_type", IntegerType),
-      StructField("codec_id", StringType),
-      StructField("channels", IntegerType),
-      StructField("sample_rate", IntegerType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType)))
-    val out = media.select("media_id", "payload").rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val mediaId = r.getLong(0)
-        val buf = r.getAs[Array[Byte]]("payload")
-        var ok = true
-        val tracks = scala.collection.mutable.ArrayBuffer
-          .empty[(Long, Long, String, Long, Long, Long, Long)]
-        var tn, tt, ch, rate, w, h = -1L
-        var codec: String = null
-        def readVint(off: Int, end: Int, keepMarker: Boolean): (Long, Int) = {
-          if (!ok || off >= end) { ok = false; (0L, end) }
-          else {
-            val b0 = buf(off) & 0xff
-            if (b0 == 0) { ok = false; (0L, end) }
-            else {
-              val width = java.lang.Integer.numberOfLeadingZeros(b0) - 23
-              if (off + width > end) { ok = false; (0L, end) }
-              else {
-                var v = if (keepMarker) b0.toLong
-                        else b0.toLong & ((0x80 >> (width - 1)) - 1)
-                var i = 1
-                while (i < width) { v = (v << 8) | (buf(off + i) & 0xffL); i += 1 }
-                (v, off + width)
-              }
-            }
-          }
-        }
-        def beUint(off: Int, len: Int): Long = {
-          if (len > 8) { ok = false; 0L }
-          else {
-            var v = 0L
-            var i = 0
-            while (i < len) { v = (v << 8) | (buf(off + i) & 0xffL); i += 1 }
-            v
-          }
-        }
-        def fl(off: Int, len: Int): Double =
-          if (len == 8) java.lang.Double.longBitsToDouble(beUint(off, 8))
-          else if (len == 4) java.lang.Float.intBitsToFloat(beUint(off, 4).toInt).toDouble
-          else { ok = false; 0.0 }
-        def walk(start: Int, end: Int): Unit = {
-          var off = start
-          while (ok && off < end) {
-            val (eid, o1) = readVint(off, end, keepMarker = true)
-            val (sz, o2) = readVint(o1, end, keepMarker = false)
-            if (!ok || o2 + sz > end || sz > Int.MaxValue) ok = false
-            else {
-              val pEnd = o2 + sz.toInt
-              eid match {
-                case 0x18538067L | 0x1654AE6BL | 0xE0L | 0xE1L => // Segment/Tracks/Video/Audio
-                  walk(o2, pEnd)
-                case 0xAEL => // TrackEntry: fresh state, then emit
-                  tn = -1; tt = -1; ch = -1; rate = -1; w = -1; h = -1
-                  codec = null
-                  walk(o2, pEnd)
-                  if (ok) tracks += ((tn, tt, codec, ch, rate, w, h))
-                case 0xD7L => tn = beUint(o2, sz.toInt) // TrackNumber
-                case 0x83L => tt = beUint(o2, sz.toInt) // TrackType
-                case 0x86L => // CodecID
-                  codec = new String(buf, o2, sz.toInt, "US-ASCII")
-                case 0xB5L => rate = fl(o2, sz.toInt).toLong // SamplingFrequency
-                case 0x9FL => ch = beUint(o2, sz.toInt) // Channels
-                case 0xB0L => w = beUint(o2, sz.toInt) // PixelWidth
-                case 0xBAL => h = beUint(o2, sz.toInt) // PixelHeight
-                case _ => ()
-              }
-              off = pEnd
-            }
-          }
-        }
-        try walk(0, buf.length)
-        catch { case scala.util.control.NonFatal(_) => ok = false }
-        def asInt(v: Long): Integer =
-          if (v < 0 || v > Int.MaxValue) null else Integer.valueOf(v.toInt)
-        val wide = tracks.exists(t =>
-          t._1 > Int.MaxValue || t._2 > Int.MaxValue || t._4 > Int.MaxValue ||
-            t._5 > Int.MaxValue || t._6 > Int.MaxValue || t._7 > Int.MaxValue)
-        if (!ok || wide || tracks.isEmpty)
-          Seq(Row(mediaId, null, null, null, null, null, null, null))
-        else tracks.map { case (n, t, cc, c, sr, w0, h0) =>
-          Row(mediaId, asInt(n), asInt(t), cc, asInt(c), asInt(sr),
-            asInt(w0), asInt(h0))
-        }
+  def decodeWebmTracks(media: DataFrame): DataFrame =
+    decodeFrame(media.select("media_id", "payload"), fieldsOf("track_num" -> IntegerType,
+        "track_type" -> IntegerType, "codec_id" -> StringType, "channels" -> IntegerType,
+        "sample_rate" -> IntegerType, "width" -> IntegerType, "height" -> IntegerType)) { r =>
+      val buf = r.getAs[Array[Byte]](1)
+      val containers = Set(0x18538067L, 0x1654AE6BL, 0xE0L, 0xE1L) // Segment/Tracks/Video/Audio
+      val tracks = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var tn, tt, ch, rate, w, h = -1L
+      var codec: String = null
+      def visit(eid: Long, o: Int, sz: Int): Unit = eid match {
+        case 0xAEL => // TrackEntry: fresh state, then emit
+          tn = -1; tt = -1; ch = -1; rate = -1; w = -1; h = -1
+          codec = null
+          walkEbml(buf, o, o + sz, containers)(visit)
+          val vs = Seq(tn, tt, ch, rate, w, h)
+          // a >32-bit value takes the media's null row (out-of-model);
+          // an absent one (-1) is a null field
+          require(vs.forall(_ <= Int.MaxValue), "track value beyond Int")
+          val ints = vs.map(v => if (v < 0) null else Integer.valueOf(v.toInt))
+          tracks += Row.fromSeq(ints.take(2) ++ (codec +: ints.drop(2)))
+        case 0xD7L => tn = beUint(buf, o, sz) // TrackNumber
+        case 0x83L => tt = beUint(buf, o, sz) // TrackType
+        case 0x86L => codec = new String(buf, o, sz, "US-ASCII") // CodecID
+        case 0xB5L => rate = ebmlFloat(buf, o, sz).toLong // SamplingFrequency
+        case 0x9FL => ch = beUint(buf, o, sz) // Channels
+        case 0xB0L => w = beUint(buf, o, sz) // PixelWidth
+        case 0xBAL => h = beUint(buf, o, sz) // PixelHeight
+        case _ => ()
       }
+      walkEbml(buf, 0, buf.length, containers)(visit)
+      if (tracks.isEmpty) null else tracks.toSeq
     }
-    spark.createDataFrame(out, schema)
-  }
 
   // ------------------------------------------------------------------
   // JPEG tier (round 16): the format real crawled corpora are
@@ -1537,15 +1256,7 @@ object Multimodal {
   /** The JPEG fixture as a media table (media_id, payload) over the
     * image doc population — generate-in-place, never shuffled.
     */
-  def withJpegMedia(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("payload", BinaryType, nullable = false)))
-    val out = docs.filter(col("doc_id") % 3 === 0).select("doc_id")
-      .rdd.mapPartitions(_.map(r => Row(r.getLong(0), encodeJpeg(r.getLong(0)))))
-    spark.createDataFrame(out, schema)
-  }
+  def withJpegMedia(docs: DataFrame): DataFrame = encodeEach(docs, 0)(encodeJpeg)
 
   /** JPEG metadata via a REAL marker walk (ITU T.81 §B) over the WHOLE
     * stream, SOI to EOI: frame dims and component count from the SOF
@@ -1561,101 +1272,83 @@ object Multimodal {
     * stray, no SOF, no EOI) surface as the null row — corrupt files are
     * data.
     */
-  def decodeJpegMarkers(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType),
-      StructField("n_components", IntegerType),
-      StructField("n_dqt", IntegerType),
-      StructField("n_dht", IntegerType),
-      StructField("sof_marker", IntegerType),
-      StructField("n_app0", IntegerType),
-      StructField("n_scans", IntegerType)))
-    val out = media.select("media_id", "payload").rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val b = r.getAs[Array[Byte]]("payload")
-        var ok = b.length >= 4 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8
-        var w, h, nc, sof = -1
-        var nDqt, nDht, nApp0, nScans = 0
-        var i = 2
-        var done = false
-        def u8(o: Int): Int = b(o) & 0xff
-        def u16(o: Int): Int = (u8(o) << 8) | u8(o + 1)
-        try {
-          while (ok && !done) {
-            // T.81 B.1.1.2: a marker may be preceded by any number of 0xFF
-            // fill bytes — skip them so spec-valid foreign streams parse.
-            while (i + 1 < b.length && u8(i) == 0xff && u8(i + 1) == 0xff) i += 1
-            if (i + 2 > b.length || u8(i) != 0xff) ok = false
-            else if (u8(i + 1) == 0xd9) done = true // EOI: standalone, ends the stream
-            else if (i + 4 > b.length) ok = false
-            else {
-              val m = u8(i + 1)
-              val len = u16(i + 2)
-              val end = i + 2 + len
-              if (len < 2 || end > b.length) ok = false
-              else {
-                m match {
-                  case 0xdb => // DQT: tables are 1 + 64·(1+precision) bytes
-                    var off = i + 4
-                    while (ok && off < end) {
-                      val pq = (u8(off) & 0xf0) >> 4
-                      off += 1 + (if (pq == 0) 64 else 128)
-                      if (off > end) ok = false else nDqt += 1
-                    }
-                  case 0xc4 => // DHT: 17-byte header + Σ code counts —
-                    // the 17 header bytes must fit inside the segment
-                    // BEFORE being read, else a short len yields garbage
-                    // counts instead of the contractual null row
-                    var off = i + 4
-                    while (ok && off < end) {
-                      if (off + 17 > end) ok = false
-                      else {
-                        var tot = 0
-                        var k = 1
-                        while (k <= 16) { tot += u8(off + k); k += 1 }
-                        off += 17 + tot
-                        if (off > end) ok = false else nDht += 1
-                      }
-                    }
-                  case 0xe0 => nApp0 += 1
-                  case 0xda => nScans += 1 // SOS: skip the scan's entropy data below
-                  case mm if mm >= 0xc0 && mm <= 0xcf && mm != 0xc8 && mm != 0xcc =>
-                    // SOF payload is ≥ 6 bytes (precision, h, w, nc)
-                    if (len < 8) ok = false
-                    else { sof = mm; h = u16(i + 5); w = u16(i + 7); nc = u8(i + 9) }
-                  case _ => () // APPn, COM, others: skip
+  def decodeJpegMarkers(media: DataFrame): DataFrame =
+    decodeEach(media, fieldsOf("width" -> IntegerType, "height" -> IntegerType,
+        "n_components" -> IntegerType, "n_dqt" -> IntegerType, "n_dht" -> IntegerType,
+        "sof_marker" -> IntegerType, "n_app0" -> IntegerType, "n_scans" -> IntegerType)) { b =>
+      var ok = b.length >= 4 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8
+      var w, h, nc, sof = -1
+      var nDqt, nDht, nApp0, nScans = 0
+      var i = 2
+      var done = false
+      def u8(o: Int): Int = b(o) & 0xff
+      while (ok && !done) {
+        // T.81 B.1.1.2: a marker may be preceded by any number of 0xFF
+        // fill bytes — skip them so spec-valid foreign streams parse.
+        while (i + 1 < b.length && u8(i) == 0xff && u8(i + 1) == 0xff) i += 1
+        if (i + 2 > b.length || u8(i) != 0xff) ok = false
+        else if (u8(i + 1) == 0xd9) done = true // EOI: standalone, ends the stream
+        else if (i + 4 > b.length) ok = false
+        else {
+          val m = u8(i + 1)
+          val len = be16(b, i + 2)
+          val end = i + 2 + len
+          if (len < 2 || end > b.length) ok = false
+          else {
+            m match {
+              case 0xdb => // DQT: tables are 1 + 64·(1+precision) bytes
+                var off = i + 4
+                while (ok && off < end) {
+                  val pq = (u8(off) & 0xf0) >> 4
+                  off += 1 + (if (pq == 0) 64 else 128)
+                  if (off > end) ok = false else nDqt += 1
                 }
-                i = end
-                if (ok && m == 0xda) {
-                  // entropy-coded-segment skip: 0xFF 0x00 is a stuffing
-                  // pair, 0xFF 0xD0-0xD7 a restart marker (both stay in
-                  // the scan); the first other 0xFF-pair is the next
-                  // marker — a truncated scan (no terminating marker)
-                  // is the null row
-                  var scanning = true
-                  while (ok && scanning) {
-                    if (i + 1 >= b.length) { ok = false; scanning = false }
-                    else if (u8(i) == 0xff) {
-                      val nm = u8(i + 1)
-                      if (nm == 0x00 || (nm >= 0xd0 && nm <= 0xd7)) i += 2
-                      else scanning = false
-                    } else i += 1
+              case 0xc4 => // DHT: 17-byte header + Σ code counts —
+                // the 17 header bytes must fit inside the segment
+                // BEFORE being read, else a short len yields garbage
+                // counts instead of the contractual null row
+                var off = i + 4
+                while (ok && off < end) {
+                  if (off + 17 > end) ok = false
+                  else {
+                    var tot = 0
+                    var k = 1
+                    while (k <= 16) { tot += u8(off + k); k += 1 }
+                    off += 17 + tot
+                    if (off > end) ok = false else nDht += 1
                   }
                 }
+              case 0xe0 => nApp0 += 1
+              case 0xda => nScans += 1 // SOS: skip the scan's entropy data below
+              case mm if mm >= 0xc0 && mm <= 0xcf && mm != 0xc8 && mm != 0xcc =>
+                // SOF payload is ≥ 6 bytes (precision, h, w, nc)
+                if (len < 8) ok = false
+                else { sof = mm; h = be16(b, i + 5); w = be16(b, i + 7); nc = u8(i + 9) }
+              case _ => () // APPn, COM, others: skip
+            }
+            i = end
+            if (ok && m == 0xda) {
+              // entropy-coded-segment skip: 0xFF 0x00 is a stuffing
+              // pair, 0xFF 0xD0-0xD7 a restart marker (both stay in
+              // the scan); the first other 0xFF-pair is the next
+              // marker — a truncated scan (no terminating marker)
+              // is the null row
+              var scanning = true
+              while (ok && scanning) {
+                if (i + 1 >= b.length) { ok = false; scanning = false }
+                else if (u8(i) == 0xff) {
+                  val nm = u8(i + 1)
+                  if (nm == 0x00 || (nm >= 0xd0 && nm <= 0xd7)) i += 2
+                  else scanning = false
+                } else i += 1
               }
             }
           }
-        } catch { case scala.util.control.NonFatal(_) => ok = false }
-        if (!ok || !done || sof < 0 || nScans < 1)
-          Row(r.getLong(0), null, null, null, null, null, null, null, null)
-        else Row(r.getLong(0), w, h, nc, nDqt, nDht, sof, nApp0, nScans)
+        }
       }
+      if (!ok || !done || sof < 0 || nScans < 1) null
+      else Row(w, h, nc, nDqt, nDht, sof, nApp0, nScans)
     }
-    spark.createDataFrame(out, schema)
-  }
 
   /** Decoded-PIXEL gate through the lossy codec, on the payloads where
     * lossy is exact: flat-color JPEGs decode to their source gray
@@ -1664,39 +1357,23 @@ object Multimodal {
     * 256 grays). (media_id, gray = decoded pixel(0,0) gray value or null
     * if channels disagree, uniform = all pixels equal it).
     */
-  def decodeJpegFlat(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("gray", IntegerType),
-      StructField("uniform", BooleanType)))
-    val out = media.select("media_id", "payload").rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val img = try {
-          javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("payload")))
-        } catch { case scala.util.control.NonFatal(_) => null }
-        if (img == null) Row(r.getLong(0), null, null)
-        else {
-          val p0 = img.getRGB(0, 0)
-          val g = p0 & 0xff
-          val chansAgree = ((p0 >> 16) & 0xff) == g && ((p0 >> 8) & 0xff) == g
-          var uniform = chansAgree
-          var y = 0
-          while (uniform && y < img.getHeight) {
-            var x = 0
-            while (uniform && x < img.getWidth) {
-              if (img.getRGB(x, y) != p0) uniform = false
-              x += 1
-            }
-            y += 1
-          }
-          Row(r.getLong(0), if (chansAgree) g else null, uniform)
+  def decodeJpegFlat(media: DataFrame): DataFrame =
+    decodeImages(media, fieldsOf("gray" -> IntegerType, "uniform" -> BooleanType)) { img =>
+      val p0 = img.getRGB(0, 0)
+      val g = p0 & 0xff
+      val chansAgree = ((p0 >> 16) & 0xff) == g && ((p0 >> 8) & 0xff) == g
+      var uniform = chansAgree
+      var y = 0
+      while (uniform && y < img.getHeight) {
+        var x = 0
+        while (uniform && x < img.getWidth) {
+          if (img.getRGB(x, y) != p0) uniform = false
+          x += 1
         }
+        y += 1
       }
+      Row(if (chansAgree) g else null, uniform)
     }
-    spark.createDataFrame(out, schema)
-  }
 
   /** The JPEG decode-error honesty card, split by what 4:2:0 can and
     * cannot damage: re-derive each textured payload's SOURCE pattern
@@ -1715,76 +1392,56 @@ object Multimodal {
     * (media_id, n_px, within_tol, chroma_within_tol).
     */
   def decodeJpegError(media: DataFrame, tol: Int = 64,
-                      chromaTol: Int = 240): DataFrame = {
-    val spark = media.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("n_px", LongType),
-      StructField("within_tol", BooleanType),
-      StructField("chroma_within_tol", BooleanType)))
-    val out = media.select("media_id", "payload").rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val img = try {
-          javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("payload")))
-        } catch { case scala.util.control.NonFatal(_) => null }
-        if (img == null) Row(id, null, null, null)
-        else {
-          def luma(r0: Int, g0: Int, b0: Int): Int = (77 * r0 + 150 * g0 + 29 * b0) >> 8
-          var maxLuma = 0
-          var maxRgb = 0
-          var y = 0
-          while (y < img.getHeight) {
-            var x = 0
-            while (x < img.getWidth) {
-              val (wr, wg, wb) = jpegRgb(id, x, y)
-              val px = img.getRGB(x, y)
-              val gr = (px >> 16) & 0xff
-              val gg = (px >> 8) & 0xff
-              val gb = px & 0xff
-              val eRgb = math.max(math.abs(wr - gr),
-                math.max(math.abs(wg - gg), math.abs(wb - gb)))
-              if (eRgb > maxRgb) maxRgb = eRgb
-              val eL = math.abs(luma(wr, wg, wb) - luma(gr, gg, gb))
-              if (eL > maxLuma) maxLuma = eL
-              x += 1
-            }
-            y += 1
+                      chromaTol: Int = 240): DataFrame =
+    decodeFrame(media.select("media_id", "payload"), fieldsOf("n_px" -> LongType,
+        "within_tol" -> BooleanType, "chroma_within_tol" -> BooleanType)) { r =>
+      val id = r.getLong(0)
+      val img = readImage(r.getAs[Array[Byte]](1))
+      if (img == null) null
+      else {
+        def luma(r0: Int, g0: Int, b0: Int): Int = (77 * r0 + 150 * g0 + 29 * b0) >> 8
+        var maxLuma = 0
+        var maxRgb = 0
+        var y = 0
+        while (y < img.getHeight) {
+          var x = 0
+          while (x < img.getWidth) {
+            val (wr, wg, wb) = jpegRgb(id, x, y)
+            val px = img.getRGB(x, y)
+            val gr = (px >> 16) & 0xff
+            val gg = (px >> 8) & 0xff
+            val gb = px & 0xff
+            val eRgb = math.max(math.abs(wr - gr),
+              math.max(math.abs(wg - gg), math.abs(wb - gb)))
+            if (eRgb > maxRgb) maxRgb = eRgb
+            val eL = math.abs(luma(wr, wg, wb) - luma(gr, gg, gb))
+            if (eL > maxLuma) maxLuma = eL
+            x += 1
           }
-          Row(id, (img.getWidth.toLong * img.getHeight),
-            maxLuma <= tol, maxRgb <= chromaTol)
+          y += 1
         }
+        Seq(Row(img.getWidth.toLong * img.getHeight, maxLuma <= tol, maxRgb <= chromaTol))
       }
     }
-    spark.createDataFrame(out, schema)
-  }
 
-  def decodeImageAHash(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("ahash", LongType)))
-    val out = media.select("media_id", "payload").rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val img = try {
-          javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("payload")))
-        } catch { case scala.util.control.NonFatal(_) => null }
-        if (img == null) Row(r.getLong(0), null)
-        else Row(r.getLong(0), gridAHash(img))
-      }
-    }
-    spark.createDataFrame(out, schema)
-  }
-
-  /** Per-frame perceptual hashes of video payloads — the video
-    * fingerprint sequence (near-dup videos share most frame hashes;
-    * scene cuts show as hash jumps). REAL GIF decode per frame, same
-    * gridAHash as the image tier; GifPixelProbe locks the codec round
-    * trip pixel-exact, which is what lets the DuckDB twin re-derive
-    * every frame hash from the synthesis contract.
+  /** Perceptual (average) hash of image payloads from REAL pixel decode —
+    * the image-dedup primitive (near-identical images collide; aHash is
+    * the simplest of the pHash family). To keep the hash cross-engine
+    * exact, the usual area-resample is replaced by a fixed 6×10 POINT
+    * GRID: sample gray at (⌊gx·w/6⌋, ⌊gy·h/10⌋), bit j = gy·6+gx set iff
+    * 60·g_j > Σg — all integer arithmetic, so the DuckDB twin re-derives
+    * the identical 60-bit hash from the synthesis contract while Spark
+    * computes it from the DECODED PNG bytes. The mean-threshold makes
+    * the hash invariant to uniform brightness shifts (60·(g+c) >
+    * Σg+60·c ⇔ 60·g > Σg) — the fixture's same-dims images are exactly
+    * such shifts (mod-256 wraparound aside), which is what the pairs
+    * query surfaces. 60 bits on purpose: the hash drops straight into
+    * the `Dedup.hammingPairs` pigeonhole join (three 20-bit chunks) for
+    * hamming-≤2 pair generation at scale.
     */
+  def decodeImageAHash(media: DataFrame): DataFrame =
+    decodeImages(media, fieldsOf("ahash" -> LongType))(img => Row(gridAHash(img)))
+
   /** Scene-cut detection over the per-frame fingerprint sequence: each
     * consecutive-frame transition scored by hash hamming distance, cuts
     * flagged at `tau` bits (adjacent frames of one shot share most of
@@ -1803,48 +1460,31 @@ object Multimodal {
       .withColumn("is_cut", col("hamming") >= tau)
   }
 
-  def decodeVideoFrameHashes(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("frame", IntegerType, nullable = false),
-      StructField("ahash", LongType)))
-    val out = media.select("media_id", "payload").rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val id = r.getLong(0)
-        // Frames decoded so far survive a mid-decode failure, and the
-        // failure itself lands as one null-hash row (the image tier's
-        // corrupt-payload convention) — round 11 returned Iterator.empty
-        // on ANY exception, silently vanishing the whole media AND leaking
-        // the ImageInputStream's disk-cache temp file (no close on either
-        // path). Stream and reader now release in finally.
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
-        var iis: javax.imageio.stream.ImageInputStream = null
-        var rdr: javax.imageio.ImageReader = null
-        try {
-          iis = javax.imageio.ImageIO.createImageInputStream(
-            new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("payload")))
-          val readers = javax.imageio.ImageIO.getImageReaders(iis)
-          if (!readers.hasNext) buf += Row(id, 0, null)
-          else {
-            rdr = readers.next()
-            rdr.setInput(iis)
-            val n = rdr.getNumImages(true)
-            var f = 0
-            while (f < n) { buf += Row(id, f, gridAHash(rdr.read(f))); f += 1 }
-          }
-        } catch {
-          case scala.util.control.NonFatal(_) => buf += Row(id, buf.length, null)
-        } finally {
-          if (rdr != null) rdr.dispose()
-          if (iis != null)
-            try iis.close() catch { case _: java.io.IOException => () }
+  /** Per-frame perceptual hashes of video payloads — the video
+    * fingerprint sequence (near-dup videos share most frame hashes;
+    * scene cuts show as hash jumps). REAL GIF decode per frame, same
+    * gridAHash as the image tier; GifPixelProbe locks the codec round
+    * trip pixel-exact, which is what lets the DuckDB twin re-derive
+    * every frame hash from the synthesis contract.
+    */
+  def decodeVideoFrameHashes(media: DataFrame): DataFrame =
+    decodeFrame(media.select("media_id", "payload"),
+        StructField("frame", IntegerType, nullable = false) +: fieldsOf("ahash" -> LongType)) { r =>
+      // Frames decoded so far survive a mid-decode failure, and the
+      // failure itself lands as one null-hash row (the image tier's
+      // corrupt-payload convention), so a partly corrupt video never
+      // vanishes. A payload no reader accepts is the frame-0 null-hash row.
+      val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+      try {
+        val read = withReader(r.getAs[Array[Byte]](1)) { rdr =>
+          val n = rdr.getNumImages(true)
+          var f = 0
+          while (f < n) { out += Row(f, gridAHash(rdr.read(f))); f += 1 }
         }
-        buf.iterator
-      }
+        if (read.isEmpty) out += Row(0, null)
+      } catch { case NonFatal(_) => out += Row(out.length, null) }
+      out.toSeq
     }
-    spark.createDataFrame(out, schema)
-  }
 
   /** Video-level near-dup from per-frame fingerprints: directed frame-set
     * containment C(A→B) = |H_A ∩ H_B| / |H_A| ≥ `minContainment` over
@@ -1873,7 +1513,7 @@ object Multimodal {
   }
 
   val featureSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
+    idField,
     StructField("modality", StringType),
     StructField("n_bytes", LongType),
     StructField("width", IntegerType),
@@ -1882,21 +1522,6 @@ object Multimodal {
     StructField("n_frames", LongType),
     StructField("checksum", LongType)))
 
-  /** STUB decoder: a real implementation would parse the codec header and
-    * decode frames/samples here (e.g. via javax.imageio / an FFI codec).
-    * This stub derives width/height/checksum deterministically from the
-    * payload bytes so the batch shape, schema, and partitioning are tested
-    * for real while the codec is faked.
-    */
-  private def decodeStub(payload: Array[Byte]): (Int, Int, Long) = {
-    var checksum = 0L
-    var i = 0
-    while (i < payload.length) { checksum = checksum * 31 + (payload(i) & 0xff); i += 1 }
-    val w = 64 + (math.abs(checksum % 1024)).toInt
-    val h = 64 + (math.abs((checksum / 1024) % 1024)).toInt
-    (w, h, checksum)
-  }
-
   /** Decode/feature-extract over the payload column. Narrow (no shuffle):
     * runs per input partition, processing rows in a streaming iterator.
     * ALL THREE modalities route through real JDK codecs: image via
@@ -1904,12 +1529,13 @@ object Multimodal {
     * javax.sound.sampled (sample rate / frame count from the actual WAV
     * header), video via the javax.imageio multi-frame reader (frame count
     * + frame-0 dims from the actual GIF container). A payload its codec
-    * can't parse falls back to the deterministic stub — corrupt files are
-    * data, not crashes.
+    * can't parse falls back to the deterministic STUB — width/height
+    * derived from the byte checksum, the shape a real codec would fill —
+    * so corrupt files are data, not crashes.
     */
-  def extractFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val out = media.select("media_id", "modality", "payload").rdd.mapPartitions { rows =>
+  def extractFeatures(media: DataFrame): DataFrame =
+    decodeFrame(media.select("media_id", "modality", "payload"),
+        featureSchema.fields.toSeq.tail) {
       // ONE PNG reader per partition (one thread — ImageReader isn't
       // thread-safe but needs no cross-row state beyond reset()): the
       // per-row ImageIO.read path pays an SPI registry scan + reader
@@ -1923,68 +1549,41 @@ object Multimodal {
         javax.imageio.ImageIO.getImageReadersByFormatName("png").next()
       lazy val gifReader =
         javax.imageio.ImageIO.getImageReadersByFormatName("gif").next()
-      def pngHeaderDims(payload: Array[Byte]): (Int, Int) =
+      def imageDims(payload: Array[Byte]): Row =
         try {
           val iis = javax.imageio.ImageIO.createImageInputStream(
             new java.io.ByteArrayInputStream(payload))
           try {
             pngReader.setInput(iis, true, true)
-            (pngReader.getWidth(0), pngReader.getHeight(0))
+            Row(pngReader.getWidth(0), pngReader.getHeight(0), null, null)
           } finally { pngReader.setInput(null); iis.close() }
-        } catch { case scala.util.control.NonFatal(_) => null }
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]]("payload")
-        def byteChecksum: Long = {
-          var checksum = 0L
-          var i = 0
-          while (i < payload.length) { checksum = checksum * 31 + (payload(i) & 0xff); i += 1 }
-          checksum
+        } catch {
+          case NonFatal(_) =>
+            val img = readImage(payload)
+            if (img == null) null else Row(img.getWidth, img.getHeight, null, null)
         }
-        val row = r.getString(1) match {
-          case "image" =>
-            val dims = pngHeaderDims(payload) match {
-              case null => // NonFatal: malformed-body payloads throw runtime exceptions
-                val img =
-                  try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-                  catch { case scala.util.control.NonFatal(_) => null }
-                if (img == null) null else (img.getWidth, img.getHeight)
-              case d => d
-            }
-            if (dims == null) null
-            else Row(r.getLong(0), r.getString(1), payload.length.toLong,
-              dims._1, dims._2, null, null, byteChecksum)
+      r => {
+        val payload = r.getAs[Array[Byte]](2)
+        var checksum = 0L
+        var i = 0
+        while (i < payload.length) { checksum = checksum * 31 + (payload(i) & 0xff); i += 1 }
+        // (width, height, sample_rate, n_frames) from the modality's codec
+        val meta: Row = try r.getString(1) match {
+          case "image" => imageDims(payload)
           case "audio" =>
-            val meta = try {
-              val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-                new java.io.ByteArrayInputStream(payload))
-              (ais.getFormat.getSampleRate.toInt, ais.getFrameLength)
-            } catch { case _: Exception => null }
-            if (meta == null) null
-            else Row(r.getLong(0), r.getString(1), payload.length.toLong,
-              null, null, meta._1, meta._2, byteChecksum)
-          case "video" =>
-            val meta = gifMetaFast(gifReader, payload)
-            if (meta == null) null
-            // n_frames rides the frame-count column; width/height = frame dims
-            else Row(r.getLong(0), r.getString(1), payload.length.toLong,
-              meta._2, meta._3, null, meta._1.toLong, byteChecksum)
+            val ais = openAudio(payload)
+            Row(null, null, ais.getFormat.getSampleRate.toInt, ais.getFrameLength)
+          case "video" => // n_frames rides the frame-count column; dims = frame dims
+            Option(gifMeta(gifReader, payload))
+              .map(m => Row(m._2, m._3, null, m._1.toLong)).orNull
           case _ => null
-        }
-        if (row != null) row
-        else {
-          val (w, h, c) = decodeStub(payload)
-          Row(r.getLong(0), r.getString(1), payload.length.toLong, w, h, null, null, c)
-        }
+        } catch { case NonFatal(_) => null }
+        val stub = Row(64 + math.abs(checksum % 1024).toInt,
+          64 + math.abs((checksum / 1024) % 1024).toInt, null, null)
+        Seq(Row.fromSeq(Seq(r.getString(1), payload.length.toLong) ++
+          Option(meta).getOrElse(stub).toSeq :+ checksum))
       }
     }
-    spark.createDataFrame(out, featureSchema)
-  }
-
-  val resizedSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("target_w", IntegerType),
-    StructField("target_h", IntegerType),
-    StructField("resized", BinaryType)))
 
   /** Resize. Image payloads go through the REAL codec path: javax.imageio
     * decode → Graphics2D nearest-neighbor rescale (deterministic — no
@@ -1997,31 +1596,26 @@ object Multimodal {
     * sized targetW·targetH/64).
     */
   def resize(media: DataFrame, targetW: Int, targetH: Int): DataFrame = {
-    val spark = media.sparkSession
     val n = math.max(1, targetW * targetH / 64)
-    val out = media.select("media_id", "payload").rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val p = r.getAs[Array[Byte]]("payload")
-        val img = // NonFatal: malformed-body payloads throw runtime exceptions
-          try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(p))
-          catch { case scala.util.control.NonFatal(_) => null }
-        val resized = if (img != null) {
-          val dst = new java.awt.image.BufferedImage(targetW, targetH,
-            java.awt.image.BufferedImage.TYPE_INT_RGB)
-          val g = dst.createGraphics()
-          g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_NEAREST_NEIGHBOR)
-          g.drawImage(img, 0, 0, targetW, targetH, null)
-          g.dispose()
-          val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(dst, "png", bos)
-          bos.toByteArray
-        } else
-          Array.tabulate[Byte](n)(i => if (p.isEmpty) 0 else p(i % p.length))
-        Row(r.getLong(0), targetW, targetH, resized)
-      }
+    decodeFrame(media.select("media_id", "payload"), fieldsOf("target_w" -> IntegerType,
+        "target_h" -> IntegerType, "resized" -> BinaryType)) { r =>
+      val p = r.getAs[Array[Byte]](1)
+      val img = readImage(p)
+      val resized = if (img != null) {
+        val dst = new java.awt.image.BufferedImage(targetW, targetH,
+          java.awt.image.BufferedImage.TYPE_INT_RGB)
+        val g = dst.createGraphics()
+        g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
+          java.awt.RenderingHints.VALUE_INTERPOLATION_NEAREST_NEIGHBOR)
+        g.drawImage(img, 0, 0, targetW, targetH, null)
+        g.dispose()
+        val bos = new java.io.ByteArrayOutputStream()
+        javax.imageio.ImageIO.write(dst, "png", bos)
+        bos.toByteArray
+      } else
+        Array.tabulate[Byte](n)(i => if (p.isEmpty) 0 else p(i % p.length))
+      Seq(Row(targetW, targetH, resized))
     }
-    spark.createDataFrame(out, resizedSchema)
   }
 
   /** Frame sampling: decode every `stride`-th frame of each video payload
@@ -2033,55 +1627,31 @@ object Multimodal {
     * (1 pseudo-frame per 16 payload bytes) — corrupt files are data, not
     * crashes.
     */
-  def sampleFrames(media: DataFrame, stride: Int = 2): DataFrame = {
-    val spark = media.sparkSession
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("frame_idx", IntegerType),
-      StructField("frame_checksum", LongType)))
-    val out = media.filter(col("modality") === "video")
-      .select("media_id", "payload").rdd.mapPartitions { rows =>
-        rows.flatMap { r =>
-          val p = r.getAs[Array[Byte]]("payload")
-          val real = try {
-            val iis = javax.imageio.ImageIO.createImageInputStream(
-              new java.io.ByteArrayInputStream(p))
-            val readers = javax.imageio.ImageIO.getImageReaders(iis)
-            if (!readers.hasNext) null
-            else {
-              val reader = readers.next()
-              try {
-                reader.setInput(iis)
-                val n = reader.getNumImages(true)
-                (0 until n by stride).map { i =>
-                  val img = reader.read(i)
-                  var cs = 0L
-                  var y = 0
-                  while (y < img.getHeight) {
-                    var x = 0
-                    while (x < img.getWidth) {
-                      cs = cs * 31 + (img.getRGB(x, y) & 0xffffff)
-                      x += 1
-                    }
-                    y += 1
-                  }
-                  Row(r.getLong(0), i, cs)
-                }
-              } finally reader.dispose()
+  def sampleFrames(media: DataFrame, stride: Int = 2): DataFrame =
+    decodeFrame(media.filter(col("modality") === "video").select("media_id", "payload"),
+        fieldsOf("frame_idx" -> IntegerType, "frame_checksum" -> LongType)) { r =>
+      val p = r.getAs[Array[Byte]](1)
+      val real = try withReader(p) { reader =>
+        (0 until reader.getNumImages(true) by stride).map { i =>
+          val img = reader.read(i)
+          var cs = 0L
+          var y = 0
+          while (y < img.getHeight) {
+            var x = 0
+            while (x < img.getWidth) {
+              cs = cs * 31 + (img.getRGB(x, y) & 0xffffff)
+              x += 1
             }
-          } catch { case scala.util.control.NonFatal(_) => null }
-          if (real != null) real.iterator
-          else {
-            val nFrames = math.max(1, p.length / 16)
-            (0 until nFrames by stride).iterator.map { i =>
-              var cs = 0L
-              var j = i * 16
-              while (j < math.min(p.length, (i + 1) * 16)) { cs = cs * 31 + (p(j) & 0xff); j += 1 }
-              Row(r.getLong(0), i, cs)
-            }
+            y += 1
           }
+          Row(i, cs)
         }
-      }
-    spark.createDataFrame(out, schema)
-  }
+      } catch { case NonFatal(_) => None }
+      real.getOrElse((0 until math.max(1, p.length / 16) by stride).map { i =>
+        var cs = 0L
+        var j = i * 16
+        while (j < math.min(p.length, (i + 1) * 16)) { cs = cs * 31 + (p(j) & 0xff); j += 1 }
+        Row(i, cs)
+      })
+    }
 }

@@ -556,17 +556,20 @@ object Similarity {
 
   /** Query a persisted IVF index: route each query to its `nprobe` best
     * cells by the index's centroids, then scan ONLY the probed cell
-    * partitions. The probed cell ids (≤ queries × nprobe — metadata-scale)
-    * are collected at construction only to turn `cell IN (...)` into
-    * partition pruning: one pruned scan, no join-back. Same rows as
-    * `ivfTopKBatch` with the same `cells`.
+    * partitions. The routing runs once, at construction: its (query_id,
+    * cell) rows — at most queries × nprobe, metadata-scale — are collected,
+    * their distinct cells turn `cell IN (...)` into partition pruning (one
+    * pruned scan, no join-back), and the rows themselves rejoin the plan as
+    * a local relation. Same rows as `ivfTopKBatch` with the same `cells`.
     */
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                      cells: Cells, queries: DataFrame, k: Int,
                      nprobe: Int = 2): DataFrame = {
     val q = asQueries(prepared(queries))
-    val probes = cells.route(q, spark.read.parquet(s"$indexDir/centroids"), nprobe)
-    val probed = probes.select("cell").distinct().collect().map(_.getInt(0)).toSeq
+    val routed = cells.route(q, spark.read.parquet(s"$indexDir/centroids"), nprobe)
+    val rows = routed.collect() // ≤ queries × nprobe rows
+    val probes = spark.createDataFrame(java.util.Arrays.asList(rows: _*), routed.schema)
+    val probed = rows.map(_.getInt(1)).distinct.toSeq
     probedTopK(broadcast(q.join(probes, "query_id")),
       cellsTable(spark, indexDir).filter(col("cell").isin(probed: _*)), k, cells.probe)
   }
@@ -673,20 +676,28 @@ object Similarity {
     * codes, nrm — batch=base; streaming ingest adds its own committed
     * batch dirs, see VectorStreams.pqIngest). Same crash-recoverable
     * build/maintenance discipline as the IVF layout; a layout of its own
-    * because it stores no vectors.
+    * because it stores no vectors. Over an existing index this is the
+    * retrain (VectorStreams.retrainPqIndex holds the lease around it): the
+    * streamed batches it re-encodes go to the new generation's folded
+    * ledger; a first build has none and writes no ledger.
     */
   def buildPqIndex(embeddings: DataFrame, indexDir: String,
                    m: Int = 8, kCodes: Int = 16, iters: Int = 5): Unit = {
+    val spark = embeddings.sparkSession
     val p = prepared(embeddings)
     val cbs = pqCodebooks(p.select("vec_id", "e"), m, kCodes, iters)
     DirSwap.swap(indexDir, Seq(
       "codes" -> { out =>
         pqEncode(p, cbs).write.parquet(s"$out/batch=base")
+        // folded-ledger: ids this re-encode absorbs must not replay in
+        // next to their folded copy (possibly coded by OLD codebooks)
+        BatchCommit.recordFolded(spark, out, s"$indexDir/codes",
+          BatchCommit.committedNumericIds(spark, s"$indexDir/codes"))
         DirSwap.markComplete(out)
       },
       // the trainer collected cbs driver-side; this write reads nothing live
       "codebooks" -> { out =>
-        pqCodebooksToDf(embeddings.sparkSession, cbs).write.parquet(out)
+        pqCodebooksToDf(spark, cbs).write.parquet(out)
       }))
   }
 

@@ -1036,7 +1036,7 @@ object DedupQueries {
     // an oracle-parity demo only; dedup_simhash_wide_pairs (60-bit) is the
     // benched production path.
     GraftQuery("dedup_simhash_pairs",
-      (s, d) => Dedup.simhashPairs(persistedSimhash(s, d), 2)
+      (s, d) => Dedup.hammingPairs(persistedSimhash(s, d), "doc_id", "simhash", 16, 2)
         .orderBy("doc_a", "doc_b"),
       Some(
         """WITH tf AS (
@@ -1072,7 +1072,7 @@ object DedupQueries {
         "\nSELECT doc_id, simhash FROM simh ORDER BY doc_id")),
 
     GraftQuery("dedup_simhash_wide_pairs",
-      (s, d) => Dedup.simhashPairs60(persistedSimhash60(s, d), 2)
+      (s, d) => Dedup.hammingPairs(persistedSimhash60(s, d), "doc_id", "simhash", 60, 2)
         .orderBy("doc_a", "doc_b"),
       Some(simhash60Cte +
         """

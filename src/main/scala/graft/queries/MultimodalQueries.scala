@@ -297,10 +297,10 @@ object MultimodalQueries {
     // fingerprint — same pigeonhole banding; at sf0.01 this recovers 50
     // genuine same-frequency pairs the rate-relative tier cannot see.
     GraftQuery("multimodal_audio_neardup_abs",
-      (s, d) => graft.operators.Dedup.simhashPairs60(
-        Multimodal.decodeAudioSignFpCommon(
-            persistedMedia(s, d).filter(col("modality") === "audio"))
-          .select(col("media_id").as("doc_id"), col("fp").as("simhash")), 2)
+      (s, d) => graft.operators.Dedup.hammingPairs(
+          Multimodal.decodeAudioSignFpCommon(
+            persistedMedia(s, d).filter(col("modality") === "audio")),
+          "media_id", "fp", 60, 2)
         .orderBy("doc_a", "doc_b"),
       Some(audioFpAbsCte +
         """
@@ -347,10 +347,10 @@ object MultimodalQueries {
     // pitch nearly coincides (the sign pattern is f/rate's trace), the
     // raw-PCM analogue of "same track, different gain".
     GraftQuery("multimodal_audio_neardup",
-      (s, d) => graft.operators.Dedup.simhashPairs60(
-        Multimodal.decodeAudioSignFp(
-            persistedMedia(s, d).filter(col("modality") === "audio"))
-          .select(col("media_id").as("doc_id"), col("fp").as("simhash")), 2)
+      (s, d) => graft.operators.Dedup.hammingPairs(
+          Multimodal.decodeAudioSignFp(
+            persistedMedia(s, d).filter(col("modality") === "audio")),
+          "media_id", "fp", 60, 2)
         .orderBy("doc_a", "doc_b"),
       Some(audioFpCte +
         """
@@ -385,10 +385,11 @@ object MultimodalQueries {
 
     // pHash near-dup pairs at hamming <= 1 via single-bit-flip
     // pigeonhole keys — pure equi-join blocking at 16 keys/image
-    // (Multimodal.phashPairs1); exact bit_count verify.
+    // (Dedup.hammingPairs at maxHamming 1); exact bit_count verify.
     GraftQuery("multimodal_phash_pairs",
-      (s, d) => Multimodal.phashPairs1(Multimodal.decodeImagePHash(
-        persistedMedia(s, d).filter(col("modality") === "image")))
+      (s, d) => graft.operators.Dedup.hammingPairs(Multimodal.decodeImagePHash(
+          persistedMedia(s, d).filter(col("modality") === "image")),
+          "media_id", "phash", 15, 1)
         .orderBy("doc_a", "doc_b"),
       Some(phashCte +
         """
@@ -406,10 +407,10 @@ object MultimodalQueries {
     // invariant up to mod-256 wraparound), so the pairs are plentiful
     // and graded, not planted certainties.
     GraftQuery("multimodal_ahash_pairs",
-      (s, d) => graft.operators.Dedup.simhashPairs60(
-        Multimodal.decodeImageAHash(
-            persistedMedia(s, d).filter(col("modality") === "image"))
-          .select(col("media_id").as("doc_id"), col("ahash").as("simhash")), 2)
+      (s, d) => graft.operators.Dedup.hammingPairs(
+          Multimodal.decodeImageAHash(
+            persistedMedia(s, d).filter(col("modality") === "image")),
+          "media_id", "ahash", 60, 2)
         .orderBy("doc_a", "doc_b"),
       Some(ahashCte +
         """

@@ -212,21 +212,8 @@ object VectorStreams {
                      embeddings: DataFrame,
                      m: Int = 8, kCodes: Int = 16, iters: Int = 5): Unit =
     graft.operators.Lease.withLease(indexDir, "retrain-pq") {
-    val p = Similarity.prepared(embeddings)
-    val cbs = Similarity.pqCodebooks(p.select("vec_id", "e"), m, kCodes, iters)
-    graft.operators.DirSwap.swap(indexDir, Seq(
-      "codes" -> { out =>
-        Similarity.pqEncode(p, cbs).write.parquet(s"$out/batch=base")
-        // folded-ledger: ids this re-encode absorbs must not replay in
-        // next to their folded copy (possibly coded by OLD codebooks)
-        graft.operators.BatchCommit.recordFolded(spark, out, s"$indexDir/codes",
-          graft.operators.BatchCommit.committedNumericIds(spark, s"$indexDir/codes"))
-        graft.operators.DirSwap.markComplete(out)
-      },
-      "codebooks" -> { out =>
-        Similarity.pqCodebooksToDf(spark, cbs).write.parquet(out)
-      }))
-  }
+      Similarity.buildPqIndex(embeddings, indexDir, m, kCodes, iters)
+    }
 
   /** The periodic batch retrain + swap the fixed-centroid discipline
     * requires: as the streamed corpus drifts away from the distribution

@@ -393,7 +393,7 @@ class DedupSpec extends AnyFunSuite {
     assert(m(1L) == m(2L))                      // identical docs
     assert(m.values.forall(v => v >= 0 && v < (1L << 60)))
     assert(m(1L) != m(4L))                      // unrelated docs differ
-    val pairs = Dedup.simhashPairs60(sh, 2)
+    val pairs = Dedup.hammingPairs(sh, "doc_id", "simhash", 60, 2)
       .as[(Long, Long, Long)].collect().toSeq
     assert(pairs.exists(p => p._1 == 1L && p._2 == 2L && p._3 == 0L))
     // at 60 bits, hamming<=2 is a REAL near-dup signal: the unrelated doc
@@ -406,7 +406,7 @@ class DedupSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val corpus = graft.sources.Tables.documents(spark, TestSpark.sf0001)
     val sh = Dedup.simhash(corpus)
-    val banded = Dedup.simhashPairs(sh, 2)
+    val banded = Dedup.hammingPairs(sh, "doc_id", "simhash", 16, 2)
       .as[(Long, Long, Long)].collect().toSet
     val allPairs = sh.as("a").join(sh.as("b"), col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
@@ -415,6 +415,38 @@ class DedupSpec extends AnyFunSuite {
       .as[(Long, Long, Long)].collect().toSet
     assert(banded == allPairs)
     assert(banded.nonEmpty)
+  }
+
+  test("hammingPairs == brute-force bit_count pairs for every shape in use, at 1 and 8 partitions") {
+    import spark.implicits._
+    // clustered hashes: 40 random bases, each with variants 0..3 bits
+    // away, plus exact duplicates and null hashes — near pairs at every
+    // distance the budgets straddle
+    for ((bits, maxHamming) <- Seq((15, 1), (24, 1), (16, 2), (60, 2))) {
+      val rnd = new scala.util.Random(bits * 10 + maxHamming)
+      val hashes: Seq[(Long, Option[Long])] = (0 until 40).flatMap { b =>
+        val base = rnd.nextLong() & ((1L << bits) - 1)
+        (0 until 6).map { v =>
+          val flips = (0 until v % 4).map(_ => 1L << rnd.nextInt(bits)).foldLeft(0L)(_ ^ _)
+          (b * 6L + v, if (v == 5 && b % 7 == 0) None else Some(base ^ flips))
+        }
+      }
+      val brute = (for {
+        (a, Some(ha)) <- hashes; (b, Some(hb)) <- hashes
+        if a < b && java.lang.Long.bitCount(ha ^ hb) <= maxHamming
+      } yield (a, b, java.lang.Long.bitCount(ha ^ hb).toLong)).toSet
+      assert(brute.exists(_._3 == maxHamming), s"($bits, $maxHamming): no pair at the budget")
+      assert(brute.exists(_._3 == 0L), s"($bits, $maxHamming): no duplicate pair")
+      val df = hashes.toDF("id", "h")
+      for (parts <- Seq(1, 8)) {
+        val got = Dedup.hammingPairs(df.repartition(parts), "id", "h", bits, maxHamming)
+          .as[(Long, Long, Long)].collect()
+        val shape = s"($bits, $maxHamming) at $parts partitions"
+        assert(got.length == got.toSet.size, s"$shape: duplicate rows")
+        assert((brute -- got).isEmpty, s"$shape: missed pairs")
+        assert((got.toSet -- brute).isEmpty, s"$shape: pairs beyond the budget")
+      }
+    }
   }
 
   test("LSH-fed clusters refine the exact clusters (no false merges)") {

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Multimodal
 import graft.sources.Tables
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -153,6 +154,63 @@ class MultimodalSpec extends AnyFunSuite {
     assert(r.length == 1 && r.head.isNullAt(1) && r.head.isNullAt(2))
   }
 
+  test("every decode*: empty, truncated, random and wrong-format payloads give one null row per id") {
+    import spark.implicits._
+    val real = Multimodal.withRealMedia(docs.filter(col("doc_id") < 3))
+      .select("modality", "payload").collect()
+      .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
+    def first(media: DataFrame): Array[Byte] =
+      media.orderBy("media_id").select("payload").head().getAs[Array[Byte]](0)
+    val (png, wav, gif) = (real("image"), real("audio"), real("video"))
+    val mp4 = first(Multimodal.withMp4Media(docs))
+    val webm = first(Multimodal.withWebmMedia(docs))
+    val jpeg = first(Multimodal.withJpegMedia(docs))
+    val spectral = first(Multimodal.withSpectralMedia(docs))
+    // a VALID WAV in a layout the PCM decoders must refuse: 8-bit stereo
+    val wav8Stereo = {
+      val fmt = new javax.sound.sampled.AudioFormat(8000f, 8, 2, true, false)
+      val ais = new javax.sound.sampled.AudioInputStream(
+        new java.io.ByteArrayInputStream(Array.tabulate[Byte](512)(i => (i % 97).toByte)),
+        fmt, 256L)
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.sound.sampled.AudioSystem.write(ais,
+        javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
+      bos.toByteArray
+    }
+    val random = { val r = new scala.util.Random(13); Array.fill(64)(r.nextInt(256).toByte) }
+    val pcmForeign = Seq(png, wav8Stereo)
+    val decoders = Seq[(String, DataFrame => DataFrame, Array[Byte], Seq[Array[Byte]])](
+      ("decodeImageDims", Multimodal.decodeImageDims, png, Seq(wav)),
+      ("decodeImagePHash", Multimodal.decodeImagePHash, png, Seq(wav)),
+      ("decodeImageAHash", Multimodal.decodeImageAHash, png, Seq(wav)),
+      ("decodeJpegFlat", Multimodal.decodeJpegFlat, jpeg, Seq(wav)),
+      ("decodeJpegError", Multimodal.decodeJpegError(_), jpeg, Seq(wav)),
+      ("decodeJpegMarkers", Multimodal.decodeJpegMarkers, jpeg, Seq(png)),
+      ("decodeVideoMeta", Multimodal.decodeVideoMeta, gif, Seq(wav)),
+      // the per-frame decoder's null row keeps its (non-null) frame index
+      ("decodeVideoFrameHashes", m => Multimodal.decodeVideoFrameHashes(m).drop("frame"),
+        gif, Seq(wav)),
+      ("decodeAudioMeta", Multimodal.decodeAudioMeta, wav, Seq(png)),
+      ("decodeAudioSignFp", Multimodal.decodeAudioSignFp, wav, pcmForeign),
+      ("decodeAudioSignFpCommon", Multimodal.decodeAudioSignFpCommon(_), wav, pcmForeign),
+      ("decodeAudioZcr", Multimodal.decodeAudioZcr, wav, pcmForeign),
+      ("decodeAudioSpectral", Multimodal.decodeAudioSpectral, spectral, pcmForeign),
+      ("decodeMp4Meta", Multimodal.decodeMp4Meta, mp4, Seq(webm)),
+      ("decodeMp4Tracks", Multimodal.decodeMp4Tracks, mp4, Seq(webm)),
+      ("decodeWebmMeta", Multimodal.decodeWebmMeta, webm, Seq(mp4)),
+      ("decodeWebmTracks", Multimodal.decodeWebmTracks, webm, Seq(mp4)))
+    for ((name, decode, own, foreign) <- decoders) {
+      // the decoder's own format cut to 12 bytes: a header, no body
+      val payloads = Seq(Array.emptyByteArray, own.take(12), random) ++ foreign
+      val in = payloads.zipWithIndex.map { case (p, i) => (i.toLong, p) }
+        .toDF("media_id", "payload")
+      val out = decode(in).collect()
+      assert(out.map(_.getLong(0)).sorted.toSeq == payloads.indices.map(_.toLong),
+        s"$name: not one row per id")
+      out.foreach(r => assert((1 until r.length).forall(r.isNullAt), s"$name: $r"))
+    }
+  }
+
   test("extractFeatures: deterministic stub decode, n_bytes = payload size") {
     val docs = Tables.documents(spark, TestSpark.sf0001).limit(50)
     val feats = Multimodal.extractFeatures(Multimodal.fromDocuments(docs))
@@ -175,7 +233,7 @@ class MultimodalSpec extends AnyFunSuite {
       graft.sources.Tables.documents(spark, TestSpark.sf0001))
       .filter(col("modality") === "image")
     val hashes = Multimodal.decodeImagePHash(media).localCheckpoint()
-    val blocked = Multimodal.phashPairs1(hashes)
+    val blocked = graft.operators.Dedup.hammingPairs(hashes, "media_id", "phash", 15, 1)
       .select("doc_a", "doc_b").orderBy("doc_a", "doc_b").collect().toSeq
     val brute = hashes.as("a").join(hashes.as("b"),
         col("a.media_id") < col("b.media_id"))

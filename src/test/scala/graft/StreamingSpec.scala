@@ -527,6 +527,23 @@ class StreamingSpec extends AnyFunSuite {
     assert(pq.forall { case (qq, n, c) => brute((qq, n)) == c })
   }
 
+  test("PQ retrain is the PQ build under the lease: folded batches are ledgered, a replay stays out") {
+    val emb = graft.sources.Tables.embeddings(spark, TestSpark.sf0001)
+    val idx = java.nio.file.Files.createTempDirectory("pqretrain").toString
+    val codes = s"$idx/codes"
+    graft.operators.Similarity.buildPqIndex(emb.filter(col("vec_id") % 2 === 0), idx)
+    assert(graft.operators.BatchCommit.foldedIds(spark, codes).isEmpty) // nothing to fold
+    val odd = emb.filter(col("vec_id") % 2 === 1)
+    graft.streaming.VectorStreams.pqIngestBatch(odd, idx, batchId = 3L)
+    graft.streaming.VectorStreams.retrainPqIndex(spark, idx, emb)
+    assert(graft.operators.BatchCommit.foldedIds(spark, codes) == Set(3L))
+    val n = emb.count()
+    assert(graft.operators.Similarity.pqCodesTable(spark, idx).count() == n)
+    // crash-replay of the folded batch: skipped, its rows are not doubled
+    graft.streaming.VectorStreams.pqIngestBatch(odd, idx, batchId = 3L)
+    assert(graft.operators.Similarity.pqCodesTable(spark, idx).count() == n)
+  }
+
   test("IVF centroid retrain + swap recovers recall after drift") {
     import spark.implicits._
     implicit val sc = spark.sqlContext
