@@ -125,5 +125,5 @@ object IncrementalIndex {
     */
   def searchTopK(spark: SparkSession, indexDir: String,
                  query: String, k: Int = 10): DataFrame =
-    Search.indexedTopK(spark, open(spark, indexDir), query, k)
+    Search.indexedTopK(open(spark, indexDir), query, k)
 }

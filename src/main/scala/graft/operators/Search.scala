@@ -136,74 +136,32 @@ object Search {
       .select("doc_id", "word_id", "tf")
 
   /** Q1: driver-side query translation (Query.java:48-58) — tokenize the
-    * query string with the same rules, emit (word, qtf). Tiny by
-    * construction; becomes the broadcast side of the scoring join.
+    * query string with the same rules, emit (word, qtf): the DataFrame
+    * form of `queryTf`.
     */
   def queryTerms(spark: SparkSession, query: String): DataFrame = {
     import spark.implicits._
-    queryWords(query)
-      .groupBy(identity).map { case (w, ws) => (w, ws.size.toLong) }
-      .toSeq.toDF("word", "qtf")
+    queryTf(query).toSeq.toDF("word", "qtf")
   }
 
-  /** A query's words, repeats kept: the reference's query tokenizer. */
-  private def queryWords(query: String): Seq[String] =
+  /** A query's word → qtf map (the reference's query tokenizer), built on
+    * the driver: the scoring plans carry it as a literal, not a table. */
+  private def queryTf(query: String): Map[String, Long] =
     TextOps.tokenizeScala(TextOps.filterTextScala(query))
-
-  /** The reference's score (quirk Q-b) over postings joined to the query
-    * terms: (doc_id, tf, qtf, df) → (doc_id, score = Σ tf·qtf/df²). */
-  private def parityScores(joined: DataFrame): DataFrame =
-    joined
-      .select(col("doc_id"),
-        (col("tf") * col("qtf") / (col("df").cast("double") * col("df"))).as("part"))
-      .groupBy("doc_id")
-      .agg(Stable.stab(sum(col("part")), 9).as("score"))
-
-  /** BM25 (formula on searchTopKBm25) over postings joined to the query
-    * terms (doc_id, tf, qtf, df) and per-doc lengths (doc_id, dl). avgdl
-    * is sum/count, not avg: dl is integer-valued, so the sum is EXACT in
-    * any aggregation order and avgdl is bit-stable across engines. */
-  private def bm25Scores(joined: DataFrame, dl: DataFrame,
-                         k1: Double, b: Double): DataFrame = {
-    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-      (sum("dl") / count(lit(1))).as("avgdl"))
-    joined
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"),
-        (log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
-          col("qtf") * (col("tf") * (k1 + 1)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))).as("part"))
-      .groupBy("doc_id")
-      .agg(Stable.stab(sum(col("part")), 6).as("score"))
-  }
-
-  /** Per-doc lengths from docinfo's `n_tokens`. Docs with no kept token
-    * (n_tokens = 0) are excluded from the corpus statistics. */
-  private def dlFrom(lengths: DataFrame): DataFrame =
-    lengths.filter(col("n_tokens") > 0)
-      .select(col("doc_id"), col("n_tokens").cast("double").as("dl"))
-
-  /** Shared Q2-Q8 tail: exact top-k by (score desc, doc_id asc), then
-    * doc metadata broadcast-joined onto the k rows, order restored. */
-  private def topKWithDocInfo(scores: DataFrame, docinfo: DataFrame, k: Int): DataFrame =
-    scores.orderBy(desc("score"), asc("doc_id")).limit(k)
-      .join(broadcast(docinfo.select("doc_id", "source", "lang")), "doc_id")
-      .select("doc_id", "score", "source", "lang")
-      .orderBy(desc("score"), asc("doc_id"))
+      .groupBy(identity).map { case (w, ws) => (w, ws.size.toLong) }
 
   /** Q2-Q8: score + top-k. Scoring formula is the reference's exactly
     * (quirk Q-b, Query.java:113-115): score(d) = Σ_{w∈q∩d} tf_d·tf_q/df².
     * No log, no N/df — replicated for parity. The indexed query path over
     * the corpus's lazy index (`indexOf`): one corpus tokenize, df from the
-    * query's vocabulary rows, TakeOrderedAndProject, and doc metadata
-    * broadcast onto the k rows. Ties break on doc_id (quirk Q-d) and the
+    * query's vocabulary rows, doc metadata joined before the per-document
+    * sum, and TakeOrderedAndProject. Ties break on doc_id (quirk Q-d) and the
     * limit is exact k (quirk Q-c's k+1 off-by-one is a bug, not
     * replicated — documented in SearchSpec).
     */
   def searchTopK(spark: SparkSession, dir: String,
                  query: String = DefaultQuery, k: Int = 10): DataFrame =
-    indexedTopK(spark, indexOf(Tables.documents(spark, dir)), query, k)
+    indexedTopK(indexOf(Tables.documents(spark, dir)), query, k)
 
   /** BM25 top-k — the standard probabilistic ranking beside the parity
     * (tf·qtf/df²) and log-idf variants:
@@ -214,12 +172,12 @@ object Search {
     * (Robertson idf, k1/b the classic 1.2/0.75), scored by the indexed
     * BM25 path over the corpus's lazy index: the document lengths are
     * docinfo's `n_tokens`, from the same one tokenize as the postings.
-    * Determinism: see bm25Scores.
+    * Determinism: see bm25TopK.
     */
   def searchTopKBm25(spark: SparkSession, dir: String,
                      query: String = DefaultQuery, k: Int = 10,
                      k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25TopK(spark, indexOf(Tables.documents(spark, dir)), query, k, k1, b)
+    bm25TopK(indexOf(Tables.documents(spark, dir)), query, k, k1, b)
 
   /** `searchTopKBm25` with a PRECOMPUTED docinfo table (doc_id, source,
     * lang, n_tokens) — a deployment refreshes it once per corpus version,
@@ -231,8 +189,7 @@ object Search {
   def searchTopKBm25Stats(spark: SparkSession, dir: String, docinfo: DataFrame,
                           query: String = DefaultQuery, k: Int = 10,
                           k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25TopK(spark, indexOf(Tables.documents(spark, dir)).copy(docinfo = docinfo),
-      query, k, k1, b)
+    bm25TopK(indexOf(Tables.documents(spark, dir)).copy(docinfo = docinfo), query, k, k1, b)
 
   /** Distributed retrieval EVALUATION — the offline quality job a search
     * pipeline runs on every index build, as ONE batch plan instead of a
@@ -324,7 +281,7 @@ object Search {
     val docs = Tables.corpusJson(spark, corpusDir).select(col("id").as("doc_id"),
       col("url").as("source"), col("title").as("lang"),
       length(col("text")).as("n_chars"), col("text"))
-    indexedTopK(spark, indexOf(docs), query, k)
+    indexedTopK(indexOf(docs), query, k)
       .select(col("lang").as("title"), col("source").as("url"))
   }
 
@@ -438,41 +395,67 @@ object Search {
   def openIndex(spark: SparkSession, indexDir: String): Index =
     index((t, schema) => spark.read.schema(schema).parquet(s"$indexDir/$t"))
 
-  /** (doc_id, word, tf, qtf, df) of the query's terms — the one read behind
-    * every indexed search. The postings scan carries a `wb IN (...)`
-    * predicate computed on the driver, so partition pruning reads ≤ |q|
-    * bucket dirs, under the guarded SinglePartition pin (a no-op at a
-    * production index, where a bucket is many splits); df joins in-plan
-    * from the `word IN (q)` vocabulary rows, so building the plan runs no
-    * job. Query words the index lacks have no postings, so they drop out
-    * of the postings join. The df join is a LEFT join: for a query of
-    * such words only, an inner join would make an empty broadcast that
-    * AQE propagates over the whole plan while sibling stages are starting,
-    * so the query's job count would depend on timing.
+  /** (word, doc_id, tf, wb, qtf, df) of the query's terms — the one read
+    * behind every indexed search. Partition pruning on a driver-computed
+    * `wb IN (...)` reads ≤ |q| bucket dirs, under the guarded
+    * SinglePartition pin (a no-op at a production index, where a bucket is
+    * many splits). qtf is a lookup in the query's literal word → qtf map,
+    * and other words of those buckets drop out where it finds none (not a
+    * word filter pushed to parquet: a bucket file mixes words, so its
+    * dictionary reads skip nothing). df joins from ONE broadcast of the
+    * vocabulary's `word IN (q)` rows: no job at plan time, no query-term
+    * table. The LEFT join keeps the job count timing-free: for a query of
+    * absent words only, an inner join's empty broadcast would be
+    * propagated by AQE over the whole plan while sibling stages start.
     */
-  private[graft] def indexedPostings(spark: SparkSession, ix: Index, query: String): DataFrame = {
-    val words = queryWords(query).distinct
-    val qt = queryTerms(spark, query)
-      .join(broadcast(ix.vocabulary.filter(col("word").isin(words: _*))), Seq("word"), "left")
-    Spread.tight(ix.postings.filter(col("wb").isin(words.map(bucketOf).distinct: _*)))
-      .join(broadcast(qt), "word")
+  private[graft] def indexedPostings(ix: Index, query: String): DataFrame = {
+    val qtf = queryTf(query)
+    Spread.tight(ix.postings.filter(col("wb").isin(qtf.keys.map(bucketOf).toSeq: _*)))
+      .withColumn("qtf", element_at(typedLit(qtf), col("word")))
+      .filter(col("qtf").isNotNull)
+      .join(broadcast(ix.vocabulary.filter(col("word").isin(qtf.keys.toSeq: _*))), Seq("word"), "left")
   }
 
-  /** Parity top-k over an index: persisted, incremental or lazy. */
-  private[operators] def indexedTopK(spark: SparkSession, ix: Index, query: String,
-                                     k: Int): DataFrame =
-    topKWithDocInfo(parityScores(indexedPostings(spark, ix, query)), ix.docinfo, k)
+  /** The shared Q2-Q8 tail: the postings join ONE broadcast of docinfo
+    * (source, lang and n_tokens, BM25's dl) before Σ `part` per document,
+    * rounded to `digits` with source and lang carried through the group;
+    * then the exact top-k by (score desc, doc_id asc), TakeOrderedAndProject. */
+  private def topK(ix: Index, postings: DataFrame, part: Column, digits: Int,
+                   k: Int): DataFrame =
+    postings.join(broadcast(ix.docinfo.select("doc_id", "source", "lang", "n_tokens")), "doc_id")
+      .groupBy("doc_id", "source", "lang")
+      .agg(Stable.stab(sum(part), digits).as("score"))
+      .orderBy(desc("score"), asc("doc_id")).limit(k)
+      .select("doc_id", "score", "source", "lang")
+
+  /** Parity top-k over an index (persisted, incremental or lazy): the
+    * reference's score (quirk Q-b), Σ tf·qtf/df². */
+  private[operators] def indexedTopK(ix: Index, query: String, k: Int): DataFrame =
+    topK(ix, indexedPostings(ix, query),
+      col("tf") * col("qtf") / (col("df").cast("double") * col("df")), 9, k)
 
   /** `searchTopK`'s answer (same formula, same tie-break) from the index. */
   def searchTopKIndexed(spark: SparkSession, indexDir: String,
                         query: String = DefaultQuery, k: Int = 10): DataFrame =
-    indexedTopK(spark, openIndex(spark, indexDir), query, k)
+    indexedTopK(openIndex(spark, indexDir), query, k)
 
-  /** BM25 top-k over an index: the one BM25 path of every tier. */
-  private def bm25TopK(spark: SparkSession, ix: Index, query: String, k: Int,
-                       k1: Double, b: Double): DataFrame =
-    topKWithDocInfo(bm25Scores(indexedPostings(spark, ix, query), dlFrom(ix.docinfo), k1, b),
-      ix.docinfo, k)
+  /** BM25 top-k over an index: the one BM25 path of every tier (formula
+    * on searchTopKBm25). N and avgdl are a one-row aggregate of docinfo,
+    * broadcast onto every posting; a document with no kept token
+    * (n_tokens = 0) is left out of them. avgdl is sum/count, not avg: dl
+    * is integer-valued, so the sum is EXACT in any aggregation order and
+    * avgdl is bit-stable across engines.
+    */
+  private def bm25TopK(ix: Index, query: String, k: Int,
+                       k1: Double, b: Double): DataFrame = {
+    val dl = col("n_tokens").cast("double")
+    val stats = ix.docinfo.filter(col("n_tokens") > 0)
+      .agg(count(lit(1)).cast("double").as("n_docs"), (sum(dl) / count(lit(1))).as("avgdl"))
+    topK(ix, indexedPostings(ix, query).crossJoin(broadcast(stats)),
+      log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) *
+        col("qtf") * (col("tf") * (k1 + 1)) /
+        (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * dl / col("avgdl"))), 6, k)
+  }
 
   /** `searchTopKBm25`'s answer (same oracle) with ZERO corpus scans: tf/df
     * from the pruned postings and vocabulary, document lengths from
@@ -481,5 +464,5 @@ object Search {
   def searchTopKBm25Indexed(spark: SparkSession, indexDir: String,
                             query: String = DefaultQuery, k: Int = 10,
                             k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25TopK(spark, openIndex(spark, indexDir), query, k, k1, b)
+    bm25TopK(openIndex(spark, indexDir), query, k, k1, b)
 }

@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.{ArrayMeanAgg, Stable}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{graftglue, Column, DataFrame}
 
 /** Similarity search over an embedding column (ARRAY<FLOAT>).
@@ -545,13 +546,26 @@ object Similarity {
       "centroids" -> { out => cent.write.parquet(out) }))
   }
 
+  /** The persisted IVF and PQ tables' schemas: a read that passes its
+    * schema opens no parquet footer, so opening a table runs no job. */
+  private val IndexSchemas = Map(
+    "cells" -> "vec_id BIGINT, e ARRAY<DOUBLE>, nrm DOUBLE, cell INT",
+    "centroids" -> "cell INT, c ARRAY<DOUBLE>",
+    "codes" -> "vec_id BIGINT, codes ARRAY<INT>, nrm DOUBLE",
+    "codebooks" -> "j INT, code INT, c ARRAY<DOUBLE>").view.mapValues(StructType.fromDDL).toMap
+
+  /** An index dir's `centroids` or `codebooks` table. */
+  def indexTable(spark: org.apache.spark.sql.SparkSession, indexDir: String,
+                 table: String): DataFrame =
+    spark.read.schema(IndexSchemas(table)).parquet(s"$indexDir/$table")
+
   /** Committed-batches view of a batch-keyed cells table (build writes
     * batch=base, each streaming micro-batch its own numeric id — see
     * VectorStreams.vectorIngest). Partition pruning on the cell column
     * still applies per batch dir.
     */
   def cellsTable(spark: org.apache.spark.sql.SparkSession, indexDir: String): DataFrame =
-    BatchCommit.readCommitted(spark, s"$indexDir/cells").getOrElse(
+    BatchCommit.readCommitted(spark, s"$indexDir/cells", Some(IndexSchemas("cells"))).getOrElse(
       throw new IllegalStateException(s"$indexDir/cells has no committed batches"))
 
   /** Query a persisted IVF index: route each query to its `nprobe` best
@@ -566,7 +580,7 @@ object Similarity {
                      cells: Cells, queries: DataFrame, k: Int,
                      nprobe: Int = 2): DataFrame = {
     val q = asQueries(prepared(queries))
-    val routed = cells.route(q, spark.read.parquet(s"$indexDir/centroids"), nprobe)
+    val routed = cells.route(q, indexTable(spark, indexDir, "centroids"), nprobe)
     val rows = routed.collect() // ≤ queries × nprobe rows
     val probes = spark.createDataFrame(java.util.Arrays.asList(rows: _*), routed.schema)
     val probed = rows.map(_.getInt(1)).distinct.toSeq
@@ -703,7 +717,7 @@ object Similarity {
 
   /** Committed-batches view of the PQ code table. */
   def pqCodesTable(spark: org.apache.spark.sql.SparkSession, indexDir: String): DataFrame =
-    BatchCommit.readCommitted(spark, s"$indexDir/codes").getOrElse(
+    BatchCommit.readCommitted(spark, s"$indexDir/codes", Some(IndexSchemas("codes"))).getOrElse(
       throw new IllegalStateException(s"$indexDir/codes has no committed batches"))
 
   /** Per-query ADC lookup tables, built in-plan: lut[j·kc + code] = the
@@ -798,7 +812,7 @@ object Similarity {
                  embeddings: DataFrame, queries: DataFrame,
                  k: Int = 5, shortlist: Int = 10): DataFrame =
     knnPqBatchFromCodes(embeddings, queries, pqCodesTable(spark, indexDir),
-      spark.read.parquet(s"$indexDir/codebooks"), k, shortlist)
+      indexTable(spark, indexDir, "codebooks"), k, shortlist)
 
   /** [[knnPqBatch]] for the queries vec_id < nQueries of `embeddings`. */
   def knnPqIndexed(spark: org.apache.spark.sql.SparkSession, indexDir: String,

@@ -75,7 +75,9 @@ object Persisted {
     * always start with `_`; no test SF dir's sanitized name is a proper
     * `_`-followed prefix of another's). The first call per kind dir in a
     * JVM also drops every `_`-prefixed entry: names the sanitizer made
-    * before it dropped the leading `_`, unreachable since.
+    * before it dropped the leading `_`, unreachable since. An aside
+    * `<keep>.build-<uuid>` is a concurrent builder's write in progress
+    * and is kept: deleting it failed that builder's write.
     */
   private def pruneStale(fs: FileSystem, kindDir: Path, d: String,
                          keep: String): Unit = {
@@ -83,7 +85,7 @@ object Persisted {
     val prefix = sanitized(d) + "_"
     val legacy = swept.add(kindDir.toString)
     fs.listStatus(kindDir).map(_.getPath)
-      .filter(p => p.getName != keep &&
+      .filter(p => p.getName != keep && !p.getName.startsWith(s"$keep.build-") &&
         (p.getName.startsWith(prefix) || legacy && p.getName.startsWith("_")))
       .foreach(fs.delete(_, true))
   }

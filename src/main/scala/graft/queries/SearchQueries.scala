@@ -211,7 +211,7 @@ object SearchQueries {
         // every posting): an eager count would run a job per invocation
         val ix = Search.indexOf(Tables.documents(s, d))
         val nDf = ix.docinfo.agg(count(lit(1)).cast("double").as("n_docs"))
-        Search.indexedPostings(s, ix, Search.DefaultQuery)
+        Search.indexedPostings(ix, Search.DefaultQuery)
           .crossJoin(broadcast(nDf))
           .select(col("doc_id"),
             (col("tf") * col("qtf") * log(col("n_docs") / col("df"))).as("part"))

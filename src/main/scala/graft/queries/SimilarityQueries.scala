@@ -327,7 +327,7 @@ object SimilarityQueries {
     GraftQuery("emb_pq_error",
       (s, d) => {
         val cbs = Similarity.pqCodebooksFromDf(
-          s.read.parquet(pqIndexDir(s, d) + "/codebooks"))
+          Similarity.indexTable(s, pqIndexDir(s, d), "codebooks"))
         Similarity.pqReconError(Tables.embeddings(s, d), cbs).orderBy("vec_id")
       },
       Some {
@@ -411,7 +411,7 @@ object SimilarityQueries {
         val codes = Similarity.pqCodesTable(s, pqIndexDir(s, d))
           .join(emb.select(col("vec_id"), col("label").as("cell")), "vec_id")
         Similarity.knnPqBatchFromCodes(emb, emb.filter(col("vec_id") < 10),
-            codes, s.read.parquet(s"${pqIndexDir(s, d)}/codebooks"), nprobe = 2)
+            codes, Similarity.indexTable(s, pqIndexDir(s, d), "codebooks"), nprobe = 2)
           .select("query_id", "neighbor_id", "cos", "rank")
           .orderBy("query_id", "rank")
       },

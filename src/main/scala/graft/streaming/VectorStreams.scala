@@ -35,7 +35,7 @@ object VectorStreams {
     // `centroids` can belong to DIFFERENT generations, and appending rows
     // celled by one generation's centroids would silently degrade recall
     graft.operators.DirSwap.requireClean(indexDir, "centroids")
-    val cent = spark.read.parquet(s"$indexDir/centroids")
+    val cent = Similarity.indexTable(spark, indexDir, "centroids")
     val p = Similarity.prepared(batch)
     graft.operators.BatchCommit.writeBatch(Similarity.kmeansAssign(p, cent),
       s"$indexDir/cells", batchId, partitionCols = Seq("cell"))
@@ -74,8 +74,7 @@ object VectorStreams {
     val spark = batch.sparkSession
     graft.operators.Lease.check(indexDir) // see ingestVectorBatch
     graft.operators.DirSwap.requireClean(indexDir, "codebooks")
-    val cbs = Similarity.pqCodebooksFromDf(
-      spark.read.parquet(s"$indexDir/codebooks"))
+    val cbs = Similarity.pqCodebooksFromDf(Similarity.indexTable(spark, indexDir, "codebooks"))
     val p = Similarity.prepared(batch)
     graft.operators.BatchCommit.writeBatch(Similarity.pqEncode(p, cbs),
       s"$indexDir/codes", batchId)

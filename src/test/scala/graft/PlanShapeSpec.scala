@@ -83,6 +83,8 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("search_topk: top-k via TakeOrderedAndProject, query side broadcast") {
+    // the query's side tables — its vocabulary rows and docinfo — join the
+    // postings as broadcasts; qtf is a literal, not a table
     val p = plan("search_topk")
     assert(p.contains("TakeOrderedAndProject"))
     assert(p.contains("BroadcastHashJoin"))
@@ -231,10 +233,35 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan("knn_brute").contains("WindowGroupLimit"))
   }
 
+  /** Each BroadcastExchange of a query's plan: the index tables it reads
+    * (the scanned dir's name, "LocalTableScan" for a local relation), and
+    * whether it broadcasts an aggregate. */
+  def broadcasts(df: org.apache.spark.sql.DataFrame): Seq[(String, Boolean)] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val root = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    root.collect { case b: BroadcastExchangeExec => b }.map { b =>
+      val tables = b.collectLeaves().map {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.getName).mkString(",")
+        case _: LocalTableScanExec => "LocalTableScan"
+        case o => o.nodeName
+      }
+      (tables.distinct.sorted.mkString("+"), b.exists(_.isInstanceOf[BaseAggregateExec]))
+    }.sorted
+  }
+
   test("search_topk_indexed: postings scan partition-pruned to query buckets") {
     val df = SparkEntry.queries("search_topk_indexed")(spark, d)
     val scans = df.queryExecution.executedPlan.toString
     assert(scans.contains("PartitionFilters: [wb"))
+    // one broadcast per index table: the query's vocabulary rows and
+    // docinfo; the query terms are no broadcast of a local relation
+    assert(broadcasts(df) == Seq(("docinfo", false), ("vocabulary", false)))
   }
 
   test("search_topk_bm25_indexed: bucket-pruned postings, no corpus scan") {
@@ -245,6 +272,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // (the whole point of carrying n_tokens in docinfo)
     assert(!scans.contains("documents.parquet"),
       "indexed BM25 scanned the corpus")
+    // as parity, plus the one-row N/avgdl aggregate of docinfo
+    assert(broadcasts(df) == Seq(("docinfo", false), ("docinfo", true), ("vocabulary", false)))
   }
 
   test("text_curate: the composite stays equi-join + hash-agg end to end") {

@@ -211,6 +211,43 @@ class SearchSpec extends AnyFunSuite {
     }
   }
 
+  /** The Spark jobs one `collect()` of `df` starts. */
+  def jobsOf(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { df.collect(); org.apache.spark.TestBus.drain(sc); jobs.get }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("indexed search job gate: parity 3 jobs, BM25 5, the same every run") {
+    // the index of an 8-file copy: docinfo plans more than 4 partitions, so
+    // the counts hold past the tiny-path pins (the postings read stays ≤ |q|
+    // bucket files whatever the corpus size)
+    val dir8 = java.nio.file.Files.createTempDirectory("jobs8").toString
+    Tables.documents(spark, TestSpark.sf0001).repartition(8)
+      .write.parquet(s"$dir8/documents.parquet")
+    val idx = java.nio.file.Files.createTempDirectory("jobsidx").toString
+    Search.buildIndex(spark, dir8, idx)
+    assert(Search.openIndex(spark, idx).docinfo.rdd.getNumPartitions > 4)
+    val queries = Seq(Search.DefaultQuery,
+      "zzzqx nonexistent", // every word absent from the vocabulary
+      "scan zzzqx scan") // a repeated word and an absent one
+    for (q <- queries) {
+      // vocabulary rows + docinfo broadcasts, the top-k; BM25 adds N/avgdl
+      // (a docinfo aggregate: its exchange and its broadcast)
+      val parity = Seq.fill(2)(jobsOf(Search.searchTopKIndexed(spark, idx, q)))
+      assert(parity == Seq(3, 3), s"searchTopKIndexed '$q'")
+      val bm25 = Seq.fill(2)(jobsOf(Search.searchTopKBm25Indexed(spark, idx, q)))
+      assert(bm25 == Seq(5, 5), s"searchTopKBm25Indexed '$q'")
+    }
+  }
+
   test("searchTopK end-to-end on sf0.001 returns k rows, deterministic") {
     val a = Search.searchTopK(spark, TestSpark.sf0001, "the fast table scan the", 10).collect()
     val b = Search.searchTopK(spark, TestSpark.sf0001, "the fast table scan the", 10).collect()

@@ -8,10 +8,12 @@ Each directory holds `<query>_<suffix>.txt` files, as written by
 comparing, the text is stripped of what changes between runs without a
 change of plan: expression ids (`#n`), `plan_id=n`, RDD ids (`RDD[n]`),
 source positions (`File.scala:line`), lambda variable numbers
-(`lambda x_n`, `lambda y_n`), and the path prefixes of `file:` locations,
+(`lambda x_n`, `lambda y_n`), object identity hashes
+(`ArrayMeanAgg@1b2c3d`), and the path prefixes of `file:` locations,
 including the data-dir and mtime fingerprint that persisted artifacts
-carry in their directory name. Capture both sides on fresh copies of the
-data dir.
+carry in their directory name and the data dir's own name in a scan of
+one of its `<table>.parquet` tables. Capture both sides on fresh copies
+of the data dir; the copies may have different names.
 
 Per query it prints whether the stripped text is identical and the counts
 of Exchange, Window, join, aggregate and Sort operators on each side
@@ -31,8 +33,11 @@ def _strip_path(m):
     parts = [p for p in m.group(1).split("/") if p]
     k = next((i for i, p in enumerate(parts) if p.startswith("graft-")), None)
     # the component after a graft-<kind> dir is a persisted entry named
-    # after the data dir path and its mtime; drop it with the prefix
+    # after the data dir path and its mtime, and the parent of a
+    # <table>.parquet scan is the data dir: drop both with the prefix
     skip = set() if k is None else {k, k + 1}
+    if parts and parts[-1].endswith(".parquet"):
+        skip.add(len(parts) - 2)
     tail = [p for i, p in enumerate(parts) if i >= len(parts) - 2 and i not in skip]
     kind = [] if k is None else [parts[k], "…"]
     return "file:…/" + "/".join(kind + tail)
@@ -45,6 +50,7 @@ RULES = [
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),
     (re.compile(r"(\w+\.scala):\d+"), r"\1:"),
     (re.compile(r"lambda (\w)_\d+"), r"lambda \1_"),
+    (re.compile(r"(\w)@[0-9a-f]{1,8}\b"), r"\1@"),
 ]
 
 
