@@ -1,12 +1,14 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Batch-id-keyed idempotent writes — the commit layer under every
-  * streaming ingest here (near-dup state, curated output, the incremental
-  * search index).
+  * streaming ingest here. Every ingest runs its micro-batches through ONE
+  * frame (`sink` + `inBatch`), and every fold of a batch-keyed layout into
+  * a new generation through ONE `fold`.
   *
   * foreachBatch gives at-least-once delivery: a crash between a batch's
   * side-effecting writes and the checkpoint commit re-delivers the batch.
@@ -31,11 +33,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * want a table format instead — same caveat as DirSwap).
   */
 object BatchCommit {
-
-  private def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
-    val p = new Path(dir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
 
   def batchDir(root: String, batchId: Long): String = s"$root/batch=$batchId"
 
@@ -78,7 +75,8 @@ object BatchCommit {
     */
   def committedBatchDirs(spark: SparkSession, root: String,
                          exclude: Option[Long] = None): Seq[String] = {
-    val (fs, base) = fsOf(spark, root)
+    val base = new Path(root)
+    val fs = DirSwap.fsOf(base)
     if (!fs.exists(base)) Seq.empty
     else fs.listStatus(base).map(_.getPath)
       .filter(p => p.getName.startsWith("batch="))
@@ -91,7 +89,7 @@ object BatchCommit {
   /** Idempotent output write: overwrite `root/batch=<id>` — UNLESS that
     * dir is already committed (then keep it untouched) or the id appears
     * in the root's `_FOLDED` ledger (then its rows already live in a
-    * consolidated dir — see `recordFolded`). The committed-dir guard
+    * consolidated dir — see `fold`). The committed-dir guard
     * matters when state compaction has folded this batch's state rows
     * into a combined dir: a replay then recomputes an EMPTY novel set
     * (the docs match their own absorbed signatures), and overwriting the
@@ -116,38 +114,81 @@ object BatchCommit {
     * not the derivation.
     */
   def writeBatch(df: DataFrame, root: String, batchId: Long,
-                 partitionCols: Seq[String] = Nil): Unit = {
-    val (fs, _) = fsOf(df.sparkSession, root)
-    val dir = batchDir(root, batchId)
-    if (!committed(fs, new Path(dir)) &&
-        !foldedIds(df.sparkSession, root).contains(batchId)) {
+                 partitionCols: Seq[String] = Nil): Unit =
+    if (!intact(df.sparkSession, root, batchId)) {
       val w = df.write.mode("overwrite")
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-        .parquet(dir)
+        .parquet(batchDir(root, batchId))
     }
+
+  /** `root/batch=<id>` is committed, or its id is in the root's ledger. */
+  private def intact(spark: SparkSession, root: String, batchId: Long): Boolean = {
+    val dir = new Path(batchDir(root, batchId))
+    committed(DirSwap.fsOf(dir), dir) || foldedIds(spark, root).contains(batchId)
   }
 
-  /** Post-write guard for a foreachBatch body: verify this batch's dir is
-    * still committed (or ledgered as folded — a replay whose write was
-    * absorbed, or an in-callback compaction cadence that just folded it)
-    * BEFORE the callback returns and the checkpoint advances. The
-    * ingest-side `Lease.check` runs at batch START; a maintenance job
-    * acquiring the lease mid-batch could swap away the generation the
-    * batch just wrote into — without this guard the callback would return
-    * cleanly, the checkpoint would advance, and the batch's rows would be
-    * permanently lost (neither committed nor replayable). Failing here
-    * instead leaves the checkpoint unadvanced, and the post-maintenance
-    * replay recomputes against the new generation idempotently.
-    */
-  def requireIntact(spark: SparkSession, root: String, batchId: Long): Unit = {
-    val (fs, _) = fsOf(spark, root)
-    if (!committed(fs, new Path(batchDir(root, batchId))) &&
-        !foldedIds(spark, root).contains(batchId))
+  /** The frame's post-write guard (see `inBatch`). */
+  private def requireIntact(spark: SparkSession, root: String, batchId: Long): Unit =
+    if (!intact(spark, root, batchId))
       throw new IllegalStateException(
         s"$root/batch=$batchId vanished between write and checkpoint commit " +
           "(a maintenance swap raced this batch?) — failing loudly so the " +
           "batch replays instead of silently losing its rows")
+
+  /** What a micro-batch body writes through: `write` is `writeBatch` under
+    * the batch's id, and it records the root, so the frame can verify every
+    * root the body wrote.
+    */
+  final class Writer private[BatchCommit] (batchId: Long) {
+    private[BatchCommit] val roots = scala.collection.mutable.LinkedHashSet.empty[String]
+
+    def write(df: DataFrame, root: String, partitionCols: Seq[String] = Nil): Unit = {
+      roots += root
+      writeBatch(df, root, batchId, partitionCols)
+    }
   }
+
+  /** The frame every micro-batch of every ingest runs in:
+    *
+    *  1. `Lease.check(guardDir)` — a maintenance job holding the lease
+    *     fails the batch loudly before it reads anything the job is about
+    *     to replace;
+    *  2. `body` — the batch's own steps, writing only through the `Writer`;
+    *  3. `Lease.check(guardDir)` again, then every root the body wrote must
+    *     still hold the batch: committed, or ledgered as folded (a replay
+    *     whose write was absorbed, or an in-body compaction cadence that
+    *     just folded it). A maintenance job that took the lease MID-batch
+    *     could otherwise swap away the generation the batch just wrote
+    *     into: the callback would return cleanly, the checkpoint would
+    *     advance, and the rows would be lost (neither committed nor
+    *     replayable). Failing here leaves the checkpoint unadvanced, and
+    *     the post-maintenance replay recomputes against the new generation
+    *     idempotently.
+    *
+    * An output that no maintenance job guards passes its output root as
+    * `guardDir`: no lease is ever taken there, so both checks pass.
+    */
+  def inBatch(batch: DataFrame, batchId: Long, guardDir: String)(body: Writer => Unit): Unit = {
+    Lease.check(guardDir)
+    val w = new Writer(batchId)
+    body(w)
+    Lease.check(guardDir)
+    w.roots.foreach(requireIntact(batch.sparkSession, _, batchId))
+  }
+
+  /** The one streaming sink: `perBatch` runs for every non-empty
+    * micro-batch of `stream` (append mode) with its epoch id — stable
+    * across a crash-replay, so it is the batch id `inBatch` keys by.
+    */
+  def sink(stream: DataFrame, trigger: Trigger = Trigger.ProcessingTime(0L))(
+      perBatch: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode("append")
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) perBatch(batch, batchId)
+      }
+      .start()
 
   private val FoldedFile = "_FOLDED"
 
@@ -155,47 +196,60 @@ object BatchCommit {
     * ran). One id per line; `_`-prefixed, so dir listings and data scans
     * ignore it.
     */
-  def foldedIds(spark: SparkSession, root: String): Set[Long] = {
-    val (fs, base) = fsOf(spark, root)
-    val p = new Path(base, FoldedFile)
-    if (!fs.exists(p)) Set.empty
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).map(_.trim.toLong).toSet
-      finally in.close()
-    }
-  }
+  def foldedIds(spark: SparkSession, root: String): Set[Long] =
+    DirSwap.readLines(new Path(root, FoldedFile)).getOrElse(Nil)
+      .filter(_.nonEmpty).map(_.trim.toLong).toSet
 
   /** Numeric ids of the committed batch dirs currently under `root` —
     * what a fold is about to absorb (`base`/`compact` generations carry
     * no replayable id and are skipped).
     */
-  def committedNumericIds(spark: SparkSession, root: String): Seq[Long] =
+  private def committedNumericIds(spark: SparkSession, root: String): Seq[Long] =
     committedBatchDirs(spark, root)
       .map(_.split("=").last)
       .flatMap(s => scala.util.Try(s.toLong).toOption)
 
-  /** Write `newRoot/_FOLDED` = `ids` ∪ the ids already folded at
-    * `prevRoot` — called by every fold (compaction/retrain) on its ASIDE
-    * dir before the swap, so the ledger rides the generation it
-    * describes. Carrying the previous generation's ids forward keeps
-    * replay of a long-stopped stream safe across multiple folds.
+  /** Write `newRoot/_FOLDED` = the committed ids under `prevRoot` ∪ the ids
+    * already folded there (see `fold`).
     */
-  def recordFolded(spark: SparkSession, newRoot: String, prevRoot: String,
-                   ids: Seq[Long]): Unit = {
-    val all = (foldedIds(spark, prevRoot) ++ ids).toSeq.sorted
-    if (all.nonEmpty) {
-      val (fs, base) = fsOf(spark, newRoot)
-      val tmp = new Path(base, s"$FoldedFile.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(all.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      val dst = new Path(base, FoldedFile)
-      fs.delete(dst, false)
-      require(fs.rename(tmp, dst), s"folded-ledger rename failed under $newRoot")
-    }
+  private def recordFolded(spark: SparkSession, newRoot: String, prevRoot: String): Unit = {
+    val all = (foldedIds(spark, prevRoot) ++ committedNumericIds(spark, prevRoot)).toSeq.sorted
+    if (all.nonEmpty) DirSwap.writeAtomic(new Path(newRoot, FoldedFile), all.map(_.toString))
   }
+
+  /** Fold a batch-keyed layout under `baseDir` into one new generation,
+    * swapped in by ONE `DirSwap.swap` (so a crash anywhere recovers to a
+    * single consistent generation of every table). Each `plain` table
+    * (sub, rows) is written as its aside dir; each `keyed` table (sub,
+    * rows, partition columns) as `aside/batch=<gen>`, and then:
+    *
+    *  - the aside's `_FOLDED` ledger gets the live root's committed ids
+    *    plus the ids already folded there — so the ledger rides the
+    *    generation it describes, and a batch crash-replayed from before
+    *    the fold (whose own dir the fold deleted) skips its re-write
+    *    instead of landing next to its folded copy, possibly under a
+    *    retrained quantizer. Carrying earlier ids forward keeps replay of a
+    *    long-stopped stream safe across several folds; a first build has
+    *    none and writes no ledger;
+    *  - the aside root is stamped complete, since its rows sit one level
+    *    down, in `batch=<gen>`.
+    *
+    * The rows may read the live tables: nothing is renamed until every
+    * aside write has completed. A caller that must exclude the ingest
+    * (every fold over live streamed batches) runs this under
+    * `Lease.withLease(baseDir, …)`.
+    */
+  def fold(baseDir: String, gen: String, keyed: Seq[(String, DataFrame, Seq[String])],
+           plain: Seq[(String, DataFrame)] = Nil): Unit =
+    DirSwap.swap(baseDir, plain.map { case (sub, rows) =>
+      sub -> ((out: String) => rows.write.parquet(out))
+    } ++ keyed.map { case (sub, rows, parts) =>
+      sub -> { (out: String) =>
+        rows.write.partitionBy(parts: _*).parquet(s"$out/batch=$gen")
+        recordFolded(rows.sparkSession, out, s"$baseDir/$sub")
+        DirSwap.markComplete(out)
+      }
+    })
 
   /** Committed-batches view of a batch-keyed dir: the rows every reader
     * (and the driver's oracle compare) should see. None until the first

@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
 import java.nio.charset.StandardCharsets
 
 /** Crash-safe, multi-table directory swap — the maintenance primitive under
-  * every compaction/retrain job here (`IncrementalIndex.compact`,
-  * `DocStreams.compactState`, `VectorStreams.retrainIndex`).
+  * `BatchCommit.fold` (every compaction, retrain and vector-index build)
+  * and the batch search-index build.
   *
   * The round-6 version was two bare `java.io.File.renameTo` calls per table:
   * a crash between them stranded the live dir in `*_old`, and readers that
@@ -45,8 +45,34 @@ object DirSwap {
 
   private val Marker = "_SWAP_PENDING"
 
-  private def fsOf(p: Path): FileSystem =
+  /** The FileSystem of `p`, under the active session's Hadoop conf. */
+  private[graft] def fsOf(p: Path): FileSystem =
     p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+
+  /** Atomically publish a small text file, one line per element: write
+    * `<file>.tmp`, then rename it over `file` — a reader sees the old
+    * content or the new, never a torn write.
+    */
+  private[graft] def writeAtomic(file: Path, lines: Seq[String]): Unit = {
+    val fs = fsOf(file)
+    val tmp = file.suffix(".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+    fs.delete(file, false)
+    require(fs.rename(tmp, file), s"rename $tmp -> $file failed")
+  }
+
+  /** The UTF-8 lines of a small text file, or None if it is absent. */
+  private[graft] def readLines(file: Path): Option[List[String]] = {
+    val fs = fsOf(file)
+    if (!fs.exists(file)) None
+    else {
+      val in = fs.open(file)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList)
+      finally in.close()
+    }
+  }
 
   private def complete(fs: FileSystem, dir: Path): Boolean =
     fs.exists(new Path(dir, "_SUCCESS"))
@@ -66,7 +92,7 @@ object DirSwap {
       write(next.toString) // reads the live dir; completes before any rename
       require(complete(fs, next), s"aside write for $sub left no _SUCCESS")
     }
-    writeMarker(fs, base, subs.map(_._1))
+    writeAtomic(new Path(base, Marker), subs.map(_._1))
     subs.foreach { case (sub, _) => promote(fs, base, sub) }
     fs.delete(new Path(base, Marker), false)
   }
@@ -106,19 +132,20 @@ object DirSwap {
     val fs = fsOf(base)
     if (!fs.exists(base)) return
     val marker = new Path(base, Marker)
-    if (fs.exists(marker)) {
-      readMarker(fs, marker).foreach(promote(fs, base, _))
-      fs.delete(marker, false)
-    } else {
-      fs.listStatus(base).map(_.getPath).foreach { p =>
-        val name = p.getName
-        if (name.endsWith("_next") || name.endsWith("_compacting")) fs.delete(p, true)
-        else if (name.endsWith("_old")) {
-          val live = new Path(base, name.stripSuffix("_old"))
-          if (!fs.exists(live)) require(fs.rename(p, live), s"rollback rename $p -> $live failed")
-          else fs.delete(p, true)
+    readLines(marker) match {
+      case Some(subs) =>
+        subs.filter(_.nonEmpty).foreach(promote(fs, base, _))
+        fs.delete(marker, false)
+      case None =>
+        fs.listStatus(base).map(_.getPath).foreach { p =>
+          val name = p.getName
+          if (name.endsWith("_next") || name.endsWith("_compacting")) fs.delete(p, true)
+          else if (name.endsWith("_old")) {
+            val live = new Path(base, name.stripSuffix("_old"))
+            if (!fs.exists(live)) require(fs.rename(p, live), s"rollback rename $p -> $live failed")
+            else fs.delete(p, true)
+          }
         }
-      }
     }
   }
 
@@ -153,24 +180,8 @@ object DirSwap {
     * layouts put the parquet commit marker inside `batch=.../`), so the
     * swap's completeness gate still has a root marker to check.
     */
-  def markComplete(dir: String): Unit = {
+  private[operators] def markComplete(dir: String): Unit = {
     val p = new Path(dir, "_SUCCESS")
     fsOf(p).create(p, true).close()
-  }
-
-  private def writeMarker(fs: FileSystem, base: Path, subs: Seq[String]): Unit = {
-    val tmp = new Path(base, s"$Marker.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(subs.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val marker = new Path(base, Marker)
-    fs.delete(marker, false)
-    require(fs.rename(tmp, marker), s"marker rename failed under $base")
-  }
-
-  private def readMarker(fs: FileSystem, marker: Path): Seq[String] = {
-    val in = fs.open(marker)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toList
-    finally in.close()
   }
 }

@@ -37,21 +37,12 @@ object IncrementalIndex {
     * distinct ids; Structured Streaming's epoch id has exactly the right
     * semantics.
     */
-  def ingestBatch(docs: DataFrame, indexDir: String, batchId: Long = 0L): Unit = {
-    Lease.check(indexDir) // fail loudly while compaction holds the dir
-    val tables = Search.withIndexOf(docs) { ix =>
-      Search.indexTables(ix).map { case (name, rows, parts) =>
-        BatchCommit.writeBatch(rows, s"$indexDir/$name", batchId, parts)
-        name
-      }
+  def ingestBatch(docs: DataFrame, indexDir: String, batchId: Long = 0L): Unit =
+    BatchCommit.inBatch(docs, batchId, indexDir) { w =>
+      Search.withIndexOf(docs)(ix => Search.indexTables(ix).foreach {
+        case (name, rows, parts) => w.write(rows, s"$indexDir/$name", parts)
+      })
     }
-    // post-write guard: compaction acquiring the lease mid-batch could
-    // swap away the dirs just written — fail before the checkpoint
-    // advances so the batch replays against the compacted generation
-    Lease.check(indexDir)
-    tables.foreach(t =>
-      BatchCommit.requireIntact(docs.sparkSession, s"$indexDir/$t", batchId))
-  }
 
   /** The committed batches, opened: the vocabulary is df summed over
     * batches, postings and docinfo are the union of the batches' rows.
@@ -74,12 +65,7 @@ object IncrementalIndex {
       .schema(spark.read.parquet(streamDir).schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(streamDir)
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, indexDir, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    BatchCommit.sink(docs, Trigger.AvailableNow())(ingestBatch(_, indexDir, _))
   }
 
   /** Compact the batch-keyed index: each table's committed batches —
@@ -92,25 +78,17 @@ object IncrementalIndex {
     * vocabulary delta-sum are O(N). Periodic compaction resets them to
     * O(1) — the same role parquet/table-format maintenance jobs play in
     * any streaming lakehouse. All three tables swap under ONE
-    * `DirSwap.swap` marker scope, so a crash at any point recovers to a
-    * single consistent generation across them. The maintenance window is
+    * `BatchCommit.fold`, so a crash at any point recovers to a single
+    * consistent generation across them, and a pre-fold batch's replay is
+    * a no-op (its ledger). The maintenance window is
     * MECHANICAL: the swap runs under the dir's `Lease`, and `ingestBatch`
     * fails loudly (checkpoint unadvanced → idempotent replay) if a batch
     * arrives while it is held.
     */
   def compact(spark: SparkSession, indexDir: String): Unit =
     Lease.withLease(indexDir, "index-compact") {
-      DirSwap.swap(indexDir, Search.indexTables(open(spark, indexDir)).map {
-        case (name, rows, parts) => name -> { (out: String) =>
-          (if (parts.isEmpty) rows.coalesce(1) else rows)
-            .write.partitionBy(parts: _*).parquet(s"$out/batch=compact")
-          // folded-ledger per table (see BatchCommit.recordFolded): a batch
-          // crash-replayed from before this fold must skip re-writing rows
-          // the compact generation already holds
-          BatchCommit.recordFolded(spark, out, s"$indexDir/$name",
-            BatchCommit.committedNumericIds(spark, s"$indexDir/$name"))
-          DirSwap.markComplete(out)
-        }
+      BatchCommit.fold(indexDir, "compact", Search.indexTables(open(spark, indexDir)).map {
+        case (name, rows, parts) => (name, if (parts.isEmpty) rows.coalesce(1) else rows, parts)
       })
     }
 

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.Path
 
 import java.nio.charset.StandardCharsets
 
@@ -16,11 +15,12 @@ import java.nio.charset.StandardCharsets
   *  - a maintenance job takes the lease (`withLease`) before its swap and
   *    releases it after — atomic create-no-overwrite, so two concurrent
   *    maintenance jobs cannot both hold it;
-  *  - every foreachBatch ingest calls `check` at batch start and FAILS
-  *    LOUDLY while a live lease is held — the streaming query errors, the
-  *    checkpoint does not advance, and the batch replays idempotently
-  *    (BatchCommit) once maintenance is done and the query restarted.
-  *    Failing beats waiting here: a foreachBatch that blocks holds its
+  *  - the micro-batch frame every ingest runs in (`BatchCommit.inBatch`)
+  *    calls `check` at batch start and again after the batch's writes,
+  *    and FAILS LOUDLY while a live lease is held — the streaming query
+  *    errors, the checkpoint does not advance, and the batch replays
+  *    idempotently once maintenance is done and the query restarted.
+  *    Failing beats waiting here: a micro-batch that blocks holds its
   *    query's only execution thread with no progress signal, while a
   *    failed query is visible to the operator running the maintenance.
   *
@@ -38,27 +38,14 @@ object Lease {
 
   private val File = "_MAINT_LEASE"
 
-  private def fsOf(p: Path): FileSystem =
-    p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
-
   private def leasePath(baseDir: String) = new Path(baseDir, File)
 
   /** (holder, expiresAtMs) of the lease under `baseDir`, if present. */
-  def read(baseDir: String): Option[(String, Long)] = {
-    val p = leasePath(baseDir)
-    val fs = fsOf(p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
-      lines match {
-        case holder :: expiry :: _ => Some((holder, expiry.trim.toLong))
-        case _ => None // malformed: treat as absent (acquire will replace)
-      }
+  def read(baseDir: String): Option[(String, Long)] =
+    DirSwap.readLines(leasePath(baseDir)).flatMap {
+      case holder :: expiry :: _ => Some((holder, expiry.trim.toLong))
+      case _ => None // malformed: treat as absent (acquire will replace)
     }
-  }
 
   private def live(lease: Option[(String, Long)], nowMs: Long): Boolean =
     lease.exists(_._2 > nowMs)
@@ -75,7 +62,7 @@ object Lease {
   def acquire(baseDir: String, holder: String, ttlMs: Long,
               nowMs: Long = System.currentTimeMillis()): Unit = {
     val p = leasePath(baseDir)
-    val fs = fsOf(p)
+    val fs = DirSwap.fsOf(p)
     val cur = read(baseDir)
     if (live(cur, nowMs))
       throw new IllegalStateException(
@@ -105,14 +92,14 @@ object Lease {
     */
   def release(baseDir: String, holder: String): Unit = {
     val p = leasePath(baseDir)
-    val fs = fsOf(p)
+    val fs = DirSwap.fsOf(p)
     if (read(baseDir).exists(_._1 == holder)) fs.delete(p, false)
   }
 
-  /** Ingest-side guard: throw while a live lease is held; IGNORE an
-    * expired one (a maintenance job that died without releasing must not
-    * wedge ingest forever — its swap debris is handled by
-    * DirSwap.recover). Expired leftovers are garbage-collected by the
+  /** The frame's guard (`BatchCommit.inBatch`): throw while a live lease
+    * is held; IGNORE an expired one (a maintenance job that died without
+    * releasing must not wedge ingest forever — its swap debris is handled
+    * by DirSwap.recover). Expired leftovers are garbage-collected by the
     * next `acquire`'s atomic takeover, never here: a check-side delete
     * would race a fresh acquirer (read-expired → acquirer creates →
     * delete removes the LIVE lease), exactly the window the rename

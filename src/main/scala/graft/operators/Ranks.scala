@@ -74,6 +74,19 @@ object Ranks {
       .drop("pfx", "off")
   }
 
+  /** The per-query top-k of every kNN tier, router and ADC shortlist and
+    * of the search evaluation: rank each query_id's rows by `score`
+    * descending, ties to the lower `id`, and keep ranks 1..k (`rank`
+    * BIGINT). The filter sits right over the row_number, which lets Spark
+    * prune per partition with a WindowGroupLimit before the window's
+    * exchange.
+    */
+  def perQueryTopK(rows: DataFrame, k: Int, score: String = "cos",
+                   id: String = "neighbor_id"): DataFrame =
+    rows.withColumn("rank", row_number().over(
+        Window.partitionBy("query_id").orderBy(desc(score), asc(id))).cast("long"))
+      .filter(col("rank") <= k)
+
   /** The top `k` rows of each group by `order`, ranked 1..k in `out` (a
     * long): the rows of `row_number() over (partition by groups order by
     * order) <= k`, in two phases, since that window sorts the widest group

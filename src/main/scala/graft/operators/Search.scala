@@ -3,7 +3,6 @@ package graft.operators
 import graft.functions.{Stable, TextOps}
 import graft.sources.Tables
 import org.apache.spark.sql.catalyst.expressions.XXH64
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, graftglue}
@@ -215,13 +214,11 @@ object Search {
       .agg(Stable.stab(sum(col("tf").cast("double") / (col("df") * col("df"))), 9)
           .as("score"),
         countDistinct("word_id").as("n_terms"))
-    val ranked = scored.withColumn("rnk", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("score"), asc("doc_id"))))
-      .filter(col("rnk") <= k)
+    val ranked = Ranks.perQueryTopK(scored, k, score = "score", id = "doc_id")
     val nRel = scored.filter(col("n_terms") === 2)
       .groupBy("query_id").agg(count(lit(1)).as("n_rel"))
     val perQ = ranked.filter(col("n_terms") === 2)
-      .groupBy("query_id").agg(count(lit(1)).as("hits"), min("rnk").as("first_rel"))
+      .groupBy("query_id").agg(count(lit(1)).as("hits"), min("rank").as("first_rel"))
     qt.select("query_id").distinct()
       .join(nRel, Seq("query_id"), "left")
       .join(perQ, Seq("query_id"), "left")

@@ -12,11 +12,11 @@ import org.apache.spark.sql.{graftglue, Column, DataFrame}
   * label or k-means router, `Cells.route`, both returning (query_id,
   * cell)), candidates (all vectors, the probed cells' members, or LSH
   * bucket collisions), score (exact cosine, or a PQ ADC shortlist then an
-  * exact rerank) and one per-query top-k (`perQueryTopK`). Brute force is
-  * the baseline: broadcast the query set, scan the corpus once. The scale
-  * path is IVF: vectors partitioned into coarse cells, each query scored
-  * only inside its probed cells — at 100 TB a 1/K-th scan instead of a
-  * full one. Persisted, the IVF layout (`cells` partitioned by cell, plus
+  * exact rerank) and one per-query top-k (`Ranks.perQueryTopK`). Brute
+  * force is the baseline: broadcast the query set, scan the corpus once.
+  * The scale path is IVF: vectors partitioned into coarse cells, each
+  * query scored only inside its probed cells — at 100 TB a 1/K-th scan
+  * instead of a full one. Persisted, the IVF layout (`cells` partitioned by cell, plus
   * `centroids`) turns probing into partition pruning; the PQ layout
   * (`codes`, `codebooks`) stores codes instead of vectors.
   *
@@ -202,20 +202,8 @@ object Similarity {
   // The routers (label, k-means) return (query_id, cell); candidates are
   // all vectors, the probed cells' members, or LSH bucket collisions; the
   // score is exact stab(6) cosine, or an ADC shortlist then an exact
-  // rerank; and `perQueryTopK` is the one top-k under all of them.
+  // rerank; and `Ranks.perQueryTopK` is the one top-k under all of them.
   // ---------------------------------------------------------------------
-
-  /** The per-query top-k of every kNN tier, router and ADC shortlist: rank
-    * each query_id's rows by `score` descending, ties to the lower `id`,
-    * and keep ranks 1..k (`rank` BIGINT). The filter sits right over the
-    * row_number, which lets Spark prune per partition with a
-    * WindowGroupLimit before the window's exchange.
-    */
-  def perQueryTopK(rows: DataFrame, k: Int, score: String = "cos",
-                   id: String = "neighbor_id"): DataFrame =
-    rows.withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc(score), asc(id))).cast("long"))
-      .filter(col("rank") <= k)
 
   /** Prepared rows as a query side: vec_id renamed query_id. */
   private def asQueries(p: DataFrame): DataFrame = p.withColumnRenamed("vec_id", "query_id")
@@ -228,7 +216,7 @@ object Similarity {
     */
   private def exactTopK(qside: DataFrame, corpus: DataFrame, on: Column, k: Int,
                         keep: Column*): DataFrame =
-    perQueryTopK(qside.as("a").join(corpus.as("b"), on)
+    Ranks.perQueryTopK(qside.as("a").join(corpus.as("b"), on)
       .select((col("a.query_id") +: keep) ++
         Seq(col("b.vec_id").as("neighbor_id"), cosine().as("cos")): _*), k)
 
@@ -467,7 +455,7 @@ object Similarity {
           col("label").as("cell"))
         .withColumn("nrm", norm(col("e")))
     def route(q: DataFrame, cent: DataFrame, nprobe: Int): DataFrame =
-      perQueryTopK(q.select(col("query_id"), posexplode(col("e")).as(Seq("pos", "qe")))
+      Ranks.perQueryTopK(q.select(col("query_id"), posexplode(col("e")).as(Seq("pos", "qe")))
           .join(broadcast(cent.select(col("cell"), posexplode(col("c")).as(Seq("pos", "c")))),
             "pos")
           .groupBy("query_id", "cell")
@@ -485,7 +473,7 @@ object Similarity {
     def assign(embeddings: DataFrame, cent: DataFrame): DataFrame =
       kmeansAssign(prepared(embeddings), cent)
     def route(q: DataFrame, cent: DataFrame, nprobe: Int): DataFrame =
-      perQueryTopK(q.crossJoin(broadcast(cent)).select(col("query_id"), col("cell"),
+      Ranks.perQueryTopK(q.crossJoin(broadcast(cent)).select(col("query_id"), col("cell"),
           (-Stable.stab(dot(col("c"), col("c")) - lit(2.0) * dot(col("e"), col("c")), 6))
             .as("nd")),
         nprobe, "nd", "cell").select("query_id", "cell")
@@ -535,15 +523,12 @@ object Similarity {
     */
   def buildIvfIndex(embeddings: DataFrame, indexDir: String, cells: Cells): Unit = {
     val cent = cells.centroids(embeddings)
-    DirSwap.swap(indexDir, Seq(
-      "cells" -> { out =>
-        // batch=base: the cells table is batch-keyed (BatchCommit) so the
-        // streaming ingest's writes are replay-idempotent; the build is the
-        // base generation (named, so no stream's numeric id collides)
-        cells.assign(embeddings, cent).write.partitionBy("cell").parquet(s"$out/batch=base")
-        DirSwap.markComplete(out)
-      },
-      "centroids" -> { out => cent.write.parquet(out) }))
+    // batch=base: the cells table is batch-keyed (BatchCommit) so the
+    // streaming ingest's writes are replay-idempotent; the build is the
+    // base generation (named, so no stream's numeric id collides)
+    BatchCommit.fold(indexDir, "base",
+      Seq(("cells", cells.assign(embeddings, cent), Seq("cell"))),
+      plain = Seq("centroids" -> cent))
   }
 
   /** The persisted IVF and PQ tables' schemas: a read that passes its
@@ -700,19 +685,11 @@ object Similarity {
     val spark = embeddings.sparkSession
     val p = prepared(embeddings)
     val cbs = pqCodebooks(p.select("vec_id", "e"), m, kCodes, iters)
-    DirSwap.swap(indexDir, Seq(
-      "codes" -> { out =>
-        pqEncode(p, cbs).write.parquet(s"$out/batch=base")
-        // folded-ledger: ids this re-encode absorbs must not replay in
-        // next to their folded copy (possibly coded by OLD codebooks)
-        BatchCommit.recordFolded(spark, out, s"$indexDir/codes",
-          BatchCommit.committedNumericIds(spark, s"$indexDir/codes"))
-        DirSwap.markComplete(out)
-      },
-      // the trainer collected cbs driver-side; this write reads nothing live
-      "codebooks" -> { out =>
-        pqCodebooksToDf(spark, cbs).write.parquet(out)
-      }))
+    // the ledger keeps ids this re-encode absorbs from replaying in next
+    // to their folded copy (possibly coded by OLD codebooks); the trainer
+    // collected cbs driver-side, so the codebooks write reads nothing live
+    BatchCommit.fold(indexDir, "base", Seq(("codes", pqEncode(p, cbs), Nil)),
+      plain = Seq("codebooks" -> pqCodebooksToDf(spark, cbs)))
   }
 
   /** Committed-batches view of the PQ code table. */
@@ -782,7 +759,7 @@ object Similarity {
       if (nprobe <= 0) codes.crossJoin(broadcast(luts))
       else codes.join(broadcast(luts.join(
         LabelCells.route(q, LabelCells.centroids(embeddings), nprobe), "query_id")), "cell")
-    val short = perQueryTopK(scored.filter(col("query_id") =!= col("vec_id"))
+    val short = Ranks.perQueryTopK(scored.filter(col("query_id") =!= col("vec_id"))
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
           Stable.stab(adc / col("nrm"), 6).as("adc_cos")),
       shortlist * k, "adc_cos")

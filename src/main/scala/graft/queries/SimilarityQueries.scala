@@ -32,7 +32,7 @@ object SimilarityQueries {
 
   /** The per-query ranking CTE `name` over `src` (`cols` plus `rank` by
     * cos desc, ties to the lower neighbor_id) — the SQL twin of
-    * Similarity.perQueryTopK before its rank filter.
+    * Ranks.perQueryTopK before its rank filter.
     */
   private def rankCte(name: String, cols: String, src: String): String = {
     val pad = " " * (name.length + 5)

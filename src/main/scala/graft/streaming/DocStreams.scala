@@ -1,12 +1,10 @@
 package graft.streaming
 
-import graft.operators.{BatchCommit, DirSwap, IncrementalIndex}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.operators.{BatchCommit, DirSwap, IncrementalIndex, Lease}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-
-import java.nio.charset.StandardCharsets
 
 /** Streaming twins of the document-pipeline operators — the shapes an
   * always-on ingest for a training corpus needs.
@@ -214,16 +212,16 @@ object DocStreams {
     * every untouched bucket. Reads ONLY committed `batch=*` dirs
     * (BatchCommit), minus `exclude` (a replaying batch must not see its
     * own previous attempt). None until a first batch has committed state.
-    * A half-completed compaction swap THROWS (`stateSwapGuard`) instead of
-    * being mistaken for empty state — the round-6 version silently ignored
-    * the entire accumulated index when a crash stranded it in `bands_old`,
-    * re-admitting every duplicate from then on.
+    * A half-completed compaction swap THROWS (`DirSwap.requireClean`)
+    * instead of being mistaken for empty state — the round-6 version
+    * silently ignored the entire accumulated index when a crash stranded
+    * it in `bands_old`, re-admitting every duplicate from then on.
     */
   private[graft] def prunedStateBands(spark: SparkSession,
                                       stateDir: String,
                                       touched: Seq[(Int, Int)],
                                       exclude: Option[Long] = None): Option[DataFrame] = {
-    stateSwapGuard(spark, stateDir)
+    DirSwap.requireClean(stateDir, "bands")
     val dirs = BatchCommit.committedBatchDirs(spark, bandsRoot(stateDir), exclude)
     if (dirs.isEmpty || touched.isEmpty) None
     else {
@@ -242,27 +240,8 @@ object DocStreams {
     * until a first batch commits.
     */
   def stateBands(spark: SparkSession, stateDir: String): Option[DataFrame] = {
-    stateSwapGuard(spark, stateDir)
+    DirSwap.requireClean(stateDir, "bands")
     BatchCommit.readCommitted(spark, bandsRoot(stateDir))
-  }
-
-  /** Reader-side swap guard for the state dir: a pending compaction marker
-    * or a stranded `bands_old`/`bands_next` generation throws instead of
-    * reading through (the OWNING ingest self-heals via `DirSwap.recover`
-    * before each batch; foreign readers must not guess mid-swap).
-    */
-  private def stateSwapGuard(spark: SparkSession, stateDir: String): Unit = {
-    val (fs, base) = fsOf(spark, stateDir)
-    if (!fs.exists(base)) return
-    if (fs.exists(new Path(base, "_SWAP_PENDING")))
-      throw new IllegalStateException(
-        s"$stateDir has a pending directory swap (crashed maintenance job?) — " +
-          "run DirSwap.recover before reading")
-    if (!fs.exists(new Path(base, "bands")) &&
-        (fs.exists(new Path(base, "bands_old")) || fs.exists(new Path(base, "bands_next"))))
-      throw new IllegalStateException(
-        s"$stateDir/bands is mid-swap (crashed maintenance job?) — " +
-          "run DirSwap.recover before reading")
   }
 
   /** Manifest recording the state dir's layout parameters. Band rows only
@@ -278,24 +257,12 @@ object DocStreams {
   private val ManifestFile = "MANIFEST"
   private val LayoutVersion = "bands-v2"
 
-  private def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
-    val p = new Path(dir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
   private[graft] def writeManifestIfAbsent(spark: SparkSession, stateDir: String,
                                            bands: Int, rowsPerBand: Int): Unit = {
-    val (fs, base) = fsOf(spark, stateDir)
-    val manifest = new Path(base, ManifestFile)
-    if (!fs.exists(manifest)) {
-      val tmp = new Path(base, s"$ManifestFile.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(
-        s"layout=$LayoutVersion\nbands=$bands\nrowsPerBand=$rowsPerBand\nbuckets=$StateBuckets\n"
-          .getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      require(fs.rename(tmp, manifest), s"manifest rename failed under $stateDir")
-    }
+    val manifest = new Path(stateDir, ManifestFile)
+    if (!DirSwap.fsOf(manifest).exists(manifest))
+      DirSwap.writeAtomic(manifest, Seq(s"layout=$LayoutVersion", s"bands=$bands",
+        s"rowsPerBand=$rowsPerBand", s"buckets=$StateBuckets"))
   }
 
   /** Fail loudly on a state dir this ingest cannot safely write to:
@@ -307,15 +274,13 @@ object DocStreams {
     */
   private[graft] def validateState(spark: SparkSession, stateDir: String,
                                    bands: Int, rowsPerBand: Int): Unit = {
-    val (fs, base) = fsOf(spark, stateDir)
+    val base = new Path(stateDir)
+    val fs = DirSwap.fsOf(base)
     if (!fs.exists(base)) return
-    val manifest = new Path(base, ManifestFile)
-    if (fs.exists(manifest)) {
-      val in = fs.open(manifest)
-      val kv = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .flatMap { l => l.split("=", 2) match {
-          case Array(k, v) => Some(k -> v); case _ => None } }.toMap
-      finally in.close()
+    val manifest = DirSwap.readLines(new Path(base, ManifestFile))
+    if (manifest.isDefined) {
+      val kv = manifest.get.flatMap { l => l.split("=", 2) match {
+        case Array(k, v) => Some(k -> v); case _ => None } }.toMap
       val want = Map("layout" -> LayoutVersion, "bands" -> bands.toString,
         "rowsPerBand" -> rowsPerBand.toString, "buckets" -> StateBuckets.toString)
       val bad = want.filter { case (k, v) => !kv.get(k).contains(v) }
@@ -380,34 +345,32 @@ object DocStreams {
   def dedupNearIngest(docs: DataFrame, stateDir: String, outDir: String,
                       bands: Int = 6, rowsPerBand: Int = 2,
                       minAgree: Double = 0.5, compactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // an EXTERNAL maintenance job (compactState run outside this
-          // query's own cadence) holds the state dir's Lease — fail loudly
-          // rather than write mid-swap; a crashed one's debris self-heals
-          graft.operators.Lease.check(stateDir)
-          DirSwap.recover(stateDir) // self-heal a compaction crashed mid-swap
-          val (novel, novelState) =
-            dedupNearLshBatch(batch, stateDir, bands, rowsPerBand, minAgree, batchId)
-          BatchCommit.writeBatch(novel, outDir, batchId)
-          BatchCommit.writeBatch(novelState, bandsRoot(stateDir), batchId,
-            partitionCols = Seq("band", "bkt"))
-          writeManifestIfAbsent(batch.sparkSession, stateDir, bands, rowsPerBand)
-          if (compactEvery > 0 && batchId % compactEvery == (compactEvery - 1).toLong)
-            compactState(batch.sparkSession, stateDir)
-          // post-write guard: a maintenance job acquiring the lease
-          // MID-batch could swap away what was just written — re-check
-          // and verify our own commits before the checkpoint advances
-          // (the own-cadence compaction above folds this batch's state
-          // dir legitimately; requireIntact accepts the ledger entry)
-          graft.operators.Lease.check(stateDir)
-          BatchCommit.requireIntact(batch.sparkSession, outDir, batchId)
-          BatchCommit.requireIntact(batch.sparkSession, bandsRoot(stateDir), batchId)
-        }
+    nearDupIngest(docs, stateDir, outDir, bands, rowsPerBand, compactEvery)(
+      dedupNearLshBatch(_, stateDir, bands, rowsPerBand, minAgree, _))
+
+  /** The one near-dup ingest under [[dedupNearIngest]], [[curateIngest]]
+    * and [[curateFullIngest]]; they differ only in `novelOf`, the batch
+    * function returning (novel docs, their state rows). An EXTERNAL
+    * maintenance job (compactState run outside this query's own cadence)
+    * holds the state dir's Lease, which the frame checks before and after
+    * the writes; a compaction crashed mid-swap self-heals here first. The
+    * own-cadence compaction folds this batch's state dir legitimately: the
+    * frame's verify accepts its ledger entry.
+    */
+  private def nearDupIngest(docs: DataFrame, stateDir: String, outDir: String,
+                            bands: Int, rowsPerBand: Int, compactEvery: Int)(
+      novelOf: (DataFrame, Long) => (DataFrame, DataFrame)): StreamingQuery =
+    BatchCommit.sink(docs) { (batch, batchId) =>
+      BatchCommit.inBatch(batch, batchId, stateDir) { w =>
+        DirSwap.recover(stateDir)
+        val (novel, novelState) = novelOf(batch, batchId)
+        w.write(novel, outDir)
+        w.write(novelState, bandsRoot(stateDir), Seq("band", "bkt"))
+        writeManifestIfAbsent(batch.sparkSession, stateDir, bands, rowsPerBand)
+        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+          compactState(batch.sparkSession, stateDir)
       }
-      .start()
+    }
 
   /** Committed-batches view of a batch-keyed output dir — what a
     * downstream consumer of the curated/deduped corpus reads. None until
@@ -419,10 +382,10 @@ object DocStreams {
   /** Compact the near-dup signature state: ingest commits one batch dir
     * per micro-batch, so after N batches listing the state costs O(N).
     * Fold every committed batch dir into a single `batch=compact` dir with
-    * one file per live (band, bkt) bucket and swap via `DirSwap` —
+    * one file per live (band, bkt) bucket (`BatchCommit.fold`) —
     * crash-recoverable (marker + roll forward). The maintenance window is
-    * mechanical: the compaction holds the state dir's `Lease`, and both
-    * ingests check it at batch start — an external compaction racing a
+    * mechanical: the compaction holds the state dir's `Lease`, and the
+    * ingests' micro-batch frame checks it — an external compaction racing a
     * live ingest now fails the batch loudly instead of relying on caller
     * discipline (the compactEvery cadence inside the ingest's own
     * foreachBatch needs no lease ordering: check precedes take, within
@@ -433,24 +396,13 @@ object DocStreams {
     * output, and its (empty) state re-write is harmless.
     */
   def compactState(spark: SparkSession, stateDir: String): Unit =
-    graft.operators.Lease.withLease(stateDir, "state-compact") {
-    val live = BatchCommit.committedBatchDirs(spark, bandsRoot(stateDir))
-    if (live.nonEmpty) DirSwap.swapOne(stateDir, "bands") { out =>
-      spark.read.option("basePath", bandsRoot(stateDir)).parquet(live: _*)
-        .drop("batch")
-        // hash-repartition on exactly the partition cols → one task, and
-        // therefore one file, per live (band, bkt) bucket
-        .repartition(col("band"), col("bkt"))
-        .write.partitionBy("band", "bkt").parquet(s"$out/batch=compact")
-      // folded-ledger: the absorbed ids ride the new generation, so a
-      // batch crash-replayed from before this fold skips its state
-      // re-write instead of duplicating rows next to batch=compact
-      BatchCommit.recordFolded(spark, out, bandsRoot(stateDir),
-        BatchCommit.committedNumericIds(spark, bandsRoot(stateDir)))
-      // content sits in batch=compact (with its own parquet _SUCCESS);
-      // stamp the aside root so the swap's completeness gate holds
-      DirSwap.markComplete(out)
-    }
+    Lease.withLease(stateDir, "state-compact") {
+      val live = BatchCommit.committedBatchDirs(spark, bandsRoot(stateDir))
+      // hash-repartition on exactly the partition cols → one task, and
+      // therefore one file, per live (band, bkt) bucket
+      if (live.nonEmpty) BatchCommit.fold(stateDir, "compact", Seq(("bands",
+        spark.read.option("basePath", bandsRoot(stateDir)).parquet(live: _*).drop("batch")
+          .repartition(col("band"), col("bkt")), Seq("band", "bkt"))))
     }
 
   /** One micro-batch of streaming CURATION — the streaming twin of the
@@ -501,26 +453,9 @@ object DocStreams {
                    bands: Int = 6, rowsPerBand: Int = 2, minAgree: Double = 0.5,
                    maxRep: Double = 0.05, maxNll: Double = 3.45,
                    maxContam: Long = 4, compactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Lease.check(stateDir) // see dedupNearIngest
-          DirSwap.recover(stateDir) // self-heal a compaction crashed mid-swap
-          val (novel, novelState) = curateBatch(batch, lm, benchShingles,
-            stateDir, bands, rowsPerBand, minAgree, maxRep, maxNll, maxContam, batchId)
-          BatchCommit.writeBatch(novel, outDir, batchId)
-          BatchCommit.writeBatch(novelState, bandsRoot(stateDir), batchId,
-            partitionCols = Seq("band", "bkt"))
-          writeManifestIfAbsent(batch.sparkSession, stateDir, bands, rowsPerBand)
-          if (compactEvery > 0 && batchId % compactEvery == (compactEvery - 1).toLong)
-            compactState(batch.sparkSession, stateDir)
-          graft.operators.Lease.check(stateDir) // see dedupNearIngest
-          BatchCommit.requireIntact(batch.sparkSession, outDir, batchId)
-          BatchCommit.requireIntact(batch.sparkSession, bandsRoot(stateDir), batchId)
-        }
-      }
-      .start()
+    nearDupIngest(docs, stateDir, outDir, bands, rowsPerBand, compactEvery)(
+      curateBatch(_, lm, benchShingles, stateDir, bands, rowsPerBand, minAgree,
+        maxRep, maxNll, maxContam, _))
 
   /** One micro-batch of streaming FULL curation — the streaming twin of
     * the batch `text_curate_full` composite: every [[curateBatch]] stage
@@ -570,27 +505,9 @@ object DocStreams {
                        maxRep: Double = 0.05, maxNll: Double = 3.45,
                        maxContam: Long = 4, cosThreshold: Double = 0.35,
                        compactEvery: Int = 0): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Lease.check(stateDir)
-          DirSwap.recover(stateDir)
-          val (novel, novelState) = curateFullBatch(batch, lm, benchShingles,
-            evalVecs, stateDir, bands, rowsPerBand, minAgree, maxRep, maxNll,
-            maxContam, cosThreshold, batchId)
-          BatchCommit.writeBatch(novel, outDir, batchId)
-          BatchCommit.writeBatch(novelState, bandsRoot(stateDir), batchId,
-            partitionCols = Seq("band", "bkt"))
-          writeManifestIfAbsent(batch.sparkSession, stateDir, bands, rowsPerBand)
-          if (compactEvery > 0 && batchId % compactEvery == (compactEvery - 1).toLong)
-            compactState(batch.sparkSession, stateDir)
-          graft.operators.Lease.check(stateDir)
-          BatchCommit.requireIntact(batch.sparkSession, outDir, batchId)
-          BatchCommit.requireIntact(batch.sparkSession, bandsRoot(stateDir), batchId)
-        }
-      }
-      .start()
+    nearDupIngest(docs, stateDir, outDir, bands, rowsPerBand, compactEvery)(
+      curateFullBatch(_, lm, benchShingles, evalVecs, stateDir, bands, rowsPerBand,
+        minAgree, maxRep, maxNll, maxContam, cosThreshold, _))
 
   /** One micro-batch of streaming token-budget mixing: a greedy fill of
     * per-source token quotas against the strictly-prior committed totals
@@ -637,23 +554,13 @@ object DocStreams {
     */
   def mixIngest(docs: DataFrame, quotas: Map[String, Long],
                 outDir: String, totalsDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          graft.operators.Lease.check(totalsDir)
-          BatchCommit.writeBatch(mixBatch(batch, quotas, totalsDir, batchId),
-            outDir, batchId)
-          val contrib = spark.read.parquet(BatchCommit.batchDir(outDir, batchId))
-            .groupBy("source").agg(sum("n_tok").as("toks"))
-          BatchCommit.writeBatch(contrib, totalsDir, batchId)
-          graft.operators.Lease.check(totalsDir)
-          BatchCommit.requireIntact(spark, outDir, batchId)
-          BatchCommit.requireIntact(spark, totalsDir, batchId)
-        }
+    BatchCommit.sink(docs) { (batch, batchId) =>
+      BatchCommit.inBatch(batch, batchId, totalsDir) { w =>
+        w.write(mixBatch(batch, quotas, totalsDir, batchId), outDir)
+        w.write(batch.sparkSession.read.parquet(BatchCommit.batchDir(outDir, batchId))
+          .groupBy("source").agg(sum("n_tok").as("toks")), totalsDir)
       }
-      .start()
+    }
 
   /** The always-on corpus pipeline in one query: stream in → dedup →
     * fold into the incremental search index (foreachBatch over
@@ -666,11 +573,7 @@ object DocStreams {
     */
   def dedupIngest(docs: DataFrame, indexDir: String,
                   horizon: String = "10 minutes"): StreamingQuery =
-    dedupExact(docs, horizon).writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          IncrementalIndex.ingestBatch(batch.drop("text_hash"), indexDir, batchId)
-      }
-      .start()
+    BatchCommit.sink(dedupExact(docs, horizon)) { (batch, batchId) =>
+      IncrementalIndex.ingestBatch(batch.drop("text_hash"), indexDir, batchId)
+    }
 }

@@ -185,17 +185,10 @@ object SketchStreams {
     */
   def cmsIngest(docs: DataFrame, stateDir: String,
                 d: Int = 4, w: Int = 256): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.BatchCommit.writeBatch(
-            graft.operators.Sketch.cmsSketch(batch, d, w), stateDir, batchId)
-          graft.operators.BatchCommit.requireIntact(
-            batch.sparkSession, stateDir, batchId)
-        }
-      }
-      .start()
+    graft.operators.BatchCommit.sink(docs) { (batch, batchId) =>
+      graft.operators.BatchCommit.inBatch(batch, batchId, stateDir)(
+        _.write(graft.operators.Sketch.cmsSketch(batch, d, w), stateDir))
+    }
 
   /** The live CMS: cell-wise sum over committed batch sketches. ≤ d·w
     * rows regardless of stream length.

@@ -103,16 +103,7 @@ object TokenStreams {
   def bpeEncodeIngest(docs: DataFrame, merges: Seq[Bpe.Merge],
                       wids: DataFrame, symIds: DataFrame,
                       outDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          BatchCommit.writeBatch(
-            bpeEncodeBatch(batch, merges, wids, symIds), outDir, batchId)
-          BatchCommit.requireIntact(batch.sparkSession, outDir, batchId)
-        }
-      }
-      .start()
+    encodeIngest(docs, outDir)(bpeEncodeBatch(_, merges, wids, symIds))
 
   /** Always-on streaming unigram-LM encode — the other family, same
     * contract.
@@ -120,15 +111,15 @@ object TokenStreams {
   def ulmEncodeIngest(docs: DataFrame, costs: Map[String, Double],
                       maxPieceLen: Int, wids: DataFrame,
                       pieceIdTable: DataFrame, outDir: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          BatchCommit.writeBatch(
-            ulmEncodeBatch(batch, costs, maxPieceLen, wids, pieceIdTable),
-            outDir, batchId)
-          BatchCommit.requireIntact(batch.sparkSession, outDir, batchId)
-        }
-      }
-      .start()
+    encodeIngest(docs, outDir)(ulmEncodeBatch(_, costs, maxPieceLen, wids, pieceIdTable))
+
+  /** Both families' ingest: each micro-batch's encode lands under
+    * `outDir/batch=<id>`; no maintenance job guards the output, so it is
+    * its own guard dir.
+    */
+  private def encodeIngest(docs: DataFrame, outDir: String)(
+      encode: DataFrame => DataFrame): StreamingQuery =
+    BatchCommit.sink(docs) { (batch, batchId) =>
+      BatchCommit.inBatch(batch, batchId, outDir)(_.write(encode(batch), outDir))
+    }
 }

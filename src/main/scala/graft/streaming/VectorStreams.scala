@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.operators.Similarity
-import org.apache.spark.sql.DataFrame
+import graft.operators.{BatchCommit, DirSwap, Lease, SemDedup, Similarity}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming twin of the vector-index pipeline: embeddings arrive
@@ -23,28 +23,19 @@ object VectorStreams {
     * instead of appending the vectors a second time). Pure batch function
     * (testable directly); distinct batches MUST use distinct ids.
     */
-  def ingestVectorBatch(batch: DataFrame, indexDir: String, batchId: Long = 0L): Unit = {
-    val spark = batch.sparkSession
-    // the maintenance window is mechanical: retrain holds the dir's Lease
-    // for its whole run (not just the swap's rename window), so a batch
-    // arriving mid-retrain fails loudly BEFORE reading centroids that are
-    // about to be replaced — requireClean alone only catches the narrower
-    // crashed-mid-rename state
-    graft.operators.Lease.check(indexDir)
-    // fail loudly mid-retrain-swap: between the swap's renames `cells` and
-    // `centroids` can belong to DIFFERENT generations, and appending rows
-    // celled by one generation's centroids would silently degrade recall
-    graft.operators.DirSwap.requireClean(indexDir, "centroids")
-    val cent = Similarity.indexTable(spark, indexDir, "centroids")
-    val p = Similarity.prepared(batch)
-    graft.operators.BatchCommit.writeBatch(Similarity.kmeansAssign(p, cent),
-      s"$indexDir/cells", batchId, partitionCols = Seq("cell"))
-    // post-write guard: a retrain acquiring the lease mid-batch could
-    // fold the generation this batch just wrote into — fail before the
-    // checkpoint advances so the batch replays against the new one
-    graft.operators.Lease.check(indexDir)
-    graft.operators.BatchCommit.requireIntact(spark, s"$indexDir/cells", batchId)
-  }
+  def ingestVectorBatch(batch: DataFrame, indexDir: String, batchId: Long = 0L): Unit =
+    // the frame's lease check fails a batch arriving mid-retrain (retrain
+    // holds the dir's Lease for its whole run) BEFORE it reads centroids
+    // that are about to be replaced; requireClean catches the narrower
+    // crashed-mid-rename state, where `cells` and `centroids` can belong to
+    // DIFFERENT generations and rows celled by one generation's centroids
+    // would silently degrade recall
+    BatchCommit.inBatch(batch, batchId, indexDir) { w =>
+      DirSwap.requireClean(indexDir, "centroids")
+      val cent = Similarity.indexTable(batch.sparkSession, indexDir, "centroids")
+      w.write(Similarity.kmeansAssign(Similarity.prepared(batch), cent),
+        s"$indexDir/cells", Seq("cell"))
+    }
 
   /** Always-on embedding ingest: readStream of (vec_id, embedding) →
     * foreachBatch into a k-means IVF index built by
@@ -56,12 +47,7 @@ object VectorStreams {
     * `Similarity.cellsTable`, and cell-partition pruning applies per dir).
     */
   def vectorIngest(vectors: DataFrame, indexDir: String): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) ingestVectorBatch(batch, indexDir, batchId)
-      }
-      .start()
+    BatchCommit.sink(vectors)(ingestVectorBatch(_, indexDir, _))
 
   /** Encode one micro-batch against the PQ index's FIXED codebooks and
     * write it as its own committed `codes/batch=<id>` dir — the PQ twin of
@@ -70,29 +56,20 @@ object VectorStreams {
     * what queries' LUTs are built from) and same batch-keyed replay
     * idempotence.
     */
-  def pqIngestBatch(batch: DataFrame, indexDir: String, batchId: Long = 0L): Unit = {
-    val spark = batch.sparkSession
-    graft.operators.Lease.check(indexDir) // see ingestVectorBatch
-    graft.operators.DirSwap.requireClean(indexDir, "codebooks")
-    val cbs = Similarity.pqCodebooksFromDf(Similarity.indexTable(spark, indexDir, "codebooks"))
-    val p = Similarity.prepared(batch)
-    graft.operators.BatchCommit.writeBatch(Similarity.pqEncode(p, cbs),
-      s"$indexDir/codes", batchId)
-    graft.operators.Lease.check(indexDir) // see ingestVectorBatch
-    graft.operators.BatchCommit.requireIntact(spark, s"$indexDir/codes", batchId)
-  }
+  def pqIngestBatch(batch: DataFrame, indexDir: String, batchId: Long = 0L): Unit =
+    BatchCommit.inBatch(batch, batchId, indexDir) { w =>
+      DirSwap.requireClean(indexDir, "codebooks") // see ingestVectorBatch
+      val cbs = Similarity.pqCodebooksFromDf(
+        Similarity.indexTable(batch.sparkSession, indexDir, "codebooks"))
+      w.write(Similarity.pqEncode(Similarity.prepared(batch), cbs), s"$indexDir/codes")
+    }
 
   /** Always-on PQ ingest: arriving embeddings are encoded and folded into
     * the persisted code table; ANN queries (`Similarity.knnPqBatch`)
     * keep scanning codes-only while the corpus grows.
     */
   def pqIngest(vectors: DataFrame, indexDir: String): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) pqIngestBatch(batch, indexDir, batchId)
-      }
-      .start()
+    BatchCommit.sink(vectors)(pqIngestBatch(_, indexDir, _))
 
   /** Screen one micro-batch of arriving embeddings against the FIXED
     * broadcast eval set and append the flagged rows to the contamination
@@ -107,13 +84,11 @@ object VectorStreams {
     */
   def contaminationBatch(batch: DataFrame, evalSet: DataFrame,
                          outDir: String, batchId: Long,
-                         threshold: Double): Unit = {
-    val spark = batch.sparkSession
-    graft.operators.BatchCommit.writeBatch(
-      Similarity.contaminationAgainst(Similarity.prepared(batch), evalSet, threshold),
-      outDir, batchId)
-    graft.operators.BatchCommit.requireIntact(spark, outDir, batchId)
-  }
+                         threshold: Double): Unit =
+    BatchCommit.inBatch(batch, batchId, outDir) { w =>
+      w.write(Similarity.contaminationAgainst(Similarity.prepared(batch), evalSet, threshold),
+        outDir)
+    }
 
   /** Always-on semantic decontamination: embeddings stream in, flagged
     * (vec_id, max_cos) rows accumulate in the batch-keyed ledger a
@@ -126,24 +101,21 @@ object VectorStreams {
     // one small scan); no persist: a cached frame here would outlive
     // the query with no handle for the caller to unpersist it
     // (self-review finding, round 14)
-    vectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) contaminationBatch(batch, evalSet, outDir, batchId, threshold)
-      }
-      .start()
+    BatchCommit.sink(vectors)(contaminationBatch(_, evalSet, outDir, _, threshold))
 
   /** Seed the incremental-SemDeDup state from the EXISTING corpus: the
     * gated trainer's centroids plus the corpus's (vec_id, cell, e, nrm)
     * side as `cells/batch=base` — the layout `semanticDedupIngest` then
-    * grows one committed batch dir at a time.
+    * grows one committed batch dir at a time. Both tables are published
+    * by one fold, so a seed that crashes midway leaves swap debris the
+    * ingest refuses, never live centroids over an empty corpus side.
     */
   def buildSemanticState(oldEmb: DataFrame, stateDir: String,
                          k: Int = 8, iters: Int = 3): Unit = {
-    val (asg, cent) = graft.operators.SemDedup.model(oldEmb, k, iters)
-    cent.write.mode("overwrite").parquet(s"$stateDir/centroids")
-    asg.join(Similarity.prepared(oldEmb), "vec_id")
-      .write.mode("overwrite").parquet(s"$stateDir/cells/batch=base")
+    val (asg, cent) = SemDedup.model(oldEmb, k, iters)
+    BatchCommit.fold(stateDir, "base",
+      Seq(("cells", asg.join(Similarity.prepared(oldEmb), "vec_id"), Nil)),
+      plain = Seq("centroids" -> cent))
   }
 
   /** One micro-batch of incremental SemDeDup: assign the batch to the
@@ -154,30 +126,25 @@ object VectorStreams {
     * `cells`. Crash-replay safety is the dedupNearIngest discipline:
     * the prior state is read EXCLUDING this batch's own dir, so a
     * replayed batch recomputes identical pairs instead of matching
-    * against itself.
+    * against itself. A seed that crashed midway (`centroids` not live,
+    * swap debris beside it) fails the batch loudly.
     */
   def semanticIngestBatch(batch: DataFrame, stateDir: String,
-                          batchId: Long, threshold: Double): Unit = {
-    val spark = batch.sparkSession
-    graft.operators.Lease.check(stateDir)
-    val cent = spark.read.parquet(s"$stateDir/centroids")
-    val pNew = Similarity.prepared(batch).localCheckpoint()
-    val cellsRoot = s"$stateDir/cells"
-    val prior = graft.operators.BatchCommit.committedBatchDirs(
-      spark, cellsRoot, exclude = Some(batchId))
-    val oldSide =
-      if (prior.isEmpty) // first batch: empty state with the right shape
-        graft.operators.SemDedup.assignTo(pNew.limit(0), cent).join(pNew.limit(0), "vec_id")
-      else spark.read.option("basePath", cellsRoot).parquet(prior: _*).drop("batch")
-    graft.operators.BatchCommit.writeBatch(
-      graft.operators.SemDedup.incrementalPairsFrom(oldSide, pNew, cent, threshold),
-      s"$stateDir/pairs", batchId)
-    graft.operators.BatchCommit.writeBatch(
-      graft.operators.SemDedup.assignTo(pNew, cent).join(pNew, "vec_id"),
-      cellsRoot, batchId)
-    graft.operators.Lease.check(stateDir)
-    graft.operators.BatchCommit.requireIntact(spark, cellsRoot, batchId)
-  }
+                          batchId: Long, threshold: Double): Unit =
+    BatchCommit.inBatch(batch, batchId, stateDir) { w =>
+      val spark = batch.sparkSession
+      DirSwap.requireClean(stateDir, "centroids")
+      val cent = spark.read.parquet(s"$stateDir/centroids")
+      val pNew = Similarity.prepared(batch).localCheckpoint()
+      val cellsRoot = s"$stateDir/cells"
+      val prior = BatchCommit.committedBatchDirs(spark, cellsRoot, exclude = Some(batchId))
+      val oldSide =
+        if (prior.isEmpty) // first batch: empty state with the right shape
+          SemDedup.assignTo(pNew.limit(0), cent).join(pNew.limit(0), "vec_id")
+        else spark.read.option("basePath", cellsRoot).parquet(prior: _*).drop("batch")
+      w.write(SemDedup.incrementalPairsFrom(oldSide, pNew, cent, threshold), s"$stateDir/pairs")
+      w.write(SemDedup.assignTo(pNew, cent).join(pNew, "vec_id"), cellsRoot)
+    }
 
   /** Always-on incremental SemDeDup: vectors stream in, near-dup pairs
     * against everything already ingested accumulate in the `pairs`
@@ -187,17 +154,11 @@ object VectorStreams {
     */
   def semanticDedupIngest(vectors: DataFrame, stateDir: String,
                           threshold: Double): StreamingQuery =
-    vectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) semanticIngestBatch(batch, stateDir, batchId, threshold)
-      }
-      .start()
+    BatchCommit.sink(vectors)(semanticIngestBatch(_, stateDir, _, threshold))
 
   /** The accumulated near-dup pairs ledger (None before any commit). */
-  def semanticPairsLedger(spark: org.apache.spark.sql.SparkSession,
-                          stateDir: String): Option[DataFrame] =
-    graft.operators.BatchCommit.readCommitted(spark, s"$stateDir/pairs")
+  def semanticPairsLedger(spark: SparkSession, stateDir: String): Option[DataFrame] =
+    BatchCommit.readCommitted(spark, s"$stateDir/pairs")
 
   /** Retrain the PQ codebooks on the CURRENT corpus and re-encode — the
     * PQ twin of `retrainIndex` (as streamed vectors drift from the
@@ -207,10 +168,10 @@ object VectorStreams {
     * retrainIndex for the checkpoint caveat that remains); the corpus
     * comes from the caller (the code table stores codes, not vectors).
     */
-  def retrainPqIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
+  def retrainPqIndex(spark: SparkSession, indexDir: String,
                      embeddings: DataFrame,
                      m: Int = 8, kCodes: Int = 16, iters: Int = 5): Unit =
-    graft.operators.Lease.withLease(indexDir, "retrain-pq") {
+    Lease.withLease(indexDir, "retrain-pq") {
       Similarity.buildPqIndex(embeddings, indexDir, m, kCodes, iters)
     }
 
@@ -232,7 +193,7 @@ object VectorStreams {
     * dir's `Lease`, and the batch ingests check it — a micro-batch
     * arriving mid-retrain fails loudly and replays idempotently after.
     * The fold itself is replay-safe too: the absorbed batch ids ride the
-    * new generation's `_FOLDED` ledger (BatchCommit.recordFolded), so a
+    * new generation's `_FOLDED` ledger (BatchCommit.fold), so a
     * batch crash-replayed from BEFORE the fold — whose own dir the fold
     * deleted — skips its re-write instead of re-entering under the new
     * centroids next to its folded copy.
@@ -240,30 +201,16 @@ object VectorStreams {
     * The trainer's actions re-read the live `cells` dir, which is only
     * renamed after both aside-writes complete.
     */
-  def retrainIndex(spark: org.apache.spark.sql.SparkSession, indexDir: String,
+  def retrainIndex(spark: SparkSession, indexDir: String,
                    kCells: Int = 8, iters: Int = 5): Unit =
-    graft.operators.Lease.withLease(indexDir, "retrain-ivf") {
-    val cur = Similarity.cellsTable(spark, indexDir).select("vec_id", "e", "nrm")
-    val cent = Similarity.kmeansCentroidsPrepared(cur.select("vec_id", "e"), kCells, iters)
-    graft.operators.DirSwap.swap(indexDir, Seq(
-      "cells" -> { out =>
-        // the retrained generation folds every committed batch into a new
-        // batch=base (the same consolidation compaction does for the
-        // near-dup state). The maintenance-window contract is load-bearing
-        // here: the ingest's checkpoint must have COMMITTED its last batch
-        // before the retrain — a batch crash-replayed across the fold
-        // would re-enter under the new centroids next to its folded copy.
-        Similarity.kmeansAssign(cur, cent)
-          .write.partitionBy("cell").parquet(s"$out/batch=base")
-        // folded-ledger: a pre-fold batch replayed after this retrain
-        // would re-enter celled by the NEW centroids next to its folded
-        // copy; the ledger makes that replay a no-op instead
-        graft.operators.BatchCommit.recordFolded(spark, out, s"$indexDir/cells",
-          graft.operators.BatchCommit.committedNumericIds(spark, s"$indexDir/cells"))
-        graft.operators.DirSwap.markComplete(out)
-      },
-      // centroids are a LocalRelation (the trainer collects k×dim means),
-      // so this write reads nothing live
-      "centroids" -> { out => cent.write.parquet(out) }))
+    Lease.withLease(indexDir, "retrain-ivf") {
+      val cur = Similarity.cellsTable(spark, indexDir).select("vec_id", "e", "nrm")
+      val cent = Similarity.kmeansCentroidsPrepared(cur.select("vec_id", "e"), kCells, iters)
+      // the retrained generation folds every committed batch into a new
+      // batch=base; centroids are a LocalRelation (the trainer collects
+      // k×dim means), so their write reads nothing live
+      BatchCommit.fold(indexDir, "base",
+        Seq(("cells", Similarity.kmeansAssign(cur, cent), Seq("cell"))),
+        plain = Seq("centroids" -> cent))
     }
 }

@@ -133,6 +133,40 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(df == before + ("gamma" -> 2L) + ("delta" -> 1L))
   }
 
+  test("micro-batch frame: a mid-batch lease or a vanished root fails the batch; a folded replay writes nothing") {
+    import graft.operators.{BatchCommit, Lease}
+    import spark.implicits._
+    val guard = tmp("frame")
+    val root = s"$guard/t"
+    val rows = Seq((1L, "a")).toDF("id", "v")
+    // a maintenance job that takes the lease while the body runs: the
+    // write committed, but the batch must fail so its checkpoint stays put
+    val midLease = intercept[IllegalStateException] {
+      BatchCommit.inBatch(rows, 0L, guard) { w =>
+        w.write(rows, root)
+        Lease.acquire(guard, "compact", ttlMs = 60000L)
+      }
+    }
+    assert(midLease.getMessage.contains("under maintenance"))
+    assert(new java.io.File(s"$root/batch=0/_SUCCESS").exists)
+    Lease.release(guard, "compact")
+    // a written root whose batch dir is gone by the verify step
+    val vanished = intercept[IllegalStateException] {
+      BatchCommit.inBatch(rows, 1L, guard) { w =>
+        w.write(rows, root)
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$root/batch=1"))
+      }
+    }
+    assert(vanished.getMessage.contains("vanished"))
+    // a fold absorbs batch 0; its replay writes nothing and passes
+    BatchCommit.fold(guard, "compact", Seq(("t", BatchCommit.readCommitted(spark, root).get, Nil)))
+    assert(BatchCommit.foldedIds(spark, root) == Set(0L))
+    BatchCommit.inBatch(rows, 0L, guard)(_.write(Seq((9L, "z")).toDF("id", "v"), root))
+    assert(!new java.io.File(s"$root/batch=0").exists)
+    assert(BatchCommit.readCommitted(spark, root).get.as[(Long, String)].collect().toSeq ==
+      Seq((1L, "a")))
+  }
+
   test("swapOne replaces the live generation and leaves no debris") {
     val base = tmp("dirswap")
     writeGen(s"$base/t", "old")

@@ -1380,6 +1380,36 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("incremental SemDeDup: a seed that crashes after the centroids write fails the ingest loudly") {
+    val emb = graft.sources.Tables.embeddings(spark, TestSpark.sf0001)
+    val state = java.nio.file.Files.createTempDirectory("semcrash").toString
+    // the corpus turns unreadable once the seed has committed its first
+    // table (a _SUCCESS anywhere under the state dir): the seed crashes
+    // right after its centroids write
+    val stateRoot = new java.io.File(state)
+    val readable = udf { (_: Long) =>
+      val it = java.nio.file.Files.walk(stateRoot.toPath)
+      try if (it.anyMatch(_.getFileName.toString == "_SUCCESS"))
+        throw new IllegalStateException("seed crashed after its first table")
+      finally it.close()
+      true
+    }.asNondeterministic()
+    val old = emb.filter(col("vec_id") % 2 === 0)
+    intercept[Exception](graft.streaming.VectorStreams.buildSemanticState(
+      old.filter(readable(col("vec_id"))), state))
+    // the ingest must refuse the half-seeded state instead of pairing the
+    // batch against an empty corpus side
+    val batch = emb.filter(col("vec_id") % 2 === 1)
+    intercept[IllegalStateException](
+      graft.streaming.VectorStreams.semanticIngestBatch(batch, state, 0L, 0.35))
+    // recovery drops the half-written seed; a clean re-seed ingests
+    graft.operators.DirSwap.recover(state)
+    graft.streaming.VectorStreams.buildSemanticState(old, state)
+    graft.streaming.VectorStreams.semanticIngestBatch(batch, state, 0L, 0.35)
+    assert(graft.operators.BatchCommit.committedBatchDirs(spark, s"$state/cells")
+      .exists(_.endsWith("batch=0")))
+  }
+
   test("streaming crawl dedup: the latest-fetch max-struct is COMMUTATIVE, " +
     "so winners are arrival-order-independent (unlike first-wins dedup)") {
     import spark.implicits._
